@@ -1,212 +1,45 @@
 package graft.lake
 
 import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.connector.catalog.Identifier
+import org.apache.spark.sql.execution.datasources.v2.DataSourceV2Relation
 import org.apache.spark.sql.functions._
+import org.apache.spark.sql.graft.Shims
+import org.apache.spark.sql.util.CaseInsensitiveStringMap
+
+import scala.jdk.CollectionConverters._
 
 /** CDC changelog over a snapshot range (reference:
   * iceberg_it.py:2301-2344; docs/spark-procedures.md:805-941).
   *
-  * Changes are replayed from per-snapshot file diffs: rows in files
-  * added by a snapshot are inserts, rows in files it removed are
-  * deletes, `_change_ordinal` is the snapshot's position in the range.
-  * With identifier columns, a delete+insert of the same key in one
-  * snapshot becomes an update_before/update_after pair. Distributed
-  * end to end: each snapshot contributes parquet scans, the update
-  * pairing is one key-partitioned join.
+  * The change rows come from the table's `changes` relation
+  * ([[ChangesTable]]), the one replayer of snapshot file diffs: a
+  * single scan over the range, however many snapshots it spans. This
+  * object only post-processes those rows, as Iceberg's view does over
+  * its changelog table (docs/spark-procedures.md:918-921): net
+  * changes, carry-over removal and, with identifier columns, pairing
+  * a delete+insert of one key in one snapshot into
+  * update_before/update_after.
   */
 object Changelog {
 
-  /** Epoch-aware raw read of data files into the CURRENT schema:
-    * per-epoch parquet reads projected by stable field id
-    * (LakeWriteUtil.epochProjection), unioned. `withMeta` stamps the
-    * (__fp, __pos) row identity BEFORE the projection so mask/eq
-    * joins keep working. The previous single-schema name-based read
-    * nulled renamed columns and RESURRECTED dropped-and-re-added
-    * ones for every pre-evolution file in the range — the same
-    * lineage bug class the round-7 soak caught in compaction. */
-  private def readEpochAware(spark: SparkSession, meta: TableMeta,
-      files: Seq[DataFileMeta], withMeta: Boolean): DataFrame =
-    files.groupBy(_.schemaEpoch).toSeq.sortBy(_._1).map { case (e, fs) =>
-      val es = meta.schemaAt(e)
-      val base = spark.read.schema(es).parquet(fs.map(_.path): _*)
-      val projected = LakeWriteUtil.epochProjection(meta, e, es)
-      if (withMeta)
-        base.withColumn("__fp", regexp_replace(
-            col("_metadata.file_path"), "^[a-zA-Z0-9.+-]+:/+", "/"))
-          .withColumn("__pos", col("_metadata.row_index"))
-          .select(projected ++ Seq(col("__fp"), col("__pos")): _*)
-      else base.select(projected: _*)
-    }.reduceOption(_ unionByName _).getOrElse {
-      // empty file list → empty frame in the CURRENT schema (+ the
-      // row-identity meta columns when requested): .reduce on Nil
-      // throws, and "every call site happens to guard" is a latent
-      // trap for the next caller
-      import org.apache.spark.sql.types.{LongType, StringType, StructField, StructType}
-      val s =
-        if (withMeta) StructType(meta.schema.fields ++
-          Seq(StructField("__fp", StringType), StructField("__pos", LongType)))
-        else meta.schema
-      spark.createDataFrame(
-        spark.sparkContext.emptyRDD[org.apache.spark.sql.Row], s)
-    }
-
-  def build(spark: SparkSession, meta: TableMeta, startId: Option[Long],
-      endId: Option[Long], identifierCols: Seq[String],
-      computeUpdates: Boolean, netChanges: Boolean = false,
+  def build(spark: SparkSession, catalog: LakeCatalog, ident: Identifier,
+      meta: TableMeta, startId: Option[Long], endId: Option[Long],
+      identifierCols: Seq[String], computeUpdates: Boolean,
+      netChanges: Boolean = false,
       removeCarryovers: Boolean = true): DataFrame = {
     require(!(netChanges && computeUpdates),
       "net_changes cannot be combined with compute_updates/identifier " +
         "columns (matches the reference procedure's restriction)")
-    val head = meta.currentSnapshotId("main")
-    val chain = head.map(meta.ancestorsOf).getOrElse(Nil).reverse // oldest first
-    val inRange = chain
-      .dropWhile(s => startId.exists(s.snapshotId <= _))
-      .takeWhile(s => endId.forall(s.snapshotId <= _))
-    // Every snapshot in range contributes its own parquet scans to one
-    // union plan. That is the right shape for the tens of commits a CDC
-    // consumer replays, but an unbounded range over a long-lived table
-    // (thousands of commits) would silently build a thousand-scan plan
-    // that stalls the driver at analysis time — fail with instructions
-    // instead. Tables that legitimately need more raise the property.
-    val maxSnapshots = meta.properties
-      .get("changelog.max-snapshots").map(v =>
-        try v.toInt
-        catch { case _: NumberFormatException =>
-          throw new IllegalArgumentException(
-            s"invalid changelog.max-snapshots value '$v': expected an int")
-        }).getOrElse(100)
-    require(inRange.size <= maxSnapshots,
-      s"changelog range spans ${inRange.size} snapshots, more than " +
-        s"changelog.max-snapshots ($maxSnapshots). Narrow the range with " +
-        "start/end snapshot ids, or raise the table property.")
-
-    val schema = meta.schema
-    val hconf = spark.sessionState.newHadoopConf()
-    val parts = inRange.zipWithIndex.flatMap { case (s, ordinal) =>
-      val parentFiles = s.parentId.flatMap(meta.snapshotById)
-        .map(_.files).getOrElse(Nil)
-      val parentPaths = parentFiles.map(_.path).toSet
-      val curPaths = s.files.map(_.path).toSet
-      val addedMetas = s.files.filterNot(f => parentPaths(f.path))
-      val removedMetas = parentFiles.filterNot(f => curPaths(f.path))
-      val removed = removedMetas.map(_.path)
-      def stamp(df: DataFrame, change: String): DataFrame = df
-        .withColumn("_change_type", lit(change))
-        .withColumn("_change_ordinal", lit(ordinal))
-        .withColumn("_commit_snapshot_id", lit(s.snapshotId))
-      def read(fs: Seq[DataFileMeta], change: String): Option[DataFrame] =
-        if (fs.isEmpty) None
-        else Some(stamp(
-          readEpochAware(spark, meta, fs, withMeta = false), change))
-      // Removed-file rows that were ALREADY dead at the parent — via
-      // its position masks or its equality deletes — are not deletes
-      // of this commit (the rewrite that removed the file applied
-      // those masks; re-emitting would double-delete a key a prior
-      // upsert already replaced).
-      def readRemoved(): Option[DataFrame] = {
-        if (removed.isEmpty) return None
-        val pSnap = s.parentId.flatMap(meta.snapshotById)
-        val pDels = pSnap.map(_.deleteFiles).getOrElse(Nil)
-        val pEqs = pSnap.map(_.eqDeleteFiles).getOrElse(Nil)
-          .filter(e => removedMetas.exists(EqDeletes.mayApply(meta, _, e)))
-        if (pDels.isEmpty && pEqs.isEmpty) return read(removedMetas, "delete")
-        val base = readEpochAware(spark, meta, removedMetas, withMeta = true)
-        val notPosMasked =
-          if (pDels.isEmpty) base
-          else base.join(broadcast(spark.read
-              .schema(PosDeletes.DeleteSchema)
-              .parquet(pDels.map(_.path): _*)
-              .toDF("__fp", "__pos")),
-            Seq("__fp", "__pos"), "left_anti")
-        val alive = EqDeletes.antiJoin(spark, meta, notPosMasked, pEqs)
-        Some(stamp(alive.drop("__fp", "__pos"), "delete"))
-      }
-      // merge-on-read snapshot: the rows its NEW position masks cover
-      // are this commit's deletes — materialize them by joining the
-      // (immutable) data files' row ordinals against the mask pairs
-      val parentDels = s.parentId.flatMap(meta.snapshotById)
-        .map(_.deleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      // "replace" commits are row-preserving by definition (compaction,
-      // delete-format conversion): any mask they add covers rows that
-      // were already logically dead — not change events
-      val newMasks =
-        if (s.isRowPreservingReplace) Nil
-        else s.deleteFiles.filterNot(f => parentDels(f.path))
-      val masked: Option[DataFrame] =
-        if (newMasks.isEmpty) None
-        else {
-          // the masked-path SET is metadata-scale (cached driver read);
-          // the pair JOIN INPUT streams straight from the delete
-          // parquet — nothing row-level materializes on the driver
-          val maskedPaths = PosDeletes.deletedMap(newMasks, hconf).keySet
-          val dataMetas = s.files
-            .filter(f => maskedPaths(PosDeletes.norm(f.path)))
-          if (dataMetas.isEmpty) None
-          else Some(readEpochAware(spark, meta, dataMetas, withMeta = true)
-            .join(broadcast(spark.read.schema(PosDeletes.DeleteSchema)
-                .parquet(newMasks.map(_.path): _*)
-                .toDF("__fp", "__pos")),
-              Seq("__fp", "__pos"))
-            .drop("__fp", "__pos")
-            .withColumn("_change_type", lit("delete"))
-            .withColumn("_change_ordinal", lit(ordinal))
-            .withColumn("_commit_snapshot_id", lit(s.snapshotId)))
-        }
-      // upsert commit: rows of OLDER files matching the commit's NEW
-      // equality-delete keys are this commit's deletes. One semi-join
-      // per key shape against the (small, broadcast) key set; rows
-      // already dead — parent position masks or parent equality
-      // deletes — are subtracted so they don't re-emit.
-      val parentEqPaths = s.parentId.flatMap(meta.snapshotById)
-        .map(_.eqDeleteFiles.map(_.path).toSet).getOrElse(Set.empty)
-      val parentEqs = s.parentId.flatMap(meta.snapshotById)
-        .map(_.eqDeleteFiles).getOrElse(Nil)
-      val newEqs =
-        if (s.isRowPreservingReplace) Nil
-        else s.eqDeleteFiles.filterNot(e => parentEqPaths(e.path))
-      val eqDeleted: Seq[DataFrame] =
-        if (newEqs.isEmpty) Nil
-        else {
-          val affected = s.files.filter(f =>
-            newEqs.exists(EqDeletes.mayApply(meta, f, _)))
-          val parentMasks = s.parentId.flatMap(meta.snapshotById)
-            .map(_.deleteFiles).getOrElse(Nil)
-          EqDeletes.groupByApplicable(meta, affected, newEqs).flatMap {
-            case (_, eqsOfGroup) if eqsOfGroup.isEmpty => None
-            case (fs, eqsOfGroup) =>
-              val base = readEpochAware(spark, meta, fs, withMeta = true)
-              val notPosMasked =
-                if (parentMasks.isEmpty) base
-                else base.join(broadcast(spark.read
-                    .schema(PosDeletes.DeleteSchema)
-                    .parquet(parentMasks.map(_.path): _*)
-                    .toDF("__fp", "__pos")),
-                  Seq("__fp", "__pos"), "left_anti")
-              val notPriorEq = EqDeletes.antiJoin(spark, meta, notPosMasked,
-                parentEqs.filter(e => fs.exists(EqDeletes.mayApply(meta, _, e))))
-              // per-shape semi-joins, deduplicated on (file, pos) — a
-              // row matching several delete shapes is still ONE delete
-              Some(EqDeletes.semiJoinAny(spark, meta, notPriorEq,
-                  eqsOfGroup, Seq("__fp", "__pos"))
-                .drop("__fp", "__pos")
-                .withColumn("_change_type", lit("delete"))
-                .withColumn("_change_ordinal", lit(ordinal))
-                .withColumn("_commit_snapshot_id", lit(s.snapshotId)))
-          }
-        }
-      read(addedMetas, "insert") ++ readRemoved() ++ masked ++ eqDeleted
-    }
-
-    val raw = parts.reduceOption(_.unionByName(_)).getOrElse {
-      spark.createDataFrame(spark.sparkContext.emptyRDD[org.apache.spark.sql.Row],
-        org.apache.spark.sql.types.StructType(schema.fields ++ Seq(
-          org.apache.spark.sql.types.StructField("_change_type",
-            org.apache.spark.sql.types.StringType),
-          org.apache.spark.sql.types.StructField("_change_ordinal",
-            org.apache.spark.sql.types.IntegerType),
-          org.apache.spark.sql.types.StructField("_commit_snapshot_id",
-            org.apache.spark.sql.types.LongType))))
-    }
+    // the scan checks this too, but only when the view is first read
+    ChangesScan.requireStart(meta, startId)
+    val options = (startId.map("start-snapshot-id" -> _.toString) ++
+      endId.map("end-snapshot-id" -> _.toString)).toMap
+    val raw = Shims.ofRows(spark, DataSourceV2Relation.create(
+      new ChangesTable(catalog, ident, meta), Some(catalog),
+      Some(Identifier.of(ident.namespace() :+ ident.name(), "changes")),
+      new CaseInsensitiveStringMap(options.asJava)))
+    val dataCols = meta.schema.fieldNames.toSeq
 
     // net_changes (docs/spark-procedures.md:885-941): collapse the
     // whole range to its net effect per distinct row VALUE — a row
@@ -215,7 +48,6 @@ object Changelog {
     // LAST change of their kind. One hash aggregation on the data
     // columns: no window, no self-join, scale-safe.
     if (netChanges) {
-      val dataCols = schema.fieldNames.toSeq
       val lastOf = (t: String) => max(when(col("_change_type") === t,
         struct(col("_change_ordinal"), col("_commit_snapshot_id"))))
       val counted = raw.groupBy(dataCols.map(col): _*)
@@ -242,7 +74,6 @@ object Changelog {
     // file as a delete+insert pair in the SAME commit despite no actual
     // change — net them out per (row value, commit). One hash
     // aggregation; surviving multiplicity re-explodes.
-    val dataCols = schema.fieldNames.toSeq
     def dropCarryovers(df: DataFrame): DataFrame = {
       val carry = dataCols.map(col) :+ col("_change_ordinal")
       val counted = df.groupBy(carry :+ col("_commit_snapshot_id"): _*)

@@ -2,6 +2,8 @@ package graft.lake
 
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.catalog.{Identifier, SupportsRead, Table, TableCapability}
+import org.apache.spark.sql.connector.expressions.{NamedReference, Expression => V2Expression, Literal => V2Literal}
+import org.apache.spark.sql.connector.expressions.filter.Predicate
 import org.apache.spark.sql.connector.read._
 import org.apache.spark.sql.types._
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -10,18 +12,21 @@ import java.util
 
 /** `SELECT * FROM db.tbl.changes` — the RAW changelog relation
   * (reference: docs/spark-procedures.md:918-921 "To see carry-over
-  * rows, query SparkChangelogTable"). Unlike `create_changelog_view`
-  * (which removes carry-overs and can pair updates), this surfaces the
-  * per-commit file diffs verbatim: rows in files a snapshot added are
-  * inserts, rows in files it removed are deletes, and rows newly
-  * masked by merge-on-read position deletes are deletes.
+  * rows, query SparkChangelogTable"): rows in files a snapshot added
+  * are inserts, rows in files it removed are deletes, and rows newly
+  * masked by merge-on-read position deletes or matched by new
+  * equality deletes are deletes.
   *
-  * Fully distributed: ONE scan whose input partitions each cover one
-  * (data file × change kind), with the change metadata attached by the
-  * reader — no per-snapshot plan-node union, so a long history is just
-  * more partitions, not a wider plan. Supports the same
-  * `start-snapshot-id` / `end-snapshot-id` read options as the
-  * procedure.
+  * The engine's only replayer of snapshot file diffs: the batch
+  * relation, its streaming source, `create_changelog_view`
+  * ([[Changelog]], which removes carry-overs and pairs updates on top)
+  * and the signed incremental MV refresh all read this scan. ONE scan
+  * whose input partitions each cover one (data file × change kind),
+  * with the change metadata attached by the reader, so a long history
+  * is more partitions, not a wider plan. Read options:
+  * `start-snapshot-id` (exclusive) / `end-snapshot-id` (inclusive).
+  * `_change_type` equality and IN filters prune the partitions (and
+  * the delete-file reads) of kinds not asked for.
   */
 class ChangesTable(catalog: LakeCatalog, parent: Identifier, meta: TableMeta)
   extends Table with SupportsRead {
@@ -42,12 +47,48 @@ class ChangesTable(catalog: LakeCatalog, parent: Identifier, meta: TableMeta)
   // and the full row image (a CDC consumer wants whole rows); Spark
   // projects above the scan.
   override def newScanBuilder(options: CaseInsensitiveStringMap): ScanBuilder =
-    () => new ChangesScan(catalog, meta, ChangesTable.this.name(),
-      dataSchema, tableSchema,
-      Option(options.get("start-snapshot-id")).map(_.toLong),
-      Option(options.get("end-snapshot-id")).map(_.toLong),
-      freshMeta = () => catalog.loadMeta(parent),
-      options = options)
+    new ScanBuilder with SupportsPushDownV2Filters {
+      private var pushed = Array.empty[Predicate]
+      // every predicate is also returned as a post-scan filter, so the
+      // pruning can only skip work, never change a result
+      override def pushPredicates(ps: Array[Predicate]): Array[Predicate] = {
+        pushed = ps.filter(ChangesTable.changeKinds(_).isDefined)
+        ps
+      }
+      override def pushedPredicates(): Array[Predicate] = pushed
+      override def build(): Scan = new ChangesScan(catalog, meta,
+        ChangesTable.this.name(), dataSchema, tableSchema,
+        Option(options.get("start-snapshot-id")).map(_.toLong),
+        Option(options.get("end-snapshot-id")).map(_.toLong),
+        freshMeta = () => catalog.loadMeta(parent),
+        options = options,
+        kinds = pushed.flatMap(ChangesTable.changeKinds)
+          .reduceOption(_ intersect _))
+    }
+}
+
+object ChangesTable {
+  /** The `_change_type` values a predicate admits, when it is an
+    * equality or IN test of that column against string literals. */
+  private[lake] def changeKinds(p: Predicate): Option[Set[String]] = {
+    def isKind(e: V2Expression) = e match {
+      case r: NamedReference => r.fieldNames.toSeq == Seq("_change_type")
+      case _ => false
+    }
+    def str(e: V2Expression) = e match {
+      case l: V2Literal[_] if l.value != null &&
+          l.dataType.isInstanceOf[StringType] => Some(l.value.toString)
+      case _ => None
+    }
+    (p.name, p.children.toSeq) match {
+      case ("=", Seq(a, b)) if isKind(a) => str(b).map(Set(_))
+      case ("=", Seq(a, b)) if isKind(b) => str(a).map(Set(_))
+      case ("IN", a +: vs) if isKind(a) =>
+        val ks = vs.map(str)
+        if (ks.forall(_.isDefined)) Some(ks.flatten.toSet) else None
+      case _ => None
+    }
+  }
 }
 
 class ChangesScan(catalog: LakeCatalog, meta: TableMeta, tableName: String,
@@ -59,12 +100,16 @@ class ChangesScan(catalog: LakeCatalog, meta: TableMeta, tableName: String,
     // conversion) are row-preserving, and their carryover insert/delete
     // echo — O(table) non-events per compaction — must not flood a
     // continuous consumer. The batch relation keeps raw-diff parity.
-    skipRowPreserving: Boolean = false)
+    skipRowPreserving: Boolean = false,
+    // `_change_type` values a pushed filter admits (None = all): the
+    // partitions of other kinds are neither planned nor sized
+    kinds: Option[Set[String]] = None)
   extends Scan with Batch {
 
   override def readSchema(): StructType = tableSchema
   override def toBatch: Batch = this
-  override def description(): String = s"ChangesScan($tableName)"
+  override def description(): String = s"ChangesScan($tableName" +
+    kinds.fold("")(ks => ks.toSeq.sorted.mkString(", kinds=[", ",", "]")) + ")"
 
   /** `spark.readStream.table("db.tbl.changes")` — the changelog as a
     * STREAMING CDC source: offsets are snapshot ids, each micro-batch
@@ -86,89 +131,87 @@ class ChangesScan(catalog: LakeCatalog, meta: TableMeta, tableName: String,
     val lenCache = scala.collection.mutable.Map[String, Long]()
     def len(p: String): Long = lenCache.getOrElseUpdate(p,
       fs.getFileStatus(new org.apache.hadoop.fs.Path(p)).getLen)
-    // A start offset that no longer resolves means snapshots were
-    // expired past a lagging consumer: the events in the gap are
-    // unrecoverable, and silently resuming from the surviving history
-    // would diverge the sink — fail loudly instead.
-    startId.filter(_ > 0).foreach(id => require(
-      meta.snapshotById(id).isDefined,
-      s"changelog start snapshot $id is no longer in the table " +
-        "metadata (expired?); the change events after it cannot be " +
-        "reconstructed — restart the consumer from a full snapshot"))
+    ChangesScan.requireStart(meta, startId)
     val head = meta.currentSnapshotId("main")
     val chain = head.map(meta.ancestorsOf).getOrElse(Nil).reverse // oldest first
     val inRange = chain
       .dropWhile(s => startId.exists(s.snapshotId <= _))
       .takeWhile(s => endId.forall(s.snapshotId <= _))
       .filterNot(s => skipRowPreserving && s.isRowPreservingReplace)
+    def want(kind: String) = kinds.forall(_(kind))
     inRange.zipWithIndex.flatMap { case (s, ordinal) =>
       val parentSnap = s.parentId.flatMap(meta.snapshotById)
       val parentFiles = parentSnap.map(_.files).getOrElse(Nil)
       val parentPaths = parentFiles.map(_.path).toSet
-      val curPaths = s.files.map(_.path).toSet
-      val inserts = s.files.filterNot(f => parentPaths(f.path)).map(f =>
-        ChangesPartition(f.path, f.schemaEpoch, len(f.path), "insert",
-          ordinal, s.snapshotId, Array.empty, keepOnlyPositions = false))
-      // removed-file rows already dead at the parent (position masks /
-      // equality deletes) were not deleted by THIS commit: exclude
-      // them executor-side, like the procedure view does
-      val pDelMap = parentSnap.map(_.deleteFiles).getOrElse(Nil) match {
-        case Nil => Map.empty[String, Array[Long]]
-        case dels => PosDeletes.deletedMap(dels, conf)
+      val inserts =
+        if (!want("insert")) Nil
+        else s.files.filterNot(f => parentPaths(f.path)).map(f =>
+          ChangesPartition(f.path, f.schemaEpoch, len(f.path), "insert",
+            ordinal, s.snapshotId, Array.empty, keepOnlyPositions = false))
+      if (!want("delete")) inserts
+      else {
+        val curPaths = s.files.map(_.path).toSet
+        // removed-file rows already dead at the parent (position masks /
+        // equality deletes) were not deleted by THIS commit: exclude
+        // them executor-side
+        val pDelMap = parentSnap.map(_.deleteFiles).getOrElse(Nil) match {
+          case Nil => Map.empty[String, Array[Long]]
+          case dels => PosDeletes.deletedMap(dels, conf)
+        }
+        val pEqs = parentSnap.map(_.eqDeleteFiles).getOrElse(Nil)
+        val deletes = parentFiles.filterNot(f => curPaths(f.path)).map(f =>
+          ChangesPartition(f.path, f.schemaEpoch, len(f.path), "delete",
+            ordinal, s.snapshotId,
+            pDelMap.getOrElse(PosDeletes.norm(f.path), Array.empty[Long]),
+            keepOnlyPositions = false,
+            eqExcludeSlices = pEqs.filter(EqDeletes.mayApply(meta, f, _))
+              .map(e => EqSlice(e.path, len(e.path), eqGroupOf(e.path)))))
+        // merge-on-read commit: rows its NEW masks cover are deletes —
+        // emit exactly the masked positions of each (immutable) data file
+        val parentDels = parentSnap.map(_.deleteFiles.map(_.path).toSet)
+          .getOrElse(Set.empty)
+        // "replace" commits are row-preserving (compaction, delete-format
+        // conversion): masks they add cover already-dead rows, not changes
+        val newMasks =
+          if (s.isRowPreservingReplace) Nil
+          else s.deleteFiles.filterNot(f => parentDels(f.path))
+        val masked =
+          if (newMasks.isEmpty) Nil
+          else {
+            val byPath = PosDeletes.deletedMap(newMasks, conf)
+            s.files.flatMap { f =>
+              byPath.get(PosDeletes.norm(f.path)).map(ps =>
+                ChangesPartition(f.path, f.schemaEpoch, len(f.path), "delete",
+                  ordinal, s.snapshotId, ps, keepOnlyPositions = true))
+            }
+          }
+        // upsert commit: rows of OLDER files matching the commit's NEW
+        // equality-delete keys are deletes. Each affected file becomes a
+        // key-matching partition; rows already dead (parent position
+        // masks, parent equality deletes) are excluded executor-side.
+        val parentEqPaths = pEqs.map(_.path).toSet
+        val newEqs =
+          if (s.isRowPreservingReplace) Nil
+          else s.eqDeleteFiles.filterNot(e => parentEqPaths(e.path))
+        val eqDeleted =
+          if (newEqs.isEmpty) Nil
+          else {
+            def slices(eqs: Seq[EqDeleteMeta]): Seq[EqSlice] =
+              eqs.map(e => EqSlice(e.path, len(e.path), eqGroupOf(e.path)))
+            s.files.flatMap { f =>
+              val keep = newEqs.filter(EqDeletes.mayApply(meta, f, _))
+              if (keep.isEmpty) None
+              else Some(ChangesPartition(f.path, f.schemaEpoch, len(f.path),
+                "delete", ordinal, s.snapshotId,
+                pDelMap.getOrElse(PosDeletes.norm(f.path), Array.empty[Long]),
+                keepOnlyPositions = false,
+                eqKeepSlices = slices(keep),
+                eqExcludeSlices = slices(
+                  pEqs.filter(EqDeletes.mayApply(meta, f, _)))))
+            }
+          }
+        inserts ++ deletes ++ masked ++ eqDeleted
       }
-      val pEqs = parentSnap.map(_.eqDeleteFiles).getOrElse(Nil)
-      val deletes = parentFiles.filterNot(f => curPaths(f.path)).map(f =>
-        ChangesPartition(f.path, f.schemaEpoch, len(f.path), "delete",
-          ordinal, s.snapshotId,
-          pDelMap.getOrElse(PosDeletes.norm(f.path), Array.empty[Long]),
-          keepOnlyPositions = false,
-          eqExcludeSlices = pEqs.filter(EqDeletes.mayApply(meta, f, _))
-            .map(e => EqSlice(e.path, len(e.path), eqGroupOf(e.path)))))
-      // merge-on-read commit: rows its NEW masks cover are deletes —
-      // emit exactly the masked positions of each (immutable) data file
-      val parentDels = parentSnap.map(_.deleteFiles.map(_.path).toSet)
-        .getOrElse(Set.empty)
-      // "replace" commits are row-preserving (compaction, delete-format
-      // conversion): masks they add cover already-dead rows, not changes
-      val newMasks =
-        if (s.isRowPreservingReplace) Nil
-        else s.deleteFiles.filterNot(f => parentDels(f.path))
-      val masked =
-        if (newMasks.isEmpty) Nil
-        else {
-          val byPath = PosDeletes.deletedMap(newMasks, conf)
-          s.files.flatMap { f =>
-            byPath.get(PosDeletes.norm(f.path)).map(ps =>
-              ChangesPartition(f.path, f.schemaEpoch, len(f.path), "delete",
-                ordinal, s.snapshotId, ps, keepOnlyPositions = true))
-          }
-        }
-      // upsert commit: rows of OLDER files matching the commit's NEW
-      // equality-delete keys are deletes. Each affected file becomes a
-      // key-matching partition; rows already dead (parent position
-      // masks, parent equality deletes) are excluded executor-side.
-      val parentEqPaths = pEqs.map(_.path).toSet
-      val newEqs =
-        if (s.isRowPreservingReplace) Nil
-        else s.eqDeleteFiles.filterNot(e => parentEqPaths(e.path))
-      val eqDeleted =
-        if (newEqs.isEmpty) Nil
-        else {
-          def slices(eqs: Seq[EqDeleteMeta]): Seq[EqSlice] =
-            eqs.map(e => EqSlice(e.path, len(e.path), eqGroupOf(e.path)))
-          s.files.flatMap { f =>
-            val keep = newEqs.filter(EqDeletes.mayApply(meta, f, _))
-            if (keep.isEmpty) None
-            else Some(ChangesPartition(f.path, f.schemaEpoch, len(f.path),
-              "delete", ordinal, s.snapshotId,
-              pDelMap.getOrElse(PosDeletes.norm(f.path), Array.empty[Long]),
-              keepOnlyPositions = false,
-              eqKeepSlices = slices(keep),
-              eqExcludeSlices = slices(
-                pEqs.filter(EqDeletes.mayApply(meta, f, _)))))
-          }
-        }
-      inserts ++ deletes ++ masked ++ eqDeleted
     }.toArray[InputPartition]
   }
 
@@ -221,6 +264,19 @@ class ChangesScan(catalog: LakeCatalog, meta: TableMeta, tableName: String,
   }
 
   private lazy val eqKeyFields = EqScanSupport.keyFields(meta, eqGroups)
+}
+
+object ChangesScan {
+  /** A start snapshot that no longer resolves means snapshots were
+    * expired past it: the events in the gap are unrecoverable, and
+    * silently replaying the surviving history would diverge the
+    * consumer — fail loudly, naming the id. */
+  def requireStart(meta: TableMeta, startId: Option[Long]): Unit =
+    startId.filter(_ > 0).foreach(id => require(
+      meta.snapshotById(id).isDefined,
+      s"changelog start snapshot $id is no longer in the table " +
+        "metadata (expired?); the change events after it cannot be " +
+        "reconstructed — restart the consumer from a full snapshot"))
 }
 
 /** Streaming CDC source over the snapshot log: each micro-batch plans

@@ -1113,7 +1113,7 @@ object Procedures {
         val startId = opts.get("start-snapshot-id").map(_.toLong)
         val endId = opts.get("end-snapshot-id").map(_.toLong)
         val net = a.boolOpt("net_changes").getOrElse(false)
-        val df = Changelog.build(spark, m, startId, endId,
+        val df = Changelog.build(spark, catalog, ident, m, startId, endId,
           a.strArr("identifier_columns"),
           a.boolOpt("compute_updates").getOrElse(
             !net && a.strArr("identifier_columns").nonEmpty),

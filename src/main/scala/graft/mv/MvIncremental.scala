@@ -196,10 +196,10 @@ object MvIncremental {
       // partials is exact INCREMENTAL VIEW MAINTENANCE for SUM/COUNT:
       // CoW rewrites' carry-over rows arrive as delete+insert of the
       // same values and cancel, so carry-over removal (a pairing
-      // join) is skipped on purpose.
-      if (lake.meta.schemas.size > 1) return None // changelog reads raw
-        // files name-mapped; an old schema epoch would null renamed
-        // columns — conservative, exactness first
+      // join) is skipped on purpose. The changes scan projects every
+      // schema epoch by field id, so an evolved base stays
+      // incremental; overRelation's name/type bridge still falls back
+      // when a column the MV reads was renamed or widened.
       // liveness: a COUNT(*) output decides when a group dies (net
       // row count 0 → the recompute would not emit the group at all)
       def isStarCount(n: String): Boolean =
@@ -231,9 +231,11 @@ object MvIncremental {
         }
         case _ => Nil
       }
-      val changes = graft.lake.Changelog.build(spark, lake.meta,
-        Some(startSnap), Some(head), Nil, computeUpdates = false,
-        netChanges = false, removeCarryovers = false)
+      val changes = graft.lake.Changelog.build(spark, lake.catalog,
+        lake.ident, lake.meta, Some(startSnap), Some(head), Nil,
+        computeUpdates = false, removeCarryovers = false)
+      // each side's `_change_type` filter prunes the scan to the
+      // partitions of its own kind
       def side(tpe: String): Option[DataFrame] = overRelation(
         changes.filter(col("_change_type") === tpe)
           .drop("_change_type", "_change_ordinal", "_commit_snapshot_id")
@@ -472,8 +474,7 @@ object MvIncremental {
       // suffix-head with weight −1, and SUM/COUNT partials add.
       // The guards mirror the single-base retractable path: COUNT(*)
       // liveness for group death, SUM-null ambiguity needs a paired
-      // COUNT, MIN/MAX cannot retract, and the changelog reads raw
-      // files name-mapped so any evolved base falls back.
+      // COUNT, MIN/MAX cannot retract.
       if (!isAgg) return None // projection rows can't retract keyless
       def isStarCount(n: String): Boolean =
         aggFns.get(n).exists(_.aggregateFunction match {
@@ -499,11 +500,10 @@ object MvIncremental {
         }
         case _ => Nil
       }
-      if (changed.exists(_._1.lake.meta.schemas.size > 1)) return None
       def signedTerms(x: Base, i: Int): Option[(DataFrame, DataFrame)] = {
-        val ch = graft.lake.Changelog.build(spark, x.lake.meta,
-          Some(x.start), Some(x.head), Nil, computeUpdates = false,
-          netChanges = false, removeCarryovers = false)
+        val ch = graft.lake.Changelog.build(spark, x.lake.catalog,
+          x.lake.ident, x.lake.meta, Some(x.start), Some(x.head), Nil,
+          computeUpdates = false, removeCarryovers = false)
         def side(tpe: String): Option[DataFrame] = {
           val rel = ch.filter(col("_change_type") === tpe)
             .drop("_change_type", "_change_ordinal", "_commit_snapshot_id")

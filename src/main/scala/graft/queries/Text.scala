@@ -202,45 +202,6 @@ object TextOps {
         size(array_distinct(col("b"))).cast("long").as("n_uniq"))
       .orderBy(col("doc_id"))
 
-  /** Greedy left-to-right merge of adjacent (l, r) symbol pairs — the
-    * reference BPE rewrite (a merged token never re-merges with the
-    * NEXT symbol in the same pass unless it itself equals l). A
-    * higher-order `aggregate` fold: no UDF, no serialization. */
-  private def mergeAdjacent(syms: Column, l: Column, r: Column): Column =
-    aggregate(syms, typedLit(Seq.empty[String]),
-      (acc, x) => when(size(acc) > 0 &&
-          element_at(acc, lit(-1)) === l && x === r,
-        concat(slice(acc, lit(1), size(acc) - 1), array(concat(l, r))))
-        .otherwise(concat(acc, array(x))))
-
-  /** Distributed BPE merge-table training (the public byte-pair-
-    * encoding algorithm of Sennrich/Haddow/Birch 2016): learn up to
-    * `nMerges` merges from the corpus and return them as
-    * (rank, left, right, pair_count) — exact integers and strings, so
-    * the result is bit-deterministic across runs and partitionings.
-    *
-    * Spark shape: ONE corpus-scale pass (word extraction + frequency
-    * aggregation — the only stage that grows with corpus bytes), then
-    * `nMerges` VOCAB-scale iterations over the (syms, freq) word
-    * list: adjacent-pair counts via a map-side-combined groupBy, a
-    * deterministic argmax (count desc, then (left, right)
-    * lexicographic — a 1-row planning collect), and the
-    * [[mergeAdjacent]] rewrite applied ONLY to words containing both
-    * winning symbols (everything else passes through the projection
-    * untouched). Each iteration checkpoints, so plan analysis stays
-    * O(1) per step instead of nesting k folds.
-    *
-    * 100 TB design: the vocabulary (distinct words) is Zipf-bounded
-    * orders of magnitude below corpus bytes, so every post-pass
-    * iteration is a small job and the corpus is read exactly once.
-    * The per-iteration recount is one NARROW scan + map-side-combined
-    * aggregate — its shuffle is distinct-pairs-scale, not
-    * adjacency-scale, which is why the delta-pair-statistics variant
-    * ([[trainBpeMerges]]'s `deltaPairStats`, the df-LSM pattern)
-    * measured EQUAL-or-worse at every vocabulary decade and full
-    * recount stays the default (BpeScale numbers in COVERAGE round
-    * 12). Training stops early when no pair repeats (pair_count < 2
-    * learns nothing). */
   /** Word-frequency vocabulary as (freq, syms): each distinct word's
     * character symbols + the `</w>` terminal — BPE's starting state.
     * The ONE corpus-scale pass; everything after is vocab-scale.
@@ -277,45 +238,6 @@ object TextOps {
     bpePairCounts(bpeInitVocab(Tables.documents(s, d)))
       .orderBy(col("l"), col("r"))
 
-  /** Free a superseded eager localCheckpoint's materialized blocks:
-    * `Dataset.unpersist` is a no-op for checkpoints (they never enter
-    * the cache manager), so reach the checkpointed RDD through the
-    * plan's LogicalRDD and unpersist it directly. Only for frames
-    * that are never read again — an unpersisted local checkpoint is
-    * unrecoverable by design. */
-  private def freeLocalCheckpoint(df: DataFrame): Unit =
-    df.queryExecution.analyzed match {
-      case lr: org.apache.spark.sql.execution.LogicalRDD =>
-        lr.rdd.unpersist(false)
-      case _ => ()
-    }
-
-  /** Train BPE merges. `deltaPairStats = true` maintains the pair
-    * statistics as a STATE TABLE updated by DELTAS mined from the
-    * rewritten words alone — the df-table LSM pattern: merging (l, r)
-    * can only change adjacency counts of words containing BOTH
-    * symbols, so each iteration re-counts exactly that affected set
-    * (subtract its old adjacencies, add its post-rewrite ones) and
-    * folds the delta into the stored pair counts. Exact integer
-    * algebra — bit-identical to the full recount (BpeSuite pins
-    * equality through k=256 plus identical natural exhaustion).
-    *
-    * It is NOT the default: the classical justification (avoid
-    * re-shuffling every adjacency) does not transfer to Spark, whose
-    * hash aggregate map-side-combines BEFORE the exchange — the full
-    * recount's per-iteration shuffle is already distinct-pairs-scale,
-    * while the delta path re-shuffles its whole pairs STATE each fold
-    * and runs 3× the jobs. Measured across vocabulary decades
-    * (BpeScale, 30 k and 300 k words): delta's marginal shuffle is
-    * 2.4× and 1.7× the full recount's and wall time is equal-or-worse
-    * at every decade; a lazy-chain variant that amortized the vocab
-    * advance write regressed >5× on plan re-analysis/codegen. Full
-    * recount therefore remains the production default, and the
-    * residual per-iteration term BOTH paths share is the vocab
-    * advance write — at true production k the next lever is a
-    * driver-resident merge loop over the collected (Zipf-bounded)
-    * vocabulary after the one distributed corpus pass, recorded in
-    * COVERAGE round 12. */
   // deterministic argmax tie-break: count desc, then (l, r)
   // lexicographic — compared by CODE POINT, not JVM UTF-16 code units,
   // which equals UTF-8 byte order for well-formed strings, so the
@@ -341,9 +263,8 @@ object TextOps {
   }
 
   /** The reference greedy fold: left-to-right, a merged token never
-    * chains into the next pair unless it itself equals l — the JVM
-    * twin of [[mergeAdjacent]], shared by the driver-resident trainer
-    * and the RDD merge loop. */
+    * chains into the next pair unless it itself equals l — shared by
+    * the driver-resident trainer and the RDD merge loop. */
   private def bpeRewrite(syms: Array[String], l: String,
       r: String): Array[String] = {
     val b = Array.newBuilder[String]
@@ -356,22 +277,29 @@ object TextOps {
     b.result()
   }
 
-  /** The default (full-recount) distributed merge loop, driven over
-    * RDDs: the loop's per-iteration DATA cost was already right (a
-    * map-side-combined pair count plus a vocab-scale rewrite), but the
-    * DataFrame spelling re-entered Catalyst every round — analysis,
-    * optimization and codegen of two structurally identical plans per
-    * merge, measured as ~60% of the gate's wall at sf0.1 (1.6 s of
-    * job-free driver gaps against 1.1 s of jobs, ×16 rounds; at
-    * production k ≈ 32 000 the constant is the whole runtime). The
-    * same loop over RDDs compiles nothing per round: flatMap adjacency
-    * counts → reduceByKey (map-side combine, same shuffle bytes) →
-    * takeOrdered(1) under the same count-desc/code-point ordering →
-    * gated [[bpeRewrite]] advance, persisted DISK_ONLY per round with
-    * the predecessor freed (the localCheckpoint discipline, RDD-
-    * spelled). Bit-identical by construction and pinned by BpeSuite
-    * against the independent reference and the driver trainer. */
-  private def trainBpeMergesRdd(s: SparkSession, docs: DataFrame,
+  /** Distributed BPE merge-table training (the public byte-pair-
+    * encoding algorithm of Sennrich/Haddow/Birch 2016): learn up to
+    * `nMerges` merges from the corpus and return them as
+    * (rank, left, right, pair_count) — exact integers and strings, so
+    * the result is bit-deterministic across runs and partitionings.
+    *
+    * Spark shape: ONE corpus-scale pass (word extraction + frequency
+    * aggregation — the only stage that grows with corpus bytes), then
+    * `nMerges` VOCAB-scale iterations over the (freq, syms) word list,
+    * driven over RDDs so nothing compiles per round (the DataFrame
+    * spelling re-entered Catalyst every merge, measured as ~60% of the
+    * gate's wall at sf0.1): flatMap adjacency counts → reduceByKey
+    * (map-side combine, so the shuffle is distinct-pairs-scale, not
+    * adjacency-scale) → takeOrdered(1) under the count-desc/code-point
+    * ordering → the [[bpeRewrite]] advance applied only to words
+    * holding the winning pair, persisted DISK_ONLY per round with the
+    * predecessor freed. The vocabulary is Zipf-bounded orders of
+    * magnitude below corpus bytes, so every post-pass iteration is a
+    * small job and the corpus is read exactly once. Training stops
+    * early when no pair repeats (pair_count < 2 learns nothing).
+    * BpeSuite pins it against the independent reference and the
+    * driver trainer. */
+  private[graft] def trainBpeMerges(s: SparkSession, docs: DataFrame,
       nMerges: Int): DataFrame = {
     val pairOrd = new Ordering[((String, String), Long)] {
       def compare(a: ((String, String), Long),
@@ -419,109 +347,15 @@ object TextOps {
     merges.result().toDF("rank", "left", "right", "pair_count")
   }
 
-  private[graft] def trainBpeMerges(s: SparkSession, docs: DataFrame,
-      nMerges: Int, deltaPairStats: Boolean = false): DataFrame = {
-    // the default path runs the RDD-spelled loop (no per-round plan
-    // compile); the delta-pair-stats variant below keeps its DataFrame
-    // spelling — it exists as the measured-and-rejected comparison
-    // point (BpeScale), not a production path
-    if (!deltaPairStats) return trainBpeMergesRdd(s, docs, nMerges)
-    var vocab = bpeInitVocab(docs)
-      .localCheckpoint(true, StorageLevel.DISK_ONLY)
-    // the delta path's vocab advance is a UNION of two frames; union
-    // partition counts ADD, and localCheckpoint preserves them, so
-    // without re-bounding to the initial width the count compounds
-    // per merge (4 → 8 → 16 … — measured as a 116 000-task stage by
-    // iteration 15). coalesce is narrow: no shuffle, no row change.
-    val vocabParts = math.max(vocab.rdd.getNumPartitions, 1)
-    var pairs: DataFrame =
-      if (deltaPairStats)
-        bpePairCounts(vocab).localCheckpoint(true, StorageLevel.DISK_ONLY)
-      else null
-    val merges = Seq.newBuilder[(Int, String, String, Long)]
-    var rank = 0
-    var done = false
-    while (rank < nMerges && !done) {
-      val stats = if (deltaPairStats) pairs else bpePairCounts(vocab)
-      val best = stats
-        .orderBy(col("cnt").desc, col("l"), col("r"))
-        .head(1)
-      if (best.isEmpty || best(0).getLong(2) < 2) done = true
-      else {
-        val (l, r, cnt) =
-          (best(0).getString(0), best(0).getString(1), best(0).getLong(2))
-        rank += 1
-        merges += ((rank, l, r, cnt))
-        val affectedCond = array_contains(col("syms"), l) &&
-          array_contains(col("syms"), r)
-        // superseded checkpoints are dead once their successors have
-        // materialized — freeing them per iteration keeps the session
-        // at ONE resident copy of each state instead of one per merge
-        // (a real disk leak at production k ≈ 32 000)
-        if (deltaPairStats) {
-          val affected = vocab.filter(affectedCond)
-            .localCheckpoint(true, StorageLevel.DISK_ONLY)
-          val rewritten = affected.select(col("freq"),
-              mergeAdjacent(col("syms"), lit(l), lit(r)).as("syms"))
-            .localCheckpoint(true, StorageLevel.DISK_ONLY)
-          // fold = stored counts + affected-set delta; pairs whose
-          // count reaches zero DROP (matching what a recount would
-          // simply not produce). Exact long sums — no drift.
-          val newPairs = pairs
-            .union(bpePairCounts(rewritten))
-            .union(bpePairCounts(affected)
-              .select(col("l"), col("r"), (-col("cnt")).as("cnt")))
-            .groupBy(col("l"), col("r")).agg(sum(col("cnt")).as("cnt"))
-            .filter(col("cnt") > 0)
-            .localCheckpoint(true, StorageLevel.DISK_ONLY)
-          // vocab advance: unaffected rows filter through the
-          // previous checkpoint (narrow — no fold re-runs), rewritten
-          // rows union on, and the result CHECKPOINTS each merge.
-          // The advance write is vocabulary-scale; an attempt to
-          // amortize it by keeping the chain lazy and folding every
-          // 16 merges regressed >5× (each iteration re-analyzes and
-          // re-codegens the deepening union/filter tree — plan-
-          // compile cost swamps the saved write), so the per-merge
-          // checkpoint stays. The DELTA win is the shuffle: the full
-          // recount shuffles every adjacency of every word per
-          // iteration, the delta path only the affected words'
-          // (BpeScale measures per-iteration shuffle bytes across
-          // vocabulary decades — the term that matters on a cluster
-          // where shuffle crosses the network).
-          val newVocab = vocab.filter(!affectedCond).union(rewritten)
-            .coalesce(vocabParts)
-            .localCheckpoint(true, StorageLevel.DISK_ONLY)
-          Seq(pairs, vocab, affected, rewritten).foreach(freeLocalCheckpoint)
-          pairs = newPairs
-          vocab = newVocab
-        } else {
-          val prev = vocab
-          vocab = vocab.select(col("freq"),
-              when(affectedCond,
-                mergeAdjacent(col("syms"), lit(l), lit(r)))
-                .otherwise(col("syms")).as("syms"))
-            .localCheckpoint(true, StorageLevel.DISK_ONLY)
-          freeLocalCheckpoint(prev)
-        }
-      }
-    }
-    freeLocalCheckpoint(vocab)
-    if (pairs != null) freeLocalCheckpoint(pairs)
-    import s.implicits._
-    merges.result().toDF("rank", "left", "right", "pair_count")
-  }
-
   /** Driver-resident BPE merge loop — the measured production-k
     * path. ONE distributed pass builds the word-frequency vocabulary
     * (the only stage that grows with corpus bytes — 100 TB of text
     * reduces here); the merge loop then runs in driver memory over
-    * the collected Zipf-bounded vocab, because BpeScale's decade
-    * measurements showed EVERY distributed variant pays a
-    * vocabulary-scale term per iteration (the recount is map-side-
-    * combined but still scans the vocab; the delta variant
-    * re-shuffles its pairs state; both re-materialize the advanced
-    * vocab) plus fixed job overhead — ×32 000 iterations, that
-    * dominates. Here an iteration is O(affected words · word length)
+    * the collected Zipf-bounded vocab, because every distributed
+    * variant measured pays a vocabulary-scale term per iteration (the
+    * recount is map-side-combined but still scans the vocab and
+    * re-materializes the advanced vocab) plus fixed job overhead —
+    * ×32 000 iterations, that dominates. Here an iteration is O(affected words · word length)
     * with NO job at all: a TreeSet keyed (−count, l, r) gives the
     * deterministic argmax in O(log P), a pair→words posting index
     * (lazily cleaned) locates exactly the words holding the winning

@@ -162,6 +162,27 @@ class LakeFuzzSuite extends AnyFunSuite with BeforeAndAfterAll {
             s"got  $got\nwant $want")
       case _ => ()
     }
+    // net_changes over the whole recorded history: every intermediate
+    // write, carry-over and compaction must cancel to the set
+    // difference of the two end states
+    if (states.size >= 2) {
+      val ((sidA, stA), (sidB, stB)) = (states.head, states.last)
+      val view = s"fz_net_${mode}_$seed"
+      sql(s"""CALL lake.system.create_changelog_view(
+             |table => 'db.${tbl.split('.').last}',
+             |changelog_view => '$view', net_changes => true,
+             |options => map('start-snapshot-id', '$sidA',
+             |               'end-snapshot-id', '$sidB'))""".stripMargin)
+      val got = sql(s"SELECT id, v, _change_type FROM $view").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2)))
+        .groupBy(identity).view.mapValues(_.length).toMap
+      val want: Map[(Long, String, String), Int] =
+        (stA.toSet.diff(stB.toSet).map { case (i, v) => (i, v, "delete") -> 1 } ++
+          stB.toSet.diff(stA.toSet).map { case (i, v) => (i, v, "insert") -> 1 }).toMap
+      assert(got == want,
+        s"$mode seed=$seed: net changelog ($sidA,$sidB] != model diff:\n" +
+          s"got  $got\nwant $want")
+    }
     sql(s"DROP TABLE $tbl")
   }
 

@@ -873,25 +873,78 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(changes.exists(c => c._1 == 1L && c._2 == "delete"))
   }
 
-  test("changelog range wider than changelog.max-snapshots is rejected") {
-    sql("""CREATE TABLE lake.db.cdccap (id bigint) USING lake
-        |TBLPROPERTIES ('changelog.max-snapshots'='2')""".stripMargin)
-    sql("INSERT INTO lake.db.cdccap VALUES (1)")
-    sql("INSERT INTO lake.db.cdccap VALUES (2)")
-    sql("INSERT INTO lake.db.cdccap VALUES (3)")
-    val ex = intercept[Exception] {
-      sql("""CALL lake.system.create_changelog_view(table => 'db.cdccap',
-            |changelog_view => 'cdccap_all')""".stripMargin)
+  test("changelog view over a range of snapshots plans one ChangesScan") {
+    sql("CREATE TABLE lake.db.cdcone (id bigint, v string) USING lake")
+    sql("INSERT INTO lake.db.cdcone VALUES (1,'a'),(2,'b')")
+    sql("INSERT INTO lake.db.cdcone VALUES (3,'c')")
+    sql("UPDATE lake.db.cdcone SET v = 'B' WHERE id = 2")
+    sql("DELETE FROM lake.db.cdcone WHERE id = 1")
+    sql("""CALL lake.system.create_changelog_view(table => 'db.cdcone',
+          |changelog_view => 'cdcone_v',
+          |identifier_columns => array('id'))""".stripMargin)
+    val df = sql("SELECT id, v, _change_type, _change_ordinal FROM cdcone_v")
+    val leaves = df.queryExecution.optimizedPlan.collectLeaves()
+    assert(leaves.size == 1 && leaves.forall {
+      case r: org.apache.spark.sql.execution.datasources.v2.DataSourceV2ScanRelation =>
+        r.scan.isInstanceOf[ChangesScan]
+      case _ => false
+    }, s"expected a single ChangesScan leaf over 4 snapshots:\n" +
+      df.queryExecution.optimizedPlan.treeString)
+    val rows = df.collect()
+      .map(r => (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3)))
+      .toSet
+    assert(rows == Set((1L, "a", "insert", 0), (2L, "b", "insert", 0),
+      (3L, "c", "insert", 1), (2L, "b", "update_before", 2),
+      (2L, "B", "update_after", 2), (1L, "a", "delete", 3)), rows.toString)
+  }
+
+  test("changes scan prunes input partitions by _change_type filters") {
+    sql("""CREATE TABLE lake.db.chprune (id bigint, v string) USING lake
+        |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    sql("INSERT INTO lake.db.chprune SELECT id, concat('r', id) FROM range(0, 6, 1, 1)")
+    sql("DELETE FROM lake.db.chprune WHERE id IN (2, 4)")
+    sql("INSERT INTO lake.db.chprune VALUES (10, 'x')")
+    sql("UPDATE lake.db.chprune SET v = 'y' WHERE id = 10")
+    def key(r: org.apache.spark.sql.Row) =
+      (r.getLong(0), r.getString(1), r.getString(2), r.getInt(3))
+    val all = sql("SELECT id, v, _change_type, _change_ordinal FROM " +
+      "lake.db.chprune.changes").collect().map(key).toSeq
+    for ((where, kinds) <- Seq(
+        "_change_type = 'insert'" -> Set("insert"),
+        "'delete' = _change_type" -> Set("delete"),
+        "_change_type IN ('insert', 'delete') AND id > 3" ->
+          Set("insert", "delete"))) {
+      val q = sql("SELECT id, v, _change_type, _change_ordinal FROM " +
+        s"lake.db.chprune.changes WHERE $where")
+      val parts = q.queryExecution.sparkPlan.collect {
+        case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+          b.inputPartitions.map(_.asInstanceOf[ChangesPartition].changeType)
+      }.flatten
+      assert(parts.nonEmpty && parts.toSet == kinds,
+        s"$where planned ${parts.mkString(",")}")
+      // the predicate still runs after the scan, so pruning cannot
+      // change the answer
+      val want = all.filter { case (id, _, t, _) =>
+        kinds(t) && (kinds.size == 1 || id > 3) }
+      assert(q.collect().map(key).toSeq.sorted == want.sorted, where)
     }
-    assert(ex.getMessage.contains("changelog.max-snapshots"), ex.getMessage)
-    // a narrowed range under the cap works
-    val snaps = sql(
-      "SELECT snapshot_id FROM lake.db.cdccap.snapshots ORDER BY committed_at")
-      .collect().map(_.getLong(0))
-    sql(s"""CALL lake.system.create_changelog_view(table => 'db.cdccap',
-           |changelog_view => 'cdccap_tail',
-           |options => map('start-snapshot-id', '${snaps(0)}'))""".stripMargin)
-    assert(count("SELECT count(*) FROM cdccap_tail") == 2)
+  }
+
+  test("changelog view over an expired start snapshot fails naming it") {
+    sql("CREATE TABLE lake.db.cdcexp (id bigint) USING lake")
+    (1 to 3).foreach(i => sql(s"INSERT INTO lake.db.cdcexp VALUES ($i)"))
+    val first = sql("SELECT snapshot_id FROM lake.db.cdcexp.snapshots " +
+      "ORDER BY committed_at").collect().head.getLong(0)
+    sql("CALL lake.system.expire_snapshots(table => 'db.cdcexp', " +
+      "older_than => TIMESTAMP '2100-01-01 00:00:00', retain_last => 1)")
+    // the oldest survivor has no parent any more: replaying it would
+    // report every one of its rows as an insert
+    val ex = intercept[Exception] {
+      sql(s"""CALL lake.system.create_changelog_view(table => 'db.cdcexp',
+             |changelog_view => 'cdcexp_v',
+             |options => map('start-snapshot-id', '$first'))""".stripMargin)
+    }
+    assert(ex.getMessage.contains(first.toString), ex.getMessage)
   }
 
   test("changelog view with net_changes collapses intermediate states") {

@@ -127,7 +127,7 @@ class NestedEvolutionSuite extends AnyFunSuite with BeforeAndAfterAll {
       "WHERE _change_type = 'insert'").collect()(0).getLong(0)
     assert(fromChanges == (100 + 101 + 102) + (200 + 201),
       s"changes table nulled/mismapped renamed nested values: $fromChanges")
-    // Changelog.build path (procedure view)
+    // procedure view: Changelog.build over the same scan
     sql("CALL lake.system.create_changelog_view(table => 'db.ncdc', " +
       "changelog_view => 'ncdc_cl')")
     val fromView = sql("SELECT sum(p.renamed) FROM ncdc_cl " +

@@ -33,9 +33,8 @@ class BpeSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Independent reference: the textbook algorithm over an in-memory
     * word-frequency map — index-walking greedy merge, mutable pair
-    * recount per iteration. Shares NO code with the Spark path (which
-    * uses a higher-order aggregate fold + groupBy recount), so
-    * agreement pins both. */
+    * recount per iteration. Shares NO code with the trainers, so
+    * agreement pins them. */
   private def refBpe(words: Map[String, Long],
       k: Int): Seq[(Int, String, String, Long)] = {
     var vocab: Seq[(Vector[String], Long)] =
@@ -156,32 +155,34 @@ class BpeSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(run() === run())
   }
 
-  test("delta pair statistics equal the full recount through k=256 " +
-      "on the real corpus") {
+  test("RDD, driver and reference trainers agree through k=256") {
     assume(ready)
-    // the production-k scale path (pair-count deltas mined from the
-    // rewritten words only) must be BIT-IDENTICAL to the direct
-    // full-vocabulary recount over a long merge schedule — deep
-    // enough (256) that merged-of-merged symbols, pair retirements
-    // (counts reaching zero), and tie-breaks on derived symbols all
-    // occur. The testdata corpus draws from a FIXED word list, so its
-    // productive schedule exhausts at ~105 merges at EVERY sf (once
-    // each distinct word is one symbol there is nothing left to
-    // learn) — pin (a) full-schedule equality including that natural
-    // exhaustion on the real corpus, and (b) k=256 equality on a
-    // wide-vocabulary corpus (3 000 distinct md5-hex pseudo-words,
-    // freq 2 each) that sustains the full schedule.
-    val docs = graft.Tables.documents(spark, sfDir)
-    val delta = TextOps.trainBpeMerges(spark, docs, 256,
-        deltaPairStats = true)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    val full = TextOps.trainBpeMerges(spark, docs, 256,
-        deltaPairStats = false)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(delta === full)
-    assert(delta.size > 64 && delta.size < 256,
-      s"real corpus must exhaust naturally mid-schedule, got " +
-        s"${delta.size}")
+    // deep enough (256) that merged-of-merged symbols, pair
+    // retirements and tie-breaks on derived symbols all occur. The
+    // testdata corpus draws from a FIXED word list, so its productive
+    // schedule exhausts at ~105 merges at EVERY sf (once each distinct
+    // word is one symbol there is nothing left to learn) — pin (a)
+    // full-schedule equality including that natural exhaustion on the
+    // real corpus, and (b) k=256 equality on a wide-vocabulary corpus
+    // (3 000 distinct md5-derived pseudo-words, freq 2 each) that
+    // sustains the full schedule.
+    def rows(df: org.apache.spark.sql.DataFrame) = df.orderBy("rank")
+      .collect()
+      .map(r => (r.getInt(0), r.getString(1), r.getString(2), r.getLong(3)))
+      .toSeq
+    def wordsOf(docs: org.apache.spark.sql.DataFrame) = docs
+      .selectExpr("explode(regexp_extract_all(lower(text), '[a-z]+', 0)) w")
+      .groupBy("w").count().collect()
+      .map(r => r.getString(0) -> r.getLong(1)).toMap
+    def agree(docs: org.apache.spark.sql.DataFrame) = {
+      val rdd = rows(TextOps.trainBpeMerges(spark, docs, 256))
+      assert(rdd === refBpe(wordsOf(docs), 256))
+      assert(rows(TextOps.trainBpeMergesDriver(spark, docs, 256)) === rdd)
+      rdd
+    }
+    val real = agree(graft.Tables.documents(spark, sfDir))
+    assert(real.size > 64 && real.size < 256,
+      s"real corpus must exhaust naturally mid-schedule, got ${real.size}")
     // letter-only pseudo-words (a..p from md5 nibbles) — hex digits
     // would be split away by the trainer's [a-z]+ extraction and the
     // fixture would quietly stop being wide-vocabulary
@@ -193,52 +194,14 @@ class BpeSuite extends AnyFunSuite with BeforeAndAfterAll {
         .map(nib => ('a' + nib).toChar)
         .mkString.take(4 + i % 9)
     }
-    val wideDocs = docsOf((wide ++ wide).grouped(400).map(_.mkString(" "))
-      .toSeq)
-    val dWide = TextOps.trainBpeMerges(spark, wideDocs, 256,
-        deltaPairStats = true)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    val fWide = TextOps.trainBpeMerges(spark, wideDocs, 256,
-        deltaPairStats = false)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(dWide === fWide)
-    assert(dWide.size == 256,
-      s"wide-vocab corpus must sustain all 256 merges, got " +
-        s"${dWide.size}")
-    // and the driver-resident production-k loop agrees on the same
-    // deep schedule (third independent implementation shape: posting
-    // index + TreeSet argmax vs dataframe recount vs delta state)
-    val drvWide = TextOps.trainBpeMergesDriver(spark, wideDocs, 256)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(drvWide === fWide)
-    // and identical NATURAL EXHAUSTION: on a fixture whose pairs run
-    // dry, both paths must stop at the same rank with the same table
-    // (the delta path's stop reads the maintained pairs state, not a
-    // recount — same verdict required)
-    val tiny = docsOf(Seq("ab ab cd"))
-    val dTiny = TextOps.trainBpeMerges(spark, tiny, 256,
-        deltaPairStats = true)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    val fTiny = TextOps.trainBpeMerges(spark, tiny, 256,
-        deltaPairStats = false)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(dTiny === fTiny)
-    // the driver loop's OWN stop mechanism (TreeSet head on maintained
-    // counts) must exhaust at the same rank with the same table —
-    // production k makes exhaustion the normal case there
-    val drvTiny = TextOps.trainBpeMergesDriver(spark, tiny, 256)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(drvTiny === fTiny)
-    assert(dTiny.nonEmpty && dTiny.size < 10,
-      s"fixture must exhaust early: $dTiny")
-  }
-
-  test("delta path is deterministic across partitionings") {
-    assume(ready)
-    val docs = graft.Tables.documents(spark, sfDir)
-    def run(parts: Int) = TextOps.trainBpeMerges(
-        spark, docs.repartition(parts), 24, deltaPairStats = true)
-      .orderBy("rank").collect().map(_.toString).toSeq
-    assert(run(7) === run(3))
+    val wideRows = agree(docsOf((wide ++ wide).grouped(400)
+      .map(_.mkString(" ")).toSeq))
+    assert(wideRows.size == 256,
+      s"wide-vocab corpus must sustain all 256 merges, got ${wideRows.size}")
+    // identical NATURAL EXHAUSTION on a fixture whose pairs run dry:
+    // the RDD loop's recount and the driver loop's TreeSet head must
+    // stop at the same rank with the same table
+    val tiny = agree(docsOf(Seq("ab ab cd")))
+    assert(tiny.nonEmpty && tiny.size < 10, s"fixture must exhaust early: $tiny")
   }
 }
