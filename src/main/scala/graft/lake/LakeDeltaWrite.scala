@@ -139,7 +139,7 @@ class LakeDeltaBatchWrite(table: LakeTable, info: LogicalWriteInfo,
     val fan = ms.collect { case m: LakeFanoutCommit => m }
     val msgTuples: Option[Map[String, Map[String, String]]] =
       if (fan.size == ms.size && fan.forall(m => m.files.size == m.tuples.size))
-        Some(fan.flatMap(m => m.files.map(LakeWriteUtil.normPath)
+        Some(fan.flatMap(m => m.files.map(PosDeletes.norm)
           .zip(m.tuples)).toMap)
       else None
     LakeWriteUtil.commitDelta(table, stagingDir, deleteDir, operation,

@@ -173,7 +173,7 @@ class LakeBatchWrite(table: LakeTable, info: LogicalWriteInfo, mode: String,
         val ms = messages.toSeq.filter(_ != null)
         val fan = ms.collect { case m: LakeFanoutCommit => m }
         if (fan.size == ms.size && fan.forall(m => m.files.size == m.tuples.size))
-          Some(fan.flatMap(m => m.files.map(LakeWriteUtil.normPath)
+          Some(fan.flatMap(m => m.files.map(PosDeletes.norm)
             .zip(m.tuples)).toMap)
         else None
       }
@@ -358,18 +358,18 @@ object LakeWriteUtil {
       // trust write-time tuples only while the commit-time spec still
       // matches the field names they were evaluated under (a concurrent
       // REPLACE PARTITION FIELD between write and CAS retry re-derives)
-      case Some(mt) if stagedPaths.forall(p => mt.contains(normPath(p))) &&
+      case Some(mt) if stagedPaths.forall(p => mt.contains(PosDeletes.norm(p))) &&
           mt.values.forall(_.keySet ==
             evolved.partitionSpec.map(_.name).toSet) =>
         stagedPaths.map { p =>
-          val np = normPath(p); np -> Set(mt(np))
+          val np = PosDeletes.norm(p); np -> Set(mt(np))
         }.toMap
       case _ => partitionTuples(spark, stagedPaths, evolved)
     })
     val harvested = timed(statsNs += _)(
       FileStats.fromFooters(stagedPaths, conf, schema, epoch,
         p => {
-          val tuples = specTuples.getOrElse(normPath(p), Set.empty)
+          val tuples = specTuples.getOrElse(PosDeletes.norm(p), Set.empty)
           if (tuples.size == 1) tuples.head else Map.empty
         }))
     // write-order provenance: rows arrived sorted tuple-major then by
@@ -589,22 +589,13 @@ object LakeWriteUtil {
     spark.read.parquet(paths: _*)
       .select(input_file_name().as("__file") +: cols: _*)
       .distinct().collect()
-      .groupBy(r => normPath(r.getString(0)))
+      .groupBy(r => PosDeletes.norm(r.getString(0)))
       .map { case (file, rows) =>
         file -> rows.map(r => meta.partitionSpec.zipWithIndex.map {
           case (f, i) => f.name -> String.valueOf(r.get(i + 1))
         }.toMap).toSet
       }
   }
-
-  /** input_file_name() returns file:///x while Hadoop listings give
-    * file:/x — compare on the bare URI path. */
-  def normPath(p: String): String = new Path(p).toUri.getPath
-
-  /** Column-level twin of [[normPath]] for executor-side path set
-    * comparisons (same idiom the MoR mask join uses). */
-  def normPathCol(c: org.apache.spark.sql.Column): org.apache.spark.sql.Column =
-    regexp_replace(c, "^[a-zA-Z0-9.+-]+:/+", "/")
 
   /** DataFrame variant of [[listParquetWithAge]]: the listing stays on
     * the executors as (`path` raw, `norm`, `mtime`) instead of
@@ -640,7 +631,7 @@ object LakeWriteUtil {
           spark.createDataset(sub).toDF("path", "mtime").unionAll(topDf)
         }
       }
-    raw.withColumn("norm", normPathCol(col("path")))
+    raw.withColumn("norm", PosDeletes.normCol(col("path")))
   }
 
   /** Distributed delete of a one-column (`path`) DataFrame without
@@ -754,8 +745,7 @@ object LakeWriteUtil {
           else {
             val delDf = spark.createDataFrame(pairs).toDF("__fp", "__pos")
             raw
-              .withColumn("__fp", regexp_replace(
-                col("_metadata.file_path"), "^[a-zA-Z0-9.+-]+:/+", "/"))
+              .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
               .withColumn("__pos", col("_metadata.row_index"))
               .join(broadcast(delDf), Seq("__fp", "__pos"), "left_anti")
           }
@@ -781,7 +771,7 @@ object LakeWriteUtil {
       case None =>
         val tuples = partitionTuples(spark, outPaths, meta)
         p => {
-          val t = tuples.getOrElse(normPath(p), Set.empty)
+          val t = tuples.getOrElse(PosDeletes.norm(p), Set.empty)
           if (t.size == 1) t.head else Map.empty
         }
     }
@@ -840,8 +830,7 @@ object LakeWriteUtil {
         applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
           .map(p => (PosDeletes.norm(f.path), p)))
     val raw = spark.read.schema(epochSchema).parquet(files.map(_.path): _*)
-      .withColumn("__fp", regexp_replace(
-        col("_metadata.file_path"), "^[a-zA-Z0-9.+-]+:/+", "/"))
+      .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
     val masked =
       if (allPairs.isEmpty) raw
       else raw.withColumn("__pos", col("_metadata.row_index"))
@@ -900,11 +889,11 @@ object LakeWriteUtil {
       if (unknown.isEmpty) Map.empty[String, Set[Map[String, String]]]
       else partitionTuples(spark, unknown.map(_.path), meta)
     val keptUnknown = unknown.filter { f =>
-      resolved.getOrElse(normPath(f.path), Set.empty)
+      resolved.getOrElse(PosDeletes.norm(f.path), Set.empty)
         .forall(t => !stagedTuples.contains(t))
     }
     val partials = unknown.filter { f =>
-      val tuples = resolved.getOrElse(normPath(f.path), Set.empty)
+      val tuples = resolved.getOrElse(PosDeletes.norm(f.path), Set.empty)
       tuples.exists(stagedTuples.contains) && !tuples.forall(stagedTuples.contains)
     }
     val rewritten =
@@ -952,17 +941,17 @@ object LakeWriteUtil {
     // commitStaged); fall back when they don't cover the listing
     val tuples = stagedTuples match {
       // same spec-drift guard as commitStaged
-      case Some(mt) if dataPaths.forall(p => mt.contains(normPath(p))) &&
+      case Some(mt) if dataPaths.forall(p => mt.contains(PosDeletes.norm(p))) &&
           mt.values.forall(_.keySet ==
             fresh.partitionSpec.map(_.name).toSet) =>
         dataPaths.map { p =>
-          val np = normPath(p); np -> Set(mt(np))
+          val np = PosDeletes.norm(p); np -> Set(mt(np))
         }.toMap
       case _ => partitionTuples(spark, dataPaths, fresh)
     }
     val staged = FileStats.fromFooters(dataPaths, conf, schema, epoch,
       p => {
-        val t = tuples.getOrElse(normPath(p), Set.empty)
+        val t = tuples.getOrElse(PosDeletes.norm(p), Set.empty)
         if (t.size == 1) t.head else Map.empty
       })
 
@@ -1220,8 +1209,7 @@ object LakeWriteUtil {
         } {
           val epochSchema = fresh.schemaAt(epoch)
           val meta = Seq(
-            regexp_replace(col("_metadata.file_path"), "^[a-zA-Z0-9.+-]+:/+", "/")
-              .as("file_path"),
+            PosDeletes.normCol(col("_metadata.file_path")).as("file_path"),
             col("_metadata.row_index").as("pos"))
           val projected =
             spark.read.schema(epochSchema).parquet(fs.map(_.path): _*)

@@ -248,7 +248,7 @@ object Manifests {
           else col("path")
         df.select(pathCol.as("path")).unionAll(inlineDf)
       }
-    raw.select(LakeWriteUtil.normPathCol(col("path")).as("path"))
+    raw.select(PosDeletes.normCol(col("path")).as("path"))
   }
 
   /** Entry count of a spilled manifest WITHOUT materializing it: sums

@@ -4,6 +4,8 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.parquet.hadoop.ParquetReader
 import org.apache.parquet.hadoop.example.GroupReadSupport
+import org.apache.spark.sql.Column
+import org.apache.spark.sql.functions.regexp_replace
 
 import scala.collection.mutable
 
@@ -12,10 +14,14 @@ import scala.collection.mutable
   *
   * A position-delete file is a parquet file of
   * `(file_path string, pos long)` sorted by both columns — the same
-  * shape as Iceberg's position deletes. `file_path` is stored in
-  * NORMALIZED form (schemeless absolute path) so matching is immune to
-  * the `file:///x` vs `file:/x` spelling differences between Spark's
-  * `_metadata.file_path` and Hadoop listings.
+  * shape as Iceberg's position deletes. `file_path` is stored as the
+  * data file's KEY: its URI path with scheme and authority stripped
+  * (`hdfs://nn:8020/wh/f`, `s3a://bucket/wh/f`, `file:///wh/f` and
+  * `/wh/f` all key as `/wh/f`), so matching is immune to the spelling
+  * differences between Spark's `_metadata.file_path`, Hadoop listings
+  * and the paths recorded in manifests. This object is the key's only
+  * definition: driver code uses [[norm]], executor-side column
+  * expressions use [[normCol]], and the two agree on every spelling.
   *
   * Delete files are written by a distributed Spark job at DELETE time
   * (LakeWriteUtil.deleteWhere). On the SCAN path only the metadata-
@@ -45,8 +51,13 @@ object PosDeletes {
           size() > 64
       })
 
-  /** Normalize any path spelling to a schemeless absolute path. */
+  /** The key of a data file: its path without scheme or authority. */
   def norm(p: String): String = new Path(p).toUri.getPath
+
+  /** Column twin of [[norm]] for executor-side keys (mask writes, mask
+    * anti-joins, path-set joins): strips `scheme:` and a `//authority`. */
+  def normCol(c: Column): Column =
+    regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9.+-]*:(//[^/]*)?", "")
 
   /** Could `deleteFile` mask rows of the data file at `normDataPath`?
     * Decided purely from the delete file's `file_path` footer min/max

@@ -421,7 +421,7 @@ object Procedures {
         import spark.implicits._
         val referenced = Manifests.dataPathsDf(spark, m.snapshots)
           .unionAll(inlineDeletes.toDF("path")
-            .select(LakeWriteUtil.normPathCol(col("path")).as("path")))
+            .select(PosDeletes.normCol(col("path")).as("path")))
         // distributed listing WITH modification times: the walk over
         // thousands of data/<uuid>/ subdirs fans out to executors, and
         // the age guard reuses the listed times instead of one
@@ -453,14 +453,14 @@ object Procedures {
         // cleanup) leaves a whole directory no metadata version points
         // at — collect it recursively under the same age guard
         val liveSpills = m.snapshots.flatMap(_.manifestPath)
-          .map(LakeWriteUtil.normPath).toSet
+          .map(PosDeletes.norm).toSet
         val spillRoot = new org.apache.hadoop.fs.Path(
           s"${m.location}/metadata/manifests")
         val orphanDirs =
           if (!fs.exists(spillRoot)) Nil
           else fs.listStatus(spillRoot).toSeq.filter(_.isDirectory)
             .map(_.getPath.toString)
-            .filterNot(p => liveSpills(LakeWriteUtil.normPath(p)))
+            .filterNot(p => liveSpills(PosDeletes.norm(p)))
             .filter(aged)
         if (!a.boolOpt("dry_run").getOrElse(false)) {
           // distributed: orphan sweeps at 100 TB file counts must not
@@ -832,8 +832,7 @@ object Procedures {
           } {
             val epochSchema = m.schemaAt(epoch)
             val metaCols = Seq(
-              regexp_replace(col("_metadata.file_path"),
-                "^[a-zA-Z0-9.+-]+:/+", "/").as("file_path"),
+              PosDeletes.normCol(col("_metadata.file_path")).as("file_path"),
               col("_metadata.row_index").as("pos"))
             val rows = spark.read.schema(epochSchema)
               .parquet(fs.map(_.path): _*)

@@ -58,6 +58,21 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
       .exists(r => r.getString(0) == "main"))
   }
 
+  test("PosDeletes.normCol keys every path spelling like PosDeletes.norm") {
+    val spellings = Seq("/wh/t/data/f.parquet", "file:/wh/t/data/f.parquet",
+      "file:///wh/t/data/f.parquet", "hdfs://nn:8020/wh/t/data/f.parquet",
+      "s3a://bucket/wh/t/data/f.parquet")
+    val s = spark
+    import s.implicits._
+    val keyed = spellings.toDF("p").repartition(2)
+      .select($"p", PosDeletes.normCol($"p")).collect()
+      .map(r => r.getString(0) -> r.getString(1)).toMap
+    val disagree = spellings.filter(p => keyed(p) != PosDeletes.norm(p))
+    assert(disagree.isEmpty, disagree.map(p =>
+      s"$p: column key ${keyed(p)}, driver key ${PosDeletes.norm(p)}").mkString("; "))
+    assert(spellings.map(PosDeletes.norm).distinct == Seq("/wh/t/data/f.parquet"))
+  }
+
   test("ctas and rtas") {
     sql("CREATE TABLE lake.db.ctas USING lake AS SELECT 1 AS id, 'x' AS v")
     assert(count("SELECT count(*) FROM lake.db.ctas") == 1)

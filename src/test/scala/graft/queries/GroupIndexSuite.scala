@@ -331,23 +331,57 @@ class GroupIndexSuite extends AnyFunSuite with BeforeAndAfterAll {
     dropIndex(idx)
   }
 
-  test("mined refresh at sf0.001 split across two batches equals the " +
-      "one-shot grouping") {
+  /** Build on the even docs of sf0.001, refresh with two mined
+    * batches, and compare the stored labels with the one-shot grouping. */
+  private def twoBatchRefreshMatchesOneShot(): Unit = {
     val sfDir = "/root/testdata/sf0.001"
     assume(new java.io.File(sfDir).isDirectory)
     val docs = graft.Tables.documents(spark, sfDir)
     val idx = TextOps.buildGroupIndex(spark,
       docs.filter(col("doc_id") % 2 === 0))
-    TextOps.refreshGroupIndexMined(spark, idx,
-      docs.filter(col("doc_id") % 4 === 1))
-    TextOps.refreshGroupIndexMined(spark, idx,
-      docs.filter(col("doc_id") % 4 === 3))
-    val got = labelsOf(idx.labels)
-    val want = TextOps.tDedupGroups(spark, sfDir).collect()
-      .map(r => r.getLong(0) -> r.getLong(1)).toMap
-    assert(got == want,
-      "two mined batches must reproduce the one-shot labels exactly")
-    dropIndex(idx)
+    try {
+      TextOps.refreshGroupIndexMined(spark, idx,
+        docs.filter(col("doc_id") % 4 === 1))
+      TextOps.refreshGroupIndexMined(spark, idx,
+        docs.filter(col("doc_id") % 4 === 3))
+      val got = labelsOf(idx.labels)
+      val want = TextOps.tDedupGroups(spark, sfDir).collect()
+        .map(r => r.getLong(0) -> r.getLong(1)).toMap
+      assert(got == want,
+        "two mined batches must reproduce the one-shot labels exactly")
+    } finally dropIndex(idx)
+  }
+
+  test("mined refresh at sf0.001 split across two batches equals the " +
+      "one-shot grouping") {
+    twoBatchRefreshMatchesOneShot()
+  }
+
+  test("SPJ probe refresh (broadcastPostingLimit=0) at sf0.001 equals " +
+      "the one-shot grouping") {
+    // limit 0 sends every non-empty batch down the bucketed scratch
+    // table + storage-partitioned probe and the clustered label append
+    // (smallBatch = false); the default limit takes the broadcast path
+    val probed = new java.util.concurrent.atomic.AtomicBoolean(false)
+    val listener = new org.apache.spark.sql.util.QueryExecutionListener {
+      override def onSuccess(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, ns: Long): Unit =
+        if (qe.logical.toString.contains("grpidx_probe")) probed.set(true)
+      override def onFailure(f: String,
+          qe: org.apache.spark.sql.execution.QueryExecution, e: Exception): Unit = ()
+    }
+    spark.listenerManager.register(listener)
+    spark.conf.set("spark.graft.probe.broadcastPostingLimit", "0")
+    try {
+      twoBatchRefreshMatchesOneShot()
+      // listener events arrive asynchronously
+      val deadline = System.nanoTime() + 10000000000L
+      while (!probed.get && System.nanoTime() < deadline) Thread.sleep(50)
+      assert(probed.get, "the refresh must probe through a scratch table")
+    } finally {
+      spark.conf.unset("spark.graft.probe.broadcastPostingLimit")
+      spark.listenerManager.unregister(listener)
+    }
   }
 
   test("delta-count fold between refreshes changes nothing (LSM df " +
