@@ -237,15 +237,15 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     new LakeTable(this, ident, committed, None, "main")
   }
 
-  // Non-purge DROP removes the catalog entry (the metadata log) but
-  // keeps data files, mirroring Iceberg's gc-disabled drop — so a
-  // dropped table can be re-created via register_table from a saved
-  // metadata file. PURGE deletes the whole table directory.
+  // Non-purge DROP removes the catalog entry (the version log) but
+  // keeps data, delete and manifest files, mirroring Iceberg's
+  // gc-disabled drop — so a dropped table can be re-created via
+  // register_table from a saved version file. PURGE deletes the whole
+  // table directory.
   override def dropTable(ident: Identifier): Boolean = {
     if (!tableExists0(ident)) return false
     loadMetaWritable(ident) // frozen tables refuse destruction too
-    MetadataLog.fs(warehouse, hadoopConf)
-      .delete(new Path(tableLocation(ident), "metadata"), true)
+    MetadataLog.dropLog(tableLocation(ident), hadoopConf)
     true
   }
 
@@ -272,11 +272,15 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     fs.mkdirs(dst.getParent)
     if (!fs.rename(src, dst))
       throw new IllegalStateException(s"rename $src -> $dst failed")
-    // location is embedded in metadata — rewrite it
+    // location is embedded in metadata — rewrite it. Manifest pointers
+    // resolve against the directory the table is loaded from, so the
+    // moved table reads its manifests before this commit; the rewritten
+    // file lists then get manifests of their own under `dst`.
     val meta = MetadataLog.load(dst.toString, hadoopConf)
     val moved = meta.copy(location = dst.toString,
       snapshots = meta.snapshots.map(s => s.copy(files = s.files.map(f =>
-        f.copy(path = f.path.replace(src.toString, dst.toString))))))
+        f.copy(path = f.path.replace(src.toString, dst.toString))),
+        manifestPath = None)))
     MetadataLog.commit(moved, hadoopConf)
   }
 
@@ -375,7 +379,13 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     * propagates immediately: only the CAS race retries, never a
     * detected isolation violation. */
   private[lake] def commitRetrying(ident: Identifier)(
-      attempt: TableMeta => TableMeta): TableMeta = {
+      attempt: TableMeta => TableMeta): TableMeta =
+    commitRetryingCounted(ident)(attempt)._1
+
+  /** [[commitRetrying]], also returning the metadata bytes the winning
+    * attempt wrote (see [[MetadataLog.commitCounted]]). */
+  private[lake] def commitRetryingCounted(ident: Identifier)(
+      attempt: TableMeta => TableMeta): (TableMeta, Long) = {
     // every data commit (writes, DML, compaction rewrites) derives
     // through here — the metadata-layer read-only backstop, so a
     // frozen table stays frozen even in a session that never
@@ -390,7 +400,7 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
     var n = 0
     while (true) {
       val candidate = stampCommitTag(fresh, attempt(fresh))
-      try return commitMeta(candidate)
+      try return MetadataLog.commitCounted(candidate, hadoopConf)
       catch {
         case e: java.util.ConcurrentModificationException =>
           n += 1

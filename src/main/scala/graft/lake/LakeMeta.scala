@@ -39,18 +39,18 @@ object LakeMeta {
   }
 
   /** Live data-file count of the current main snapshot — what the
-    * `.files` metadata table counts. A spilled-manifest head (file
-    * list past the spill threshold) is counted from its parquet
-    * FOOTERS, not by forcing the manifest: the callers are per-epoch
-    * maintenance triggers, and materializing a million-entry manifest
-    * to count it would cost exactly what the trigger exists to
-    * avoid. */
+    * `.files` metadata table counts. A spilled head (file list past
+    * the spill threshold, a parquet manifest) is counted from its
+    * parquet FOOTERS, not by forcing the manifest: the callers are
+    * per-epoch maintenance triggers, and materializing a
+    * million-entry manifest to count it would cost exactly what the
+    * trigger exists to avoid. A JSON manifest is one cached read. */
   def liveFileCount(spark: SparkSession, parts: Seq[String]): Long = {
     val (cat, ident) = LakeDdl.resolve(spark, parts)
-    cat.loadMeta(ident).currentSnapshot("main").map(_.files match {
-      case l: LazyManifestFiles if !l.isForced =>
-        Manifests.countRows(l.dir, cat.hadoopConf)
-      case f => f.size.toLong
-    }).getOrElse(0L)
+    cat.loadMeta(ident).currentSnapshot("main").map(s =>
+      Manifests.unforcedSpill(s.files) match {
+        case Some(l) => Manifests.countRows(l.dir, cat.hadoopConf)
+        case None => s.files.size.toLong
+      }).getOrElse(0L)
   }
 }

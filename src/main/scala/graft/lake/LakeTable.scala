@@ -384,8 +384,9 @@ class LakeScanBuilder(table: LakeTable, snapshotId: Option[Long],
     // selective query on a million-file snapshot plannable. Unfiltered
     // scans need every entry anyway and hydrate through the cache.
     val statRenames = LakeScans.statRenames(fullSchema, table.meta)
-    val pruned = files match {
-      case l: LazyManifestFiles if !l.isForced && pushed.nonEmpty =>
+    val spill = Manifests.unforcedSpill(files)
+    val pruned = spill match {
+      case Some(l) if pushed.nonEmpty =>
         Manifests.readPruned(l.dir, pushed.toSeq, fullSchema,
           table.catalog.hadoopConf, statRenames)
       case _ => FileStats.prune(files, pushed.toSeq, fullSchema, statRenames)
@@ -448,15 +449,13 @@ class LakeScanBuilder(table: LakeTable, snapshotId: Option[Long],
         case _ => pruned
       }
       LakeScanBuilder.lastPlannedFileCount.set(planned.size)
-      // candidate count for the skipped-files metric — only when the
-      // manifest is already materialized (never force a lazy spill)
-      val candidates = files match {
-        case l: LazyManifestFiles if !l.isForced => -1
-        case s => s.size
-      }
+      // skipped-files metric: unknown only for a parquet spill the
+      // prune left unread (never force it just to count)
+      val skipped =
+        if (spill.exists(!_.isForced)) -1L
+        else (files.size - planned.size).toLong
       new LakeBatchScan(table, planned, required, pushed, options, deleted,
-        eqDeleted,
-        skippedFiles = if (candidates < 0) -1L else (candidates - planned.size).toLong)
+        eqDeleted, skippedFiles = skipped)
     }
   }
 }

@@ -285,8 +285,12 @@ case class ProjectingWriterFactory(inner: DataWriterFactory,
   * Cumulative totals plus a last-commit snapshot; specs read both,
   * and each commit logs one INFO line. */
 private[graft] object LakeCommitMetrics {
+  /** `metadataBytes`: the version file plus the manifests the winning
+    * attempt wrote (0 if the commit failed). `casRetries`: attempts
+    * after the first, each one re-derived after a lost CAS. */
   final case class CommitTiming(stagedFiles: Int, listMs: Long,
-      tuplesMs: Long, statsMs: Long, deriveMs: Long, totalMs: Long)
+      tuplesMs: Long, statsMs: Long, deriveMs: Long, totalMs: Long,
+      metadataBytes: Long, casRetries: Int)
   private val lastRef =
     new java.util.concurrent.atomic.AtomicReference[CommitTiming]()
   private val commitsCtr = new java.util.concurrent.atomic.AtomicLong
@@ -324,10 +328,15 @@ object LakeWriteUtil {
     val tStart = System.nanoTime()
     var listNs = 0L; var tuplesNs = 0L; var statsNs = 0L
     var stagedCount = 0
+    var attempts = 0
+    var metadataBytes = 0L
     def timed[A](acc: Long => Unit)(body: => A): A = {
       val t0 = System.nanoTime(); val r = body; acc(System.nanoTime() - t0); r
     }
-    try table.catalog.commitRetrying(table.ident) { fresh =>
+    try {
+    val (committed, bytes) =
+      table.catalog.commitRetryingCounted(table.ident) { fresh =>
+    attempts += 1
 
     // write-side schema evolution (mergeSchema / accept-any-schema,
     // iceberg_it.py:1640-1681): extra top-level fields are appended
@@ -507,16 +516,21 @@ object LakeWriteUtil {
     // publish_changes (docs/spark-procedures.md:186)
     val advance = if (wapId.isDefined) None else Some(targetRef)
     metaWithRef.withSnapshot(snap, advance)
+    }
+    metadataBytes = bytes
+    committed
     } finally {
       def ms(ns: Long) = ns / 1000000L
       val total = ms(System.nanoTime() - tStart)
       val t = LakeCommitMetrics.CommitTiming(stagedCount, ms(listNs),
         ms(tuplesNs), ms(statsNs),
-        total - ms(listNs) - ms(tuplesNs) - ms(statsNs), total)
+        total - ms(listNs) - ms(tuplesNs) - ms(statsNs), total,
+        metadataBytes, math.max(attempts - 1, 0))
       LakeCommitMetrics.record(t)
       LakeCommitMetrics.log.info(s"commit ${table.name()}: staged=${t.stagedFiles} " +
         s"list=${t.listMs}ms tuples=${t.tuplesMs}ms stats=${t.statsMs}ms " +
-        s"derive+cas=${t.deriveMs}ms total=${t.totalMs}ms")
+        s"derive+cas=${t.deriveMs}ms total=${t.totalMs}ms " +
+        s"metadataBytes=${t.metadataBytes} casRetries=${t.casRetries}")
     }
   }
 

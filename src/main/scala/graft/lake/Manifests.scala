@@ -3,34 +3,54 @@ package graft.lake
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.spark.sql.{Encoders, SparkSession}
+import org.json4s.{DefaultFormats, Formats}
+import org.json4s.jackson.Serialization
 
+import java.nio.charset.StandardCharsets
 import java.util.{Collections, LinkedHashMap, Map => JMap}
 
-/** Parquet manifest spill for large snapshots (the 100 TB seam).
+/** Per-snapshot manifests: each snapshot's data-file list, written once.
   *
-  * A snapshot whose file list exceeds the table's
-  * `write.metadata.manifest.spill-threshold` (default 500) gets its
-  * manifest written once — immutably — as a parquet directory
-  * `metadata/manifests/m-<snapshotId>-<rand>/`, and the metadata JSON
-  * keeps only the pointer. Spilling/hydration happens entirely inside
-  * [[MetadataLog]] commit/load, so the rest of the engine always sees
-  * hydrated `SnapshotMeta.files`.
+  * Metadata layout of a table at `<location>`:
+  *  - `metadata/v{N}.json` ([[MetadataLog]]): one immutable version per
+  *    commit. Per snapshot it holds the summary, the position and
+  *    equality delete-file lists, and `manifestPath`, a pointer to the
+  *    snapshot's data-file manifest. It holds no data-file list.
+  *  - `metadata/manifests/m-<snapshotId>-<rand>.json`: the data-file
+  *    list as one JSON array, for lists at or below
+  *    `write.metadata.manifest.spill-threshold` (default 500) entries.
+  *    Written and read on the driver, no Spark job.
+  *  - `metadata/manifests/m-<snapshotId>-<rand>/`: a parquet directory
+  *    for longer lists. It is splittable, so filtered planning
+  *    ([[readPruned]]) and maintenance ([[dataPathsDf]]) scan it in a
+  *    Spark job instead of materializing it on the driver.
   *
-  * The manifest is columnar and splittable: a future cluster-side
-  * planner can scan it distributed instead of collecting to the
-  * driver. Reads are cached process-wide — manifests are immutable, so
-  * the cache needs no invalidation.
+  * The commit that creates a snapshot writes its manifest; every later
+  * version carries the pointer, so a commit writes its own snapshot's
+  * list, not the history's. A snapshot with no data files has no
+  * manifest.
+  *
+  * Pointers are stored relative to `<location>/metadata/`
+  * (`manifests/m-…`) and resolve against the directory the table is
+  * loaded from, so a renamed table keeps reading. Absolute pointers,
+  * written before pointers became relative, still load; one under the
+  * location its version file records moves with the table.
+  *
+  * A loaded snapshot's `files` is a [[LazyManifestFiles]] that reads
+  * through a process-wide cache on first access. Manifests are
+  * immutable, so the cache needs no invalidation. Version files written
+  * before per-snapshot manifests carry inline lists: they load as they
+  * are, and the next commit writes a manifest for each snapshot.
   */
 object Manifests {
+  implicit private val fmts: Formats = DefaultFormats
 
   val ThresholdKey = "write.metadata.manifest.spill-threshold"
   val DefaultThreshold = 500
 
   // Access-ordered LRU: a workload touching more than MaxCacheEntries
-  // spilled snapshots evicts one entry per insert, not the whole cache
-  // (a clear-all would refetch every manifest on the next planning
-  // round — thrash, at exactly the snapshot counts where the cache
-  // matters most).
+  // manifests evicts one entry per insert, not the whole cache (a
+  // clear-all would refetch every manifest on the next planning round).
   private val MaxCacheEntries = 64
   private val cache: JMap[String, Seq[DataFileMeta]] =
     Collections.synchronizedMap(
@@ -40,121 +60,159 @@ object Manifests {
           size() > MaxCacheEntries
       })
 
-  /** Spec observability: whether `dir`'s content is materialized in
-    * the process-wide cache (a forced read puts it there;
-    * [[countRows]]' footer path never does). */
-  private[lake] def cachedForTesting(dir: String): Boolean =
-    cache.containsKey(dir)
+  /** Spec observability: whether the manifest `pointer` names is
+    * materialized in the process-wide cache (a forced read puts it
+    * there; [[countRows]]' footer path never does). */
+  private[lake] def cachedForTesting(pointer: String): Boolean =
+    cache.synchronized {
+      val it = cache.keySet().iterator()
+      var hit = false
+      while (!hit && it.hasNext) hit = it.next().endsWith(pointer)
+      hit
+    }
 
   def threshold(meta: TableMeta): Int =
     meta.properties.get(ThresholdKey).map(_.toInt).getOrElse(DefaultThreshold)
 
-  // Inline-JSON byte ceiling for manifest blooms: the metadata JSON
-  // re-serializes EVERY retained snapshot's inline file list on each
-  // commit, so bloom-fat entries amplify by history length — a
-  // bloom-heavy manifest must spill to parquet even when its file
-  // COUNT is under the spill threshold. 2 MB of base64 inline is the
-  // cap; past it, the columnar spill (distributed-pruned anyway) holds
-  // the payload once.
-  private val MaxInlineBloomBytes = 2 * 1024 * 1024
-  private def bloomBytes(files: Seq[DataFileMeta]): Long =
-    files.iterator.map(_.blooms.valuesIterator
-      .map(_.iterator.map(_.length.toLong).sum).sum).sum
+  /** Absolute path of `pointer` for a table loaded from `location`
+    * whose version file records the location `recorded`. */
+  private[lake] def resolve(location: String, recorded: String,
+      pointer: String): String = {
+    val legacyRoot = s"$recorded/metadata/"
+    if (!new Path(pointer).isAbsolute) s"$location/metadata/$pointer"
+    else if (pointer.startsWith(legacyRoot))
+      s"$location/metadata/${pointer.substring(legacyRoot.length)}"
+    else pointer
+  }
 
-  /** Slim a snapshot for JSON serialization: spill an oversized file
-    * list to parquet (once — an existing pointer is reused as long as
-    * the hydrated list still matches its stored content), keep small
-    * ones inline.
+  /** Absolute path of `pointer` in `meta`'s table. */
+  private[lake] def pathOf(meta: TableMeta, pointer: String): String =
+    resolve(meta.location, meta.location, pointer)
+
+  /** A parquet spill rather than a JSON manifest. */
+  private[lake] def isSpill(pointer: String): Boolean =
+    !pointer.endsWith(".json")
+
+  /** A snapshot as the version JSON stores it (`json`) and as the
+    * committer keeps it in memory (`live`), plus the path and byte
+    * size of the manifest slimming it wrote, if any. */
+  private[lake] final case class Slimmed(json: SnapshotMeta,
+      live: SnapshotMeta, written: Option[(String, Long)])
+
+  /** Slim a snapshot for the version JSON. A file list still attached
+    * to its manifest, or shared with another snapshot of this table,
+    * commits by pointer with no I/O; a list that matches its pointer's
+    * stored content keeps the pointer; any other non-empty list gets a
+    * fresh manifest.
     *
-    * Spill dirs this slim stops referencing are NOT deleted — not even
-    * after the commit wins the CAS: any reader that loaded the table
-    * earlier holds an unforced [[LazyManifestFiles]] pointer into the
-    * old dir, and deleting it inline would make that reader's first
-    * file-list access fail at an unbounded later time. Retired dirs are
-    * unreferenced by the new metadata, so `remove_orphan_files`' age-
-    * guarded stranded-spill sweep reclaims them once no plausible
-    * reader remains. A failure to read an existing spill propagates
-    * (commit fails, nothing changes on disk): treating it as a content
-    * mismatch would re-spill and orphan the LIVE dir on a transient
-    * I/O error. */
-  def slim(meta: TableMeta, s: SnapshotMeta,
-      conf: Configuration): SnapshotMeta = {
-    s.files match {
-      // a still-attached lazy wrapper IS the spill's content by
-      // construction (any mutation replaces the Seq wholesale) — reuse
-      // the pointer without forcing the manifest read. This keeps
-      // commits O(changed snapshots), not O(history).
-      case l: LazyManifestFiles if s.manifestPath.contains(l.dir) =>
-        return s.copy(files = Nil)
-      case _ => ()
+    * Manifests this slim stops referencing are NOT deleted, not even
+    * after the commit wins the CAS: a reader that loaded the table
+    * earlier may hold an unforced [[LazyManifestFiles]] into one.
+    * `expire_snapshots` and `remove_orphan_files`' age-guarded sweep
+    * reclaim them. A failure to read an existing manifest propagates
+    * (the commit fails, nothing changes on disk): treating it as a
+    * content mismatch would write a replacement on a transient I/O
+    * error. */
+  private[lake] def slim(meta: TableMeta, s: SnapshotMeta,
+      conf: Configuration): Slimmed = {
+    def fresh(): Slimmed = {
+      val list = s.files.toVector
+      val (p, written) = write(meta, s.snapshotId, list, conf)
+      Slimmed(s.copy(files = Nil, manifestPath = Some(p)),
+        s.copy(files = LazyManifestFiles.written(p, written._1, list),
+          manifestPath = Some(p)),
+        Some(written))
     }
-    if (s.files.size <= threshold(meta) &&
-        bloomBytes(s.files) <= MaxInlineBloomBytes) {
-      // small (or emptied) list: inline, and retire a stale pointer
-      if (s.manifestPath.isDefined) s.copy(manifestPath = None) else s
-    } else s.manifestPath match {
-      // reuse the existing spill iff its stored content still matches
-      // the hydrated list (cheap when cached — manifests are immutable)
-      case Some(p) if read(p, conf) == s.files =>
-        s.copy(files = Nil)
-      case _ =>
-        val dir = s"${meta.location}/metadata/manifests/" +
-          s"m-${s.snapshotId}-${java.util.UUID.randomUUID().toString.take(8)}"
-        write(dir, s.files)
-        cachePut(dir, s.files)
-        s.copy(files = Nil, manifestPath = Some(dir))
+    val attached = s.files match {
+      case l: LazyManifestFiles if s.manifestPath.forall(_ == l.pointer) =>
+        Some(l)
+      case _ => None
+    }
+    attached match {
+      case Some(l) if l.dir == pathOf(meta, l.pointer) =>
+        val p = Some(l.pointer)
+        Slimmed(s.copy(files = Nil, manifestPath = p),
+          s.copy(manifestPath = p), None)
+      case _ if s.files.isEmpty =>
+        val empty = s.copy(files = Nil, manifestPath = None)
+        Slimmed(empty, empty, None)
+      // another table's manifest (register_table, snapshot): this table
+      // gets its own copy, so neither's expiry can delete the other's
+      case Some(_) => fresh()
+      case None => s.manifestPath match {
+        case Some(p) if read(pathOf(meta, p), conf) == s.files =>
+          Slimmed(s.copy(files = Nil), s, None)
+        case _ => fresh()
+      }
     }
   }
 
-  /** Force-write a fresh spill for a snapshot — the working half of
-    * `rewrite_manifests`. The rewrite (a) consolidates the part-file
-    * layout (and upgrades legacy ordinal-free spills), and (b) clusters
-    * entries by partition tuple, so a planner pruning on partition
-    * min/max stats reads a contiguous slice of the manifest instead of
-    * commit-order scatter. Returns the snapshot carrying the clustered
-    * list + new pointer; the OLD dir stays on disk for already-loaded
-    * lazy readers and retires via `remove_orphan_files`. */
-  private[lake] def respill(meta: TableMeta, s: SnapshotMeta,
+  /** A fresh manifest for `s` with its entries clustered by partition
+    * tuple: the working half of `rewrite_manifests`. A planner pruning
+    * on partition stats then reads a contiguous slice of a spill, and a
+    * list that crossed the threshold changes form. Returns the snapshot
+    * attached to the new manifest; the old one stays on disk for
+    * already-loaded readers and retires via `remove_orphan_files`. */
+  private[lake] def rewrite(meta: TableMeta, s: SnapshotMeta,
       conf: Configuration): SnapshotMeta = {
-    val dir = s"${meta.location}/metadata/manifests/" +
-      s"m-${s.snapshotId}-${java.util.UUID.randomUUID().toString.take(8)}"
     val clustered = s.files.sortBy(f =>
       (f.partitionValues.toSeq.sortBy(_._1)
-        .map { case (k, v) => s"$k=$v" }.mkString("/"), f.path))
-    write(dir, clustered)
-    cachePut(dir, clustered)
-    s.copy(files = clustered, manifestPath = Some(dir))
+        .map { case (k, v) => s"$k=$v" }.mkString("/"), f.path)).toVector
+    val (p, (path, _)) = write(meta, s.snapshotId, clustered, conf)
+    s.copy(files = LazyManifestFiles.written(p, path, clustered),
+      manifestPath = Some(p))
   }
 
-  /** Physically delete spill dirs and drop them from the cache. Only
-    * for dirs no reader can hold a pointer to: a failed attempt's
-    * fresh spills (never committed, never loaded) and maintenance
+  /** Physically delete manifests and drop them from the cache. Only
+    * for manifests no reader can hold a pointer to: a failed attempt's
+    * fresh ones (never committed, never loaded) and maintenance
     * sweeps that own their own age/liveness guards. */
-  private[lake] def drop(dirs: Seq[String], conf: Configuration): Unit =
-    dirs.foreach { p =>
+  private[lake] def drop(paths: Seq[String], conf: Configuration): Unit =
+    paths.foreach { p =>
       scala.util.Try(MetadataLog.fs(p, conf).delete(new Path(p), true))
       cache.remove(p)
     }
 
-  /** Hydrate a snapshot loaded from JSON — LAZILY. Table load cost
-    * must not scale with snapshot count: a long-lived table retains
-    * hundreds of snapshots at millions of files each, and eagerly
-    * materializing every file list on every `loadTable` would be an
-    * O(history) driver stall (and resident-set) per SQL statement.
-    * The wrapper reads through the process-wide cache the first time
-    * a snapshot's file list is actually planned against; snapshots
-    * that are never read (most of the history) cost nothing. */
-  def hydrate(s: SnapshotMeta, conf: Configuration): SnapshotMeta =
+  /** Hydrate a snapshot loaded from JSON, lazily: table load cost must
+    * not scale with snapshot count, so the wrapper reads its manifest
+    * the first time the list is used. `location` is where the table is
+    * loaded from, `recorded` the location its version file names. */
+  def hydrate(s: SnapshotMeta, location: String, recorded: String,
+      conf: Configuration): SnapshotMeta =
     s.manifestPath match {
       case Some(p) if s.files.isEmpty =>
-        s.copy(files = new LazyManifestFiles(p, conf))
+        s.copy(files = new LazyManifestFiles(p,
+          resolve(location, recorded, p), conf))
       case _ => s
     }
 
+  /** Write `list` as snapshot `snapshotId`'s manifest: a JSON file at
+    * or below the threshold, a parquet spill above it. Returns the
+    * relative pointer and the written path with its size in bytes. */
+  private def write(meta: TableMeta, snapshotId: Long,
+      list: Vector[DataFileMeta], conf: Configuration)
+      : (String, (String, Long)) = {
+    val name = s"m-$snapshotId-${java.util.UUID.randomUUID().toString.take(8)}"
+    val spill = list.size > threshold(meta)
+    val pointer = if (spill) s"manifests/$name" else s"manifests/$name.json"
+    val path = pathOf(meta, pointer)
+    val bytes =
+      if (spill) {
+        writeSpill(path, list)
+        MetadataLog.fs(path, conf).getContentSummary(new Path(path)).getLength
+      } else {
+        val json = Serialization.write(list).getBytes(StandardCharsets.UTF_8)
+        MetadataLog.createNew(new Path(path), json, conf)
+        json.length.toLong
+      }
+    cachePut(path, list)
+    (pointer, (path, bytes))
+  }
+
   // Multi-file spills do NOT read back in write order (split planning
-  // reorders) — an explicit ordinal restores it, keeping the
-  // spill-reuse equality check stable across cold starts.
-  private def write(dir: String, files: Seq[DataFileMeta]): Unit = {
+  // reorders): an explicit ordinal restores it, keeping the
+  // reuse-by-content check stable across cold starts.
+  private def writeSpill(dir: String, files: Seq[DataFileMeta]): Unit = {
     val spark = SparkSession.active
     spark.createDataset(files.zipWithIndex.map(_.swap))(
         Encoders.product[(Int, DataFileMeta)])
@@ -163,17 +221,27 @@ object Manifests {
       .write.mode("overwrite").parquet(dir)
   }
 
+  /** `files` when it is a parquet spill not yet read into memory: the
+    * lists planning and maintenance prune or scan in a Spark job rather
+    * than materialize. A JSON manifest is one cached driver read and
+    * counts as materialized. */
+  private[lake] def unforcedSpill(files: Seq[DataFileMeta])
+      : Option[LazyManifestFiles] = files match {
+    case l: LazyManifestFiles if isSpill(l.dir) && !l.isForced => Some(l)
+    case _ => None
+  }
+
   /** Count of files the last pruned planning pass materialized on the
     * driver — observability hook for specs and planning diagnostics. */
   private[lake] val lastPrunedPlanCount =
     new java.util.concurrent.atomic.AtomicInteger(-1)
 
-  /** Distributed pruned manifest planning (the 100 TB seam): instead
-    * of collecting a spilled snapshot's whole file list to the driver
-    * and pruning there — O(all files) driver memory and latency per
-    * query at millions of files — ship the scan predicates to a Spark
-    * job over the manifest parquet and collect only the SURVIVING
-    * entries. The executors evaluate the very same
+  /** Distributed pruned planning over a parquet spill (the 100 TB
+    * seam): instead of collecting a spilled snapshot's whole file list
+    * to the driver and pruning there — O(all files) driver memory and
+    * latency per query at millions of files — ship the scan predicates
+    * to a Spark job over the manifest parquet and collect only the
+    * SURVIVING entries. The executors evaluate the very same
     * [[FileStats.mayMatch]] the driver-side prune uses, so pruned
     * planning can never change results; `rewrite_manifests` clusters
     * entries by partition tuple, so selective predicates touch a
@@ -213,23 +281,23 @@ object Manifests {
   }
 
   /** One-column (`path`, scheme-normalized) DataFrame of every data
-    * file across `snapshots`, computed WITHOUT hydrating spilled
-    * manifests on the driver — the maintenance-side twin of
-    * [[readPruned]]. Unforced spill pointers contribute one multi-dir
-    * parquet scan evaluated on executors; inline (small or
-    * already-hydrated) lists ship from the driver. expire_snapshots /
-    * remove_orphan_files difference their live and on-disk path sets
-    * through anti-joins over this frame, so maintenance memory stays
-    * O(changed), not O(every file in history), at 100 TB file counts. */
+    * file across `snapshots`, computed WITHOUT hydrating parquet
+    * spills on the driver — the maintenance-side twin of
+    * [[readPruned]]. Unforced spills contribute one multi-dir parquet
+    * scan evaluated on executors; JSON manifests and materialized lists
+    * ship from the driver. expire_snapshots / remove_orphan_files
+    * difference their live and on-disk path sets through anti-joins
+    * over this frame, so maintenance memory stays O(changed), not
+    * O(every file in history), at 100 TB file counts. */
   private[lake] def dataPathsDf(spark: SparkSession,
       snapshots: Seq[SnapshotMeta]): org.apache.spark.sql.DataFrame = {
     import org.apache.spark.sql.functions.{coalesce, col}
     val lazyDirs = Seq.newBuilder[String]
     val inline = Seq.newBuilder[String]
     snapshots.foreach { s =>
-      s.files match {
-        case l: LazyManifestFiles if !l.isForced => lazyDirs += l.dir
-        case fs => fs.foreach(inline += _.path)
+      unforcedSpill(s.files) match {
+        case Some(l) => lazyDirs += l.dir
+        case None => s.files.foreach(inline += _.path)
       }
     }
     val inlineDf = spark.createDataset(inline.result())(Encoders.STRING)
@@ -251,7 +319,7 @@ object Manifests {
     raw.select(PosDeletes.normCol(col("path")).as("path"))
   }
 
-  /** Entry count of a spilled manifest WITHOUT materializing it: sums
+  /** Entry count of a parquet spill WITHOUT materializing it: sums
     * parquet footer row counts driver-side — no Spark job, no row
     * decode, O(part-files) footer reads. Serves metadata-scale
     * callers (the streaming maintenance triggers' live-file counts)
@@ -270,18 +338,23 @@ object Manifests {
     }.sum
   }
 
-  private[lake] def read(dir: String, conf: Configuration): Seq[DataFileMeta] = {
-    val cached = cache.get(dir)
+  /** The manifest at absolute `path`, through the cache. */
+  private[lake] def read(path: String, conf: Configuration): Seq[DataFileMeta] = {
+    val cached = cache.get(path)
     if (cached != null) return cached
-    val spark = SparkSession.active
-    val df = spark.read.parquet(dir)
     val files =
-      if (df.columns.contains("ord"))
-        withSeq(df.orderBy("ord").select("file.*"))
-          .as(Encoders.product[DataFileMeta]).collect().toSeq
-      else // legacy ordinal-free spill (pre-round-3)
-        withSeq(df).as(Encoders.product[DataFileMeta]).collect().toSeq
-    cachePut(dir, files)
+      if (!isSpill(path))
+        Serialization.read[Vector[DataFileMeta]](new String(
+          MetadataLog.readBytes(new Path(path), conf), StandardCharsets.UTF_8))
+      else {
+        val df = SparkSession.active.read.parquet(path)
+        if (df.columns.contains("ord"))
+          withSeq(df.orderBy("ord").select("file.*"))
+            .as(Encoders.product[DataFileMeta]).collect().toSeq
+        else // legacy spill written without the ordinal column
+          withSeq(df).as(Encoders.product[DataFileMeta]).collect().toSeq
+      }
+    cachePut(path, files)
     files
   }
 
@@ -312,22 +385,39 @@ object Manifests {
     cache.put(dir, files)
 }
 
-/** A spilled manifest surfaced as an immutable Seq that reads through
-  * [[Manifests]]' cache on first element access. As long as the wrapper
-  * stays attached to its snapshot (same dir as the snapshot's
-  * `manifestPath`), the file list is by construction unchanged — a
-  * re-serializing commit can reuse the pointer without any I/O. */
-final class LazyManifestFiles(
-    private[lake] val dir: String, conf: Configuration)
+/** A snapshot's manifest surfaced as an immutable Seq that reads
+  * through [[Manifests]]' cache on first element access. `pointer` is
+  * the form the version JSON stores, `dir` its resolved path. As long
+  * as the wrapper stays attached to a snapshot of the table it was
+  * loaded from, the file list is by construction the manifest's
+  * content, so a commit can reuse the pointer without any I/O. */
+final class LazyManifestFiles private (
+    private[lake] val pointer: String,
+    private[lake] val dir: String,
+    conf: Configuration,
+    known: Seq[DataFileMeta])
   extends scala.collection.immutable.Seq[DataFileMeta] {
 
-  @volatile private[lake] var isForced: Boolean = false
-  private lazy val underlying: Seq[DataFileMeta] = {
-    isForced = true
-    Manifests.read(dir, conf)
-  }
+  def this(pointer: String, dir: String, conf: Configuration) =
+    this(pointer, dir, conf, null)
+
+  @volatile private[lake] var isForced: Boolean = known != null
+  private lazy val underlying: Seq[DataFileMeta] =
+    if (known != null) known
+    else {
+      isForced = true
+      Manifests.read(dir, conf)
+    }
 
   override def apply(i: Int): DataFileMeta = underlying(i)
   override def length: Int = underlying.length
   override def iterator: Iterator[DataFileMeta] = underlying.iterator
+}
+
+object LazyManifestFiles {
+  /** The wrapper of a manifest this process just wrote: its content is
+    * already in memory. */
+  private[lake] def written(pointer: String, dir: String,
+      files: Seq[DataFileMeta]): LazyManifestFiles =
+    new LazyManifestFiles(pointer, dir, null, files)
 }

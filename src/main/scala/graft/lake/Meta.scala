@@ -12,14 +12,14 @@ import org.apache.spark.sql.types.{DataType, StructType}
   * snapshot model (reference: docs/spark-queries.md:229-236,
   * iceberg_it.py:1940-1967).
   *
-  * Scale note: each snapshot embeds its full data-file manifest with
-  * per-file, per-column min/max/null-count stats. Above
-  * `write.metadata.manifest.spill-threshold` files (default 500) a
-  * snapshot's manifest is spilled to a parquet directory under
-  * metadata/manifests/ and the JSON stores only the pointer — see
-  * [[Manifests]]; hydration happens at load through an
-  * immutable-manifest cache, so at 100 TB the JSON document stays
-  * metadata-sized and the file list lives in columnar form.
+  * Scale note: each snapshot's data-file list, with per-file,
+  * per-column min/max/null-count stats, lives in its own immutable
+  * manifest under metadata/manifests/ (a JSON file, or a parquet
+  * directory past `write.metadata.manifest.spill-threshold` files),
+  * written once by the commit that creates the snapshot; the version
+  * JSON stores only the pointer — see [[Manifests]]. Loads hydrate
+  * lazily through an immutable-manifest cache, so a version document
+  * grows with the snapshot count, not with snapshots × files.
   */
 final case class PartitionFieldMeta(
     name: String,        // display name, e.g. "ts_day", "id_bucket"
@@ -103,10 +103,12 @@ final case class SnapshotMeta(
     summary: Map[String, String],
     files: Seq[DataFileMeta],
     schemaEpoch: Int,
-    // Set when the file list is spilled to a parquet manifest under
-    // metadata/manifests/ (see [[Manifests]]): the JSON then stores the
-    // pointer instead of the (possibly millions-long) file list. In
-    // memory the snapshot is always hydrated — `files` is authoritative.
+    // Pointer to the snapshot's manifest under metadata/manifests/
+    // (see [[Manifests]]), relative to the table's metadata/ dir (older
+    // tables: absolute). The JSON stores the pointer instead of the
+    // file list; in memory `files` is authoritative and reads the
+    // manifest lazily. None: no data files, or an inline list of a
+    // version written before per-snapshot manifests.
     manifestPath: Option[String] = None,
     // Merge-on-read position-delete files (parquet of
     // (file_path string, pos long), sorted): rows of `files` at these

@@ -13,6 +13,15 @@ import java.nio.charset.StandardCharsets
   * single-writer rename-swap protocol (SURVEY.md §7.4.7). Uses the
   * Hadoop FileSystem API so the same code path works on HDFS/S3A in
   * a cluster deployment, not just local files.
+  *
+  * A version file holds the table's schemas, spec, properties, refs
+  * and one entry per retained snapshot: its summary, its delete-file
+  * lists and a pointer to its data-file manifest, which the commit that
+  * created the snapshot wrote once (layout and pointer resolution:
+  * [[Manifests]]). So a version grows with the snapshot count, not with
+  * snapshots × files. Loading resolves pointers against the directory
+  * the table is loaded from and reads no manifest until a snapshot's
+  * file list is used.
   */
 object MetadataLog {
   implicit private val fmts: Formats = DefaultFormats
@@ -77,30 +86,80 @@ object MetadataLog {
   private[lake] val parseCount = new java.util.concurrent.atomic.AtomicInteger(0)
   private[lake] def clearMetaCacheForTesting(): Unit = metaCache.clear()
 
-  def loadVersion(location: String, v: Int, conf: Configuration): TableMeta = {
-    val f = fs(location, conf)
+  def loadVersion(location: String, v: Int, conf: Configuration): TableMeta =
+    hydrated(parse(location, v, conf), location, conf)
+
+  /** [[loadVersion]] of a version file kept outside its table
+    * (register_table's `metadata_file`): manifest pointers resolve under
+    * the table location the file records, where they were written. */
+  private[lake] def loadSaved(location: String, v: Int,
+      conf: Configuration): TableMeta = {
+    val slim = parse(location, v, conf)
+    hydrated(slim, slim.location, conf)
+  }
+
+  // The cache holds the SLIM parsed form; every load hydrates fresh
+  // lazy wrappers from it. Caching a hydrated form would share (or
+  // worse, inline) file lists across loads — pinning O(history) file
+  // metadata resident and starving the distributed pruned-planning
+  // path, which keys off an unforced lazy wrapper.
+  private def parse(location: String, v: Int, conf: Configuration): TableMeta = {
     val vf = versionFile(location, v)
-    val st = f.getFileStatus(vf)
+    val st = fs(location, conf).getFileStatus(vf)
     val key = (location, v, st.getModificationTime, st.getLen)
-    // The cache holds the SLIM parsed form; every load hydrates fresh
-    // lazy wrappers from it. Caching a hydrated form would share (or
-    // worse, inline) file lists across loads — pinning O(history) file
-    // metadata resident and starving the distributed pruned-planning
-    // path, which keys off an unforced lazy wrapper.
     val hit = metaCache.get(key)
-    if (hit != null)
-      return hit.copy(snapshots = hit.snapshots.map(Manifests.hydrate(_, conf)))
-    val in = f.open(vf)
-    val parsed =
-      try {
-        val bytes = org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-        parseCount.incrementAndGet()
-        Serialization.read[TableMeta](new String(bytes, StandardCharsets.UTF_8))
-      } finally in.close()
+    if (hit != null) return hit
+    val bytes = readBytes(vf, conf)
+    parseCount.incrementAndGet()
+    val parsed = Serialization.read[TableMeta](new String(bytes, StandardCharsets.UTF_8))
     metaCache.put(key, parsed)
-    // hydrate spilled manifests so in-memory SnapshotMeta.files is
-    // always authoritative
-    parsed.copy(snapshots = parsed.snapshots.map(Manifests.hydrate(_, conf)))
+    parsed
+  }
+
+  private def hydrated(slim: TableMeta, location: String,
+      conf: Configuration): TableMeta =
+    slim.copy(snapshots = slim.snapshots.map(
+      Manifests.hydrate(_, location, slim.location, conf)))
+
+  private[lake] def readBytes(p: Path, conf: Configuration): Array[Byte] = {
+    val in = fs(p.toString, conf).open(p)
+    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
+    finally in.close()
+  }
+
+  /** Write `bytes` to a new file `p`; throws
+    * `java.nio.file.FileAlreadyExistsException` if `p` exists. The
+    * local-vs-remote branch keys off the RESOLVED filesystem's scheme,
+    * not the raw path URI: a scheme-less location resolves through
+    * fs.defaultFS, and on an HDFS-defaulted cluster the NIO path would
+    * write to the driver's local disk while readers list HDFS. */
+  private[lake] def createNew(p: Path, bytes: Array[Byte],
+      conf: Configuration): Unit = {
+    val f = fs(p.toString, conf)
+    val scheme = f.getUri.getScheme
+    val out =
+      if (scheme == null || scheme == "file") {
+        // Hadoop's local create(path, overwrite=false) is
+        // CHECK-then-act: two simultaneous committers can both pass the
+        // existence check and both "create" the file — the loser's
+        // commit is silently erased. NIO CREATE_NEW maps to
+        // O_CREAT|O_EXCL, which the kernel arbitrates atomically, and
+        // strands no `.crc` sidecar.
+        val np = java.nio.file.Paths.get(p.toUri.getPath)
+        java.nio.file.Files.createDirectories(np.getParent)
+        java.nio.file.Files.newOutputStream(np,
+          java.nio.file.StandardOpenOption.CREATE_NEW,
+          java.nio.file.StandardOpenOption.WRITE)
+      } else
+        try f.create(p, false) // atomic create-if-absent on HDFS
+        catch {
+          case e: java.io.IOException if f.exists(p) =>
+            val clash = new java.nio.file.FileAlreadyExistsException(p.toString)
+            clash.initCause(e)
+            throw clash
+        }
+    try out.write(bytes)
+    finally out.close()
   }
 
   def metadataFiles(location: String, conf: Configuration): Seq[(Int, String, Long)] = {
@@ -120,68 +179,46 @@ object MetadataLog {
     * ConcurrentModificationException (the caller reloads and
     * reapplies) instead of silently erasing the concurrent commit's
     * snapshots by skipping past it. */
-  def commit(meta: TableMeta, conf: Configuration): TableMeta = {
-    // Spill oversized manifests to parquet; the JSON gets the slim
-    // form (pointers), the CALLER gets back the hydrated form (full
-    // file lists + pointers) so in-memory reads never dehydrate.
-    // Spill dirs a re-spill stops referencing are NOT deleted here —
-    // not even after the CAS wins: an already-loaded reader holds an
-    // unforced LazyManifestFiles pointer into the old dir, and an
-    // inline delete would break that reader's first file-list access
-    // at an unbounded later time. remove_orphan_files' age-guarded
-    // stranded-spill sweep reclaims them.
-    val spilled = meta.snapshots.map { s =>
-      val slim = Manifests.slim(meta, s, conf)
-      (slim, s.copy(manifestPath = slim.manifestPath),
-        // fresh spill written by THIS attempt — garbage if the CAS
-        // loses (the retry re-spills from the reloaded metadata);
-        // nobody can have loaded it, so inline deletion is safe
-        slim.manifestPath.filterNot(s.manifestPath.contains))
-    }
-    val freshDirs = spilled.flatMap(_._3)
-    val next = meta.copy(snapshots = spilled.map(_._1),
-      version = meta.version + 1)
+  def commit(meta: TableMeta, conf: Configuration): TableMeta =
+    commitCounted(meta, conf)._1
+
+  /** [[commit]], also returning the metadata bytes it wrote: the
+    * version file plus the manifests it created. */
+  private[lake] def commitCounted(meta: TableMeta,
+      conf: Configuration): (TableMeta, Long) = {
+    // The JSON gets pointers; the CALLER gets back snapshots attached
+    // to their manifests. A new snapshot's manifest is written here; a
+    // manifest this attempt wrote is garbage if the CAS loses (the
+    // retry writes its own from the reloaded metadata), and nobody can
+    // have loaded it, so it is deleted inline. Manifests a commit stops
+    // referencing are NOT deleted (see Manifests.slim).
+    val fresh = scala.collection.mutable.ArrayBuffer.empty[(String, Long)]
+    val vf = versionFile(meta.location, meta.version + 1)
+    val (next, live) =
+      try {
+        val slimmed = meta.snapshots.map { s =>
+          val sl = Manifests.slim(meta, s, conf)
+          fresh ++= sl.written
+          sl
+        }
+        val next = meta.copy(snapshots = slimmed.map(_.json),
+          version = meta.version + 1)
+        createNew(vf, Serialization.write(next).getBytes(StandardCharsets.UTF_8),
+          conf)
+        (next, slimmed.map(_.live))
+      } catch {
+        case e: java.nio.file.FileAlreadyExistsException =>
+          Manifests.drop(fresh.map(_._1).toSeq, conf)
+          throw new java.util.ConcurrentModificationException(
+            s"concurrent commit to ${meta.location}: v${meta.version + 1} " +
+              s"already exists (base version ${meta.version} is stale); " +
+              "reload the table metadata and reapply", e)
+        case e: Throwable =>
+          Manifests.drop(fresh.map(_._1).toSeq, conf)
+          throw e
+      }
     val f = fs(meta.location, conf)
-    f.mkdirs(metaDir(meta.location))
-    val vf = versionFile(meta.location, next.version)
-    val bytes = Serialization.write(next).getBytes(StandardCharsets.UTF_8)
-    def lostCas(e: Throwable): Nothing = {
-      Manifests.drop(freshDirs, conf)
-      throw new java.util.ConcurrentModificationException(
-        s"concurrent commit to ${meta.location}: v${next.version} " +
-          s"already exists (base version ${meta.version} is stale); " +
-          "reload the table metadata and reapply", e)
-    }
-    // The local-vs-remote branch keys off the RESOLVED filesystem's
-    // scheme, not the raw path URI: a scheme-less location resolves
-    // through fs.defaultFS, and on an HDFS-defaulted cluster the NIO
-    // path would write the version file to the driver's local disk
-    // while readers list HDFS.
     val scheme = f.getUri.getScheme
-    if (scheme == null || scheme == "file") {
-      // Hadoop's local create(path, overwrite=false) is CHECK-then-act:
-      // two simultaneous committers can both pass the existence check
-      // and both "create" the version file — the loser's commit is
-      // silently erased, no exception anywhere. NIO CREATE_NEW maps to
-      // O_CREAT|O_EXCL, which the kernel arbitrates atomically, so
-      // exactly one committer wins and the rest get the CAS conflict
-      // they can retry on. (HDFS create is atomic in the NameNode and
-      // keeps the Hadoop path below.)
-      val p = java.nio.file.Paths.get(vf.toUri.getPath)
-      val out =
-        try java.nio.file.Files.newOutputStream(p,
-          java.nio.file.StandardOpenOption.CREATE_NEW,
-          java.nio.file.StandardOpenOption.WRITE)
-        catch { case e: java.nio.file.FileAlreadyExistsException => lostCas(e) }
-      try out.write(bytes)
-      finally out.close()
-    } else {
-      val out =
-        try f.create(vf, false) // atomic create-if-absent on HDFS
-        catch { case e: java.io.IOException if f.exists(vf) => lostCas(e) }
-      try out.write(bytes)
-      finally out.close()
-    }
     // Repoint the hint via write-temp + atomic rename so concurrent
     // readers never observe a truncated/empty hint file.
     val tmp = new Path(metaDir(meta.location),
@@ -218,13 +255,15 @@ object MetadataLog {
     // prime the cache with the SLIM form it just serialized: the
     // committer's next statement would otherwise pay a full reload of
     // the metadata it just wrote. (Never the hydrated form — see
-    // loadVersion's cache contract.)
-    try {
-      val st = f.getFileStatus(vf)
-      metaCache.put((meta.location, next.version,
-        st.getModificationTime, st.getLen), next)
-    } catch { case _: Exception => () }
-    next.copy(snapshots = spilled.map(_._2))
+    // parse's cache contract.)
+    val versionBytes =
+      try {
+        val st = f.getFileStatus(vf)
+        metaCache.put((meta.location, next.version,
+          st.getModificationTime, st.getLen), next)
+        st.getLen
+      } catch { case _: Exception => 0L }
+    (next.copy(snapshots = live), versionBytes + fresh.map(_._2).sum)
   }
 
   /** Metadata-log retention (`write.metadata.delete-after-commit.
@@ -254,17 +293,31 @@ object MetadataLog {
       }
   }
 
+  /** Delete the version log (every `v{N}.json` and the hint) and
+    * nothing else under `metadata/`. */
+  def dropLog(location: String, conf: Configuration): Unit = {
+    val f = fs(location, conf)
+    metadataFiles(location, conf).foreach { case (_, p, _) =>
+      f.delete(new Path(p), false)
+    }
+    f.delete(hintFile(location), false)
+    forget(location)
+  }
+
   def dropTableDir(location: String, conf: Configuration): Unit = {
     val f = fs(location, conf)
     if (f.exists(new Path(location))) f.delete(new Path(location), true)
-    // The (mtime, length) cache-key component has filesystem-dependent
-    // granularity (seconds on object stores): a DROP + re-CREATE whose
-    // fresh version file matches the old one's length within a tick
-    // could be served the dropped table's metadata. Dropping is rare —
-    // evict the location outright.
+    forget(location)
+  }
+
+  // The (mtime, length) cache-key component has filesystem-dependent
+  // granularity (seconds on object stores): a DROP + re-CREATE whose
+  // fresh version file matches the old one's length within a tick
+  // could be served the dropped table's metadata. Dropping is rare —
+  // evict the location outright.
+  private def forget(location: String): Unit =
     metaCache.synchronized {
       val it = metaCache.keySet().iterator()
       while (it.hasNext) if (it.next()._1 == location) it.remove()
     }
-  }
 }

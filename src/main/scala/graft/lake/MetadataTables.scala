@@ -167,7 +167,8 @@ object MetadataTables {
     val parentFiles = s.parentId.flatMap(meta.snapshotById)
       .map(_.files.map(_.path).toSet).getOrElse(Set.empty)
     val added = s.files.count(f => !parentFiles(f.path))
-    Row(0, s"$location/metadata/v${s.snapshotId}.json",
+    Row(0, s.manifestPath.map(Manifests.pathOf(meta, _))
+        .getOrElse(s"$location/metadata/v${s.snapshotId}.json"),
       s.files.map(_.sizeBytes).sum, s.snapshotId,
       added, s.files.size - added, 0)
   }

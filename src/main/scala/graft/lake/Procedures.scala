@@ -360,11 +360,12 @@ object Procedures {
             .getOrElse(Long.MinValue)).toString
         }
         val remaining = m.snapshots.filterNot(s => expIds(s.snapshotId))
-        // spilled manifests and position-delete files referenced only
-        // by expired snapshots retire with them
-        val liveManifests = remaining.flatMap(_.manifestPath).toSet
-        val deadManifests = expired.flatMap(_.manifestPath).distinct
-          .filterNot(liveManifests)
+        // manifests and position-delete files referenced only by
+        // expired snapshots retire with them
+        def manifests(ss: Seq[SnapshotMeta]) =
+          ss.flatMap(_.manifestPath).map(Manifests.pathOf(m, _)).distinct
+        val deadManifests = manifests(expired)
+          .filterNot(manifests(remaining).toSet)
         val liveDeletes = remaining.flatMap(s =>
           s.deleteFiles.map(_.path) ++ s.eqDeleteFiles.map(_.path)).toSet
         val deadDeletes = expired.flatMap(s =>
@@ -448,27 +449,29 @@ object Procedures {
           .join(referenced.withColumnRenamed("path", "norm"),
             Seq("norm"), "left_anti")
           .select("path").as[String].collect().toSeq
-        // stranded manifest-spill DIRS: a commit that wrote a fresh
-        // spill and then crashed (or lost the CAS before round 5's
-        // cleanup) leaves a whole directory no metadata version points
-        // at — collect it recursively under the same age guard
-        val liveSpills = m.snapshots.flatMap(_.manifestPath)
-          .map(PosDeletes.norm).toSet
-        val spillRoot = new org.apache.hadoop.fs.Path(
+        // stranded manifests, JSON files and spill dirs alike: a
+        // commit that wrote one and then crashed, or a rewrite that
+        // replaced one, leaves a manifest the current metadata does not
+        // point at — collect it (a dir recursively) under the same age
+        // guard
+        val liveManifests = m.snapshots.flatMap(_.manifestPath)
+          .map(p => PosDeletes.norm(Manifests.pathOf(m, p))).toSet
+        val manifestRoot = new org.apache.hadoop.fs.Path(
           s"${m.location}/metadata/manifests")
-        val orphanDirs =
-          if (!fs.exists(spillRoot)) Nil
-          else fs.listStatus(spillRoot).toSeq.filter(_.isDirectory)
+        val orphanManifests =
+          if (!fs.exists(manifestRoot)) Nil
+          else fs.listStatus(manifestRoot).toSeq
             .map(_.getPath.toString)
-            .filterNot(p => liveSpills(PosDeletes.norm(p)))
+            .filterNot(p => liveManifests(PosDeletes.norm(p)))
             .filter(aged)
         if (!a.boolOpt("dry_run").getOrElse(false)) {
           // distributed: orphan sweeps at 100 TB file counts must not
           // serialize through the driver
           LakeWriteUtil.bulkDelete(spark, orphans, conf)
-          LakeWriteUtil.bulkDelete(spark, orphanDirs, conf, recursive = true)
+          LakeWriteUtil.bulkDelete(spark, orphanManifests, conf,
+            recursive = true)
         }
-        (orphans ++ orphanDirs).map(Row(_))
+        (orphans ++ orphanManifests).map(Row(_))
       }
     }),
 
@@ -645,42 +648,38 @@ object Procedures {
         "added_manifests_count" -> IntegerType)
       // Rewrites the parquet manifest spills under metadata/manifests/
       // (reference: docs/spark-procedures.md:477, iceberg_it.py:1806-1823).
-      // Each over-threshold REF-HEAD snapshot gets a fresh spill —
-      // consolidated part layout, legacy format upgraded, entries
-      // clustered by partition tuple for contiguous pruning — and
-      // spilled head lists that have shrunk under the threshold fold
-      // back inline. Only heads: they are what reads plan against, and
-      // like Iceberg's procedure (current snapshot only) this keeps the
-      // call O(refs), not O(history) — historical spills stay cold
-      // (never hydrated) and retire with expire_snapshots. Old dirs
-      // stay on disk: an already-loaded reader may hold an unforced
-      // lazy pointer into one, so they retire via remove_orphan_files'
-      // age-guarded sweep, never inline.
+      // Each REF-HEAD snapshot that is spilled or over the threshold
+      // gets a fresh manifest — consolidated part layout, legacy format
+      // upgraded, entries clustered by partition tuple for contiguous
+      // pruning; a spilled head list that has shrunk to the threshold
+      // becomes a JSON manifest. Only heads: they are what reads plan
+      // against, and like Iceberg's procedure (current snapshot only)
+      // this keeps the call O(refs), not O(history) — historical spills
+      // stay cold (never hydrated) and retire with expire_snapshots.
+      // Old manifests stay on disk: an already-loaded reader may hold
+      // an unforced lazy pointer into one, so they retire via
+      // remove_orphan_files' age-guarded sweep, never inline.
       def run(spark: SparkSession, a: Args): Seq[Row] = {
         val (m, _) = metaW(a)
         val conf = catalog.hadoopConf
         val thr = Manifests.threshold(m)
         val heads = m.refs.values.map(_.snapshotId).toSet
         var rewritten = 0
-        var added = 0
         val snaps = m.snapshots.map { s =>
-          if (!heads(s.snapshotId)) s
-          else if (s.files.size > thr) {
-            val ns = Manifests.respill(m, s, conf)
+          if (heads(s.snapshotId) &&
+              (s.manifestPath.exists(Manifests.isSpill) || s.files.size > thr)) {
             if (s.manifestPath.isDefined) rewritten += 1
-            added += 1
-            ns
-          } else if (s.manifestPath.isDefined) {
-            rewritten += 1
-            s.copy(manifestPath = None)
+            Manifests.rewrite(m, s, conf)
           } else s
         }
-        if (rewritten == 0 && added == 0) return Seq(Row(0, 0))
         val prior = m.snapshots.flatMap(_.manifestPath).toSet
-        val freshDirs = snaps.flatMap(_.manifestPath).filterNot(prior)
+        val fresh = snaps.flatMap(_.manifestPath).filterNot(prior)
+        if (fresh.isEmpty) return Seq(Row(0, 0))
         try catalog.commitMeta(m.copy(snapshots = snaps))
-        catch { case e: Throwable => Manifests.drop(freshDirs, conf); throw e }
-        Seq(Row(rewritten, added))
+        catch { case e: Throwable =>
+          Manifests.drop(fresh.map(Manifests.pathOf(m, _)), conf); throw e
+        }
+        Seq(Row(rewritten, fresh.size))
       }
     }),
 
@@ -963,7 +962,10 @@ object Procedures {
         val version = "v(\\d+)\\.json".r.findFirstMatchIn(mf)
           .map(_.group(1).toInt)
           .getOrElse(MetadataLog.currentVersion(srcLoc, catalog.hadoopConf))
-        val src = MetadataLog.loadVersion(srcLoc, version, catalog.hadoopConf)
+        // the copy's commit writes every snapshot's manifest under its
+        // own location (Manifests.slim reuses a pointer only within one
+        // table), so expiring either table never deletes the other's
+        val src = MetadataLog.loadSaved(srcLoc, version, catalog.hadoopConf)
         val loc = catalog.tableLocation(ident)
         val moved = src.copy(location = loc, version = 0)
         val committed = catalog.commitMeta(moved)
