@@ -524,8 +524,11 @@ object FileStats {
       } catch { case _: Exception => true }
   }
 
-  /** Can `file` possibly contain rows matching `filter`? */
-  def mayMatch(file: DataFileMeta, filter: Filter, schema: StructType): Boolean = {
+  /** Can `file` possibly contain rows matching `filter`? Its footer
+    * stats, value sets and blooms must admit every comparison, and so
+    * must its recorded partition tuple under `parts`. */
+  def mayMatch(file: DataFileMeta, filter: Filter, schema: StructType,
+      parts: PartitionPruning = PartitionPruning.none): Boolean = {
     def stats(attr: String): (Option[String], Option[String], Option[Long], DataType) = {
       val dt = typeOf(schema, attr)
       (file.minValues.get(attr), file.maxValues.get(attr),
@@ -534,35 +537,38 @@ object FileStats {
     filter match {
       case EqualTo(a, v) =>
         val (mn, mx, _, dt) = stats(a)
-        encodeLiteral(v, dt) match {
-          case Some(lit) =>
-            mn.forall(m => cmp(lit, m, dt).forall(_ >= 0)) &&
-            mx.forall(m => cmp(lit, m, dt).forall(_ <= 0)) &&
-            // dictionary value set: exact membership when present
-            file.valueSets.get(a).forall(_.exists(x =>
-              cmp(lit, x, dt).map(_ == 0).getOrElse(lit == x))) &&
-            // manifest bloom: probabilistic membership for high-NDV
-            // columns (no false negatives, so skipping is sound)
-            bloomMayContain(file, a, v, dt)
-          case None => true
-        }
+        encodeLiteral(v, dt).forall { lit =>
+          mn.forall(m => cmp(lit, m, dt).forall(_ >= 0)) &&
+          mx.forall(m => cmp(lit, m, dt).forall(_ <= 0)) &&
+          // dictionary value set: exact membership when present
+          file.valueSets.get(a).forall(_.exists(x =>
+            cmp(lit, x, dt).map(_ == 0).getOrElse(lit == x))) &&
+          // manifest bloom: probabilistic membership for high-NDV
+          // columns (no false negatives, so skipping is sound)
+          bloomMayContain(file, a, v, dt)
+        } && parts.admits(file, filter)
       case GreaterThan(a, v) =>
         val (_, mx, _, dt) = stats(a)
         encodeLiteral(v, dt).forall(lit =>
-          mx.forall(m => cmp(lit, m, dt).forall(_ < 0)))
+          mx.forall(m => cmp(lit, m, dt).forall(_ < 0))) &&
+          parts.admits(file, filter)
       case GreaterThanOrEqual(a, v) =>
         val (_, mx, _, dt) = stats(a)
         encodeLiteral(v, dt).forall(lit =>
-          mx.forall(m => cmp(lit, m, dt).forall(_ <= 0)))
+          mx.forall(m => cmp(lit, m, dt).forall(_ <= 0))) &&
+          parts.admits(file, filter)
       case LessThan(a, v) =>
         val (mn, _, _, dt) = stats(a)
         encodeLiteral(v, dt).forall(lit =>
-          mn.forall(m => cmp(lit, m, dt).forall(_ > 0)))
+          mn.forall(m => cmp(lit, m, dt).forall(_ > 0))) &&
+          parts.admits(file, filter)
       case LessThanOrEqual(a, v) =>
         val (mn, _, _, dt) = stats(a)
         encodeLiteral(v, dt).forall(lit =>
-          mn.forall(m => cmp(lit, m, dt).forall(_ >= 0)))
-      case In(a, vs) => vs.isEmpty || vs.exists(v => mayMatch(file, EqualTo(a, v), schema))
+          mn.forall(m => cmp(lit, m, dt).forall(_ >= 0))) &&
+          parts.admits(file, filter)
+      case In(a, vs) =>
+        vs.isEmpty || vs.exists(v => mayMatch(file, EqualTo(a, v), schema, parts))
       case IsNull(a) =>
         val (_, _, nulls, _) = stats(a)
         nulls.forall(_ > 0) || file.rowCount == 0
@@ -590,8 +596,10 @@ object FileStats {
           (mn.forall(m => bytePrefixLe(m, geq = false)) &&
             mx.forall(m => bytePrefixLe(m, geq = true)) &&
             file.valueSets.get(a).forall(_.exists(_.startsWith(prefix))))
-      case And(l, r) => mayMatch(file, l, schema) && mayMatch(file, r, schema)
-      case Or(l, r) => mayMatch(file, l, schema) || mayMatch(file, r, schema)
+      case And(l, r) =>
+        mayMatch(file, l, schema, parts) && mayMatch(file, r, schema, parts)
+      case Or(l, r) =>
+        mayMatch(file, l, schema, parts) || mayMatch(file, r, schema, parts)
       case _ => true
     }
   }
@@ -608,13 +616,16 @@ object FileStats {
     * zero null count — both prune files whose rows match (wrong
     * results, caught by EvolutionPruneSuite). Callers without
     * evolution (single-epoch tables) pass nothing and take the fast
-    * path. */
+    * path. `parts` adds the partition-tuple check
+    * ([[PartitionPruning.of]] the table); partition values are keyed by
+    * field name, so epoch renames do not touch it. */
   def prune(files: Seq[DataFileMeta], filters: Seq[Filter],
       schema: StructType,
-      renames: Map[Int, Map[String, String]] = Map.empty)
+      renames: Map[Int, Map[String, String]] = Map.empty,
+      parts: PartitionPruning = PartitionPruning.none)
       : Seq[DataFileMeta] = {
     if (renames.isEmpty)
-      files.filter(f => filters.forall(mayMatch(f, _, schema)))
+      files.filter(f => filters.forall(mayMatch(f, _, schema, parts)))
     else {
       val byEpoch: Map[Int, (Seq[Filter], StructType)] =
         renames.map { case (e, rn) =>
@@ -623,7 +634,7 @@ object FileStats {
         }
       files.filter { f =>
         val (fs, sch) = byEpoch.getOrElse(f.schemaEpoch, (filters, schema))
-        fs.forall(mayMatch(f, _, sch))
+        fs.forall(mayMatch(f, _, sch, parts))
       }
     }
   }

@@ -315,10 +315,9 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
       // RTAS: schema/spec/properties replaced (not merged,
       // iceberg_it.py:481-511), snapshot history retained.
       val old = MetadataLog.load(loc, hadoopConf)
-      old.copy(schemas = old.schemas :+
+      old.withSpec(spec).copy(schemas = old.schemas :+
         TableMeta.withFieldIds(schema, old.highestFieldId).json,
-        currentSchemaEpoch = old.schemas.size,
-        partitionSpec = spec, properties = props)
+        currentSchemaEpoch = old.schemas.size, properties = props)
     } else TableMeta.empty(loc, schema, spec, props)
     new LakeStagedTable(this, ident, base, isReplace = replace)
   }

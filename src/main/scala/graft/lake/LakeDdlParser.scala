@@ -190,7 +190,7 @@ case class LakePartitionFieldCommand(table: Seq[String], add: Boolean,
     // the evolved spec (spec-versioned layout, SURVEY.md §7.4.2).
     // Adding the table's first TIME transform pins the transform zone
     // (Transforms.ZoneProp) exactly like CREATE would.
-    cat.commitMeta(meta.copy(partitionSpec = newSpec,
+    cat.commitMeta(meta.withSpec(newSpec).copy(
       properties = Transforms.stampZone(meta.properties, newSpec)))
     Nil
   }
@@ -214,7 +214,7 @@ case class LakeReplacePartitionFieldCommand(table: Seq[String],
       s"partition field $oldName does not exist " +
         s"(have: ${meta.partitionSpec.map(_.name).mkString(", ")})")
     val replacedSpec = dropped :+ newField
-    cat.commitMeta(meta.copy(partitionSpec = replacedSpec,
+    cat.commitMeta(meta.withSpec(replacedSpec).copy(
       properties = Transforms.stampZone(meta.properties, replacedSpec)))
     Nil
   }

@@ -384,12 +384,16 @@ class LakeScanBuilder(table: LakeTable, snapshotId: Option[Long],
     // selective query on a million-file snapshot plannable. Unfiltered
     // scans need every entry anyway and hydrate through the cache.
     val statRenames = LakeScans.statRenames(fullSchema, table.meta)
+    val parts =
+      if (pushed.isEmpty) PartitionPruning.none
+      else PartitionPruning.of(table.meta)
     val spill = Manifests.unforcedSpill(files)
     val pruned = spill match {
       case Some(l) if pushed.nonEmpty =>
         Manifests.readPruned(l.dir, pushed.toSeq, fullSchema,
-          table.catalog.hadoopConf, statRenames)
-      case _ => FileStats.prune(files, pushed.toSeq, fullSchema, statRenames)
+          table.catalog.hadoopConf, statRenames, parts)
+      case _ =>
+        FileStats.prune(files, pushed.toSeq, fullSchema, statRenames, parts)
     }
     onBuild(pruned)
     onFilters(pushed)
@@ -454,8 +458,18 @@ class LakeScanBuilder(table: LakeTable, snapshotId: Option[Long],
       val skipped =
         if (spill.exists(!_.isForced)) -1L
         else (files.size - planned.size).toLong
+      // of those, the files only the partition check ruled out
+      val partitionSkipped =
+        if (skipped < 0) -1L
+        else if (skipped == 0 || parts.isEmpty) 0L
+        else {
+          val kept = pruned.iterator.map(_.path).toSet
+          FileStats.prune(files.filterNot(f => kept(f.path)), pushed.toSeq,
+            fullSchema, statRenames).size.toLong
+        }
       new LakeBatchScan(table, planned, required, pushed, options, deleted,
-        eqDeleted, skippedFiles = skipped)
+        eqDeleted, skippedFiles = skipped,
+        partitionSkippedFiles = partitionSkipped)
     }
   }
 }
@@ -781,7 +795,8 @@ class LakeBatchScan(table: LakeTable, initial: Seq[DataFileMeta],
     options: CaseInsensitiveStringMap,
     deleted: Map[String, Seq[String]] = Map.empty,
     eqDeleted: Map[String, Seq[EqDeleteMeta]] = Map.empty,
-    skippedFiles: Long = -1L)
+    skippedFiles: Long = -1L,
+    partitionSkippedFiles: Long = -1L)
   extends Scan with SupportsRuntimeV2Filtering with SupportsReportStatistics
   with SupportsReportPartitioning
   with org.apache.spark.sql.connector.read.SupportsReportOrdering {
@@ -1039,7 +1054,8 @@ class LakeBatchScan(table: LakeTable, initial: Seq[DataFileMeta],
     val inValues = v1.collect { case sources.In(_, vs) => vs.length.toLong }.sum
     if (v1.nonEmpty && inValues <= 100000L) {
       val narrowed = FileStats.prune(files, v1.toSeq, table.schema(),
-        LakeScans.statRenames(table.schema(), table.meta))
+        LakeScans.statRenames(table.schema(), table.meta),
+        PartitionPruning.of(table.meta))
       LakeBatchScan.lastRuntimeFileCount.set(narrowed.size)
       if (narrowed.size < files.size) {
         files = narrowed
@@ -1079,7 +1095,9 @@ class LakeBatchScan(table: LakeTable, initial: Seq[DataFileMeta],
       LakeScanMetrics.driver("maskedDataFiles",
         fs.count(f => deleted.contains(PosDeletes.norm(f.path))).toLong)
     ) ++ (if (skippedFiles >= 0)
-      Array(LakeScanMetrics.driver("skippedDataFiles", skippedFiles))
+      Array(LakeScanMetrics.driver("skippedDataFiles", skippedFiles),
+        LakeScanMetrics.driver("partitionSkippedDataFiles",
+          partitionSkippedFiles))
     else Array.empty[org.apache.spark.sql.connector.metric.CustomTaskMetric])
   }
 
@@ -1091,8 +1109,10 @@ class LakeBatchScan(table: LakeTable, initial: Seq[DataFileMeta],
 }
 
 /** Driver-side planning metrics surfaced in the SQL UI node for every
-  * lake scan: how many files (and bytes) the plan kept, how many the
-  * stats pruning skipped, how many carry MoR masks. The per-task side
+  * lake scan: how many files (and bytes) the plan kept, how many
+  * planning skipped (`skippedDataFiles`) and how many of those only the
+  * partition-value check ruled out, footer stats alone keeping them
+  * (`partitionSkippedDataFiles`), how many carry MoR masks. The per-task side
   * is Spark's own parquet metrics; these answer "did pruning work?"
   * without reading event logs. */
 private[lake] object LakeScanMetrics {
@@ -1100,7 +1120,8 @@ private[lake] object LakeScanMetrics {
 
   val supported: Array[CustomMetric] = Array(
     new PlannedDataFilesMetric, new PlannedBytesMetric,
-    new MaskedDataFilesMetric, new SkippedDataFilesMetric)
+    new MaskedDataFilesMetric, new SkippedDataFilesMetric,
+    new PartitionSkippedDataFilesMetric)
 
   def driver(n: String, v: Long): CustomTaskMetric = new CustomTaskMetric {
     override def name(): String = n
@@ -1126,7 +1147,10 @@ private[lake] final class PlannedBytesMetric
 private[lake] final class MaskedDataFilesMetric
   extends LakeSumMetric("maskedDataFiles", "planned files with MoR masks")
 private[lake] final class SkippedDataFilesMetric
-  extends LakeSumMetric("skippedDataFiles", "files skipped by stats pruning")
+  extends LakeSumMetric("skippedDataFiles", "files skipped by planning")
+private[lake] final class PartitionSkippedDataFilesMetric
+  extends LakeSumMetric("partitionSkippedDataFiles",
+    "files skipped by partition values alone")
 
 object LakeBatchScan {
   /** Spec observability: file count surviving the most recent runtime
@@ -1173,18 +1197,28 @@ class LakeRowLevelScan(table: LakeTable, initial: Seq[DataFileMeta],
 
   // same output-membership guard as LakeBatchScan.filterAttributes:
   // delta scans project only (row-id) columns, and reporting a
-  // pruned-away partition column makes PartitionPruning throw
-  override def filterAttributes(): Array[NamedReference] =
-    table.meta.partitionSpec.map(_.sourceColumn).distinct
+  // pruned-away partition column makes PartitionPruning throw.
+  // ONE column: Spark's group filter folds several attributes into a
+  // single struct-valued IN (`named_struct(ts, id) IN (subquery)`) that
+  // no V2 predicate can carry, and drops it — a MERGE on a
+  // `days(ts), bucket(16, id)` table would replace every file. Report
+  // the first source column whose values prune by partition value,
+  // else the first source column.
+  override def filterAttributes(): Array[NamedReference] = {
+    val sources = table.meta.partitionSpec.map(_.sourceColumn).distinct
       .filter(c => required.fieldNames.exists(_.equalsIgnoreCase(c)))
+    val parts = PartitionPruning.of(table.meta)
+    sources.find(parts.prunes).orElse(sources.headOption)
       .map(Shims.columnRef).toArray
+  }
 
   override def filter(predicates: Array[Predicate]): Unit = {
     val v1 = predicates.flatMap(p =>
       org.apache.spark.sql.graft.Shims.predicateToV1(p))
     if (v1.nonEmpty) {
       files = FileStats.prune(files, v1.toSeq, table.schema(),
-        LakeScans.statRenames(table.schema(), table.meta))
+        LakeScans.statRenames(table.schema(), table.meta),
+        PartitionPruning.of(table.meta))
       onFiles(files)
       delegate = LakeScans.build(table, files, required, Array.empty, options,
         deleted, eqDeleted, layout = leafLayout)

@@ -693,7 +693,14 @@ object LakeWriteUtil {
 
   /** Copy-on-write for `overwrite(filters)` / DELETE WHERE: fully
     * matching files are dropped, partially matching files rewritten
-    * with the negated predicate, untouched files kept. */
+    * with the negated predicate, untouched files kept. Files are
+    * matched by stats AND partition values, so a point DELETE on a
+    * bucketed key touches only the buckets its keys hash to. Each
+    * rewritten file keeps its recorded tuple: every tupled input is
+    * rewritten in ONE shuffle-free job tagged by its tuple
+    * ([[rewriteFilesFused]]), so the layout stays one tuple per file
+    * and no job re-derives the tuples; tuple-less inputs go through
+    * [[rewriteFiles]], which derives theirs. */
   def copyOnWrite(spark: SparkSession, table: LakeTable, meta: TableMeta,
       parentFiles: Seq[DataFileMeta], filters: Array[Filter],
       conf: org.apache.hadoop.conf.Configuration,
@@ -701,18 +708,26 @@ object LakeWriteUtil {
       applyEqs: Seq[EqDeleteMeta] = Nil,
       newSeq: Long = 0L): Seq[DataFileMeta] = {
     val schema = meta.schema
+    val parts = PartitionPruning.of(meta)
     val (touched, untouched) = parentFiles.partition(f =>
-      filters.forall(FileStats.mayMatch(f, _, schema)))
-    val (full, partial) = touched.partition(fullyMatches(_, filters, schema))
+      filters.forall(FileStats.mayMatch(f, _, schema, parts)))
+    val (full, partial) =
+      touched.partition(fullyMatches(_, filters, schema, parts))
     val _ = full // dropped entirely
     val rewritten =
       if (partial.isEmpty) Nil
       else {
         val cond = filters.flatMap(filterToColumn).reduceOption(_ && _)
           .getOrElse(lit(true))
-        rewriteFiles(spark, meta, partial,
-          df => df.filter(!coalesce(cond, lit(false))), conf,
-          applyDeletes = applyDeletes, applyEqs = applyEqs, newSeq = newSeq)
+        val keep: DataFrame => DataFrame =
+          _.filter(!coalesce(cond, lit(false)))
+        val (tupled, tupleLess) = partial.partition(_.partitionValues.nonEmpty)
+        rewriteFilesFused(spark, meta, tupled.groupBy(_.partitionValues).toSeq,
+          conf, applyDeletes = applyDeletes, applyEqs = applyEqs,
+          newSeq = newSeq, xform = keep, cluster = false) ++
+          (if (tupleLess.isEmpty) Nil
+          else rewriteFiles(spark, meta, tupleLess, keep, conf,
+            applyDeletes = applyDeletes, applyEqs = applyEqs, newSeq = newSeq))
       }
     untouched ++ rewritten
   }
@@ -727,7 +742,11 @@ object LakeWriteUtil {
     }
 
   /** Rewrite a set of files (grouped by schema epoch, projected to
-    * current names) through `xform`, returning new file metas. */
+    * current names) through `xform`, returning new file metas. Without
+    * a `knownTuple` on a partitioned table the rows may span tuples, so
+    * the write is split by the partition transforms (one directory per
+    * tuple hash) and every output file still records exactly one tuple
+    * — this is how compaction repairs files that carry none. */
   def rewriteFiles(spark: SparkSession, meta: TableMeta,
       files: Seq[DataFileMeta], xform: DataFrame => DataFrame,
       conf: org.apache.hadoop.conf.Configuration,
@@ -738,6 +757,7 @@ object LakeWriteUtil {
       knownTuple: Option[Map[String, String]] = None): Seq[DataFileMeta] = {
     val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
     val schema = meta.schema
+    val splitByTuple = knownTuple.isEmpty && meta.partitionSpec.nonEmpty
     // files with different data sequence numbers are subject to
     // DIFFERENT equality-delete subsets — group so each rewrite job
     // applies exactly the deletes its inputs are old enough for
@@ -770,7 +790,12 @@ object LakeWriteUtil {
       // so the deletes must be applied (not carried) here
       val eqMasked =
         if (eqs.isEmpty) df else EqDeletes.antiJoin(spark, meta, df, eqs)
-      xform(eqMasked).write.mode("append").parquet(outDir)
+      val out = xform(eqMasked)
+      if (splitByTuple)
+        out.withColumn(TupleTag, xxhash64(meta.partitionSpec.map(f =>
+            Transforms.eval(f, schema, Transforms.zoneOf(meta))): _*))
+          .write.mode("append").partitionBy(TupleTag).parquet(outDir)
+      else out.write.mode("append").parquet(outDir)
     }
     val epoch = meta.currentSchemaEpoch
     val outPaths = listParquet(outDir, conf)
@@ -792,10 +817,15 @@ object LakeWriteUtil {
     // sortedWith: only sort-strategy compaction passes it (its xform
     // ends in sortWithinPartitions over exactly these entries, one
     // output file per df partition) — binpack/zorder/delete-applying
-    // rewrites stamp nothing
+    // rewrites stamp nothing, and neither does a tuple split, whose
+    // writer re-sorts each task's rows by the tuple hash
     FileStats.fromFooters(outPaths, conf, schema, epoch, tupleOf)
-      .map(_.copy(seq = newSeq, sortedBy = sortedWith))
+      .map(_.copy(seq = newSeq,
+        sortedBy = if (splitByTuple) Nil else sortedWith))
   }
+
+  /** Directory column a tuple-splitting [[rewriteFiles]] writes under. */
+  private val TupleTag = "__graft_tuple"
 
   /** Rewrite MANY partition groups in ONE Spark job — the fused twin
     * of per-group [[rewriteFiles]] loops. A compaction over a
@@ -806,61 +836,78 @@ object LakeWriteUtil {
     * Catalyst planning (~2-3 s of job-free driver time, measured).
     * This shape plans ONE scan over every group's files, recovers
     * each row's group from its source file path (a literal map over
-    * `_metadata.file_path` — driver metadata, no join), hash-clusters
-    * rows by group, and fans the single write out on the group tag,
-    * so each group lands as one file under its own directory. The
-    * group-clustering shuffle moves the rewrite bytes once, which is
-    * why callers gate fusion by TOTAL BYTES
-    * (`spark.graft.lake.fusedRewriteMaxBytes`): small-file
+    * `_metadata.file_path` — driver metadata, no join), passes the
+    * rows through `xform` (a row filter for copy-on-write), and fans
+    * the single write out on the group tag, so each output file lands
+    * under its group's directory and carries the group's tuple.
+    *
+    * `cluster` hash-clusters rows by group first, so each group lands
+    * as ONE file (compaction's contract). That shuffle moves the
+    * rewrite bytes once, which is why compaction gates fusion by TOTAL
+    * BYTES (`spark.graft.lake.fusedRewriteMaxBytes`): small-file
     * maintenance — the regime where fixed job overhead dominates —
     * fuses; bulk compactions keep the shuffle-free per-group path.
+    * Without `cluster` the write is shuffle-free: each scan task writes
+    * one file per group it read (copy-on-write DML, whose file split is
+    * not contractual).
     *
-    * Callers must pre-restrict groups to the uniform case: a known
-    * partition tuple per group, one schema epoch across all fused
-    * files, no equality deletes (those sub-group the rewrite by
-    * applicable delete subsets), and a one-output-file target per
-    * group (binpack nOut == 1, or the mask-fold identity whose file
-    * split is not contractual). Row content per group is identical
-    * to the per-group path: same scan, same mask anti-join. */
+    * Groups must each have a known partition tuple. Inputs spanning
+    * schema epochs or equality-delete subsets write one sub-job each
+    * into the same output, like [[rewriteFiles]]; compaction only fuses
+    * the uniform case (one epoch, no equality deletes), with a
+    * one-output-file target per group (binpack nOut == 1, or the
+    * mask-fold identity whose file split is not contractual). Row
+    * content per group is identical to the per-group path: same scan,
+    * same mask anti-join. */
   def rewriteFilesFused(spark: SparkSession, meta: TableMeta,
       groups: Seq[(Map[String, String], Seq[DataFileMeta])],
       conf: org.apache.hadoop.conf.Configuration,
       applyDeletes: Map[String, Array[Long]] = Map.empty,
-      newSeq: Long = 0L): Seq[DataFileMeta] = {
+      applyEqs: Seq[EqDeleteMeta] = Nil,
+      newSeq: Long = 0L,
+      xform: DataFrame => DataFrame = identity,
+      cluster: Boolean = true): Seq[DataFileMeta] = {
     if (groups.isEmpty) return Nil
     val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
     val tk = "__graft_rewrite_group"
-    val files = groups.flatMap(_._2)
-    val epoch = files.head.schemaEpoch
-    val epochSchema = meta.schemaAt(epoch)
     val pathTk: Map[String, String] = groups.zipWithIndex.flatMap {
       case ((_, fs), i) => fs.map(f => PosDeletes.norm(f.path) -> i.toString)
     }.toMap
-    // one shared mask frame: the anti-join key is (file, pos), so
-    // pairs from other files in the same scan are inert
-    val allPairs =
-      if (applyDeletes.isEmpty) Nil
-      else files.flatMap(f =>
-        applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
-          .map(p => (PosDeletes.norm(f.path), p)))
-    val raw = spark.read.schema(epochSchema).parquet(files.map(_.path): _*)
-      .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
-    val masked =
-      if (allPairs.isEmpty) raw
-      else raw.withColumn("__pos", col("_metadata.row_index"))
-        .join(broadcast(spark.createDataFrame(allPairs).toDF("__fp", "__pos")),
-          Seq("__fp", "__pos"), "left_anti")
-    val tagged = masked.select(
-      epochProjection(meta, epoch, epochSchema) :+
-        element_at(typedLit(pathTk), col("__fp")).as(tk): _*)
-    // explicit partition count (REPARTITION_BY_NUM): a bare
-    // repartition(col) is AQE-coalescible, and at maintenance scale
-    // AQE folded the whole shuffle into ONE partition — a single task
-    // then wrote every group's file serially (measured ~1.7 s for 32
-    // groups vs ~0.3 s parallel). One partition per group keeps the
-    // write as wide as the group count.
-    tagged.repartition(math.max(1, groups.size), col(tk))
-      .write.mode("append").partitionBy(tk).parquet(outDir)
+    for {
+      (sub, eqs) <- EqDeletes.groupByApplicable(meta, groups.flatMap(_._2),
+        applyEqs)
+      (epoch, files) <- sub.groupBy(_.schemaEpoch)
+    } {
+      val epochSchema = meta.schemaAt(epoch)
+      // one shared mask frame: the anti-join key is (file, pos), so
+      // pairs from other files in the same scan are inert
+      val allPairs =
+        if (applyDeletes.isEmpty) Nil
+        else files.flatMap(f =>
+          applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
+            .map(p => (PosDeletes.norm(f.path), p)))
+      val raw = spark.read.schema(epochSchema).parquet(files.map(_.path): _*)
+        .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
+      val masked =
+        if (allPairs.isEmpty) raw
+        else raw.withColumn("__pos", col("_metadata.row_index"))
+          .join(broadcast(spark.createDataFrame(allPairs).toDF("__fp", "__pos")),
+            Seq("__fp", "__pos"), "left_anti")
+      val tagged = masked.select(
+        epochProjection(meta, epoch, epochSchema) :+
+          element_at(typedLit(pathTk), col("__fp")).as(tk): _*)
+      val rows = xform(
+        if (eqs.isEmpty) tagged else EqDeletes.antiJoin(spark, meta, tagged, eqs))
+      // explicit partition count (REPARTITION_BY_NUM): a bare
+      // repartition(col) is AQE-coalescible, and at maintenance scale
+      // AQE folded the whole shuffle into ONE partition — a single task
+      // then wrote every group's file serially (measured ~1.7 s for 32
+      // groups vs ~0.3 s parallel). One partition per group keeps the
+      // write as wide as the group count.
+      (if (cluster) rows.repartition(math.max(1, groups.size), col(tk))
+      else rows)
+        .write.mode("append").partitionBy(tk).parquet(outDir)
+    }
     val epochNow = meta.currentSchemaEpoch
     locally {
       // ONE recursive listing of the output root (not one per group
@@ -1097,7 +1144,8 @@ object LakeWriteUtil {
           scanFilters.toSeq, schema,
           // phantom files may carry a NEWER epoch than this op's scan
           // schema; probing un-mapped names could miss a real phantom
-          LakeScans.statRenames(schema, metaWithRef))
+          LakeScans.statRenames(schema, metaWithRef),
+          PartitionPruning.of(metaWithRef))
           .map(f => PosDeletes.norm(f.path))
       val conflicts = newlyMasked ++ newlyEqMasked ++ removedRead ++ phantom
       if (conflicts.nonEmpty)
@@ -1192,9 +1240,11 @@ object LakeWriteUtil {
       parentFiles: Seq[DataFileMeta], filters: Array[Filter],
       conf: org.apache.hadoop.conf.Configuration): TableMeta = {
     val schema = fresh.schema
+    val parts = PartitionPruning.of(fresh)
     val (touched, untouched) = parentFiles.partition(f =>
-      filters.forall(FileStats.mayMatch(f, _, schema)))
-    val (full, partial) = touched.partition(fullyMatches(_, filters, schema))
+      filters.forall(FileStats.mayMatch(f, _, schema, parts)))
+    val (full, partial) =
+      touched.partition(fullyMatches(_, filters, schema, parts))
     val newDeletes: Seq[DataFileMeta] =
       if (partial.isEmpty) Nil
       else {
@@ -1371,10 +1421,11 @@ object LakeWriteUtil {
   /** Does every row of `file` definitely match all `filters`?
     * (Requires provable negation + no nulls in referenced columns.) */
   def fullyMatches(file: DataFileMeta, filters: Array[Filter],
-      schema: StructType): Boolean =
+      schema: StructType,
+      parts: PartitionPruning = PartitionPruning.none): Boolean =
     file.rowCount > 0 && filters.forall { f =>
       f.references.forall(a => file.nullCounts.get(a).contains(0L)) &&
-        negate(f).exists(nf => !FileStats.mayMatch(file, nf, schema))
+        negate(f).exists(nf => !FileStats.mayMatch(file, nf, schema, parts))
     }
 
   def negate(f: Filter): Option[Filter] = f match {

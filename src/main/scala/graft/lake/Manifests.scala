@@ -251,10 +251,12 @@ object Manifests {
       filters: Seq[org.apache.spark.sql.sources.Filter],
       schema: org.apache.spark.sql.types.StructType,
       conf: Configuration,
-      renames: Map[Int, Map[String, String]] = Map.empty)
+      renames: Map[Int, Map[String, String]] = Map.empty,
+      parts: PartitionPruning = PartitionPruning.none)
       : Seq[DataFileMeta] = {
     val cached = cache.get(dir)
-    if (cached != null) return FileStats.prune(cached, filters, schema, renames)
+    if (cached != null)
+      return FileStats.prune(cached, filters, schema, renames, parts)
     val spark = SparkSession.active
     val df = spark.read.parquet(dir)
     val entries = withSeq(
@@ -273,7 +275,7 @@ object Manifests {
     val survivors = entries.as(Encoders.product[DataFileMeta])
       .filter { f =>
         val (fs, sch) = byEpoch.getOrElse(f.schemaEpoch, (filters, schema))
-        fs.forall(FileStats.mayMatch(f, _, sch))
+        fs.forall(FileStats.mayMatch(f, _, sch, parts))
       }
       .collect().toSeq
     lastPrunedPlanCount.set(survivors.size)

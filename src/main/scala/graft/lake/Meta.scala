@@ -35,7 +35,16 @@ final case class DataFileMeta(
     minValues: Map[String, String],  // column -> encoded min (write-time names)
     maxValues: Map[String, String],
     nullCounts: Map[String, Long],
-    partitionValues: Map[String, String], // spec field name -> encoded value
+    // Partition field name -> the transform's value for every row of
+    // this file, as the string `Transforms.eval` yields ("null" for a
+    // null value). A non-empty map is a claim that the file holds ONE
+    // tuple; scan planning and copy-on-write prune on it
+    // ([[PartitionPruning]]). Empty means no claim: an unpartitioned
+    // table, an `add_files`/`migrate`/`snapshot` import of foreign
+    // files, or a file written before per-file tuples were recorded.
+    // Every write, rewrite and compaction path of a partitioned table
+    // records a tuple; `rewrite_data_files` gives an untupled file one.
+    partitionValues: Map[String, String],
     // Data sequence number: the snapshot id of the commit that wrote
     // this file's ROWS into the table (rewrites stamp their own commit
     // id — legal because every rewrite reads through a scan that has
@@ -216,7 +225,16 @@ final case class TableMeta(
     snapshots: Seq[SnapshotMeta],
     refs: Map[String, RefMeta],
     version: Int,
-    lastSnapshotId: Long) {
+    lastSnapshotId: Long,
+    // Partition specs that were in force before `partitionSpec`, oldest
+    // first: CREATE starts the log empty and every ADD/DROP/REPLACE
+    // PARTITION FIELD (and RTAS) appends the spec it replaces. A field
+    // name's recorded `partitionValues` may have been computed under
+    // any logged definition of that name, so partition pruning trusts
+    // a name only while all of them agree. None: the metadata predates
+    // the log, so no definition history is known and nothing prunes by
+    // partition value.
+    priorSpecs: Option[Seq[Seq[PartitionFieldMeta]]] = None) {
 
   def schema: StructType = schemaAt(currentSchemaEpoch)
   def schemaAt(epoch: Int): StructType =
@@ -232,6 +250,16 @@ final case class TableMeta(
 
   def snapshotById(id: Long): Option[SnapshotMeta] =
     snapshots.find(_.snapshotId == id)
+
+  /** Every spec ever in force, oldest first, or None when the metadata
+    * predates the spec log. */
+  def specLog: Option[Seq[Seq[PartitionFieldMeta]]] =
+    priorSpecs.map(_ :+ partitionSpec)
+
+  /** Replace the partition spec, logging the one it replaces. */
+  def withSpec(spec: Seq[PartitionFieldMeta]): TableMeta =
+    copy(partitionSpec = spec,
+      priorSpecs = priorSpecs.map(_ :+ partitionSpec))
 
   def currentSnapshotId(ref: String = "main"): Option[Long] =
     refs.get(ref).map(_.snapshotId)
@@ -283,7 +311,8 @@ object TableMeta {
       snapshots = Nil,
       refs = Map.empty,
       version = 0,
-      lastSnapshotId = 0L)
+      lastSnapshotId = 0L,
+      priorSpecs = Some(Nil))
 
   /** Assign stable field ids (top-level) so renames keep identity.
     * `minFieldId` is the table's highest-ever id (across all schema

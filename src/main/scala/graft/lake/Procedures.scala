@@ -510,7 +510,7 @@ object Procedures {
         val candidates = a.strOpt("where") match {
           case Some(w) =>
             FileStats.prune(unmasked, RewriteUtil.whereToFilters(spark, m.schema, w),
-              m.schema)
+              m.schema, parts = PartitionPruning.of(m))
           case None => unmasked
         }
         val rewriteAll = opts.get("rewrite-all").exists(_.toBoolean)
@@ -876,20 +876,24 @@ object Procedures {
         // Non-lake source (e.g. a session-catalog parquet table, the
         // reference's main use: docs/spark-procedures.md snapshot):
         // import its files zero-copy, leaving the source untouched.
-        val (schema, spec, props, files) =
+        // a lake source's files carry tuples recorded under ITS spec
+        // history, so the copy inherits that history with them
+        val (schema, spec, props, files, priorSpecs) =
           scala.util.Try(meta(a, "source_table")) match {
             case scala.util.Success((src, _)) =>
               (src.schema, src.partitionSpec, src.properties,
-                src.currentSnapshot("main").map(_.files).getOrElse(Nil))
+                src.currentSnapshot("main").map(_.files).getOrElse(Nil),
+                src.priorSpecs)
             case scala.util.Failure(_) =>
               val df = spark.table(a.str("source_table"))
               val fs = df.inputFiles.toSeq.filter(_.endsWith(".parquet"))
                 .map(p => FileStats.fromFooter(p, catalog.hadoopConf,
                   df.schema, 0, Map.empty))
-              (df.schema, Nil, Map.empty[String, String], fs)
+              (df.schema, Nil, Map.empty[String, String], fs, Some(Nil))
           }
         val base = TableMeta.empty(loc, schema, spec,
           props + ("snapshot-source" -> a.str("source_table")))
+          .copy(priorSpecs = priorSpecs)
         val snap = SnapshotMeta(1L, None, System.currentTimeMillis(),
           "append", Map("imported" -> "true"), files, 0)
         catalog.commitMeta(base.withSnapshot(snap, Some("main")))

@@ -106,22 +106,30 @@ object Transforms {
     // a top-level-only lookup would silently give truncate() on a
     // nested NUMERIC source string-prefix semantics instead of the
     // numeric floor
-    val numeric = leafType(schema, f.sourceColumn).exists {
+    val src = leafType(schema, f.sourceColumn)
+    val numeric = src.exists {
       case _: org.apache.spark.sql.types.NumericType => true
       case _ => false
     }
-    // pinned-zone formatting applies only to TimestampType (an
-    // instant): DATE/NTZ values are wall-clock, zone-free under
-    // date_format regardless of session. Expressions carry an
-    // explicit timeZoneId, which analysis preserves (ResolveTimeZone
-    // only fills in missing ones).
-    val pinned = zone.filter(_ =>
-      leafType(schema, f.sourceColumn).contains(TimestampType))
+    // pinned-zone formatting: a TimestampType source (an instant)
+    // formats in the table's zone. DATE/NTZ values are wall-clock and
+    // format in UTC, which has no gaps: date_format's implicit
+    // session-zone cast moves a value inside a DST gap (NTZ 02:30 on a
+    // spring-forward day lands in hour 03), which would make the value
+    // depend on the writer's zone and defeat exact filter projection
+    // (PartitionPruning). Expressions carry an explicit timeZoneId,
+    // which analysis preserves (ResolveTimeZone only fills in missing
+    // ones).
+    val wallClock = src.contains(DateType) || src.contains(TimestampNTZType)
+    val pinned = zone.filter(_ => src.contains(TimestampType))
     import org.apache.spark.sql.catalyst.expressions.{Cast, DateFormatClass, Literal, Year}
     import org.apache.spark.sql.graft.Shims
     def fmtTz(fmt: String): Column = pinned match {
       case Some(z) => Shims.column(
         DateFormatClass(Shims.expression(c), Literal(fmt), Some(z)))
+      case None if wallClock => Shims.column(DateFormatClass(
+        Cast(Shims.expression(c), TimestampType, Some("UTC")), Literal(fmt),
+        Some("UTC")))
       case None => date_format(c, fmt)
     }
     val v = f.transform match {

@@ -41,6 +41,7 @@ class FileStatsSoundnessSuite extends AnyFunSuite with BeforeAndAfterAll {
       .config("spark.ui.enabled", "false")
       .config("spark.sql.catalog.lake", classOf[LakeCatalog].getName)
       .config("spark.sql.catalog.lake.warehouse", wh)
+      .withExtensions(new LakeExtensions)
       .getOrCreate()
     spark.sparkContext.setLogLevel("WARN")
     spark.sql("CREATE NAMESPACE IF NOT EXISTS lake.db")
@@ -136,5 +137,184 @@ class FileStatsSoundnessSuite extends AnyFunSuite with BeforeAndAfterAll {
       GreaterThan("t", java.time.LocalDateTime.of(2024, 3, 1, 0, 0)), schema))
     assert(FileStats.mayMatch(f,
       GreaterThan("t", java.time.LocalDateTime.of(2024, 1, 15, 0, 0)), schema))
+  }
+
+  // ---- partition projection (PartitionPruning) ----------------------
+
+  private def inZone[T](z: String)(body: => T): T = {
+    val prev = spark.conf.get("spark.sql.session.timeZone")
+    spark.conf.set("spark.sql.session.timeZone", z)
+    try body finally spark.conf.set("spark.sql.session.timeZone", prev)
+  }
+
+  private def metaOf(t: String) = LakeMeta.of(spark, Seq("lake", "db", t))
+
+  /** One single-row INSERT per value (so each file records one value's
+    * tuple), then: the projection of the filter literal `v` through
+    * every field equals the tuple the INSERT recorded, and a SQL point
+    * read returns the row — planning one file when `c` is an identity
+    * field. `writeZone` is the session zone of the INSERTs. */
+  private def projects(table: String, colType: String, fields: String,
+      values: Seq[(String, Any)], writeZone: String = "UTC"): Unit = {
+    sql(s"CREATE TABLE lake.db.$table (c $colType) USING lake " +
+      s"PARTITIONED BY ($fields)")
+    inZone(writeZone) {
+      values.foreach { case (lit, _) =>
+        sql(s"INSERT INTO lake.db.$table VALUES ($lit)")
+      }
+    }
+    val meta = metaOf(table)
+    val files = meta.currentSnapshot().get.files
+    assert(files.size == values.size)
+    val parts = PartitionPruning.of(meta)
+    val identity = meta.partitionSpec.exists(_.transform == "identity")
+    files.zip(values).foreach { case (f, (lit, v)) =>
+      val projected = parts.project("c", v)
+        .map { case (field, p) => field.name -> p }.toMap
+      assert(f.partitionValues.nonEmpty && projected == f.partitionValues,
+        s"$table: $lit")
+      LakeScanBuilder.lastPlannedFileCount.set(-1)
+      assert(sql(s"SELECT * FROM lake.db.$table WHERE c = $lit").count() == 1,
+        s"$table: $lit")
+      if (identity)
+        assert(LakeScanBuilder.lastPlannedFileCount.get() == 1, s"$table: $lit")
+    }
+  }
+
+  test("partition projection equals the tuple a real INSERT records") {
+    projects("pj_int", "int", "c, bucket(8, c), truncate(10, c)", Seq(
+      "0" -> 0, "7" -> 7, "-13" -> -13,
+      "CAST(2147483647 AS INT)" -> Int.MaxValue,
+      "CAST(-2147483648 AS INT)" -> Int.MinValue))
+    projects("pj_long", "bigint", "c, bucket(16, c), truncate(100, c)", Seq(
+      "CAST(0 AS BIGINT)" -> 0L, "CAST(42 AS BIGINT)" -> 42L,
+      "CAST(-7 AS BIGINT)" -> -7L,
+      "CAST(-123456789012 AS BIGINT)" -> -123456789012L,
+      "CAST(9223372036854775807 AS BIGINT)" -> Long.MaxValue))
+    // truncate(Long.MinValue) overflows on write, so the extremes of
+    // the hashed key go in a table without it
+    projects("pj_long_ext", "bigint", "c, bucket(16, c)", Seq(
+      "CAST('-9223372036854775808' AS BIGINT)" -> Long.MinValue,
+      "CAST(9223372036854775807 AS BIGINT)" -> Long.MaxValue,
+      "CAST(-1 AS BIGINT)" -> -1L))
+    projects("pj_str", "string", "c, truncate(2, c), bucket(8, c)", Seq(
+      "'héllo'" -> "héllo", "'日本語'" -> "日本語",
+      s"'${emoji}x'" -> s"${emoji}x", "'a'" -> "a"))
+    projects("pj_dec", "decimal(10,2)", "c, bucket(8, c), truncate(10, c)", Seq(
+      "1.50BD" -> new java.math.BigDecimal("1.5"),
+      "-3.25BD" -> new java.math.BigDecimal("-3.25"),
+      "0BD" -> java.math.BigDecimal.ZERO,
+      "12345678.99BD" -> new java.math.BigDecimal("12345678.99")))
+    projects("pj_date", "date",
+      "c, bucket(8, c), years(c), months(c), days(c)", Seq(
+        "DATE'2024-01-05'" -> java.sql.Date.valueOf("2024-01-05"),
+        "DATE'1999-12-31'" -> java.time.LocalDate.of(1999, 12, 31),
+        "DATE'1970-01-01'" -> java.sql.Date.valueOf("1970-01-01"),
+        "DATE'1600-06-30'" -> java.time.LocalDate.of(1600, 6, 30)))
+    // written in a DST zone: 02:30 on 2024-03-10 does not exist in
+    // Los Angeles, and the NTZ value must still land in hour 02
+    projects("pj_ntz", "timestamp_ntz", "c, bucket(8, c), days(c), hours(c)",
+      Seq(
+        "TIMESTAMP_NTZ'2024-03-10 02:30:00'" ->
+          java.time.LocalDateTime.of(2024, 3, 10, 2, 30),
+        "TIMESTAMP_NTZ'2024-01-05 23:59:59.5'" ->
+          java.time.LocalDateTime.of(2024, 1, 5, 23, 59, 59, 500000000),
+        "TIMESTAMP_NTZ'1970-01-01 00:00:00'" ->
+          java.time.LocalDateTime.of(1970, 1, 1, 0, 0)),
+      writeZone = "America/Los_Angeles")
+    // TIMESTAMP (an instant) prunes through its zone-free hash only
+    projects("pj_ts", "timestamp", "bucket(8, c)", Seq(
+      "TIMESTAMP'2024-01-05 10:00:00'" ->
+        java.sql.Timestamp.valueOf("2024-01-05 10:00:00"),
+      "TIMESTAMP'1999-12-31 23:59:59'" ->
+        java.sql.Timestamp.valueOf("1999-12-31 23:59:59")))
+    // a literal that is not exactly a value of the column's type makes
+    // no claim
+    val parts = PartitionPruning.of(metaOf("pj_int"))
+    assert(parts.project("c", 3000000000L).isEmpty)
+    assert(parts.project("c", "7").isEmpty)
+    assert(PartitionPruning.of(metaOf("pj_dec"))
+      .project("c", new java.math.BigDecimal("1.505")).isEmpty)
+  }
+
+  test("a field name redefined by REPLACE or DROP-then-ADD returns the " +
+      "model's rows") {
+    def run(t: String, evolve: Seq[String]): Unit = {
+      sql(s"CREATE TABLE lake.db.$t (id bigint, v string) USING lake " +
+        "PARTITIONED BY (bucket(16, id))")
+      val model = scala.collection.mutable.Map[Long, String]()
+      (Seq("") ++ evolve).zipWithIndex.foreach { case (ddl, i) =>
+        if (ddl.nonEmpty) sql(s"ALTER TABLE lake.db.$t $ddl")
+        sql(s"INSERT INTO lake.db.$t SELECT id, concat('$i-', id) " +
+          s"FROM range(${i * 100}, ${i * 100 + 100})")
+        (i * 100L until i * 100L + 100).foreach(k => model(k) = s"$i-$k")
+      }
+      for (k <- model.keys.toSeq.sorted if k % 7 == 0) {
+        val got = sql(s"SELECT v FROM lake.db.$t WHERE id = $k").collect()
+          .map(_.getString(0)).toSeq
+        assert(got == Seq(model(k)), s"$t: id = $k")
+      }
+      val ks = model.keys.toSeq.sorted.filter(_ % 13 == 0)
+      assert(sql(s"SELECT id FROM lake.db.$t WHERE id IN " +
+        s"(${ks.mkString(", ")})").count() == ks.size)
+      // the name's definitions disagree: it makes no claim
+      assert(PartitionPruning.of(metaOf(t)).project("id", 5L).isEmpty)
+    }
+    run("evo_replace", Seq(
+      "REPLACE PARTITION FIELD id_bucket WITH bucket(8, id) AS id_bucket"))
+    run("evo_dropadd", Seq("DROP PARTITION FIELD id_bucket",
+      "ADD PARTITION FIELD bucket(4, id) AS id_bucket"))
+  }
+
+  test("metadata from before the spec log makes no partition claim") {
+    sql("CREATE TABLE lake.db.nolog (id bigint) USING lake " +
+      "PARTITIONED BY (bucket(4, id))")
+    sql("INSERT INTO lake.db.nolog SELECT id FROM range(1000)")
+    LakeScanBuilder.lastPlannedFileCount.set(-1)
+    assert(sql("SELECT * FROM lake.db.nolog WHERE id = 7").count() == 1)
+    assert(LakeScanBuilder.lastPlannedFileCount.get() == 1)
+    // the same table as a build without the log wrote it
+    val conf = spark.sessionState.newHadoopConf()
+    MetadataLog.commit(metaOf("nolog").copy(priorSpecs = None), conf)
+    val legacy = metaOf("nolog")
+    assert(legacy.specLog.isEmpty && PartitionPruning.of(legacy).isEmpty)
+    LakeScanBuilder.lastPlannedFileCount.set(-1)
+    assert(sql("SELECT * FROM lake.db.nolog WHERE id = 7").count() == 1)
+    assert(LakeScanBuilder.lastPlannedFileCount.get() == 4)
+    // evolving it does not start a log: the older definitions are unknown
+    sql("ALTER TABLE lake.db.nolog ADD PARTITION FIELD truncate(10, id)")
+    assert(metaOf("nolog").specLog.isEmpty)
+  }
+
+  test("identity-partitioned DELETE WHERE p = 3 drops the p=3 files " +
+      "without rewriting them") {
+    sql("CREATE TABLE lake.db.idel (id int, p int) USING lake " +
+      "PARTITIONED BY (p)")
+    sql("INSERT INTO lake.db.idel SELECT id, id % 5 FROM range(100)")
+    sql("INSERT INTO lake.db.idel SELECT id, id % 5 FROM range(100, 150)")
+    val before = metaOf("idel").currentSnapshot().get.files
+    sql("DELETE FROM lake.db.idel WHERE p = 3")
+    val after = metaOf("idel").currentSnapshot().get.files
+    assert(after.map(_.path).toSet ==
+      before.filterNot(_.partitionValues.get("p").contains("3"))
+        .map(_.path).toSet, "only the p=3 files go; nothing is rewritten")
+    assert(sql("SELECT * FROM lake.db.idel").count() == 120)
+    assert(sql("SELECT * FROM lake.db.idel WHERE p = 3").count() == 0)
+  }
+
+  test("FLOAT/DOUBLE and TIMESTAMP identity fields make no claim") {
+    sql("CREATE TABLE lake.db.fz (f double, r float, t timestamp) USING lake " +
+      "PARTITIONED BY (f, r, t)")
+    sql("INSERT INTO lake.db.fz VALUES (0.0D, 0.0F, TIMESTAMP'2024-01-01 00:00:00')")
+    sql("INSERT INTO lake.db.fz VALUES (-0.0D, -0.0F, TIMESTAMP'2024-01-01 00:00:00')")
+    val parts = PartitionPruning.of(metaOf("fz"))
+    assert(parts.isEmpty)
+    // -0.0 and 0.0 record different text, but = 0.0 matches both rows
+    assert(sql("SELECT * FROM lake.db.fz WHERE f = 0.0D").count() == 2)
+    assert(sql("SELECT * FROM lake.db.fz WHERE r = CAST(0.0 AS FLOAT)").count() == 2)
+    inZone("Asia/Tokyo") {
+      assert(sql("SELECT * FROM lake.db.fz " +
+        "WHERE t = TIMESTAMP'2024-01-01 09:00:00'").count() == 2)
+    }
   }
 }

@@ -2291,4 +2291,108 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     }
     sql("DROP TABLE lake.db.seqids")
   }
+
+  // ---- partition pruning: work counters on a bucketed CoW table ------
+
+  private def headFiles(t: String): Seq[DataFileMeta] =
+    LakeMeta.of(spark, Seq("lake", "db", t)).currentSnapshot().get.files
+
+  /** Spark jobs `body` starts, counted by a listener (the bus is FIFO:
+    * once a later marker job is seen, every job of `body` has been). */
+  private def jobsDuring(body: => Unit): Int = {
+    val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val listener = new org.apache.spark.scheduler.SparkListener {
+      override def onJobStart(
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
+        groups.add(Option(e.properties)
+          .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
+          .getOrElse(""))
+    }
+    spark.sparkContext.addSparkListener(listener)
+    try {
+      spark.sparkContext.setJobGroup("counted", "counted")
+      body
+      spark.sparkContext.setJobGroup("marker", "marker")
+      spark.range(1).count()
+      spark.sparkContext.clearJobGroup()
+      val deadline = System.currentTimeMillis() + 10000
+      while (!groups.contains("marker") && System.currentTimeMillis() < deadline)
+        Thread.sleep(20)
+      assert(groups.contains("marker"), "marker job never reached the listener")
+      groups.toArray.count(_ == "counted")
+    } finally spark.sparkContext.removeSparkListener(listener)
+  }
+
+  test("bucket(16, id) CoW: a point read plans one file and point DML " +
+      "rewrites only its keys' buckets, keeping one tuple per file") {
+    // a second, day field as well: the MERGE's runtime group filter
+    // must still reach the bucket column
+    sql("CREATE TABLE lake.db.bk (id bigint, v string, ts timestamp) " +
+      "USING lake PARTITIONED BY (days(ts), bucket(16, id))")
+    sql("INSERT INTO lake.db.bk SELECT id, concat('v', id), " +
+      "TIMESTAMP'2024-01-01 10:00:00' FROM range(1500)")
+    val initial = headFiles("bk")
+    assert(initial.size == 16 && initial.forall(_.partitionValues.nonEmpty))
+
+    // min/max of a hashed key spans every file: only the partition
+    // value can skip the other 15
+    val read = sql("SELECT v FROM lake.db.bk WHERE id = 700")
+    LakeScanBuilder.lastPlannedFileCount.set(-1)
+    assert(read.collect().map(_.getString(0)).toSeq == Seq("v700"))
+    assert(LakeScanBuilder.lastPlannedFileCount.get() == 1)
+    val m = read.queryExecution.executedPlan.collect {
+      case b: org.apache.spark.sql.execution.datasources.v2.BatchScanExec =>
+        b.scan
+    }.head.asInstanceOf[LakeBatchScan].reportDriverMetrics()
+      .map(x => x.name -> x.value).toMap
+    assert(m.get("skippedDataFiles").contains(15L) &&
+      m.get("partitionSkippedDataFiles").contains(15L), m.toString)
+
+    val jobs = jobsDuring {
+      sql("DELETE FROM lake.db.bk WHERE id IN (3, 500, 1234)")
+    }
+    val afterDelete = headFiles("bk")
+    val deleted = initial.map(_.path).toSet -- afterDelete.map(_.path)
+    assert(deleted.nonEmpty && deleted.size <= 3, deleted.toString)
+    assert(afterDelete.forall(_.partitionValues.nonEmpty))
+    // the rewrite is one write job; no job re-derives the tuples
+    assert(jobs == 1, s"DELETE ran $jobs Spark jobs")
+    assert(count("SELECT count(*) FROM lake.db.bk") == 1497)
+
+    sql("""MERGE INTO lake.db.bk t USING (SELECT * FROM VALUES
+        |(10L, 'm10', TIMESTAMP'2024-01-01 11:00:00'),
+        |(600L, 'm600', TIMESTAMP'2024-01-01 11:00:00'),
+        |(1600L, 'm1600', TIMESTAMP'2024-01-01 11:00:00') AS s(id, v, ts)) s
+        |ON t.id = s.id WHEN MATCHED THEN UPDATE SET v = s.v
+        |WHEN NOT MATCHED THEN INSERT *""".stripMargin)
+    val afterMerge = headFiles("bk")
+    val merged = afterDelete.map(_.path).toSet -- afterMerge.map(_.path)
+    assert(merged.nonEmpty && merged.size <= 3, merged.toString)
+    assert(afterMerge.forall(_.partitionValues.nonEmpty))
+    assert(count("SELECT count(*) FROM lake.db.bk") == 1498)
+    assert(sql("SELECT id, v FROM lake.db.bk WHERE id IN (10, 600, 1600, 3)")
+      .collect().map(r => r.getLong(0) -> r.getString(1)).toSet ==
+      Set(10L -> "m10", 600L -> "m600", 1600L -> "m1600"))
+  }
+
+  test("rewrite_data_files gives untupled files one tuple each") {
+    val src = s"$wh/untupled_src"
+    spark.range(0, 400).selectExpr("id", "concat('r', id) AS v")
+      .repartition(2).write.parquet(src)
+    sql("CREATE TABLE lake.db.untupled (id bigint, v string) USING lake " +
+      "PARTITIONED BY (bucket(4, id))")
+    sql(s"CALL lake.system.add_files(table => 'db.untupled', " +
+      s"source_table => '`parquet`.`$src`')")
+    val imported = headFiles("untupled")
+    assert(imported.size == 2 && imported.forall(_.partitionValues.isEmpty))
+    sql("CALL lake.system.rewrite_data_files(table => 'db.untupled')")
+    val compacted = headFiles("untupled")
+    assert(compacted.size == 4 && compacted.forall(_.partitionValues.nonEmpty),
+      compacted.map(_.partitionValues).toString)
+    LakeScanBuilder.lastPlannedFileCount.set(-1)
+    assert(sql("SELECT v FROM lake.db.untupled WHERE id = 123").collect()
+      .map(_.getString(0)).toSeq == Seq("r123"))
+    assert(LakeScanBuilder.lastPlannedFileCount.get() == 1)
+    assert(count("SELECT count(*) FROM lake.db.untupled") == 400)
+  }
 }
