@@ -112,8 +112,9 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
       .map(s => Identifier.of(namespace, s.getPath.getName))
   }
 
-  private def tableExists0(ident: Identifier): Boolean =
-    MetadataLog.exists(tableLocation(ident), hadoopConf)
+  private def tableExists0(ident: Identifier,
+      conf: Configuration = hadoopConf): Boolean =
+    MetadataLog.exists(tableLocation(ident), conf)
 
   override def loadTable(ident: Identifier): Table = resolve(ident, None, None)
 
@@ -127,15 +128,18 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
 
   private def resolve(ident: Identifier,
       version: Option[Either[String, Long]], tsMs: Option[Long]): Table = {
-    if (tableExists0(ident)) {
-      val meta = MetadataLog.load(tableLocation(ident), hadoopConf)
+    // one conf per resolution: newHadoopConf copies the session's
+    // whole Hadoop configuration
+    val conf = hadoopConf
+    if (tableExists0(ident, conf)) {
+      val meta = MetadataLog.load(tableLocation(ident), conf)
       return pin(ident, meta, version, tsMs, ref = "main")
     }
     // metadata-table / branch / tag suffix routing: db.t.snapshots etc.
     if (ident.namespace().nonEmpty) {
       val parent = Identifier.of(ident.namespace().dropRight(1), ident.namespace().last)
-      if (tableExists0(parent)) {
-        val meta = MetadataLog.load(tableLocation(parent), hadoopConf)
+      if (tableExists0(parent, conf)) {
+        val meta = MetadataLog.load(tableLocation(parent), conf)
         val n = ident.name()
         if (n == "changes")
           // raw CDC relation incl. carry-over rows — the distributed

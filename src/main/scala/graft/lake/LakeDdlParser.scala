@@ -269,6 +269,11 @@ case class LakeIdentifierFieldsCommand(table: Seq[String], set: Boolean,
 class LakeExtensions extends (org.apache.spark.sql.SparkSessionExtensions => Unit) {
   override def apply(ext: org.apache.spark.sql.SparkSessionExtensions): Unit = {
     ext.injectParser((_, delegate) => new LakeDdlParser(delegate))
+    // single-partition reads collect on the driver (LakeDriverReadExec).
+    // Query-post-planner rules only run under AQE, which a point read
+    // (no exchange) never enters; the columnar post-transition rule
+    // sees every physical plan at its root.
+    ext.injectColumnar(_ => LakeDriverRead.columnarRule)
     // SQL surface for the codegen'd dot product: `graft_dot(a, b)` —
     // the DataFrame API reaches it via VectorFunctions.dot; pure-SQL
     // pipelines (and spark-sql shells) get the same fused loop here

@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.{FileStatusCache, InMemoryFileIndex}
 import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
@@ -214,10 +213,7 @@ class LakeMicroBatchStream(table: LakeTable, readSchema: StructType,
       // shared conf makes every epoch read with the LAST epoch's
       // schema (the EpochReaders trap, re-learned here)
       val conf = spark.sessionState.newHadoopConf()
-      val index = new InMemoryFileIndex(spark,
-        fs.map(f => new org.apache.hadoop.fs.Path(f.path)),
-        Map.empty[String, String], Some(dataSchema),
-        FileStatusCache.getOrCreate(spark), None, None)
+      val index = LakeScans.fileIndex(spark, fs, dataSchema, conf)
       ParquetScan(spark, conf, index, dataSchema, read, StructType(Nil),
         Array.empty, options, None, Nil, Nil, Array.empty)
     }

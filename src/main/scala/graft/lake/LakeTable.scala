@@ -1318,7 +1318,7 @@ object LakeScans {
         val readSchema = epochNamed(required, currentSchema, epochSchema)
         val rename = dottedRenames(currentSchema, epochSchema)
         val filters = pushed.flatMap(renameFilter(_, rename))
-        parquetScan(spark, table, fs.map(_.path), dataSchema, readSchema,
+        parquetScan(spark, table, fs, dataSchema, readSchema,
           filters, options)
     }
     val keys = layout.getOrElse(leafKeysFor(files, deleted, eqDeleted))
@@ -1331,19 +1331,51 @@ object LakeScans {
   }
 
   private def parquetScan(spark: SparkSession, table: LakeTable,
-      paths: Seq[String], dataSchema: StructType, readSchema: StructType,
+      files: Seq[DataFileMeta], dataSchema: StructType, readSchema: StructType,
       pushed: Array[Filter], options: CaseInsensitiveStringMap): ParquetScan = {
-    val index = new InMemoryFileIndex(spark,
-      paths.map(new org.apache.hadoop.fs.Path(_)), Map.empty[String, String],
-      Some(dataSchema), FileStatusCache.getOrCreate(spark), None, None)
+    val conf = spark.sessionState.newHadoopConf()
     // a ParquetScan that can also serve as a streaming source
-    new ParquetScan(spark, spark.sessionState.newHadoopConf(), index,
+    new ParquetScan(spark, conf, fileIndex(spark, files, dataSchema, conf),
       dataSchema, readSchema, StructType(Nil), pushed, options,
       None, Nil, Nil, Array.empty) {
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
         new LakeMicroBatchStream(table, readSchema, options, checkpointLocation)
     }
+  }
+
+  /** A file index over `files` that lists and stats nothing: its
+    * status cache is filled from the manifest's (path, `sizeBytes`), so
+    * planning touches no file and, past 32 paths, starts no parallel
+    * listing job.
+    *
+    * `sizeBytes` sums the file's row groups, so it falls short of the
+    * file length by the magic and footer. A split only assigns row
+    * groups, by midpoint, and every row group's midpoint lies below
+    * that sum; the reader stats the file itself to find the footer. */
+  private[lake] def fileIndex(spark: SparkSession, files: Seq[DataFileMeta],
+      dataSchema: StructType,
+      conf: org.apache.hadoop.conf.Configuration): InMemoryFileIndex = {
+    val fileSystems = scala.collection.mutable.HashMap
+      .empty[(String, String), org.apache.hadoop.fs.FileSystem]
+    val statuses = files.map { f =>
+      val p = new org.apache.hadoop.fs.Path(f.path)
+      val u = p.toUri
+      val fs = fileSystems.getOrElseUpdate((u.getScheme, u.getAuthority),
+        p.getFileSystem(conf))
+      new org.apache.hadoop.fs.FileStatus(f.sizeBytes, false, 1, 0L, 0L,
+        fs.makeQualified(p))
+    }
+    val byPath = statuses.map(st => st.getPath -> Array(st)).toMap
+    val cache = new FileStatusCache {
+      override def getLeafFiles(path: org.apache.hadoop.fs.Path)
+          : Option[Array[org.apache.hadoop.fs.FileStatus]] = byPath.get(path)
+      override def putLeafFiles(path: org.apache.hadoop.fs.Path,
+          leafFiles: Array[org.apache.hadoop.fs.FileStatus]): Unit = ()
+      override def invalidateAll(): Unit = ()
+    }
+    new InMemoryFileIndex(spark, statuses.map(_.getPath),
+      Map.empty[String, String], Some(dataSchema), cache, None, None)
   }
 
   /** current name -> epoch name, joined on stable field id.

@@ -17,7 +17,7 @@ import java.util.{Collections, LinkedHashMap, Map => JMap}
   *    equality delete-file lists, and `manifestPath`, a pointer to the
   *    snapshot's data-file manifest. It holds no data-file list.
   *  - `metadata/manifests/m-<snapshotId>-<rand>.json`: the data-file
-  *    list as one JSON array, for lists at or below
+  *    list as one gzipped JSON array, for lists at or below
   *    `write.metadata.manifest.spill-threshold` (default 500) entries.
   *    Written and read on the driver, no Spark job.
   *  - `metadata/manifests/m-<snapshotId>-<rand>/`: a parquet directory
@@ -188,7 +188,7 @@ object Manifests {
 
   /** Write `list` as snapshot `snapshotId`'s manifest: a JSON file at
     * or below the threshold, a parquet spill above it. Returns the
-    * relative pointer and the written path with its size in bytes. */
+    * relative pointer and the written path with its size on disk. */
   private def write(meta: TableMeta, snapshotId: Long,
       list: Vector[DataFileMeta], conf: Configuration)
       : (String, (String, Long)) = {
@@ -201,9 +201,8 @@ object Manifests {
         writeSpill(path, list)
         MetadataLog.fs(path, conf).getContentSummary(new Path(path)).getLength
       } else {
-        val json = Serialization.write(list).getBytes(StandardCharsets.UTF_8)
-        MetadataLog.createNew(new Path(path), json, conf)
-        json.length.toLong
+        MetadataLog.createNew(new Path(path),
+          Serialization.write(list).getBytes(StandardCharsets.UTF_8), conf)
       }
     cachePut(path, list)
     (pointer, (path, bytes))

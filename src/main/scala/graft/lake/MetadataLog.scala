@@ -22,6 +22,10 @@ import java.nio.charset.StandardCharsets
   * snapshots × files. Loading resolves pointers against the directory
   * the table is loaded from and reads no manifest until a snapshot's
   * file list is used.
+  *
+  * Version files and JSON manifests are written gzip-compressed under
+  * their `.json` names ([[createNew]]); [[readBytes]] tells them from
+  * plain JSON, which older tables hold, by the gzip magic.
   */
 object MetadataLog {
   implicit private val fmts: Formats = DefaultFormats
@@ -121,20 +125,34 @@ object MetadataLog {
     slim.copy(snapshots = slim.snapshots.map(
       Manifests.hydrate(_, location, slim.location, conf)))
 
+  /** The decoded content of a metadata file: gunzipped when it starts
+    * with the gzip magic `1f 8b`, which no JSON text does, else as
+    * stored. */
   private[lake] def readBytes(p: Path, conf: Configuration): Array[Byte] = {
     val in = fs(p.toString, conf).open(p)
-    try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
-    finally in.close()
+    val raw =
+      try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
+      finally in.close()
+    if (raw.length < 2 || raw(0) != 0x1f.toByte || raw(1) != 0x8b.toByte) raw
+    else {
+      val gz = new java.util.zip.GZIPInputStream(
+        new java.io.ByteArrayInputStream(raw))
+      try gz.readAllBytes() finally gz.close()
+    }
   }
 
-  /** Write `bytes` to a new file `p`; throws
+  /** Write `bytes` gzip-compressed to a new file `p` and return its
+    * size on disk; throws
     * `java.nio.file.FileAlreadyExistsException` if `p` exists. The
     * local-vs-remote branch keys off the RESOLVED filesystem's scheme,
     * not the raw path URI: a scheme-less location resolves through
     * fs.defaultFS, and on an HDFS-defaulted cluster the NIO path would
     * write to the driver's local disk while readers list HDFS. */
   private[lake] def createNew(p: Path, bytes: Array[Byte],
-      conf: Configuration): Unit = {
+      conf: Configuration): Long = {
+    val packed = new java.io.ByteArrayOutputStream(bytes.length / 4 + 64)
+    val gz = new java.util.zip.GZIPOutputStream(packed)
+    try gz.write(bytes) finally gz.close()
     val f = fs(p.toString, conf)
     val scheme = f.getUri.getScheme
     val out =
@@ -158,8 +176,9 @@ object MetadataLog {
             clash.initCause(e)
             throw clash
         }
-    try out.write(bytes)
+    try packed.writeTo(out)
     finally out.close()
+    packed.size().toLong
   }
 
   def metadataFiles(location: String, conf: Configuration): Seq[(Int, String, Long)] = {

@@ -102,13 +102,13 @@ class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
     if (!mvPredFps.subsetOf(qPredsByFp.keySet)) return None
     val extraPreds = qShape.preds.filterNot(p => mvPredFps(fp(p)))
 
-    val scan = backingScan(mv)
-    val mvOutByFp: Map[String, Attribute] = {
-      val byName = scan.output.map(a => a.name.toLowerCase -> a).toMap
-      mShape.output.flatMap { o =>
-        byName.get(o.name.toLowerCase).map(attr => fp(stripAlias(o)) -> attr)
-      }.toMap
-    }
+    // The rewrite is decided and built over the MV plan's own output
+    // (the backing table's columns are its names): resolving the
+    // backing table parses, analyzes and loads it, so only a rewrite
+    // that will be returned pays for that (see [[onBacking]]).
+    val mvOutByFp: Map[String, Attribute] =
+      mShape.output.map(o => fp(stripAlias(o)) -> o.toAttribute).toMap
+    val scan = LocalRelation(mvOutByFp.values.toSeq.distinct)
 
     // every extra-predicate column must bind BY FINGERPRINT to an
     // MV-projected base column; a name-only match could hit a
@@ -135,7 +135,7 @@ class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
         val source = mvOutByFp.getOrElse(fp(stripAlias(o)), return None)
         Alias(source, o.name)(exprId = o.exprId)
       }
-      Some(Project(projections, compensate(scan)))
+      onBacking(Project(projections, compensate(scan)), scan, mv)
     } else if (qGroupFps.toSet.subsetOf(mGroupFps.toSet) && qShape.groupBy.nonEmpty) {
       // roll-up: re-aggregate the backing table
       // (AggregateRewriter.scala:155-262)
@@ -169,8 +169,24 @@ class MvRewriteRule(spark: SparkSession) extends Rule[LogicalPlan] {
           case _ => return None
         }
       }
-      Some(Aggregate(groupExprs, aggExprs, compensate(scan)))
+      onBacking(Aggregate(groupExprs, aggExprs, compensate(scan)), scan, mv)
     } else None
+  }
+
+  /** `rewrite`, built over `placeholder` (the MV plan's output), moved
+    * onto the backing table: the leaf becomes its scan and every
+    * placeholder column its same-named backing column. None when the
+    * backing table lacks one of them. */
+  private def onBacking(rewrite: LogicalPlan, placeholder: LocalRelation,
+      mv: MvMeta): Option[LogicalPlan] = {
+    val scan = backingScan(mv)
+    val byName = scan.output.map(a => a.name.toLowerCase -> a).toMap
+    val bound = placeholder.output.map(a =>
+      a.exprId -> byName.getOrElse(a.name.toLowerCase, return None)).toMap
+    Some(rewrite.transformUp { case l if l eq placeholder => scan }
+      .transformAllExpressions {
+        case a: AttributeReference if bound.contains(a.exprId) => bound(a.exprId)
+      })
   }
 
   private def rollup(orig: NamedExpression, f: AggregateFunction): NamedExpression =

@@ -850,7 +850,9 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     val metaDir = new java.io.File(loc.stripPrefix("file:"), "metadata")
     val latest = metaDir.listFiles().filter(_.getName.matches("v\\d+\\.json"))
       .maxBy(_.getName)
-    val json = new String(java.nio.file.Files.readAllBytes(latest.toPath))
+    val json = new String(MetadataLog.readBytes(
+      new org.apache.hadoop.fs.Path(latest.toURI), spark.sessionState.newHadoopConf()),
+      java.nio.charset.StandardCharsets.UTF_8)
     assert(!json.contains(".parquet\""),
       "spilled JSON must not inline the file list")
     assert(json.contains("manifestPath"), json.take(500))

@@ -52,10 +52,13 @@ class ManifestSuite extends AnyFunSuite with BeforeAndAfterAll {
     Option(new File(loc(t), "metadata/manifests").listFiles())
       .getOrElse(Array.empty).map(_.getName).toSeq.sorted
 
+  /** The newest version file's JSON, decoded by the engine's reader
+    * (version files are stored gzipped). */
   private def newestVersionJson(t: String): String = {
     val newest = new File(loc(t), "metadata").listFiles()
       .filter(_.getName.matches("v\\d+\\.json")).maxBy(_.getName)
-    new String(Files.readAllBytes(newest.toPath), StandardCharsets.UTF_8)
+    new String(MetadataLog.readBytes(
+      new org.apache.hadoop.fs.Path(newest.toURI), conf), StandardCharsets.UTF_8)
   }
 
   private def firstSnapshot(t: String): Long =
