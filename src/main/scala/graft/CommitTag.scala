@@ -17,7 +17,7 @@ package graft
   * epoch) can never inherit the tag, be stamped, and then be silently
   * skipped as a "replay". [[Par.all]] propagates the submitting
   * thread's tag to its worker threads, so the epoch body's
-  * parallel-driver-step commits (parSteps/parGroups) stay inside the
+  * parallel-driver-step commits (parSteps) stay inside the
   * scope while anything else on the pool's threads stays outside.
   * Soundness rests on Spark executing a v2 write's driver-side commit
   * on the thread that runs the write action — pinned by

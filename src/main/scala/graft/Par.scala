@@ -1,8 +1,7 @@
 package graft
 
 /** Bounded-pool driver-side parallelism with cancel-on-failure — the
-  * shared core of lake.Procedures.parGroups (partition-group rewrites)
-  * and queries.TextOps.parSteps (disjoint-table commit overlap).
+  * core of queries.TextOps.parSteps (disjoint-table commit overlap).
   * Tasks are independent Spark job chains; jobs submitted from
   * different threads interleave in Spark's scheduler, so a sequential
   * loop would make wall-clock the SUM of per-task latencies. On any

@@ -65,7 +65,6 @@ object FileStats {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala
       val rowCount = blocks.map(_.getRowCount).sum
-      val sizeBytes = blocks.map(_.getCompressedSize).sum
       val mins = scala.collection.mutable.Map[String, String]()
       val maxs = scala.collection.mutable.Map[String, String]()
       val nulls = scala.collection.mutable.Map[String, Long]()
@@ -95,7 +94,8 @@ object FileStats {
           }
         }
       }
-      DataFileMeta(path, rowCount, sizeBytes, epoch,
+      // the file's length (the open already statted it), footer included
+      DataFileMeta(path, rowCount, in.getLength, epoch,
         mins.toMap, maxs.toMap, nulls.toMap, partitionValues,
         valueSets = harvestValueSets(reader, blocks.toSeq, schema),
         blooms = harvestBlooms(reader, blocks.toSeq))

@@ -1349,10 +1349,12 @@ object LakeScans {
     * planning touches no file and, past 32 paths, starts no parallel
     * listing job.
     *
-    * `sizeBytes` sums the file's row groups, so it falls short of the
-    * file length by the magic and footer. A split only assigns row
-    * groups, by midpoint, and every row group's midpoint lies below
-    * that sum; the reader stats the file itself to find the footer. */
+    * `sizeBytes` is the file's length. Metadata written before it was
+    * recorded that way holds the sum of the row groups' compressed
+    * sizes, which falls short by the magic and footer; such a file
+    * still reads whole, as a split only assigns row groups, by
+    * midpoint, every midpoint lies below that sum, and the reader
+    * stats the file itself to find the footer. */
   private[lake] def fileIndex(spark: SparkSession, files: Seq[DataFileMeta],
       dataSchema: StructType,
       conf: org.apache.hadoop.conf.Configuration): InMemoryFileIndex = {
@@ -1375,7 +1377,16 @@ object LakeScans {
       override def invalidateAll(): Unit = ()
     }
     new InMemoryFileIndex(spark, statuses.map(_.getPath),
-      Map.empty[String, String], Some(dataSchema), cache, None, None)
+      Map.empty[String, String], Some(dataSchema), cache, None, None) {
+      // every root is a manifest file: answer from the map, without the
+      // JobConf Spark builds for its path filter before it even looks
+      // in the cache (its jar lookup scans the classpath, per scan)
+      override def listLeafFiles(paths: Seq[org.apache.hadoop.fs.Path])
+          : scala.collection.mutable.LinkedHashSet[org.apache.hadoop.fs.FileStatus] =
+        if (paths.forall(byPath.contains))
+          scala.collection.mutable.LinkedHashSet.from(paths.flatMap(byPath(_)))
+        else super.listLeafFiles(paths)
+    }
   }
 
   /** current name -> epoch name, joined on stable field id.

@@ -10,7 +10,7 @@ import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
-import org.apache.spark.sql.types.{ArrayType, MapType, StructType}
+import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StructType}
 
 /** Write path (SURVEY.md §7.1 "write-path" + §4.3): every batch write
   * stages parquet via Spark's own vectorized writer into a fresh
@@ -538,26 +538,27 @@ object LakeWriteUtil {
     val fs = MetadataLog.fs(dir, conf)
     val p = new Path(dir)
     if (!fs.exists(p)) return Nil
-    val it = fs.listFiles(p, true)
-    val buf = Seq.newBuilder[String]
-    while (it.hasNext) {
-      val f = it.next()
-      if (f.getPath.getName.endsWith(".parquet") &&
-          !f.getPath.toString.contains("/_temporary/")) buf += f.getPath.toString
-    }
-    buf.result()
+    parquetUnder(p, fs).map(_.getPath.toString)
   }
 
   private def listParquetLocal(root: Path,
-      f: org.apache.hadoop.fs.FileSystem): Seq[(String, Long)] = {
-    val it = f.listFiles(root, true)
-    val buf = Seq.newBuilder[(String, Long)]
-    while (it.hasNext) {
-      val s = it.next()
-      if (s.getPath.getName.endsWith(".parquet") &&
-          !s.getPath.toString.contains("/_temporary/"))
-        buf += ((s.getPath.toString, s.getModificationTime))
+      f: org.apache.hadoop.fs.FileSystem): Seq[(String, Long)] =
+    parquetUnder(root, f).map(s => (s.getPath.toString, s.getModificationTime))
+
+  /** Parquet files under `root`, depth first, outside `_temporary`
+    * staging. A `listStatus` walk, not `listFiles`: every
+    * `LocatedFileStatus` reads its file's permissions, and a local
+    * filesystem without Hadoop's native library forks an `ls -ld` per
+    * file for that, about 4 ms per listed file on a 4-vCPU VM. */
+  private def parquetUnder(root: Path,
+      fs: org.apache.hadoop.fs.FileSystem): Seq[org.apache.hadoop.fs.FileStatus] = {
+    val buf = Seq.newBuilder[org.apache.hadoop.fs.FileStatus]
+    def walk(d: Path): Unit = fs.listStatus(d).foreach { s =>
+      if (s.isDirectory) walk(s.getPath)
+      else if (s.getPath.getName.endsWith(".parquet") &&
+          !s.getPath.toString.contains("/_temporary/")) buf += s
     }
+    walk(root)
     buf.result()
   }
 
@@ -695,12 +696,10 @@ object LakeWriteUtil {
     * matching files are dropped, partially matching files rewritten
     * with the negated predicate, untouched files kept. Files are
     * matched by stats AND partition values, so a point DELETE on a
-    * bucketed key touches only the buckets its keys hash to. Each
-    * rewritten file keeps its recorded tuple: every tupled input is
-    * rewritten in ONE shuffle-free job tagged by its tuple
-    * ([[rewriteFilesFused]]), so the layout stays one tuple per file
-    * and no job re-derives the tuples; tuple-less inputs go through
-    * [[rewriteFiles]], which derives theirs. */
+    * bucketed key touches only the buckets its keys hash to. The
+    * partial files are rewritten by one shuffle-free [[rewriteFiles]]
+    * grouped by recorded tuple, so the layout stays one tuple per file
+    * and only tuple-less inputs pay a job to derive theirs. */
   def copyOnWrite(spark: SparkSession, table: LakeTable, meta: TableMeta,
       parentFiles: Seq[DataFileMeta], filters: Array[Filter],
       conf: org.apache.hadoop.conf.Configuration,
@@ -719,15 +718,9 @@ object LakeWriteUtil {
       else {
         val cond = filters.flatMap(filterToColumn).reduceOption(_ && _)
           .getOrElse(lit(true))
-        val keep: DataFrame => DataFrame =
-          _.filter(!coalesce(cond, lit(false)))
-        val (tupled, tupleLess) = partial.partition(_.partitionValues.nonEmpty)
-        rewriteFilesFused(spark, meta, tupled.groupBy(_.partitionValues).toSeq,
+        rewriteFiles(spark, meta, partial.groupBy(_.partitionValues).toSeq,
           conf, applyDeletes = applyDeletes, applyEqs = applyEqs,
-          newSeq = newSeq, xform = keep, cluster = false) ++
-          (if (tupleLess.isEmpty) Nil
-          else rewriteFiles(spark, meta, tupleLess, keep, conf,
-            applyDeletes = applyDeletes, applyEqs = applyEqs, newSeq = newSeq))
+          newSeq = newSeq, filter = _.filter(!coalesce(cond, lit(false))))
       }
     untouched ++ rewritten
   }
@@ -741,196 +734,149 @@ object LakeWriteUtil {
       case dels => PosDeletes.deletedMap(dels, conf)
     }
 
-  /** Rewrite a set of files (grouped by schema epoch, projected to
-    * current names) through `xform`, returning new file metas. Without
-    * a `knownTuple` on a partitioned table the rows may span tuples, so
-    * the write is split by the partition transforms (one directory per
-    * tuple hash) and every output file still records exactly one tuple
-    * — this is how compaction repairs files that carry none. */
+  /** Clustered output of [[rewriteFiles]] (compaction and the mask
+    * fold): each group splits into `max(1, bytes / target)` slots, and
+    * each slot is written as its own file. `order`, given every
+    * group's files and the row's group-index column, returns the row's
+    * 0-255 rank and the sort key of each file; a group's slots split
+    * its rank range, so a sorted group's files keep disjoint key
+    * ranges. Without an order (binpack) a hash of the row's position
+    * picks its slot. Every output file carries the `sortedBy`
+    * write-order stamp. */
+  case class Layout(target: Long,
+      order: Option[(Seq[Seq[DataFileMeta]], Column) => (Column, Seq[Column])] = None,
+      sortedBy: Seq[String] = Nil)
+
+  /** The engine's one file rewrite (copy-on-write DML, dynamic
+    * overwrite, compaction, mask fold): partition groups of data files
+    * are rewritten in ONE Spark job per (equality-delete subset,
+    * schema epoch). A group is a recorded tuple and its files; an empty
+    * tuple on a partitioned table marks files that record none.
+    *
+    * Each job plans one scan over every group's files — one scan, not a
+    * union of per-group branches, whose planning is single-threaded
+    * driver time — subtracts the merge-on-read masks (an anti-join on
+    * (file, position)) and the equality deletes its files are old
+    * enough for (the outputs take the new commit's sequence number,
+    * past every delete, so deletes are applied, not carried), recovers
+    * each row's group from its source file (a literal map over
+    * `_metadata.file_path`: driver metadata, no join) and drops the
+    * rows `filter` rejects. The write fans out on a tag: a tupled
+    * group's tag is its index and its files record its tuple; a
+    * tuple-less group's rows are tagged by a hash of their own
+    * transform tuple, and only those files pay a partitionTuples job.
+    *
+    * Without a `layout` the write is shuffle-free: each scan task
+    * writes one file per tag it read (copy-on-write, whose file split
+    * is not contractual). With one, rows hash-cluster on (group, slot)
+    * into an explicit partition count, so a group under the target
+    * lands as ONE file: a bare repartition(col) is AQE-coalescible,
+    * and at maintenance scale AQE folded the whole shuffle into one
+    * task that wrote every group's file serially. */
   def rewriteFiles(spark: SparkSession, meta: TableMeta,
-      files: Seq[DataFileMeta], xform: DataFrame => DataFrame,
-      conf: org.apache.hadoop.conf.Configuration,
-      applyDeletes: Map[String, Array[Long]] = Map.empty,
-      applyEqs: Seq[EqDeleteMeta] = Nil,
-      newSeq: Long = 0L,
-      sortedWith: Seq[String] = Nil,
-      knownTuple: Option[Map[String, String]] = None): Seq[DataFileMeta] = {
-    val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
-    val schema = meta.schema
-    val splitByTuple = knownTuple.isEmpty && meta.partitionSpec.nonEmpty
-    // files with different data sequence numbers are subject to
-    // DIFFERENT equality-delete subsets — group so each rewrite job
-    // applies exactly the deletes its inputs are old enough for
-    for {
-      (group, eqs) <- EqDeletes.groupByApplicable(meta, files, applyEqs)
-      (epoch, fs) <- group.groupBy(_.schemaEpoch)
-    } {
-      val epochSchema = meta.schemaAt(epoch)
-      val raw = spark.read.schema(epochSchema).parquet(fs.map(_.path): _*)
-      // subtract merge-on-read position masks (anti-join on the file
-      // ordinal) BEFORE projecting away the metadata columns
-      val masked =
-        if (applyDeletes.isEmpty) raw
-        else {
-          val pairs = fs.flatMap(f =>
-            applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
-              .map(p => (PosDeletes.norm(f.path), p)))
-          if (pairs.isEmpty) raw
-          else {
-            val delDf = spark.createDataFrame(pairs).toDF("__fp", "__pos")
-            raw
-              .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
-              .withColumn("__pos", col("_metadata.row_index"))
-              .join(broadcast(delDf), Seq("__fp", "__pos"), "left_anti")
-          }
-        }
-      val df = masked.select(epochProjection(meta, epoch, epochSchema): _*)
-      // equality masks too — the rewritten copies take the NEW commit's
-      // sequence number, which moves them past every existing delete,
-      // so the deletes must be applied (not carried) here
-      val eqMasked =
-        if (eqs.isEmpty) df else EqDeletes.antiJoin(spark, meta, df, eqs)
-      val out = xform(eqMasked)
-      if (splitByTuple)
-        out.withColumn(TupleTag, xxhash64(meta.partitionSpec.map(f =>
-            Transforms.eval(f, schema, Transforms.zoneOf(meta))): _*))
-          .write.mode("append").partitionBy(TupleTag).parquet(outDir)
-      else out.write.mode("append").parquet(outDir)
-    }
-    val epoch = meta.currentSchemaEpoch
-    val outPaths = listParquet(outDir, conf)
-    // knownTuple: a per-partition-group rewrite (compaction, MoR mask
-    // fold) transforms rows WITHIN one partition tuple, so the caller
-    // already knows every output file's tuple — re-deriving it with a
-    // partitionTuples job (scan + distinct + collect PER GROUP) was
-    // one of the two Spark jobs each compaction group paid at any
-    // scale (guide §2.4: remove shuffles/jobs outright)
-    val tupleOf: String => Map[String, String] = knownTuple match {
-      case Some(t) => _ => t
-      case None =>
-        val tuples = partitionTuples(spark, outPaths, meta)
-        p => {
-          val t = tuples.getOrElse(PosDeletes.norm(p), Set.empty)
-          if (t.size == 1) t.head else Map.empty
-        }
-    }
-    // sortedWith: only sort-strategy compaction passes it (its xform
-    // ends in sortWithinPartitions over exactly these entries, one
-    // output file per df partition) — binpack/zorder/delete-applying
-    // rewrites stamp nothing, and neither does a tuple split, whose
-    // writer re-sorts each task's rows by the tuple hash
-    FileStats.fromFooters(outPaths, conf, schema, epoch, tupleOf)
-      .map(_.copy(seq = newSeq,
-        sortedBy = if (splitByTuple) Nil else sortedWith))
-  }
-
-  /** Directory column a tuple-splitting [[rewriteFiles]] writes under. */
-  private val TupleTag = "__graft_tuple"
-
-  /** Rewrite MANY partition groups in ONE Spark job — the fused twin
-    * of per-group [[rewriteFiles]] loops. A compaction over a
-    * bucket(32) table previously scheduled 32 tiny jobs (one read +
-    * write per partition group, each a fixed ~100-300 ms of
-    * scheduling + commit-path latency) — and a first fused cut as a
-    * 32-branch union plan just moved the cost into single-threaded
-    * Catalyst planning (~2-3 s of job-free driver time, measured).
-    * This shape plans ONE scan over every group's files, recovers
-    * each row's group from its source file path (a literal map over
-    * `_metadata.file_path` — driver metadata, no join), passes the
-    * rows through `xform` (a row filter for copy-on-write), and fans
-    * the single write out on the group tag, so each output file lands
-    * under its group's directory and carries the group's tuple.
-    *
-    * `cluster` hash-clusters rows by group first, so each group lands
-    * as ONE file (compaction's contract). That shuffle moves the
-    * rewrite bytes once, which is why compaction gates fusion by TOTAL
-    * BYTES (`spark.graft.lake.fusedRewriteMaxBytes`): small-file
-    * maintenance — the regime where fixed job overhead dominates —
-    * fuses; bulk compactions keep the shuffle-free per-group path.
-    * Without `cluster` the write is shuffle-free: each scan task writes
-    * one file per group it read (copy-on-write DML, whose file split is
-    * not contractual).
-    *
-    * Groups must each have a known partition tuple. Inputs spanning
-    * schema epochs or equality-delete subsets write one sub-job each
-    * into the same output, like [[rewriteFiles]]; compaction only fuses
-    * the uniform case (one epoch, no equality deletes), with a
-    * one-output-file target per group (binpack nOut == 1, or the
-    * mask-fold identity whose file split is not contractual). Row
-    * content per group is identical to the per-group path: same scan,
-    * same mask anti-join. */
-  def rewriteFilesFused(spark: SparkSession, meta: TableMeta,
       groups: Seq[(Map[String, String], Seq[DataFileMeta])],
       conf: org.apache.hadoop.conf.Configuration,
       applyDeletes: Map[String, Array[Long]] = Map.empty,
       applyEqs: Seq[EqDeleteMeta] = Nil,
       newSeq: Long = 0L,
-      xform: DataFrame => DataFrame = identity,
-      cluster: Boolean = true): Seq[DataFileMeta] = {
+      filter: DataFrame => DataFrame = identity,
+      layout: Option[Layout] = None): Seq[DataFileMeta] = {
     if (groups.isEmpty) return Nil
     val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
-    val tk = "__graft_rewrite_group"
-    val pathTk: Map[String, String] = groups.zipWithIndex.flatMap {
-      case ((_, fs), i) => fs.map(f => PosDeletes.norm(f.path) -> i.toString)
+    val (grp, fp, pos, tk, slot) = ("__graft_group", "__graft_fp",
+      "__graft_pos", "__graft_tag", "__graft_slot")
+    val groupOf: Map[String, Int] = groups.zipWithIndex.flatMap {
+      case ((_, fs), i) => fs.map(f => PosDeletes.norm(f.path) -> i)
     }.toMap
+    // even tag: twice a tupled group's index; odd: the row's tuple hash
+    val tupleLess = groups.indices.filter(i =>
+      groups(i)._1.isEmpty && meta.partitionSpec.nonEmpty)
+    val byIndex = col(grp).cast(LongType) * 2
+    val tag =
+      if (tupleLess.isEmpty) byIndex
+      else when(col(grp).isin(tupleLess: _*),
+        xxhash64(meta.partitionSpec.map(f => Transforms.eval(f, meta.schema,
+          Transforms.zoneOf(meta))): _*).bitwiseOR(lit(1L)))
+        .otherwise(byIndex)
     for {
       (sub, eqs) <- EqDeletes.groupByApplicable(meta, groups.flatMap(_._2),
         applyEqs)
       (epoch, files) <- sub.groupBy(_.schemaEpoch)
     } {
       val epochSchema = meta.schemaAt(epoch)
+      val nOut: Map[Int, Int] = layout.fold(Map.empty[Int, Int]) { l =>
+        files.groupBy(f => groupOf(PosDeletes.norm(f.path))).map {
+          case (g, fs) => g -> math.max(1, (fs.map(_.sizeBytes).sum / l.target).toInt)
+        }
+      }
+      val split = nOut.values.exists(_ > 1)
+      val hashSlot = split && layout.exists(_.order.isEmpty)
       // one shared mask frame: the anti-join key is (file, pos), so
       // pairs from other files in the same scan are inert
-      val allPairs =
-        if (applyDeletes.isEmpty) Nil
-        else files.flatMap(f =>
-          applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
-            .map(p => (PosDeletes.norm(f.path), p)))
+      val pairs = files.flatMap(f =>
+        applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
+          .map(p => (PosDeletes.norm(f.path), p)))
       val raw = spark.read.schema(epochSchema).parquet(files.map(_.path): _*)
-        .withColumn("__fp", PosDeletes.normCol(col("_metadata.file_path")))
+        .withColumn(fp, PosDeletes.normCol(col("_metadata.file_path")))
+      val positioned =
+        if (pairs.isEmpty && !hashSlot) raw
+        else raw.withColumn(pos, col("_metadata.row_index"))
       val masked =
-        if (allPairs.isEmpty) raw
-        else raw.withColumn("__pos", col("_metadata.row_index"))
-          .join(broadcast(spark.createDataFrame(allPairs).toDF("__fp", "__pos")),
-            Seq("__fp", "__pos"), "left_anti")
+        if (pairs.isEmpty) positioned
+        else positioned.join(
+          broadcast(spark.createDataFrame(pairs).toDF(fp, pos)),
+          Seq(fp, pos), "left_anti")
       val tagged = masked.select(
-        epochProjection(meta, epoch, epochSchema) :+
-          element_at(typedLit(pathTk), col("__fp")).as(tk): _*)
-      val rows = xform(
+        epochProjection(meta, epoch, epochSchema) ++
+          Seq(element_at(typedLit(groupOf), col(fp)).as(grp)) ++
+          (if (hashSlot) Seq(col(fp), col(pos)) else Nil): _*)
+      val rows = filter(
         if (eqs.isEmpty) tagged else EqDeletes.antiJoin(spark, meta, tagged, eqs))
-      // explicit partition count (REPARTITION_BY_NUM): a bare
-      // repartition(col) is AQE-coalescible, and at maintenance scale
-      // AQE folded the whole shuffle into ONE partition — a single task
-      // then wrote every group's file serially (measured ~1.7 s for 32
-      // groups vs ~0.3 s parallel). One partition per group keeps the
-      // write as wide as the group count.
-      (if (cluster) rows.repartition(math.max(1, groups.size), col(tk))
-      else rows)
-        .write.mode("append").partitionBy(tk).parquet(outDir)
+        .withColumn(tk, tag)
+      // a split group's slots write apart even when two hash to one
+      // task, so each file holds one slot
+      val dirs = if (split) Seq(tk, slot) else Seq(tk)
+      val laidOut = layout match {
+        case None => rows
+        case Some(l) =>
+          val n = element_at(typedLit(nOut), col(grp))
+          val (slotOf, sortKey) = l.order match {
+            case Some(order) =>
+              val (rank, key) = order(groups.map(_._2), col(grp))
+              (shiftright(rank * n, 8), key)
+            case None => (pmod(xxhash64(col(fp), col(pos)), n), Nil)
+          }
+          val clustered =
+            if (split) rows.withColumn(slot, slotOf)
+              .repartition(nOut.values.sum, col(grp), col(slot))
+            else rows.repartition(nOut.size, col(grp))
+          // the directory columns lead the sort, so the writer, which
+          // needs rows grouped by them, keeps this order
+          if (sortKey.isEmpty) clustered
+          else clustered.sortWithinPartitions(dirs.map(col) ++ sortKey: _*)
+      }
+      laidOut.drop(grp, fp, pos)
+        .write.mode("append").partitionBy(dirs: _*).parquet(outDir)
     }
-    val epochNow = meta.currentSchemaEpoch
-    locally {
-      // ONE recursive listing of the output root (not one per group
-      // directory), and the per-file footer reads fan out on a driver
-      // pool — with 32 groups the serial loop was ~0.5 s of dead
-      // driver time after a ~0.3 s write job
-      val seg = s"/$tk="
-      val byGroup: Map[String, Seq[String]] = listParquet(outDir, conf)
-        .groupBy { p =>
-          val i = p.indexOf(seg) + seg.length
-          p.substring(i, p.indexOf('/', i))
+    // ONE recursive listing of the output root, and one footer harvest
+    // over every file (it fans out itself)
+    val seg = s"/$tk="
+    val written = listParquet(outDir, conf).map { p =>
+      val i = p.indexOf(seg) + seg.length
+      p -> p.substring(i, p.indexOf('/', i)).toLong
+    }.sortBy { case (p, t) => (t & 1L, t, p) }
+    val tagOf = written.toMap
+    val derived = partitionTuples(spark,
+      written.collect { case (p, t) if (t & 1L) == 1L => p }, meta)
+    FileStats.fromFooters(written.map(_._1), conf, meta.schema,
+      meta.currentSchemaEpoch, p => {
+        val t = tagOf(p)
+        if ((t & 1L) == 0L) groups((t / 2).toInt)._1
+        else derived.getOrElse(PosDeletes.norm(p), Set.empty).toSeq match {
+          case Seq(one) => one
+          case _ => Map.empty
         }
-      val tupleOf = groups.zipWithIndex
-        .map { case ((tuple, _), i) => i.toString -> tuple }.toMap
-      // input-group order (numeric on the tag) keeps the committed
-      // file list deterministic, like the per-group path's
-      // concatenation order
-      graft.Par.all(8, byGroup.toSeq.sortBy(_._1.toInt)
-        .map { case (g, paths) => () =>
-          FileStats.fromFooters(paths.sorted, conf, meta.schema, epochNow,
-            _ => tupleOf(g)).map(_.copy(seq = newSeq))
-        }).flatten
-    }
+      }).map(_.copy(seq = newSeq, sortedBy = layout.fold(Seq.empty[String])(_.sortedBy)))
   }
 
   /** Dynamic partition overwrite: drop/rewrite parent files that
@@ -967,9 +913,9 @@ object LakeWriteUtil {
             Transforms.eval(f, schema, Transforms.zoneOf(meta))): _*)
         val stagedKeys = stagedTuples.map(t =>
           meta.partitionSpec.map(f => t(f.name)).mkString(sep)).toSeq
-        rewriteFiles(spark, meta, partials,
-          df => df.filter(!key.isin(stagedKeys: _*)), conf,
-          applyDeletes = applyDeletes, applyEqs = applyEqs, newSeq = newSeq)
+        rewriteFiles(spark, meta, Seq(Map.empty[String, String] -> partials),
+          conf, applyDeletes = applyDeletes, applyEqs = applyEqs,
+          newSeq = newSeq, filter = _.filter(!key.isin(stagedKeys: _*)))
       }
     keptKnown ++ keptUnknown ++ rewritten
   }

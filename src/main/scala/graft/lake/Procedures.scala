@@ -1,6 +1,6 @@
 package graft.lake
 
-import org.apache.spark.sql.{Row, SparkSession}
+import org.apache.spark.sql.{Column, Row, SparkSession}
 import org.apache.spark.sql.catalyst.{CatalystTypeConverters, InternalRow}
 import org.apache.spark.sql.connector.catalog.procedures.{BoundProcedure, ProcedureParameter, UnboundProcedure}
 import org.apache.spark.sql.connector.read.{LocalScan, Scan}
@@ -100,22 +100,6 @@ object Procedures {
       (catalog.loadMetaWritable(ident), ident)
     }
   }
-
-  /** Run one rewrite per partition group CONCURRENTLY from a bounded
-    * driver pool. Each group is an independent Spark job chain (read
-    * its files → transform → write to its own UUID-named directory),
-    * so a sequential loop makes procedure wall-clock the SUM of
-    * per-group job latencies — measured at sf10, the shingle-DF mask
-    * fold-in spent 27 s draining 8 bucket groups one at a time while
-    * the cluster sat mostly idle. Jobs submitted from different
-    * threads interleave in Spark's scheduler; groups share nothing
-    * mutable (read-only meta, per-call output dirs), so ordering is
-    * immaterial — results are concatenated in input-group order to
-    * keep commits deterministic. NOT for loops that append to one
-    * shared directory (convert_equality_deletes): concurrent
-    * FileOutputCommitter jobs on one path contend on `_temporary`. */
-  private def parGroups[A, B](groups: Seq[A])(f: A => Seq[B]): Seq[B] =
-    graft.Par.all(8, groups.map(g => () => f(g))).flatten
 
   private def result(fields: (String, DataType)*): StructType =
     StructType(fields.map { case (n, dt) => StructField(n, dt) })
@@ -524,32 +508,25 @@ object Procedures {
           case RewriteUtil.ZorderSpec(inner) =>
             inner.split(",").map(_.trim).filter(_.nonEmpty).toSeq
         }
-        val sortCols = sortSpec.filter(_ => zorderCols.isEmpty).toSeq
+        val sortNames = sortSpec.filter(_ => zorderCols.isEmpty).toSeq
           .flatMap(_.split(",")).map(_.trim.split("\\s+"))
+        val sortCols = sortNames
           .map(p => if (p.length > 1 && p(1).equalsIgnoreCase("DESC"))
             col(p(0)).desc else col(p(0)).asc)
-        def xform(group: Seq[DataFileMeta]):
-            org.apache.spark.sql.DataFrame => org.apache.spark.sql.DataFrame = {
-          val nOut = math.max(1, (group.map(_.sizeBytes).sum / target).toInt)
-          zorderCols match {
-            case Some(zc) if strategy.equalsIgnoreCase("sort") =>
-              val z = RewriteUtil.zvalue(group, m.schema, zc)
-              df => df.repartitionByRange(nOut, z).sortWithinPartitions(z)
-            case _ if strategy.equalsIgnoreCase("sort") && sortCols.nonEmpty =>
-              df => df.repartitionByRange(nOut, sortCols: _*)
-                .sortWithinPartitions(sortCols: _*)
-            // binpack MERGING small files into ~target-sized ones uses
-            // coalesce: a narrow dependency (no shuffle, no
-            // sort-before-repartition pass — guide §2.4), exactly like
-            // Iceberg's binpack which packs input files into tasks
-            // without moving rows between them. SPLITTING (more
-            // outputs than input files — an undersized target) still
-            // needs the round-robin shuffle, since coalesce can never
-            // raise the partition count.
-            case _ if nOut <= group.size => df => df.coalesce(nOut)
-            case _ => df => df.repartition(nOut)
+        // sort and zorder: a group's files split the range of its key's
+        // leading column (zorder: the key's top byte), and each file
+        // sorts by the whole key; binpack only spreads the bytes
+        val order: Option[(Seq[Seq[DataFileMeta]], Column) => (Column, Seq[Column])] =
+          if (!strategy.equalsIgnoreCase("sort")) None
+          else zorderCols match {
+            case Some(zc) => Some { (groups, g) =>
+              val z = RewriteUtil.zvalue(groups, g, m.schema, zc)
+              (shiftright(z, 8 * (zc.size - 1)), Seq(z))
+            }
+            case None if sortCols.nonEmpty => Some((groups, g) =>
+              (RewriteUtil.rank(groups, g, m.schema, sortNames.head(0)), sortCols))
+            case None => None
           }
-        }
         // Compact WITHIN partitions (like the reference's per-partition
         // bin packing): grouping keeps every rewritten file inside one
         // partition tuple, preserving partition-level pruning/ops.
@@ -580,48 +557,14 @@ object Procedures {
             groupedAll.filterNot { case (_, g) =>
               g.size == 1 && g.map(_.sizeBytes).sum <= target }
           else groupedAll
-        // binpack groups that need no eq-delete sub-grouping, know
-        // their tuple, read one schema epoch, and target ONE output
-        // file fuse into ONE Spark job (LakeWriteUtil.rewriteFilesFused)
-        // instead of one job per group. The fused job hash-clusters
-        // rows by group (one shuffle of the rewrite bytes), so fusion
-        // is gated by total bytes — small-file maintenance fuses, bulk
-        // compaction keeps the shuffle-free per-group path. Sort/
-        // zorder strategies and eq-delete tables always stay per-group.
-        val fusedMaxBytes = spark.conf
-          .get("spark.graft.lake.fusedRewriteMaxBytes", "1073741824").toLong
-        val fusible = !strategy.equalsIgnoreCase("sort") &&
-          zorderCols.isEmpty && parentEqs.isEmpty &&
-          grouped.flatMap(_._2).map(_.schemaEpoch).distinct.size <= 1 &&
-          grouped.flatMap(_._2).map(_.sizeBytes).sum <= fusedMaxBytes
-        val (fused, perGroup) = grouped.partition { case (tuple, group) =>
-          fusible && (tuple.nonEmpty || m.partitionSpec.isEmpty) &&
-            math.max(1, (group.map(_.sizeBytes).sum / target).toInt) == 1
-        }
         // the singleton cut may skip every group — nothing to rewrite,
         // so commit nothing (a no-op replace snapshot would still cost
         // a commit round-trip and a history entry)
         val rewriteInputs = grouped.flatMap(_._2)
         if (rewriteInputs.isEmpty) return Seq(Row(0, 0, 0L))
-        val useFused = fused.size >= 2
-        val rewritten = (if (useFused)
-          LakeWriteUtil.rewriteFilesFused(spark, m,
-            fused.map { case (t, g) => (t, g) },
-            catalog.hadoopConf, newSeq = nextId)
-        else Nil) ++
-        parGroups(if (useFused) perGroup else grouped) {
-          case (tuple, group) =>
-            // within-partition rewrite: outputs inherit the group's
-            // recorded tuple, so pass it through instead of paying a
-            // per-group partitionTuples job (files with NO recorded
-            // tuple — tuple.isEmpty on a partitioned table — still
-            // re-derive, they may genuinely span tuples)
-            val known = if (tuple.nonEmpty || m.partitionSpec.isEmpty)
-              Some(tuple) else None
-            LakeWriteUtil.rewriteFiles(spark, m, group, xform(group),
-              catalog.hadoopConf, applyEqs = parentEqs, newSeq = nextId,
-              sortedWith = sortedStamp, knownTuple = known)
-        }
+        val rewritten = LakeWriteUtil.rewriteFiles(spark, m, grouped,
+          catalog.hadoopConf, applyEqs = parentEqs, newSeq = nextId,
+          layout = Some(LakeWriteUtil.Layout(target, order, sortedStamp)))
         val untouched = files.filterNot(f =>
           rewriteInputs.exists(_.path == f.path))
         val newFiles = untouched ++ rewritten
@@ -746,39 +689,12 @@ object Procedures {
             delMap.contains(PosDeletes.norm(f.path)))
           val nextId = m.lastSnapshotId + 1
           val parentEqs = head.map(_.eqDeleteFiles).getOrElse(Nil)
-          val grouped = dirty.groupBy(_.partitionValues).toSeq
-          // same fusion as rewrite_data_files: mask-applying rewrites
-          // over tuple-known groups run as ONE Spark job when every
-          // fused file shares a schema epoch and the total is under
-          // the fused-bytes gate (the shared mask frame anti-joins on
-          // (file, pos), so cross-group pairs are inert). The fused
-          // job writes ONE file per group — the mask fold's file split
-          // is not contractual, and the binpack that follows it in
-          // every fold-in call site was merging those files anyway.
-          val fusedMaxBytes = spark.conf
-            .get("spark.graft.lake.fusedRewriteMaxBytes", "1073741824").toLong
-          val fusible = parentEqs.isEmpty &&
-            grouped.flatMap(_._2).map(_.schemaEpoch).distinct.size <= 1 &&
-            grouped.flatMap(_._2).map(_.sizeBytes).sum <= fusedMaxBytes
-          val (fused, perGroup) = grouped.partition { case (tuple, _) =>
-            fusible && (tuple.nonEmpty || m.partitionSpec.isEmpty)
-          }
-          val useFused = fused.size >= 2
-          val rewritten = (if (useFused)
-            LakeWriteUtil.rewriteFilesFused(spark, m,
-              fused.map { case (t, g) => (t, g) },
-              catalog.hadoopConf, applyDeletes = delMap, newSeq = nextId)
-          else Nil) ++
-          parGroups(if (useFused) perGroup else grouped) {
-            case (tuple, group) =>
-              // same within-partition contract as rewrite_data_files:
-              // the identity rewrite keeps rows in their tuple
-              val known = if (tuple.nonEmpty || m.partitionSpec.isEmpty)
-                Some(tuple) else None
-              LakeWriteUtil.rewriteFiles(spark, m, group, identity,
-                catalog.hadoopConf, applyDeletes = delMap,
-                applyEqs = parentEqs, newSeq = nextId, knownTuple = known)
-          }
+          // one file per group under the table's target, as compaction
+          // lays out a binpack
+          val rewritten = LakeWriteUtil.rewriteFiles(spark, m,
+            dirty.groupBy(_.partitionValues).toSeq, catalog.hadoopConf,
+            applyDeletes = delMap, applyEqs = parentEqs, newSeq = nextId,
+            layout = Some(LakeWriteUtil.Layout(WriteTuning.targetFileSize(m))))
           val newFiles = clean ++ rewritten
           val snap = SnapshotMeta(nextId,
             head.map(_.snapshotId), System.currentTimeMillis(), "replace",

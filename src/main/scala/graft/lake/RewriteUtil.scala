@@ -48,13 +48,14 @@ object RewriteUtil {
     * 8-bit bucket, and the bucket bits are interleaved into one long
     * so lexicographic order on the result is Morton order on the
     * columns. Numeric/date/timestamp columns scale linearly between
-    * the min/max already recorded in the candidate files' manifest
-    * stats (no extra pass over the data); other types hash to a
-    * bucket, which clusters equal values without imposing an order.
-    * The whole key is a plain codegen'd expression tree — no UDF.
+    * the min/max already recorded in each group's files' manifest
+    * stats (no extra pass over the data; `group` is the row's index
+    * into `groups`); other types hash to a bucket, which clusters
+    * equal values without imposing an order. The whole key is a plain
+    * codegen'd expression tree — no UDF.
     */
-  def zvalue(files: Seq[DataFileMeta], schema: StructType,
-      names: Seq[String]): Column = {
+  def zvalue(groups: Seq[Seq[DataFileMeta]], group: Column,
+      schema: StructType, names: Seq[String]): Column = {
     require(names.nonEmpty && names.size <= 7,
       s"zorder supports 1-7 columns, got ${names.size}")
     val n = names.size
@@ -62,7 +63,7 @@ object RewriteUtil {
       val f = schema.fields.find(_.name.equalsIgnoreCase(nm)).getOrElse(
         throw new IllegalArgumentException(
           s"zorder column not found in table schema: $nm"))
-      zbucket(f, files)
+      zbucket(f, groups, group)
     }
     var acc: Column = lit(0L)
     for (bit <- 0 until 8; (b, j) <- buckets.zipWithIndex)
@@ -71,9 +72,21 @@ object RewriteUtil {
     acc
   }
 
-  /** One column's 0-255 bucket (nulls bucket to 0 = sort first). */
-  private def zbucket(f: StructField, files: Seq[DataFileMeta]): Column = {
-    def bounds: Option[(Double, Double)] = {
+  /** One column's 0-255 bucket, as in [[zvalue]]; a name that is not a
+    * top-level column (a nested path) hashes. */
+  def rank(groups: Seq[Seq[DataFileMeta]], group: Column,
+      schema: StructType, name: String): Column =
+    schema.fields.find(_.name.equalsIgnoreCase(name))
+      .fold(hashBucket(col(name)))(zbucket(_, groups, group))
+
+  private def hashBucket(c: Column): Column =
+    coalesce(pmod(xxhash64(c), lit(256L)), lit(0L))
+
+  /** One column's 0-255 bucket (nulls bucket to 0 = sort first),
+    * scaled by the row's own group's bounds. */
+  private def zbucket(f: StructField, groups: Seq[Seq[DataFileMeta]],
+      group: Column): Column = {
+    def bounds(files: Seq[DataFileMeta]): Option[(Double, Double)] = {
       val los = files.flatMap(_.minValues.get(f.name)).flatMap(s => Try(s.toDouble).toOption)
       val his = files.flatMap(_.maxValues.get(f.name)).flatMap(s => Try(s.toDouble).toOption)
       if (los.isEmpty || his.isEmpty) None
@@ -87,13 +100,22 @@ object RewriteUtil {
       case TimestampType => Some(unix_micros(col(f.name)).cast(DoubleType))
       case _ => None
     }
-    (numeric, bounds) match {
-      case (Some(v), Some((lo, hi))) =>
-        coalesce(least(greatest(
-          floor((v - lit(lo)) * 255.0 / (hi - lo)).cast(LongType),
+    val scaled = groups.map(bounds)
+    (numeric, scaled.flatten) match {
+      case (Some(v), known) if known.nonEmpty =>
+        // total maps (a group without bounds reads (0, 1) and takes
+        // the hash branch), so no lookup can miss
+        val lo = element_at(typedLit(scaled.zipWithIndex.map {
+          case (b, i) => i -> b.fold(0.0)(_._1) }.toMap), group)
+        val hi = element_at(typedLit(scaled.zipWithIndex.map {
+          case (b, i) => i -> b.fold(1.0)(_._2) }.toMap), group)
+        val b = coalesce(least(greatest(
+          floor((v - lo) * 255.0 / (hi - lo)).cast(LongType),
           lit(0L)), lit(255L)), lit(0L))
-      case _ =>
-        coalesce(pmod(xxhash64(col(f.name)), lit(256L)), lit(0L))
+        if (known.size == groups.size) b
+        else when(group.isin(scaled.indices.filter(scaled(_).isDefined): _*), b)
+          .otherwise(hashBucket(col(f.name)))
+      case _ => hashBucket(col(f.name))
     }
   }
 }

@@ -1650,19 +1650,17 @@ object TextOps {
       .createOrReplace()
 
   /** Run independent single-table index steps CONCURRENTLY from a
-    * bounded driver pool (the [[graft.lake]] parGroups shape): each
-    * step is one Spark job chain ending in a commit on its OWN table,
-    * the tables are disjoint, and the commit CAS is per-table — so a
-    * sequential loop makes the stage's wall-clock the SUM of
-    * plan+commit round-trips the driver pays one at a time. Executor
-    * work interleaves in Spark's scheduler either way; what this buys
-    * is the serialized driver-side latency, which at object-store
-    * round-trip cost dominates small nightly appends (measured at
-    * sf0.1: refresh_advance 2.6 → 1.2 s, maintain 5.3 → 2.6 s).
-    * Submission/cancel-on-failure is the shared [[graft.Par]] core
-    * (also behind the procedures' parGroups). NOT for steps that
-    * touch one table twice — racing commits on a shared table would
-    * burn CAS retries for no win. */
+    * bounded driver pool: each step is one Spark job chain ending in a
+    * commit on its OWN table, the tables are disjoint, and the commit
+    * CAS is per-table — so a sequential loop makes the stage's
+    * wall-clock the SUM of plan+commit round-trips the driver pays one
+    * at a time. Executor work interleaves in Spark's scheduler either
+    * way; what this buys is the serialized driver-side latency, which
+    * at object-store round-trip cost dominates small nightly appends
+    * (measured at sf0.1: refresh_advance 2.6 → 1.2 s, maintain 5.3 →
+    * 2.6 s). Submission/cancel-on-failure is the [[graft.Par]] core.
+    * NOT for steps that touch one table twice — racing commits on a
+    * shared table would burn CAS retries for no win. */
   private def parSteps(steps: (() => Unit)*): Unit = {
     graft.Par.all(steps.size, steps)
     ()

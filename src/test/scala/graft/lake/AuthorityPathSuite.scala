@@ -62,6 +62,8 @@ class AuthorityPathSuite extends AnyFunSuite with BeforeAndAfterAll {
     sql(s"SELECT id FROM lake.db.$t ORDER BY id").collect().map(_.getLong(0)).toSeq
   private def dataPaths(t: String): Set[String] =
     sql(s"SELECT file_path FROM lake.db.$t.files").collect().map(_.getString(0)).toSet
+  private def headFiles(t: String): Seq[DataFileMeta] =
+    LakeMeta.of(spark, Seq("lake", "db", t)).currentSnapshot().get.files
   private def deleteFileCount(t: String): Long =
     sql(s"SELECT count(*) FROM lake.db.$t.delete_files").collect()(0).getLong(0)
 
@@ -107,22 +109,37 @@ class AuthorityPathSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("rewrite_position_delete_files folds masks: fused and per-group") {
-    for ((t, fusedMax) <- Seq("foldfused" -> None, "foldgroup" -> Some("0"))) {
-      mkPartitioned(t, "'write.delete.mode'='merge-on-read'")
+    // one fused rewrite serves both kinds of group: a tupled group
+    // writes under its recorded tuple, while a group of files brought
+    // in by add_files records no tuple, so the fold splits it per row
+    // tuple and derives each written file's tuple from the rows
+    mkPartitioned("foldtupled", "'write.delete.mode'='merge-on-read'")
+    val src = s"$wh/fold_src"
+    spark.range(0, 20).selectExpr("id", "CAST(id % 2 AS int) AS p")
+      .repartition(2).write.parquet(src)
+    sql("""CREATE TABLE lake.db.foldadded (id bigint, p int) USING lake
+        |PARTITIONED BY (p)
+        |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    sql("CALL lake.system.add_files(table => 'db.foldadded', " +
+      s"source_table => '`parquet`.`$src`')")
+    assert(headFiles("foldadded").forall(_.partitionValues.isEmpty))
+    for (t <- Seq("foldtupled", "foldadded")) {
       sql(s"DELETE FROM lake.db.$t WHERE id IN (2, 7, 13)")
       val expected = (0L until 20L).filterNot(Set(2L, 7L, 13L))
-      val beforeFold = ids(t)
-      fusedMax.foreach(spark.conf.set("spark.graft.lake.fusedRewriteMaxBytes", _))
-      try {
-        val res = sql(
-          s"CALL lake.system.rewrite_position_delete_files(table => 'db.$t')")
-          .collect()(0)
-        assert(res.getInt(0) >= 1, s"$t: $res")
-      } finally spark.conf.unset("spark.graft.lake.fusedRewriteMaxBytes")
+      assert(ids(t) == expected, s"$t before fold: ${ids(t)}")
+      assertMasksKeyDataFiles(t)
+      val res = sql(
+        s"CALL lake.system.rewrite_position_delete_files(table => 'db.$t')")
+        .collect()(0)
+      assert(res.getInt(0) >= 1, s"$t: $res")
       assert(deleteFileCount(t) == 0, s"$t: every mask folds into the data")
       assert(ids(t) == expected, s"$t after fold: ${ids(t)}")
-      assert(beforeFold == expected, s"$t before fold: $beforeFold")
+      assert(headFiles(t).forall(_.path.startsWith("graftfs://nn:8020/")))
     }
+    assert(headFiles("foldadded").forall(_.partitionValues.nonEmpty),
+      headFiles("foldadded").map(_.partitionValues).toString)
+    assert(sql("SELECT id FROM lake.db.foldadded WHERE p = 1").collect()
+      .map(_.getLong(0)).toSeq.sorted == Seq(1L, 3L, 5L, 9L, 11L, 15L, 17L, 19L))
   }
 
   test("fused rewrite_data_files keeps every group's rows and tuple") {

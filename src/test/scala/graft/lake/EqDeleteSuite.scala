@@ -142,6 +142,36 @@ class EqDeleteSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(state("up6") == Seq((1L, "a"), (2L, "B"), (3L, "c"), (4L, "d")))
   }
 
+  test("binpack over several partition groups applies and retires " +
+      "pending equality deletes") {
+    sql("""CREATE TABLE lake.db.up6p (id bigint NOT NULL, region string, v string)
+        |USING lake PARTITIONED BY (region) TBLPROPERTIES (
+        |  'identifier-fields'='id', 'write.upsert.enabled'='true')""".stripMargin)
+    val model = scala.collection.mutable.Map[Long, (String, String)]()
+    for (batch <- Seq(
+        Seq((1L, "eu", "a"), (2L, "eu", "b"), (3L, "us", "c"), (5L, "ap", "e")),
+        Seq((2L, "eu", "B"), (3L, "us", "C"), (4L, "ap", "d")),
+        Seq((1L, "us", "A"), (4L, "ap", "D"), (6L, "eu", "f")))) {
+      sql("INSERT INTO lake.db.up6p VALUES " + batch.map { case (i, r, v) =>
+        s"($i, '$r', '$v')" }.mkString(", "))
+      batch.foreach { case (i, r, v) => model(i) = (r, v) }
+    }
+    def rows(): Seq[(Long, String, String)] =
+      sql("SELECT id, region, v FROM lake.db.up6p ORDER BY id").collect()
+        .map(r => (r.getLong(0), r.getString(1), r.getString(2))).toSeq
+    val expected = model.toSeq.sortBy(_._1).map { case (i, (r, v)) => (i, r, v) }
+    assert(rows() == expected)
+    assert(count("SELECT count(*) FROM lake.db.up6p.delete_files WHERE content = 2") >= 1)
+    val res = sql("CALL lake.system.rewrite_data_files(table => 'lake.db.up6p')")
+      .collect()(0)
+    assert(res.getInt(0) >= 6, res.toString)
+    val files = LakeMeta.of(spark, Seq("lake", "db", "up6p")).currentSnapshot().get.files
+    assert(files.map(_.partitionValues).distinct.size == 3 &&
+      files.forall(_.partitionValues.nonEmpty), files.map(_.partitionValues).toString)
+    assert(count("SELECT count(*) FROM lake.db.up6p.delete_files WHERE content = 2") == 0)
+    assert(rows() == expected)
+  }
+
   test("copy-on-write DELETE does not resurrect equality-deleted rows") {
     mkUpsertTable("up7")
     appendOneFile("up7", (1L, "a"), (2L, "b"), (3L, "c"))

@@ -317,4 +317,64 @@ class FileStatsSoundnessSuite extends AnyFunSuite with BeforeAndAfterAll {
         "WHERE t = TIMESTAMP'2024-01-01 09:00:00'").count() == 2)
     }
   }
+
+  // ---- recorded file sizes ------------------------------------------
+
+  private def lengthOf(path: String): Long = {
+    val p = new org.apache.hadoop.fs.Path(path)
+    p.getFileSystem(spark.sessionState.newHadoopConf()).getFileStatus(p).getLen
+  }
+
+  private def rowGroupBytes(path: String): Seq[Long] = {
+    val reader = org.apache.parquet.hadoop.ParquetFileReader.open(
+      org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(path), spark.sessionState.newHadoopConf()))
+    try {
+      import scala.jdk.CollectionConverters._
+      reader.getFooter.getBlocks.asScala.map(_.getCompressedSize).toSeq
+    } finally reader.close()
+  }
+
+  test("a data file and a delete file record their length on disk") {
+    sql("""CREATE TABLE lake.db.flen (id bigint, v string) USING lake
+        |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    sql("INSERT INTO lake.db.flen SELECT id, concat('v', id) FROM range(0, 100, 1, 1)")
+    sql("DELETE FROM lake.db.flen WHERE id = 5")
+    val head = metaOf("flen").currentSnapshot().get
+    assert(head.files.nonEmpty && head.deleteFiles.nonEmpty)
+    (head.files ++ head.deleteFiles).foreach { f =>
+      assert(f.sizeBytes == lengthOf(f.path), f.path)
+      assert(f.sizeBytes > rowGroupBytes(f.path).sum, f.path)
+    }
+  }
+
+  test("a file of several row groups reads whole under small splits, " +
+      "with its length or an older row-group-sum size recorded") {
+    val src = java.nio.file.Files.createTempDirectory("rowgroups").toString + "/src"
+    spark.range(0, 20000).selectExpr("id", "sha2(CAST(id AS string), 256) AS v")
+      .coalesce(1).write.option("parquet.block.size", "65536").parquet(src)
+    sql("CREATE TABLE lake.db.rgs (id bigint, v string) USING lake")
+    sql("CALL lake.system.add_files(table => 'db.rgs', " +
+      s"source_table => '`parquet`.`$src`')")
+    val files = metaOf("rgs").currentSnapshot().get.files
+    assert(files.size == 1 && rowGroupBytes(files.head.path).size >= 3)
+    assert(files.head.sizeBytes == lengthOf(files.head.path))
+    def ids(): Seq[Long] = {
+      spark.conf.set("spark.sql.files.maxPartitionBytes", "16384")
+      try sql("SELECT id FROM lake.db.rgs").collect().map(_.getLong(0)).toSeq.sorted
+      finally spark.conf.unset("spark.sql.files.maxPartitionBytes")
+    }
+    assert(ids() == (0L until 20000L))
+    // metadata written while sizes were the row groups' sum
+    val (cat, ident) = LakeDdl.resolve(spark, Seq("lake", "db", "rgs"))
+    val m = cat.loadMeta(ident)
+    val head = m.currentSnapshot().get
+    val older = head.files.map(f => f.copy(sizeBytes = rowGroupBytes(f.path).sum))
+    cat.commitMeta(m.withSnapshot(head.copy(snapshotId = m.lastSnapshotId + 1,
+      parentId = Some(head.snapshotId), files = older, manifestPath = None),
+      Some("main")))
+    assert(metaOf("rgs").currentSnapshot().get.files.map(_.sizeBytes) ==
+      older.map(_.sizeBytes))
+    assert(ids() == (0L until 20000L))
+  }
 }

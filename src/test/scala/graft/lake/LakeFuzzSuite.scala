@@ -637,8 +637,14 @@ class LakeFuzzSuite extends AnyFunSuite with BeforeAndAfterAll {
           sql(s"INSERT OVERWRITE $tbl VALUES ${lit(rows)}")
           model.filterInPlace((_, pv) => pv._1 != p)
           model ++= rows
-        case 9 => sql(s"CALL lake.system.rewrite_data_files(" +
-          s"table => 'db.${tbl.split('.').last}')")
+        case 9 => // compaction, cycling its layouts by op index (not
+          // the RNG, so the op sequence stays the seed's)
+          val t = tbl.split('.').last
+          val layout = Seq("", ", strategy => 'sort', sort_order => 'v'",
+            ", strategy => 'sort', sort_order => 'zorder(id, v)'")(opIdx % 3)
+          sql(s"CALL lake.system.rewrite_data_files(table => 'db.$t'$layout)")
+          if (mode == "mor")
+            sql(s"CALL lake.system.rewrite_position_delete_files(table => 'db.$t')")
         case 10 => // rename the PARTITION SOURCE column — the spec
           // must follow, and every later write/prune keep resolving
           val next = if (pName == "p") "pp" else "p"

@@ -2397,4 +2397,57 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(LakeScanBuilder.lastPlannedFileCount.get() == 1)
     assert(count("SELECT count(*) FROM lake.db.untupled") == 400)
   }
+
+  test("sort compaction over bucket groups runs a fixed job count, sorts " +
+      "every file and keeps each under-target bucket to one file") {
+    // bucket 7's files outgrow the target (incompressible payload under
+    // one id); every other bucket stays far under it
+    def build(t: String, buckets: Int): Unit = {
+      sql(s"CREATE TABLE lake.db.$t (id bigint, x bigint, v string) " +
+        s"USING lake PARTITIONED BY (bucket($buckets, id))")
+      for (k <- 0 until 2)
+        sql(s"INSERT INTO lake.db.$t SELECT id, (id * 7919) % 1000, " +
+          s"concat('s', id) FROM range(${k * 200}, ${k * 200 + 200})")
+      sql(s"INSERT INTO lake.db.$t SELECT 7, (id * 7919) % 100000, " +
+        "sha2(CAST(id AS string), 256) FROM range(6000)")
+    }
+    def compact(t: String): Int = jobsDuring {
+      sql(s"""CALL lake.system.rewrite_data_files(table => 'db.$t',
+           |strategy => 'sort', sort_order => 'x',
+           |options => map('rewrite-all', 'true', 'min-input-files', '1',
+           |  'target-file-size-bytes', '65536'))""".stripMargin)
+    }
+    build("sc2", 2)
+    build("sc8", 8)
+    val (jobs2, jobs8) = (compact("sc2"), compact("sc8"))
+    assert(jobs8 == jobs2 && jobs8 < 8,
+      s"8 groups ran $jobs8 Spark jobs, 2 groups $jobs2")
+    assert(count("SELECT count(*) FROM lake.db.sc8") == 6400)
+
+    val files = headFiles("sc8")
+    assert(files.forall(f => f.partitionValues.nonEmpty && f.sortedBy == Seq("x")),
+      files.map(f => (f.partitionValues, f.sortedBy)).toString)
+    def column(f: DataFileMeta, c: String): Seq[Long] =
+      spark.read.parquet(f.path).select(c).collect().map(_.getLong(0)).toSeq
+    files.foreach { f =>
+      val xs = column(f, "x")
+      assert(xs == xs.sorted, s"${f.path} is not sorted by x")
+    }
+    // one tuple per file: no id appears under two tuples
+    val idsByTuple = files.groupBy(_.partitionValues).map { case (t, fs) =>
+      t -> fs.flatMap(column(_, "id")).toSet }
+    for ((t1, a) <- idsByTuple; (t2, b) <- idsByTuple if t1 != t2)
+      assert((a & b).isEmpty, s"$t1 and $t2 share ids ${a & b}")
+    val (heavy, light) = files.groupBy(_.partitionValues).values
+      .partition(_.exists(f => column(f, "id").contains(7L)))
+    assert(light.nonEmpty && light.forall(_.size == 1),
+      light.map(_.size).toString)
+    // the oversized bucket splits into files over disjoint x ranges
+    val ranges = heavy.flatten.toSeq.map(f => column(f, "x"))
+      .map(xs => (xs.head, xs.last)).sorted
+    assert(ranges.size > 1, ranges.toString)
+    ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
+      assert(hi <= lo, s"overlapping x ranges: $ranges") }
+  }
 }
+
