@@ -270,6 +270,19 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
       else rawNewIdent
     if (!tableExists0(oldIdent)) throw new NoSuchTableException(oldIdent)
     if (tableExists0(newIdent)) throw new TableAlreadyExistsException(newIdent)
+    // Delete files and the masks' recorded file paths keep naming the
+    // old location, and the path rewrite below does not reach them: a
+    // moved table would read every deleted row again. Refuse until
+    // paths are stored relative to the table.
+    val deletes = MetadataLog.load(tableLocation(oldIdent), hadoopConf).snapshots
+      .flatMap(s => s.deleteFiles.map(_.path) ++ s.eqDeleteFiles.map(_.path))
+      .distinct.size
+    if (deletes > 0)
+      throw new UnsupportedOperationException(
+        s"cannot rename ${oldIdent.toString}: its retained snapshots carry " +
+          s"$deletes position/equality delete files, whose paths a rename " +
+          "does not move; run rewrite_position_delete_files or " +
+          "rewrite_data_files and expire_snapshots first")
     val fs = MetadataLog.fs(warehouse, hadoopConf)
     val src = new Path(tableLocation(oldIdent))
     val dst = new Path(tableLocation(newIdent))

@@ -21,9 +21,12 @@ import scala.jdk.CollectionConverters._
   * (`hive.fetch.task.conversion`) for this engine.
   *
   * A point read on a partition-pruned table plans one file (or none),
-  * so its job is at most one task. The job itself (closure cleaning, a whole-stage codegen
-  * compile for every new literal, a Hadoop-conf broadcast, task
-  * scheduling) costs more than reading the file. For the plan shape
+  * so its job is at most one task. The job itself (closure cleaning, a
+  * whole-stage codegen compile for every new literal, the task-binary
+  * broadcast, task scheduling) costs more than reading the file. The
+  * reader factory's Hadoop conf is no job cost: both paths take its
+  * broadcast from [[ConfBroadcasts]], once per read configuration.
+  * For the plan shape
   * `[CollectLimitExec] → [ProjectExec] → [FilterExec] →
   * [ColumnarToRowExec] → BatchScanExec(LakeBatchScan)` with
   * deterministic, subquery-free expressions and no runtime filter,

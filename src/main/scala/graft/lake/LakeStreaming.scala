@@ -3,7 +3,6 @@ package graft.lake
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.connector.read.{InputPartition, PartitionReaderFactory}
 import org.apache.spark.sql.connector.read.streaming.{CompositeReadLimit, MicroBatchStream, Offset, ReadLimit, ReadMaxFiles, ReadMaxRows, SupportsAdmissionControl, SupportsTriggerAvailableNow}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetScan
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 
@@ -208,14 +207,13 @@ class LakeMicroBatchStream(table: LakeTable, readSchema: StructType,
         : org.apache.spark.sql.connector.read.Scan = {
       val dataSchema = LakeScans.epochNamed(current, epochSchema)
       val read = LakeScans.epochNamed(readSchema, current, epochSchema)
-      // ONE FRESH conf per epoch scan: a parquet reader builder
-      // writes its requested schema into the conf it is given, so a
-      // shared conf makes every epoch read with the LAST epoch's
-      // schema (the EpochReaders trap, re-learned here)
-      val conf = spark.sessionState.newHadoopConf()
-      val index = LakeScans.fileIndex(spark, fs, dataSchema, conf)
-      ParquetScan(spark, conf, index, dataSchema, read, StructType(Nil),
-        Array.empty, options, None, Nil, Nil, Array.empty)
+      // ONE FRESH conf per epoch scan (parquetScan builds its own): a
+      // parquet reader builder writes its requested schema into the
+      // conf it is given, so a shared conf makes every epoch read with
+      // the LAST epoch's schema (the EpochReaders trap, re-learned
+      // here). The schema is part of the broadcast cache's key too.
+      LakeScans.parquetScan(spark, table, fs, dataSchema, read, Array.empty,
+        options)
     }
     val byEpoch = files.groupBy(_.schemaEpoch).toSeq.sortBy(_._1)
     val batch = byEpoch match {

@@ -908,12 +908,10 @@ class LakeBatchScan(table: LakeTable, initial: Seq[DataFileMeta],
             // Every group builds over the UNION leaf layout and reads
             // through ONE shared reader factory (built once, from the
             // union file set): a reader factory is file-agnostic — the
-            // partitions carry the files — while each per-group
-            // factory paid a full Hadoop-conf broadcast
-            // (ParquetScan.createReaderFactory serializes the conf),
-            // measured as ~10-20 ms × nGroups of job-free driver time
-            // per SPJ probe plan (the dominant cost of keyed planning
-            // at any group count).
+            // partitions carry the files — while per-group factories
+            // would build every leaf's factory once per group of every
+            // probe plan, and a mask-routed leaf's (PosDeleteScan)
+            // broadcasts its epoch readers' confs each time.
             val unionLayout = LakeScans.leafKeysFor(files, deleted, eqDeleted)
             val groups = grouped.map { case (k, fs) =>
               val row: org.apache.spark.sql.catalyst.InternalRow =
@@ -1330,17 +1328,58 @@ object LakeScans {
       Some(cp => new LakeMicroBatchStream(table, required, options, cp)))
   }
 
-  private def parquetScan(spark: SparkSession, table: LakeTable,
+  /** The lake's one parquet scan builder: a ParquetScan over `files`
+    * with a fresh conf of its own (a reader factory writes its
+    * requested schema into that conf, so scans must never share one),
+    * which can also serve as a streaming source, and whose reader
+    * factory takes its conf broadcast from [[ConfBroadcasts]].
+    *
+    * `createReaderFactory` is Spark 4.1.2's, set for set in the same
+    * order (no variant extractions are pushed, so the read schema is
+    * `readDataSchema`); only the broadcast is drawn from the cache.
+    * `ConfBroadcastSuite` checks the conf against Spark's own. */
+  private[lake] def parquetScan(spark: SparkSession, table: LakeTable,
       files: Seq[DataFileMeta], dataSchema: StructType, readSchema: StructType,
       pushed: Array[Filter], options: CaseInsensitiveStringMap): ParquetScan = {
-    val conf = spark.sessionState.newHadoopConf()
-    // a ParquetScan that can also serve as a streaming source
-    new ParquetScan(spark, conf, fileIndex(spark, files, dataSchema, conf),
+    val scanConf = spark.sessionState.newHadoopConf()
+    new ParquetScan(spark, scanConf, fileIndex(spark, files, dataSchema, scanConf),
       dataSchema, readSchema, StructType(Nil), pushed, options,
       None, Nil, Nil, Array.empty) {
       override def toMicroBatchStream(checkpointLocation: String)
           : org.apache.spark.sql.connector.read.streaming.MicroBatchStream =
-        new LakeMicroBatchStream(table, readSchema, options, checkpointLocation)
+        new LakeMicroBatchStream(table, readDataSchema, this.options,
+          checkpointLocation)
+
+      override def createReaderFactory(): PartitionReaderFactory = {
+        import org.apache.spark.sql.execution.datasources.parquet.{ParquetOptions,
+          ParquetReadSupport, ParquetWriteSupport}
+        import org.apache.spark.sql.internal.SQLConf
+        val sqlConf = this.conf
+        val schemaJson = readDataSchema.json
+        hadoopConf.set(org.apache.parquet.hadoop.ParquetInputFormat.READ_SUPPORT_CLASS,
+          classOf[ParquetReadSupport].getName)
+        hadoopConf.set(ParquetReadSupport.SPARK_ROW_REQUESTED_SCHEMA, schemaJson)
+        hadoopConf.set(ParquetWriteSupport.SPARK_ROW_SCHEMA, schemaJson)
+        hadoopConf.set(SQLConf.SESSION_LOCAL_TIMEZONE.key, sqlConf.sessionLocalTimeZone)
+        hadoopConf.setBoolean(SQLConf.NESTED_SCHEMA_PRUNING_ENABLED.key,
+          sqlConf.nestedSchemaPruningEnabled)
+        hadoopConf.setBoolean(SQLConf.CASE_SENSITIVE.key, sqlConf.caseSensitiveAnalysis)
+        hadoopConf.setBoolean(SQLConf.PARQUET_BINARY_AS_STRING.key,
+          sqlConf.isParquetBinaryAsString)
+        hadoopConf.setBoolean(SQLConf.PARQUET_INT96_AS_TIMESTAMP.key,
+          sqlConf.isParquetINT96AsTimestamp)
+        hadoopConf.setBoolean(SQLConf.PARQUET_INFER_TIMESTAMP_NTZ_ENABLED.key,
+          sqlConf.parquetInferTimestampNTZEnabled)
+        hadoopConf.setBoolean(SQLConf.LEGACY_PARQUET_NANOS_AS_LONG.key,
+          sqlConf.legacyParquetNanosAsLong)
+        hadoopConf.setBoolean(SQLConf.PARQUET_READER_RESPECT_UNKNOWN_TYPE_ANNOTATION.key,
+          sqlConf.parquetReaderRespectUnknownTypeAnnotation)
+        val broadcastConf = ConfBroadcasts(sparkSession.sparkContext, hadoopConf)
+        org.apache.spark.sql.execution.datasources.v2.parquet
+          .ParquetPartitionReaderFactory(sqlConf, broadcastConf, this.dataSchema,
+            readDataSchema, readPartitionSchema, pushedFilters, pushedAggregate,
+            new ParquetOptions(this.options.asCaseSensitiveMap.asScala.toMap, sqlConf))
+      }
     }
   }
 

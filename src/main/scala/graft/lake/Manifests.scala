@@ -345,8 +345,7 @@ object Manifests {
     if (cached != null) return cached
     val files =
       if (!isSpill(path))
-        Serialization.read[Vector[DataFileMeta]](new String(
-          MetadataLog.readBytes(new Path(path), conf), StandardCharsets.UTF_8))
+        MetadataLog.readJson[Vector[DataFileMeta]](new Path(path), conf)
       else {
         val df = SparkSession.active.read.parquet(path)
         if (df.columns.contains("ord"))

@@ -113,9 +113,8 @@ object MetadataLog {
     val key = (location, v, st.getModificationTime, st.getLen)
     val hit = metaCache.get(key)
     if (hit != null) return hit
-    val bytes = readBytes(vf, conf)
+    val parsed = readJson[TableMeta](vf, conf)
     parseCount.incrementAndGet()
-    val parsed = Serialization.read[TableMeta](new String(bytes, StandardCharsets.UTF_8))
     metaCache.put(key, parsed)
     parsed
   }
@@ -127,19 +126,32 @@ object MetadataLog {
 
   /** The decoded content of a metadata file: gunzipped when it starts
     * with the gzip magic `1f 8b`, which no JSON text does, else as
-    * stored. */
+    * stored. A file that does not gunzip (a torn write) fails with an
+    * error naming it. */
   private[lake] def readBytes(p: Path, conf: Configuration): Array[Byte] = {
     val in = fs(p.toString, conf).open(p)
     val raw =
       try org.apache.hadoop.io.IOUtils.readFullyToByteArray(in)
       finally in.close()
     if (raw.length < 2 || raw(0) != 0x1f.toByte || raw(1) != 0x8b.toByte) raw
-    else {
-      val gz = new java.util.zip.GZIPInputStream(
-        new java.io.ByteArrayInputStream(raw))
-      try gz.readAllBytes() finally gz.close()
-    }
+    else
+      try {
+        val gz = new java.util.zip.GZIPInputStream(
+          new java.io.ByteArrayInputStream(raw))
+        try gz.readAllBytes() finally gz.close()
+      } catch { case e: java.io.IOException => throw unreadable(p, e) }
   }
+
+  /** The JSON metadata file `p` ([[readBytes]]) parsed as a `T`; a file
+    * that does not parse fails with an error naming it. */
+  private[lake] def readJson[T: Manifest](p: Path, conf: Configuration): T = {
+    val text = new String(readBytes(p, conf), StandardCharsets.UTF_8)
+    try Serialization.read[T](text)
+    catch { case scala.util.control.NonFatal(e) => throw unreadable(p, e) }
+  }
+
+  private def unreadable(p: Path, cause: Throwable): java.io.IOException =
+    new java.io.IOException(s"unreadable metadata file $p: $cause", cause)
 
   /** Write `bytes` gzip-compressed to a new file `p` and return its
     * size on disk; throws

@@ -61,6 +61,11 @@ class ManifestSuite extends AnyFunSuite with BeforeAndAfterAll {
       new org.apache.hadoop.fs.Path(newest.toURI), conf), StandardCharsets.UTF_8)
   }
 
+  /** The messages of `e` and its causes. */
+  private def causes(e: Throwable): String =
+    Iterator.iterate(e)(_.getCause).takeWhile(_ != null)
+      .map(_.getMessage).mkString(" | ")
+
   private def firstSnapshot(t: String): Long =
     count(s"SELECT min(snapshot_id) FROM lake.db.$t.snapshots")
 
@@ -329,5 +334,50 @@ class ManifestSuite extends AnyFunSuite with BeforeAndAfterAll {
     val metrics = scan.reportDriverMetrics().map(x => x.name -> x.value).toMap
     assert(metrics("plannedDataFiles") == 1 &&
       metrics.get("skippedDataFiles").contains(2L), metrics.toString)
+  }
+
+  test("RENAME refuses a table whose snapshots carry delete files, and " +
+      "the table stays readable under its old name") {
+    sql("CREATE TABLE lake.db.renmor (id bigint) USING lake " +
+      "TBLPROPERTIES ('write.delete.mode'='merge-on-read')")
+    sql("INSERT INTO lake.db.renmor SELECT id FROM range(0, 20, 1, 2)")
+    sql("DELETE FROM lake.db.renmor WHERE id IN (3, 15)")
+    assert(count("SELECT count(*) FROM lake.db.renmor") == 18)
+    coldStart()
+    val e = intercept[Exception](
+      sql("ALTER TABLE lake.db.renmor RENAME TO lake.db.renmor_moved"))
+    val msg = causes(e)
+    val named = "(\\d+) position/equality delete files".r.findFirstMatchIn(msg)
+    assert(msg.contains("db.renmor") && named.exists(_.group(1).toInt > 0), msg)
+    assert(!spark.catalog.tableExists("lake.db.renmor_moved"))
+    coldStart()
+    val ids = sql("SELECT id FROM lake.db.renmor").collect().map(_.getLong(0)).toSet
+    assert(ids == ((0L until 20L).toSet -- Set(3L, 15L)))
+  }
+
+  test("an unreadable version file or JSON manifest fails with its path") {
+    sql("CREATE TABLE lake.db.torn (id bigint) USING lake")
+    sql("INSERT INTO lake.db.torn VALUES (1)")
+    sql("INSERT INTO lake.db.torn VALUES (2)")
+    def truncate(f: File): Unit = {
+      val bytes = Files.readAllBytes(f.toPath)
+      Files.write(f.toPath, java.util.Arrays.copyOf(bytes, bytes.length / 2))
+    }
+    val jsonManifests = manifests("torn").filter(_.endsWith(".json"))
+    assert(jsonManifests.nonEmpty)
+    jsonManifests.foreach(n => truncate(new File(loc("torn"), s"metadata/manifests/$n")))
+    coldStart()
+    val m = intercept[Exception](sql("SELECT * FROM lake.db.torn").collect())
+    assert(causes(m).contains("unreadable metadata file") &&
+      jsonManifests.exists(causes(m).contains(_)), causes(m))
+    // a killed committer: the newest version torn, no hint written
+    val newest = new File(loc("torn"), "metadata").listFiles()
+      .filter(_.getName.matches("v\\d+\\.json")).maxBy(_.getName)
+    truncate(newest)
+    Files.delete(new File(loc("torn"), "metadata/version-hint.text").toPath)
+    coldStart()
+    val v = intercept[Exception](sql("SELECT * FROM lake.db.torn").collect())
+    assert(causes(v).contains(s"unreadable metadata file") &&
+      causes(v).contains(newest.getName), causes(v))
   }
 }
