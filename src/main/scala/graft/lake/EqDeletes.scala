@@ -1,7 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.conf.Configuration
-import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.catalyst.expressions.UnsafeRow
 import org.apache.spark.sql.functions._
@@ -69,9 +69,8 @@ object EqDeletes {
       .select(keys.map(f => col(f.name)): _*)
       // rows with a null identifier component are never upsert-replaced
       // (SQL equality semantics — Iceberg requires identifier fields
-      // non-null for the same reason); storing a null tuple would make
-      // the scan's byte-wise filter and the rewrite paths' SQL
-      // anti-joins disagree on them
+      // non-null for the same reason); the scan's byte-wise key match
+      // would treat a stored null tuple as equal to a null key
       .where(keys.map(f => col(f.name).isNotNull).reduce(_ && _))
       .distinct()
       // one file unless the batch's key set is itself huge
@@ -143,78 +142,6 @@ object EqDeletes {
       val rel = eqs.filter(mayApply(meta, f, _))
       if (rel.isEmpty) None else Some(PosDeletes.norm(f.path) -> rel)
     }.toMap
-
-  /** The delete files' key tuples as ONE DataFrame in CURRENT column
-    * names and types — the anti-join input for rewrite jobs
-    * (copy-on-write overwrites, compaction). Deletes whose key shapes
-    * differ can't union; callers group by key shape first. */
-  def keysDf(spark: SparkSession, meta: TableMeta,
-      eqs: Seq[EqDeleteMeta]): Option[DataFrame] = {
-    val dfs = eqs.groupBy(e => (e.schemaEpoch, e.keyColumns)).toSeq.map {
-      case ((epoch, keyCols), group) =>
-        val fields = currentKeyFields(meta, group.head).getOrElse(
-          // SchemaEvolution forbids dropping identifier fields, so an
-          // unmappable key means corrupted metadata — failing is the
-          // only answer that can't resurrect deleted rows
-          throw new IllegalStateException(
-            s"equality-delete file ${group.head.path} references key " +
-              s"columns ${keyCols.mkString(", ")} that no longer map " +
-              "to the current schema"))
-        val epochSchema = meta.schemaAt(epoch)
-        val readSchema = StructType(keyCols.map(kc =>
-          epochSchema.fields.find(_.name.equalsIgnoreCase(kc)).get
-            .copy(nullable = true)))
-        spark.read.schema(readSchema).parquet(group.map(_.path): _*)
-          .select(keyCols.zip(fields).map { case (kc, cur) =>
-            col(kc).cast(cur.dataType).as(cur.name) }: _*)
-    }
-    dfs.reduceOption(_.unionByName(_)).map(_.distinct())
-  }
-
-  /** Anti-join `df` (current-schema columns) against the applicable
-    * delete keys — the rewrite-path equivalent of the scan's hash
-    * filter. Key shapes are grouped; each contributes one anti-join. */
-  def antiJoin(spark: SparkSession, meta: TableMeta, df: DataFrame,
-      eqs: Seq[EqDeleteMeta]): DataFrame =
-    eqs.groupBy(e => (e.schemaEpoch, e.keyColumns)).values
-      .foldLeft(df) { (acc, group) =>
-        keysDf(spark, meta, group.toSeq) match {
-          case Some(keys) =>
-            val names = keys.columns.toSeq
-            acc.join(broadcast(keys), names, "left_anti")
-          case None => acc
-        }
-      }
-
-  /** Rows of `df` matching ANY applicable delete key — one semi-join
-    * per key shape, unioned and deduplicated on the row's physical
-    * identity (`idCols`, e.g. (file_path, pos)) so a row matching two
-    * shapes emits once. The dual of [[antiJoin]] for paths that
-    * MATERIALIZE the deleted rows (changelog events, eq→pos
-    * conversion); mixing shapes in one join would either crash the
-    * union or silently mean AND instead of OR. */
-  def semiJoinAny(spark: SparkSession, meta: TableMeta, df: DataFrame,
-      eqs: Seq[EqDeleteMeta], idCols: Seq[String]): DataFrame = {
-    val parts = eqs.groupBy(e => (e.schemaEpoch, e.keyColumns)).values.toSeq
-      .flatMap { group =>
-        keysDf(spark, meta, group.toSeq).map { keys =>
-          df.join(broadcast(keys), keys.columns.toSeq, "left_semi")
-        }
-      }
-    parts.reduceOption(_.unionByName(_))
-      .map(_.dropDuplicates(idCols))
-      .getOrElse(df.limit(0))
-  }
-
-  /** Group `files` by their applicable-delete signature so one rewrite
-    * job per distinct signature applies exactly the right filters. */
-  def groupByApplicable(meta: TableMeta, files: Seq[DataFileMeta],
-      eqs: Seq[EqDeleteMeta]): Seq[(Seq[DataFileMeta], Seq[EqDeleteMeta])] =
-    if (eqs.isEmpty) Seq((files, Nil))
-    else files.groupBy(f => eqs.filter(mayApply(meta, f, _)).map(_.path))
-      .toSeq.map { case (paths, fs) =>
-        (fs, eqs.filter(e => paths.contains(e.path)))
-      }
 
   /** Retire delete files that can no longer apply to ANY live data
     * file (every file's seq caught up) — run by every commit, so

@@ -77,6 +77,10 @@ class LakeTable(
 
   override def schema(): StructType = meta.schemaAt(readEpoch)
 
+  /** This table over `m`, a head a commit is being derived from: it
+    * reads at `m`'s current schema. */
+  def withMeta(m: TableMeta): LakeTable = new LakeTable(catalog, ident, m, None, ref)
+
   override def partitioning(): Array[Transform] =
     meta.partitionSpec.map(Transforms.toTransform).toArray
 
@@ -1582,8 +1586,8 @@ object LakeScans {
   }
 
   /** Epoch-row → current-type projection EXPRESSION for the
-    * row-streaming readers (PosDeleteScan, the changes relation):
-    * the catalyst twin of [[LakeWriteUtil.epochProjection]]. A bare
+    * row-streaming readers (PosDeleteScan, and through it every file
+    * rewrite; the changes relation). A bare
     * `Cast` between struct types is positional — wrong across nested
     * add/drop (fields shift or counts differ) — so struct internals
     * map by NESTED field id (name fallback for id-less legacy
@@ -1998,23 +2002,35 @@ class CompositeReaderFactory(factories: Map[String, PartitionReaderFactory],
   *
   * One input partition per data file (never split — positions are
   * file ordinals, so a file must be counted by a single task), read
-  * through the non-vectorized v1 parquet reader so rows arrive in
-  * exact file order; rows whose ordinal is in the (sorted) mask are
-  * skipped, the rest are projected to the required schema with
-  * epoch renames/casts applied. Only files that actually carry
-  * deletes pay this path — clean files keep whole-stage vectorized
-  * reads (see LakeScans.build), and rewrite_position_delete_files
-  * restores the fast path by folding masks back into data files.
+  * in exact file order; rows whose ordinal is in the (sorted) mask
+  * or whose key an applicable equality delete holds are skipped, the
+  * rest are projected to the required schema with epoch renames/casts
+  * applied. Reads take it for files that carry deletes and for
+  * `_file`/`_pos` projections — clean files keep whole-stage
+  * vectorized reads (see LakeScans.build) — and every file rewrite
+  * reads through it ([[MaskedRead]]).
+  *
+  * `rowIds` names the required fields that carry a row's file key and
+  * ordinal; a data column of the same name wins. `eqDeletedOnly`
+  * keeps only the unmasked rows an equality delete matches.
   */
 class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
     required: StructType, deleted: Map[String, Seq[String]],
-    eqDeleted: Map[String, Seq[EqDeleteMeta]] = Map.empty)
+    eqDeleted: Map[String, Seq[EqDeleteMeta]] = Map.empty,
+    rowIds: (String, String) = (LakeMetaColumns.File, LakeMetaColumns.Pos),
+    eqDeletedOnly: Boolean = false)
   extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
   override def toBatch: Batch = this
-  override def description(): String =
-    s"PosDeleteScan(${table.name()}, ${files.size} masked files)"
+  override def description(): String = {
+    // masked: the files some position or equality delete may apply to
+    val masked = files.count { f =>
+      val np = PosDeletes.norm(f.path)
+      deleted.contains(np) || eqDeleted.contains(np)
+    }
+    s"PosDeleteScan(${table.name()}, ${files.size} files, $masked masked files)"
+  }
 
   // pre-mask row counts: a slight over-estimate, safe for planning
   override def estimateStatistics(): Statistics = LakeStats(files)
@@ -2077,9 +2093,9 @@ class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
       // metadata columns bind past the data row's width
       val n = epochRead.length
       val exprs: Seq[Expression] = required.fields.toSeq.map { f =>
-        if (f.name == LakeMetaColumns.File && !dataNames(f.name))
+        if (f.name == rowIds._1 && !dataNames(f.name))
           BoundReference(n, StringType, nullable = false)
-        else if (f.name == LakeMetaColumns.Pos && !dataNames(f.name))
+        else if (f.name == rowIds._2 && !dataNames(f.name))
           BoundReference(n + 1, LongType, nullable = false)
         else {
           val en = rename.getOrElse(f.name, f.name)
@@ -2106,9 +2122,11 @@ class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
     new PosDeleteReaderFactory(
       perEpoch.map { case (e, (f, _, _)) => e -> f },
       perEpoch.map { case (e, (_, x, _)) => e -> x },
-      new org.apache.spark.util.SerializableConfiguration(ctx.hconf),
+      // a conf inline in the factory is deserialized by every task
+      // (one task per file); the shared broadcast is fetched once
+      ConfBroadcasts(spark.sparkContext, ctx.hconf),
       perEpoch.map { case (e, (_, _, k)) => e -> k },
-      eqSpecs)
+      eqSpecs, eqDeletedOnly)
   }
 }
 
@@ -2244,12 +2262,13 @@ class PosDeleteReaderFactory(
     readFuncs: Map[Int, org.apache.spark.sql.execution.datasources.PartitionedFile =>
       Iterator[org.apache.spark.sql.catalyst.InternalRow]],
     projections: Map[Int, Seq[org.apache.spark.sql.catalyst.expressions.Expression]],
-    conf: org.apache.spark.util.SerializableConfiguration,
+    conf: org.apache.spark.broadcast.Broadcast[org.apache.spark.util.SerializableConfiguration],
     // equality-delete machinery: per (data epoch) per group, the key
     // extractor over the raw data row; per group, the delete reader
     keyExprs: Map[Int, Seq[Seq[org.apache.spark.sql.catalyst.expressions.Expression]]] =
       Map.empty,
-    eqSpecs: Map[Int, EqGroupSpec] = Map.empty)
+    eqSpecs: Map[Int, EqGroupSpec] = Map.empty,
+    eqDeletedOnly: Boolean = false)
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition)
@@ -2269,7 +2288,7 @@ class PosDeleteReaderFactory(
     // delete files are relevant
     val mask: Array[Long] =
       if (part.deleteFiles.isEmpty) Array.empty
-      else PosDeletes.deletedFor(part.path, part.deleteFiles, conf.value)
+      else PosDeletes.deletedFor(part.path, part.deleteFiles, conf.value.value)
     // equality-delete key sets, loaded HERE (executor) through the
     // per-JVM cache; one (extractor, sets) pair per key shape
     val eqChecks: EqScanSupport.EqChecks =
@@ -2287,7 +2306,8 @@ class PosDeleteReaderFactory(
           val r = rows.next(); pos += 1
           while (di < mask.length && mask(di) < pos) di += 1
           if (di < mask.length && mask(di) == pos) di += 1
-          else if (eqChecks.isEmpty || !EqScanSupport.matchesAny(eqChecks, r)) {
+          else if (eqDeletedOnly == (eqChecks.nonEmpty &&
+              EqScanSupport.matchesAny(eqChecks, r))) {
             metaRow.setLong(1, pos)
             cur = proj(joined(r, metaRow))
             return true

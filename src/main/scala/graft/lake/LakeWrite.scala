@@ -408,6 +408,7 @@ object LakeWriteUtil {
 
     val parent = metaWithRef.currentSnapshot(targetRef)
     val parentFiles = parent.map(_.files).getOrElse(Nil)
+    val parentDels = parent.map(_.deleteFiles).getOrElse(Nil)
     val parentEqs = parent.map(_.eqDeleteFiles).getOrElse(Nil)
 
     // Data sequence number: every file written by THIS commit carries
@@ -465,21 +466,15 @@ object LakeWriteUtil {
         }
         (kept ++ stamped, operationOverride.getOrElse("replace"))
       case "overwrite" =>
-        // merge-on-read masks must be subtracted while rewriting
-        // partially-matching files: the rewritten copies get fresh
-        // paths no mask matches, so a raw copy would resurrect rows
-        val masks = parentDeleteMap(parent, conf)
-        val kept = copyOnWrite(spark, table, metaWithRef, parentFiles,
-          overwriteFilters, conf, applyDeletes = masks,
-          applyEqs = parentEqs, newSeq = nextId)
+        val kept = copyOnWrite(spark, table.withMeta(metaWithRef), parentFiles,
+          overwriteFilters, parentDels, parentEqs, newSeq = nextId)
         (kept ++ stamped, "overwrite")
       case "dynamic" =>
         val stagedTuples = specTuples.values.flatten.toSet
-        val masks = parentDeleteMap(parent, conf)
         val kept =
           if (metaWithRef.partitionSpec.isEmpty) Nil
-          else dynamicKeep(spark, metaWithRef, parentFiles, stagedTuples, conf,
-            applyDeletes = masks, applyEqs = parentEqs, newSeq = nextId)
+          else dynamicKeep(spark, table.withMeta(metaWithRef), parentFiles,
+            stagedTuples, parentDels, parentEqs, newSeq = nextId)
         (kept ++ stamped, "overwrite")
     }
 
@@ -503,9 +498,7 @@ object LakeWriteUtil {
       // position deletes survive every mode except full truncation:
       // kept data files keep their masks; masks for files that were
       // dropped or rewritten simply never match again
-      deleteFiles =
-        if (mode == "truncate") Nil
-        else parent.map(_.deleteFiles).getOrElse(Nil),
+      deleteFiles = if (mode == "truncate") Nil else parentDels,
       // equality deletes: same carry-forward, plus this commit's own;
       // retire() drops any delete no remaining file is old enough for
       eqDeleteFiles =
@@ -692,20 +685,21 @@ object LakeWriteUtil {
         }
     }
 
-  /** Copy-on-write for `overwrite(filters)` / DELETE WHERE: fully
-    * matching files are dropped, partially matching files rewritten
-    * with the negated predicate, untouched files kept. Files are
-    * matched by stats AND partition values, so a point DELETE on a
-    * bucketed key touches only the buckets its keys hash to. The
+  /** Copy-on-write for `overwrite(filters)` / DELETE WHERE over
+    * `table.meta`: fully matching files are dropped, partially matching
+    * files rewritten with the negated predicate, untouched files kept.
+    * Files are matched by stats AND partition values, so a point DELETE
+    * on a bucketed key touches only the buckets its keys hash to. The
     * partial files are rewritten by one shuffle-free [[rewriteFiles]]
     * grouped by recorded tuple, so the layout stays one tuple per file
-    * and only tuple-less inputs pay a job to derive theirs. */
-  def copyOnWrite(spark: SparkSession, table: LakeTable, meta: TableMeta,
+    * and only tuple-less inputs pay a job to derive theirs. `deletes`
+    * and `eqs` are the parent's delete files: the rewritten copies get
+    * fresh paths no mask matches, so the rewrite applies them. */
+  def copyOnWrite(spark: SparkSession, table: LakeTable,
       parentFiles: Seq[DataFileMeta], filters: Array[Filter],
-      conf: org.apache.hadoop.conf.Configuration,
-      applyDeletes: Map[String, Array[Long]] = Map.empty,
-      applyEqs: Seq[EqDeleteMeta] = Nil,
-      newSeq: Long = 0L): Seq[DataFileMeta] = {
+      deletes: Seq[DataFileMeta], eqs: Seq[EqDeleteMeta],
+      newSeq: Long): Seq[DataFileMeta] = {
+    val meta = table.meta
     val schema = meta.schema
     val parts = PartitionPruning.of(meta)
     val (touched, untouched) = parentFiles.partition(f =>
@@ -718,21 +712,12 @@ object LakeWriteUtil {
       else {
         val cond = filters.flatMap(filterToColumn).reduceOption(_ && _)
           .getOrElse(lit(true))
-        rewriteFiles(spark, meta, partial.groupBy(_.partitionValues).toSeq,
-          conf, applyDeletes = applyDeletes, applyEqs = applyEqs,
-          newSeq = newSeq, filter = _.filter(!coalesce(cond, lit(false))))
+        rewriteFiles(spark, table, partial.groupBy(_.partitionValues).toSeq,
+          deletes, eqs, newSeq,
+          filter = _.filter(!coalesce(cond, lit(false))))
       }
     untouched ++ rewritten
   }
-
-  /** Merge-on-read masks of a parent snapshot, hydrated for rewrite
-    * jobs (empty for copy-on-write tables — the common case). */
-  def parentDeleteMap(parent: Option[SnapshotMeta],
-      conf: org.apache.hadoop.conf.Configuration): Map[String, Array[Long]] =
-    parent.map(_.deleteFiles).getOrElse(Nil) match {
-      case Nil => Map.empty
-      case dels => PosDeletes.deletedMap(dels, conf)
-    }
 
   /** Clustered output of [[rewriteFiles]] (compaction and the mask
     * fold): each group splits into `max(1, bytes / target)` slots, and
@@ -749,22 +734,21 @@ object LakeWriteUtil {
 
   /** The engine's one file rewrite (copy-on-write DML, dynamic
     * overwrite, compaction, mask fold): partition groups of data files
-    * are rewritten in ONE Spark job per (equality-delete subset,
-    * schema epoch). A group is a recorded tuple and its files; an empty
-    * tuple on a partitioned table marks files that record none.
+    * of `table.meta` are rewritten by ONE Spark job. A group is a
+    * recorded tuple and its files; an empty tuple on a partitioned
+    * table marks files that record none.
     *
-    * Each job plans one scan over every group's files — one scan, not a
-    * union of per-group branches, whose planning is single-threaded
-    * driver time — subtracts the merge-on-read masks (an anti-join on
-    * (file, position)) and the equality deletes its files are old
-    * enough for (the outputs take the new commit's sequence number,
-    * past every delete, so deletes are applied, not carried), recovers
-    * each row's group from its source file (a literal map over
-    * `_metadata.file_path`: driver metadata, no join) and drops the
-    * rows `filter` rejects. The write fans out on a tag: a tupled
-    * group's tag is its index and its files record its tuple; a
-    * tuple-less group's rows are tagged by a hash of their own
-    * transform tuple, and only those files pay a partitionTuples job.
+    * The job reads every group's files in one [[MaskedRead]], the scan
+    * every masked read takes, whatever their schema epochs: the
+    * position masks of `deletes` and the equality deletes `eqs` apply
+    * where they apply (the outputs take the new commit's sequence
+    * number, past every delete, so deletes are applied, not carried).
+    * Each row's group comes from its file key (a literal map: driver
+    * metadata, no join), and `filter` drops the rows it rejects. The
+    * write fans out on a tag: a tupled group's tag is its index and its
+    * files record its tuple; a tuple-less group's rows are tagged by a
+    * hash of their own transform tuple, and only those files pay a
+    * partitionTuples job.
     *
     * Without a `layout` the write is shuffle-free: each scan task
     * writes one file per tag it read (copy-on-write, whose file split
@@ -773,18 +757,17 @@ object LakeWriteUtil {
     * lands as ONE file: a bare repartition(col) is AQE-coalescible,
     * and at maintenance scale AQE folded the whole shuffle into one
     * task that wrote every group's file serially. */
-  def rewriteFiles(spark: SparkSession, meta: TableMeta,
+  def rewriteFiles(spark: SparkSession, table: LakeTable,
       groups: Seq[(Map[String, String], Seq[DataFileMeta])],
-      conf: org.apache.hadoop.conf.Configuration,
-      applyDeletes: Map[String, Array[Long]] = Map.empty,
-      applyEqs: Seq[EqDeleteMeta] = Nil,
-      newSeq: Long = 0L,
+      deletes: Seq[DataFileMeta], eqs: Seq[EqDeleteMeta], newSeq: Long,
       filter: DataFrame => DataFrame = identity,
       layout: Option[Layout] = None): Seq[DataFileMeta] = {
     if (groups.isEmpty) return Nil
+    val meta = table.meta
+    val conf = table.catalog.hadoopConf
     val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
-    val (grp, fp, pos, tk, slot) = ("__graft_group", "__graft_fp",
-      "__graft_pos", "__graft_tag", "__graft_slot")
+    val (grp, tk, slot) = ("__graft_group", "__graft_tag", "__graft_slot")
+    val (fp, pos) = (col(MaskedRead.File), col(MaskedRead.Pos))
     val groupOf: Map[String, Int] = groups.zipWithIndex.flatMap {
       case ((_, fs), i) => fs.map(f => PosDeletes.norm(f.path) -> i)
     }.toMap
@@ -798,66 +781,38 @@ object LakeWriteUtil {
         xxhash64(meta.partitionSpec.map(f => Transforms.eval(f, meta.schema,
           Transforms.zoneOf(meta))): _*).bitwiseOR(lit(1L)))
         .otherwise(byIndex)
-    for {
-      (sub, eqs) <- EqDeletes.groupByApplicable(meta, groups.flatMap(_._2),
-        applyEqs)
-      (epoch, files) <- sub.groupBy(_.schemaEpoch)
-    } {
-      val epochSchema = meta.schemaAt(epoch)
-      val nOut: Map[Int, Int] = layout.fold(Map.empty[Int, Int]) { l =>
-        files.groupBy(f => groupOf(PosDeletes.norm(f.path))).map {
-          case (g, fs) => g -> math.max(1, (fs.map(_.sizeBytes).sum / l.target).toInt)
-        }
-      }
-      val split = nOut.values.exists(_ > 1)
-      val hashSlot = split && layout.exists(_.order.isEmpty)
-      // one shared mask frame: the anti-join key is (file, pos), so
-      // pairs from other files in the same scan are inert
-      val pairs = files.flatMap(f =>
-        applyDeletes.getOrElse(PosDeletes.norm(f.path), Array.empty[Long])
-          .map(p => (PosDeletes.norm(f.path), p)))
-      val raw = spark.read.schema(epochSchema).parquet(files.map(_.path): _*)
-        .withColumn(fp, PosDeletes.normCol(col("_metadata.file_path")))
-      val positioned =
-        if (pairs.isEmpty && !hashSlot) raw
-        else raw.withColumn(pos, col("_metadata.row_index"))
-      val masked =
-        if (pairs.isEmpty) positioned
-        else positioned.join(
-          broadcast(spark.createDataFrame(pairs).toDF(fp, pos)),
-          Seq(fp, pos), "left_anti")
-      val tagged = masked.select(
-        epochProjection(meta, epoch, epochSchema) ++
-          Seq(element_at(typedLit(groupOf), col(fp)).as(grp)) ++
-          (if (hashSlot) Seq(col(fp), col(pos)) else Nil): _*)
-      val rows = filter(
-        if (eqs.isEmpty) tagged else EqDeletes.antiJoin(spark, meta, tagged, eqs))
-        .withColumn(tk, tag)
-      // a split group's slots write apart even when two hash to one
-      // task, so each file holds one slot
-      val dirs = if (split) Seq(tk, slot) else Seq(tk)
-      val laidOut = layout match {
-        case None => rows
-        case Some(l) =>
-          val n = element_at(typedLit(nOut), col(grp))
-          val (slotOf, sortKey) = l.order match {
-            case Some(order) =>
-              val (rank, key) = order(groups.map(_._2), col(grp))
-              (shiftright(rank * n, 8), key)
-            case None => (pmod(xxhash64(col(fp), col(pos)), n), Nil)
-          }
-          val clustered =
-            if (split) rows.withColumn(slot, slotOf)
-              .repartition(nOut.values.sum, col(grp), col(slot))
-            else rows.repartition(nOut.size, col(grp))
-          // the directory columns lead the sort, so the writer, which
-          // needs rows grouped by them, keeps this order
-          if (sortKey.isEmpty) clustered
-          else clustered.sortWithinPartitions(dirs.map(col) ++ sortKey: _*)
-      }
-      laidOut.drop(grp, fp, pos)
-        .write.mode("append").partitionBy(dirs: _*).parquet(outDir)
+    val nOut: Map[Int, Int] = layout.fold(Map.empty[Int, Int]) { l =>
+      groups.indices.map(i => i ->
+        math.max(1, (groups(i)._2.map(_.sizeBytes).sum / l.target).toInt)).toMap
     }
+    val split = nOut.values.exists(_ > 1)
+    val rows = filter(MaskedRead(table, groups.flatMap(_._2), deletes, eqs)
+        .withColumn(grp, element_at(typedLit(groupOf), fp)))
+      .withColumn(tk, tag)
+    // a split group's slots write apart even when two hash to one
+    // task, so each file holds one slot
+    val dirs = if (split) Seq(tk, slot) else Seq(tk)
+    val laidOut = layout match {
+      case None => rows
+      case Some(l) =>
+        val n = element_at(typedLit(nOut), col(grp))
+        val (slotOf, sortKey) = l.order match {
+          case Some(order) =>
+            val (rank, key) = order(groups.map(_._2), col(grp))
+            (shiftright(rank * n, 8), key)
+          case None => (pmod(xxhash64(fp, pos), n), Nil)
+        }
+        val clustered =
+          if (split) rows.withColumn(slot, slotOf)
+            .repartition(nOut.values.sum, col(grp), col(slot))
+          else rows.repartition(nOut.size, col(grp))
+        // the directory columns lead the sort, so the writer, which
+        // needs rows grouped by them, keeps this order
+        if (sortKey.isEmpty) clustered
+        else clustered.sortWithinPartitions(dirs.map(col) ++ sortKey: _*)
+    }
+    laidOut.drop(grp, MaskedRead.File, MaskedRead.Pos)
+      .write.mode("append").partitionBy(dirs: _*).parquet(outDir)
     // ONE recursive listing of the output root, and one footer harvest
     // over every file (it fans out itself)
     val seg = s"/$tk="
@@ -881,13 +836,12 @@ object LakeWriteUtil {
 
   /** Dynamic partition overwrite: drop/rewrite parent files that
     * overlap the staged partition tuples. */
-  private def dynamicKeep(spark: SparkSession, meta: TableMeta,
+  private def dynamicKeep(spark: SparkSession, table: LakeTable,
       parentFiles: Seq[DataFileMeta], stagedTuples: Set[Map[String, String]],
-      conf: org.apache.hadoop.conf.Configuration,
-      applyDeletes: Map[String, Array[Long]] = Map.empty,
-      applyEqs: Seq[EqDeleteMeta] = Nil,
-      newSeq: Long = 0L): Seq[DataFileMeta] = {
+      deletes: Seq[DataFileMeta], eqs: Seq[EqDeleteMeta],
+      newSeq: Long): Seq[DataFileMeta] = {
     if (stagedTuples.isEmpty) return parentFiles
+    val meta = table.meta
     val known = parentFiles.filter(_.partitionValues.nonEmpty)
     val unknown = parentFiles.filter(_.partitionValues.isEmpty)
     val keptKnown = known.filterNot(f => stagedTuples.contains(f.partitionValues))
@@ -913,9 +867,8 @@ object LakeWriteUtil {
             Transforms.eval(f, schema, Transforms.zoneOf(meta))): _*)
         val stagedKeys = stagedTuples.map(t =>
           meta.partitionSpec.map(f => t(f.name)).mkString(sep)).toSeq
-        rewriteFiles(spark, meta, Seq(Map.empty[String, String] -> partials),
-          conf, applyDeletes = applyDeletes, applyEqs = applyEqs,
-          newSeq = newSeq, filter = _.filter(!key.isin(stagedKeys: _*)))
+        rewriteFiles(spark, table, Seq(Map.empty[String, String] -> partials),
+          deletes, eqs, newSeq, filter = _.filter(!key.isin(stagedKeys: _*)))
       }
     keptKnown ++ keptUnknown ++ rewritten
   }
@@ -1154,13 +1107,13 @@ object LakeWriteUtil {
       val parent = fresh.currentSnapshot(table.ref)
       val parentFiles = parent.map(_.files).getOrElse(Nil)
       if (fresh.properties.get("write.delete.mode").contains("merge-on-read"))
-        morDelete(spark, table, fresh, parent, parentFiles, filters, conf)
+        morDelete(spark, table.withMeta(fresh), parent, parentFiles, filters,
+          conf)
       else {
         val nextId = fresh.lastSnapshotId + 1
-        val kept = copyOnWrite(spark, table, fresh, parentFiles, filters, conf,
-          applyDeletes = parentDeleteMap(parent, conf),
-          applyEqs = parent.map(_.eqDeleteFiles).getOrElse(Nil),
-          newSeq = nextId)
+        val kept = copyOnWrite(spark, table.withMeta(fresh), parentFiles,
+          filters, parent.map(_.deleteFiles).getOrElse(Nil),
+          parent.map(_.eqDeleteFiles).getOrElse(Nil), newSeq = nextId)
         val snap = SnapshotMeta(nextId, parent.map(_.snapshotId),
           System.currentTimeMillis(), "delete",
           Map("deleted-files" -> (parentFiles.size - kept.size).toString),
@@ -1176,15 +1129,16 @@ object LakeWriteUtil {
 
   /** Merge-on-read DELETE: instead of rewriting the partially-matching
     * files, record the matching row POSITIONS in a position-delete
-    * parquet (computed distributed via `_metadata.row_index`, pushed
-    * filters pruning untouched files). Whole-file matches are still
-    * dropped outright — no mask needed. Data files are left
-    * byte-identical; reads subtract the positions (see PosDeleteScan),
-    * and rewrite_position_delete_files folds masks back into data. */
+    * parquet (one distributed job over a [[MaskedRead]] of those
+    * files). Whole-file matches are still dropped outright — no mask
+    * needed. Data files are left byte-identical; reads subtract the
+    * positions (see PosDeleteScan), and rewrite_position_delete_files
+    * folds masks back into data. */
   private def morDelete(spark: SparkSession, table: LakeTable,
-      fresh: TableMeta, parent: Option[SnapshotMeta],
+      parent: Option[SnapshotMeta],
       parentFiles: Seq[DataFileMeta], filters: Array[Filter],
       conf: org.apache.hadoop.conf.Configuration): TableMeta = {
+    val fresh = table.meta
     val schema = fresh.schema
     val parts = PartitionPruning.of(fresh)
     val (touched, untouched) = parentFiles.partition(f =>
@@ -1198,42 +1152,18 @@ object LakeWriteUtil {
           .getOrElse(lit(true))
         val outDir = s"${fresh.location}/metadata/deletes/" +
           java.util.UUID.randomUUID().toString.take(12)
-        // positions already masked by the parent's delete files must
-        // not be re-recorded: reads dedup either way, but a duplicate
-        // pair would emit a phantom changelog 'delete' event and
-        // over-count added-position-deletes
-        val priorDels = parent.map(_.deleteFiles).getOrElse(Nil)
-        val subtractPrior: DataFrame => DataFrame =
-          if (priorDels.isEmpty) identity
-          else df => df.join(
-            spark.read.schema(PosDeletes.DeleteSchema)
-              .parquet(priorDels.map(_.path): _*),
-            Seq("file_path", "pos"), "left_anti")
-        // rows already equality-deleted must not be re-masked (the
-        // read dedups either way, but the pair would emit a phantom
-        // changelog delete for an already-dead row)
-        val parentEqs = parent.map(_.eqDeleteFiles).getOrElse(Nil)
-        for {
-          (group, eqs) <- EqDeletes.groupByApplicable(fresh, partial, parentEqs)
-          (epoch, fs) <- group.groupBy(_.schemaEpoch)
-        } {
-          val epochSchema = fresh.schemaAt(epoch)
-          val meta = Seq(
-            PosDeletes.normCol(col("_metadata.file_path")).as("file_path"),
-            col("_metadata.row_index").as("pos"))
-          val projected =
-            spark.read.schema(epochSchema).parquet(fs.map(_.path): _*)
-              .select(epochProjection(fresh, epoch, epochSchema) ++ meta: _*)
-              .where(cond)
-          val eqMasked =
-            if (eqs.isEmpty) projected
-            else EqDeletes.antiJoin(spark, fresh, projected, eqs)
-          subtractPrior(eqMasked.select(col("file_path"), col("pos")))
-            .repartitionByRange(math.max(1, fs.size / 64),
-              col("file_path"), col("pos"))
-            .sortWithinPartitions(col("file_path"), col("pos"))
-            .write.mode("append").parquet(outDir)
-        }
+        // the read skips rows the parent's masks or equality deletes
+        // already removed: re-recording one would emit a phantom
+        // changelog 'delete' and over-count added-position-deletes
+        MaskedRead(table, partial, parent.map(_.deleteFiles).getOrElse(Nil),
+            parent.map(_.eqDeleteFiles).getOrElse(Nil))
+          .where(cond)
+          .select(col(MaskedRead.File).as("file_path"),
+            col(MaskedRead.Pos).as("pos"))
+          .repartitionByRange(math.max(1, partial.size / 64),
+            col("file_path"), col("pos"))
+          .sortWithinPartitions(col("file_path"), col("pos"))
+          .write.mode("append").parquet(outDir)
         listParquet(outDir, conf)
           .map(p => FileStats.fromFooter(p, conf, PosDeletes.DeleteSchema, 0, Map.empty))
           .filter(_.rowCount > 0)
@@ -1247,91 +1177,6 @@ object LakeWriteUtil {
       deleteFiles = parent.map(_.deleteFiles).getOrElse(Nil) ++ newDeletes,
       eqDeleteFiles = parent.map(_.eqDeleteFiles).getOrElse(Nil))
     fresh.withSnapshot(snap, Some(table.ref))
-  }
-
-  /** Columns projecting an epoch-schema frame to the CURRENT schema
-    * (field-id renames honored, types cast, dropped columns nulled). */
-  /** Project an epoch-schema frame into the CURRENT schema — by
-    * stable field id, exactly like the read path's renameMap. A
-    * current field whose id does not exist in the epoch is NULL even
-    * when a same-named column does: that name belongs to a DROPPED
-    * column's lineage, and matching it resurrects dead data (the
-    * round-7 soak caught compaction doing precisely this after a
-    * drop/re-add — the rewrite materialized the dead values into
-    * current-epoch files, corrupting the re-added column for every
-    * later read). Name matching applies only to id-less legacy
-    * fields. */
-  def epochProjection(meta: TableMeta, epoch: Int,
-      epochSchema: StructType): Seq[Column] = {
-    val byId = epochSchema.fields.flatMap(f =>
-      TableMeta.fieldId(f).map(_ -> f)).toMap
-    meta.schema.fields.toSeq.map { f =>
-      TableMeta.fieldId(f) match {
-        case Some(id) => byId.get(id) match {
-          case Some(ef) =>
-            projectValue(col(ef.name), f.dataType, ef.dataType).as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
-        case None => epochSchema.fields.find(_.name == f.name) match {
-          case Some(ef) =>
-            projectValue(col(f.name), f.dataType, ef.dataType).as(f.name)
-          case None => lit(null).cast(f.dataType).as(f.name)
-        }
-      }
-    }
-  }
-
-  /** Project an epoch-typed VALUE to its current type, mapping struct
-    * internals by NESTED field id (name fallback per id-less legacy
-    * level, fresh-id nulling for re-adds — the same resolution
-    * [[LakeScans.epochNamed]] gives the clean scan path). A bare
-    * positional `cast` is wrong across nested add/drop (fields shift
-    * or counts differ) and was wrong for nested renames until nested
-    * ids existed. Arrays of structs recurse through `transform`;
-    * other types keep the widening cast. */
-  private[lake] def projectValue(c: Column,
-      cur: org.apache.spark.sql.types.DataType,
-      ep: org.apache.spark.sql.types.DataType): Column = (cur, ep) match {
-    case (cs: StructType, es: StructType) =>
-      if (cs == es) c
-      else {
-        val byId = es.fields.flatMap(f =>
-          TableMeta.fieldId(f).map(_ -> f)).toMap
-        val epHasIds = byId.nonEmpty
-        val inner = cs.fields.map { cf =>
-          val counterpart = TableMeta.fieldId(cf) match {
-            case Some(id) => byId.get(id).orElse(
-              if (!epHasIds) es.fields.find(_.name.equalsIgnoreCase(cf.name))
-              else None)
-            case None => es.fields.find(_.name.equalsIgnoreCase(cf.name))
-          }
-          counterpart match {
-            case Some(ef) =>
-              projectValue(c.getField(ef.name), cf.dataType, ef.dataType)
-                .as(cf.name)
-            case None => lit(null).cast(cf.dataType).as(cf.name)
-          }
-        }
-        // a NULL struct must stay NULL — struct(...) of nulls is a
-        // present struct with null members
-        when(c.isNull, lit(null).cast(stripIds(cs)))
-          .otherwise(struct(inner.toSeq: _*))
-      }
-    case (ArrayType(ce, _), ArrayType(ee, _))
-        if structDiffers(ce, ee) =>
-      transform(c, x => projectValue(x, ce, ee))
-    case (MapType(ck, cv, _), MapType(ek, ev, _))
-        if structDiffers(ck, ek) || structDiffers(cv, ev) =>
-      // a positional cast through a map whose key/value structs differ
-      // maps dead columns into live ones (the same lineage class the
-      // struct case fixes) — dive per entry instead; scalar key/value
-      // mismatches keep their widening cast inside the lambda
-      val keyed =
-        if (ck == ek) c
-        else transform_keys(c, (k, _) => projectValue(k, ck, ek))
-      if (cv == ev) keyed
-      else transform_values(keyed, (_, v) => projectValue(v, cv, ev))
-    case _ => c.cast(cur)
   }
 
   /** True when a struct ANYWHERE inside the type pair differs — the

@@ -18,19 +18,21 @@ import scala.collection.mutable
   * data file's KEY: its URI path with scheme and authority stripped
   * (`hdfs://nn:8020/wh/f`, `s3a://bucket/wh/f`, `file:///wh/f` and
   * `/wh/f` all key as `/wh/f`), so matching is immune to the spelling
-  * differences between Spark's `_metadata.file_path`, Hadoop listings
-  * and the paths recorded in manifests. This object is the key's only
+  * differences between Spark's file paths, Hadoop listings and the
+  * paths recorded in manifests. This object is the key's only
   * definition: driver code uses [[norm]], executor-side column
   * expressions use [[normCol]], and the two agree on every spelling.
   *
   * Delete files are written by a distributed Spark job at DELETE time
-  * (LakeWriteUtil.deleteWhere). On the SCAN path only the metadata-
-  * level relevance index ([[masksFor]], from footer stats) is computed
-  * on the driver; mask CONTENT is read by the executor scanning the
-  * masked file ([[deletedFor]]). Commit-time validation and changelog
-  * diffs still read masks driver-side — those sets are bounded by a
-  * single commit's delete files, not the table's. Reads are cached
-  * per-JVM (immutable files).
+  * (LakeWriteUtil.deleteWhere). Every read, and every file rewrite
+  * (all of which read through [[MaskedRead]]), computes only the
+  * metadata-level relevance index ([[masksFor]], from footer stats) on
+  * the driver; mask CONTENT is read by the executor scanning the
+  * masked file ([[deletedFor]]). Only commit validation, changelog
+  * diffs, the `position_deletes` metadata table and the procedures'
+  * file choice (rewrite_data_files leaving masked files to the fold,
+  * rewrite_position_delete_files picking them) still read masks on
+  * the driver. Reads are cached per-JVM (immutable files).
   */
 object PosDeletes {
 
@@ -54,8 +56,8 @@ object PosDeletes {
   /** The key of a data file: its path without scheme or authority. */
   def norm(p: String): String = new Path(p).toUri.getPath
 
-  /** Column twin of [[norm]] for executor-side keys (mask writes, mask
-    * anti-joins, path-set joins): strips `scheme:` and a `//authority`. */
+  /** Column twin of [[norm]] for executor-side keys (the path-set
+    * joins of the orphan sweep): strips `scheme:` and a `//authority`. */
   def normCol(c: Column): Column =
     regexp_replace(c, "^[a-zA-Z][a-zA-Z0-9.+-]*:(//[^/]*)?", "")
 

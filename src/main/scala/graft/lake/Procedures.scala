@@ -468,7 +468,7 @@ object Procedures {
         "added_data_files_count" -> IntegerType,
         "rewritten_bytes_count" -> LongType)
       def run(spark: SparkSession, a: Args): Seq[Row] = {
-        val (m, _) = metaW(a)
+        val (m, ident) = metaW(a)
         val head = m.currentSnapshot("main")
         val files = head.map(_.files).getOrElse(Nil)
         if (files.isEmpty) return Seq(Row(0, 0, 0L))
@@ -483,13 +483,12 @@ object Procedures {
         // to v1 filters and evaluated against each file's footer
         // min/max stats — exactly the scan-planning prune — so files
         // that cannot contain matching rows are left byte-identical.
-        // files carrying merge-on-read masks are not binpack candidates
-        // (a raw rewrite would resurrect deleted rows); they belong to
-        // rewrite_position_delete_files
-        val masked: Set[String] = head.map(_.deleteFiles).getOrElse(Nil) match {
-          case Nil => Set.empty
-          case dels => PosDeletes.deletedMap(dels, catalog.hadoopConf).keySet
-        }
+        // files carrying merge-on-read masks are not candidates: they
+        // belong to rewrite_position_delete_files, the mask fold
+        val dels = head.map(_.deleteFiles).getOrElse(Nil)
+        val masked: Set[String] =
+          if (dels.isEmpty) Set.empty
+          else PosDeletes.deletedMap(dels, catalog.hadoopConf).keySet
         val unmasked = files.filterNot(f => masked.contains(PosDeletes.norm(f.path)))
         val candidates = a.strOpt("where") match {
           case Some(w) =>
@@ -562,8 +561,9 @@ object Procedures {
         // a commit round-trip and a history entry)
         val rewriteInputs = grouped.flatMap(_._2)
         if (rewriteInputs.isEmpty) return Seq(Row(0, 0, 0L))
-        val rewritten = LakeWriteUtil.rewriteFiles(spark, m, grouped,
-          catalog.hadoopConf, applyEqs = parentEqs, newSeq = nextId,
+        val rewritten = LakeWriteUtil.rewriteFiles(spark,
+          new LakeTable(catalog, ident, m, None, "main"), grouped, dels,
+          parentEqs, nextId,
           layout = Some(LakeWriteUtil.Layout(target, order, sortedStamp)))
         val untouched = files.filterNot(f =>
           rewriteInputs.exists(_.path == f.path))
@@ -577,7 +577,7 @@ object Procedures {
           System.currentTimeMillis(), "replace",
           Map("rewritten-data-files" -> rewriteInputs.size.toString),
           newFiles, m.currentSchemaEpoch,
-          deleteFiles = head.map(_.deleteFiles).getOrElse(Nil),
+          deleteFiles = dels,
           eqDeleteFiles = EqDeletes.retire(parentEqs, newFiles))
         catalog.commitMeta(m.withSnapshot(snap, Some("main")))
         Seq(Row(rewriteInputs.size, rewritten.size,
@@ -647,7 +647,7 @@ object Procedures {
         // tasks would otherwise read dozens of masks each. Dangling
         // pairs (whose data file is gone) drop in the same pass.
         def run(spark: SparkSession, a: Args): Seq[Row] = {
-          val (m, _) = metaW(a)
+          val (m, ident) = metaW(a)
           val head = m.currentSnapshot("main")
           val dels = head.map(_.deleteFiles).getOrElse(Nil)
           if (dels.isEmpty) return Seq(Row(0, 0, 0L))
@@ -683,17 +683,19 @@ object Procedures {
             return Seq(Row(dels.size, newDels.size,
               dels.map(_.sizeBytes).sum))
           }
-          val delMap = PosDeletes.deletedMap(dels, catalog.hadoopConf)
+          // the files to fold are the masks' keys; the rewrite itself
+          // reads them through the masked scan
+          val maskedKeys = PosDeletes.deletedMap(dels, catalog.hadoopConf).keySet
           val files = head.map(_.files).getOrElse(Nil)
           val (dirty, clean) = files.partition(f =>
-            delMap.contains(PosDeletes.norm(f.path)))
+            maskedKeys.contains(PosDeletes.norm(f.path)))
           val nextId = m.lastSnapshotId + 1
           val parentEqs = head.map(_.eqDeleteFiles).getOrElse(Nil)
           // one file per group under the table's target, as compaction
           // lays out a binpack
-          val rewritten = LakeWriteUtil.rewriteFiles(spark, m,
-            dirty.groupBy(_.partitionValues).toSeq, catalog.hadoopConf,
-            applyDeletes = delMap, applyEqs = parentEqs, newSeq = nextId,
+          val rewritten = LakeWriteUtil.rewriteFiles(spark,
+            new LakeTable(catalog, ident, m, None, "main"),
+            dirty.groupBy(_.partitionValues).toSeq, dels, parentEqs, nextId,
             layout = Some(LakeWriteUtil.Layout(WriteTuning.targetFileSize(m))))
           val newFiles = clean ++ rewritten
           val snap = SnapshotMeta(nextId,
@@ -715,16 +717,17 @@ object Procedures {
         // Equality deletes are cheap to WRITE (the upsert path never
         // reads existing data) but costly to READ: every affected scan
         // task hashes its rows against the key sets. This procedure
-        // materializes them as position deletes — one distributed
-        // semi-join per key shape computes the matching (file, pos)
-        // pairs — and retires the equality files from the head. Reads
+        // materializes them as position deletes — one masked read that
+        // keeps only the rows they delete yields the (file, pos) pairs
+        // — and retires the equality files from the head. Reads
         // return to plain mask subtraction (columnar decode), and
         // rewrite_position_delete_files can later fold the masks into
         // data. This is the "minor compaction" step streaming-upsert
         // tables run continuously; unlike rewrite_data_files it never
-        // rewrites data bytes, so it stays O(deleted rows) at 100 TB.
+        // rewrites data bytes: it reads the affected files' key columns
+        // and writes O(deleted rows).
         def run(spark: SparkSession, a: Args): Seq[Row] = {
-          val (m, _) = metaW(a)
+          val (m, ident) = metaW(a)
           val head = m.currentSnapshot("main")
           val eqs = head.map(_.eqDeleteFiles).getOrElse(Nil)
           if (eqs.isEmpty) return Seq(Row(0, 0))
@@ -733,37 +736,19 @@ object Procedures {
           val priorDels = head.map(_.deleteFiles).getOrElse(Nil)
           val outDir = s"${m.location}/metadata/deletes/" +
             java.util.UUID.randomUUID().toString.take(12)
-          val subtractPrior: org.apache.spark.sql.DataFrame =>
-              org.apache.spark.sql.DataFrame =
-            if (priorDels.isEmpty) identity
-            else df => df.join(
-              spark.read.schema(PosDeletes.DeleteSchema)
-                .parquet(priorDels.map(_.path): _*),
-              Seq("file_path", "pos"), "left_anti")
-          for {
-            (group, eqsOfGroup) <- EqDeletes.groupByApplicable(m, files, eqs)
-            if eqsOfGroup.nonEmpty
-            (epoch, fs) <- group.groupBy(_.schemaEpoch)
-          } {
-            val epochSchema = m.schemaAt(epoch)
-            val metaCols = Seq(
-              PosDeletes.normCol(col("_metadata.file_path")).as("file_path"),
-              col("_metadata.row_index").as("pos"))
-            val rows = spark.read.schema(epochSchema)
-              .parquet(fs.map(_.path): _*)
-              .select(LakeWriteUtil.epochProjection(m, epoch, epochSchema)
-                ++ metaCols: _*)
-            // one semi-join per key SHAPE (identifier fields may have
-            // changed between upserts), deduped on (file, pos)
-            subtractPrior(
-              EqDeletes.semiJoinAny(spark, m, rows, eqsOfGroup,
-                  Seq("file_path", "pos"))
-                .select(col("file_path"), col("pos")))
-              .repartitionByRange(math.max(1, fs.size / 64),
+          // one masked read of the files an equality delete may apply
+          // to, keeping just the rows those deletes match: rows the
+          // prior masks removed never reach the new masks
+          val affected = files.filter(f => eqs.exists(EqDeletes.mayApply(m, f, _)))
+          if (affected.nonEmpty)
+            MaskedRead(new LakeTable(catalog, ident, m, None, "main"), affected,
+                priorDels, eqs, eqDeletedOnly = true)
+              .select(col(MaskedRead.File).as("file_path"),
+                col(MaskedRead.Pos).as("pos"))
+              .repartitionByRange(math.max(1, affected.size / 64),
                 col("file_path"), col("pos"))
               .sortWithinPartitions(col("file_path"), col("pos"))
-              .write.mode("append").parquet(outDir)
-          }
+              .write.parquet(outDir)
           val newDels = LakeWriteUtil.listParquet(outDir, conf)
             .map(p => FileStats.fromFooter(p, conf, PosDeletes.DeleteSchema,
               0, Map.empty))

@@ -2449,5 +2449,111 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     ranges.zip(ranges.tail).foreach { case ((_, hi), (lo, _)) =>
       assert(hi <= lo, s"overlapping x ranges: $ranges") }
   }
-}
 
+  /** An upsert MoR table whose files span two schema epochs and two
+    * equality-delete subsets, each carrying a position mask:
+    *  - file A (epoch 0): ids 0-99, deleted by both upserts below;
+    *  - file B (epoch 0): ids 5 and 100-149, deleted by the second;
+    *  - file C (epoch 1): ids 7, 120 and 121, deleted by none;
+    *  - masks on 50 (A), 130 (B) and 121 (C). */
+  private def maskedEvolvedTable(t: String): Unit = {
+    sql(s"""CREATE TABLE lake.db.$t (id bigint NOT NULL, v string)
+           |USING lake TBLPROPERTIES ('identifier-fields'='id',
+           |'write.upsert.enabled'='true',
+           |'write.delete.mode'='merge-on-read')""".stripMargin)
+    def append(q: String): Unit =
+      sql(q).coalesce(1).writeTo(s"lake.db.$t").append()
+    append("SELECT id, concat('a', id) AS v FROM range(100)")
+    append("SELECT id, concat('b', id) AS v FROM range(100, 150) " +
+      "UNION ALL SELECT 5, 'b5'")
+    sql(s"ALTER TABLE lake.db.$t ADD COLUMN w string")
+    append("SELECT id, concat('c', id) AS v, 'w' AS w FROM " +
+      "VALUES (7L), (120L), (121L) AS s(id)")
+    sql(s"DELETE FROM lake.db.$t WHERE id IN (50, 130, 121)")
+    val head = LakeMeta.of(spark, Seq("lake", "db", t)).currentSnapshot().get
+    assert(head.files.map(_.schemaEpoch).distinct.size == 2 &&
+      head.eqDeleteFiles.size == 2 && head.deleteFiles.nonEmpty,
+      s"$t: ${head.files.size} files, ${head.eqDeleteFiles.size} eq deletes")
+  }
+
+  private def rowsOf(q: String): Seq[String] =
+    sql(q).collect().map(_.toString).toSeq.sorted
+
+  test("a rewrite over two schema epochs and two equality-delete subsets " +
+      "runs one write job") {
+    maskedEvolvedTable("jc1")
+    val before = rowsOf("SELECT * FROM lake.db.jc1")
+    // 154 rows written; A's 5 and 7 and B's 120 and 121 replaced; the
+    // masks take A's 50, B's 130 and C's 121
+    assert(before.size == 147, before.size.toString)
+    // the fold rewrites all three files: one shuffle map stage (its
+    // slots) and the write
+    val foldJobs = jobsDuring {
+      sql("CALL lake.system.rewrite_position_delete_files(table => 'db.jc1')")
+    }
+    assert(foldJobs == 2, s"the mask fold ran $foldJobs Spark jobs")
+    assert(rowsOf("SELECT * FROM lake.db.jc1") == before)
+    val folded = LakeMeta.of(spark, Seq("lake", "db", "jc1")).currentSnapshot().get
+    assert(folded.deleteFiles.isEmpty && folded.eqDeleteFiles.isEmpty)
+
+    maskedEvolvedTable("jc2")
+    sql("ALTER TABLE lake.db.jc2 SET TBLPROPERTIES " +
+      "('write.delete.mode'='copy-on-write')")
+    val parent = LakeMeta.of(spark, Seq("lake", "db", "jc2")).currentSnapshot()
+      .get.snapshotId
+    // every file matches partially: the copy-on-write rewrite is
+    // shuffle-free, one job for all three
+    val deleteJobs = jobsDuring {
+      sql("DELETE FROM lake.db.jc2 WHERE id IN (60, 140, 120)")
+    }
+    assert(deleteJobs == 1, s"copy-on-write DELETE ran $deleteJobs Spark jobs")
+    assert(rowsOf("SELECT * FROM lake.db.jc2") == rowsOf(
+      s"SELECT * FROM lake.db.jc2 VERSION AS OF $parent " +
+        "WHERE id NOT IN (60, 140, 120)"))
+  }
+
+  test("data columns named _file and _pos never mis-group a rewrite") {
+    sql("""CREATE TABLE lake.db.fpcol (id bigint, _file string, _pos bigint)
+          |USING lake PARTITIONED BY (bucket(2, id))
+          |TBLPROPERTIES ('write.delete.mode'='merge-on-read')""".stripMargin)
+    for (k <- 0 until 3)
+      sql(s"SELECT id, concat('f', $k) AS _file, id * 10 AS _pos " +
+        s"FROM range(${k * 20}, ${k * 20 + 20})").coalesce(1)
+        .writeTo("lake.db.fpcol").append()
+    val model = scala.collection.mutable.Map((0L until 60L).map(i =>
+      i -> s"[$i,f${i / 20},${i * 10}]"): _*)
+    def check(step: String): Unit = {
+      assert(rowsOf("SELECT * FROM lake.db.fpcol") == model.values.toSeq.sorted,
+        s"after $step")
+      // a point read plans only its bucket's files, so a row filed under
+      // the wrong tuple would vanish here
+      for (i <- Seq(0L, 1L, 25L, 42L, 59L) if model.contains(i))
+        assert(rowsOf(s"SELECT * FROM lake.db.fpcol WHERE id = $i") ==
+          Seq(model(i)), s"id $i after $step")
+    }
+    sql("CALL lake.system.rewrite_data_files(table => 'db.fpcol', " +
+      "options => map('rewrite-all', 'true', 'min-input-files', '1'))")
+    check("compaction")
+    sql("DELETE FROM lake.db.fpcol WHERE id IN (3, 30, 41)")
+    Seq(3L, 30L, 41L).foreach(model.remove)
+    check("merge-on-read DELETE")
+    sql("CALL lake.system.rewrite_position_delete_files(table => 'db.fpcol')")
+    check("mask fold")
+    sql("ALTER TABLE lake.db.fpcol SET TBLPROPERTIES " +
+      "('write.delete.mode'='copy-on-write')")
+    sql("DELETE FROM lake.db.fpcol WHERE id IN (1, 42)")
+    Seq(1L, 42L).foreach(model.remove)
+    check("copy-on-write DELETE")
+
+    // the rewrite's own row-id columns are reserved: a table using one
+    // fails loudly, naming it
+    sql("CREATE TABLE lake.db.fpres (id bigint, __graft_file string) USING lake")
+    sql("INSERT INTO lake.db.fpres VALUES (1, 'a')")
+    sql("INSERT INTO lake.db.fpres VALUES (2, 'b')")
+    val e = intercept[Exception] {
+      sql("CALL lake.system.rewrite_data_files(table => 'db.fpres', " +
+        "options => map('rewrite-all', 'true', 'min-input-files', '1'))")
+    }
+    assert(e.getMessage.contains("__graft_file"), e.getMessage)
+  }
+}
