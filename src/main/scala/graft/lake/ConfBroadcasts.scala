@@ -7,15 +7,17 @@ import org.apache.spark.util.SerializableConfiguration
 
 import scala.jdk.CollectionConverters._
 
-/** The Hadoop-conf broadcast of lake parquet reader factories, one per
-  * distinct read configuration.
+/** The Hadoop-conf broadcast of lake parquet reader and writer
+  * factories, one per distinct read or write configuration.
   *
   * Spark's `ParquetScan.createReaderFactory` broadcasts its filled conf
   * on every call, and a planned statement calls it at least twice (two
   * `BatchScanExec` copies). Each broadcast serializes ~1k entries and
   * allocates a 4 MB torrent chunk, which is most of a point read's
   * allocation. A reader factory takes its broadcast from here instead:
-  * repeated reads pay once per distinct (context, conf content).
+  * repeated reads pay once per distinct (context, conf content). So
+  * does every data-file writer ([[LakeFanoutWrite]]), whose conf a
+  * write task would otherwise deserialize inline, ~1k entries per task.
   *
   * The key is the conf's every entry, not a hash of it: the requested
   * schema, the session time zone and any `spark.hadoop.*` setting are

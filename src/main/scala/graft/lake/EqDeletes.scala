@@ -75,7 +75,7 @@ object EqDeletes {
       .distinct()
       // one file unless the batch's key set is itself huge
       .coalesce(1)
-      .write.mode("append").parquet(dir)
+      .write.options(LocalFs.options).mode("append").parquet(dir)
     LakeWriteUtil.listParquet(dir, conf).map { p =>
       val m = FileStats.fromFooter(p, conf, keySchema, meta.currentSchemaEpoch,
         Map.empty)

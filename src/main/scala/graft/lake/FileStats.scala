@@ -2,6 +2,7 @@ package graft.lake
 
 import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
+import org.apache.parquet.HadoopReadOptions
 import org.apache.parquet.hadoop.ParquetFileReader
 import org.apache.parquet.hadoop.util.HadoopInputFile
 import org.apache.spark.sql.sources._
@@ -60,7 +61,9 @@ object FileStats {
   def fromFooter(path: String, conf: Configuration, schema: StructType,
       epoch: Int, partitionValues: Map[String, String]): DataFileMeta = {
     val in = HadoopInputFile.fromPath(new Path(path), conf)
-    val reader = ParquetFileReader.open(in)
+    // the caller's conf: open(in) alone parses a fresh Configuration
+    // (Hadoop's default XML) for every footer
+    val reader = ParquetFileReader.open(in, HadoopReadOptions.builder(conf).build())
     try {
       val footer = reader.getFooter
       val blocks = footer.getBlocks.asScala

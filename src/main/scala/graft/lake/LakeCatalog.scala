@@ -49,7 +49,9 @@ class LakeCatalog extends TableCatalog with SupportsNamespaces
   private var warehouse: String = _
 
   private def spark: SparkSession = SparkSession.active
-  private[lake] def hadoopConf: Configuration = spark.sessionState.newHadoopConf()
+  /** The session's Hadoop conf, with `file:` resolved to [[LocalFs]]. */
+  private[lake] def hadoopConf: Configuration =
+    LocalFs.install(spark.sessionState.newHadoopConf())
 
   override def initialize(name: String, options: CaseInsensitiveStringMap): Unit = {
     catalogName = name

@@ -1,6 +1,7 @@
 package graft.lake
 
 import org.apache.hadoop.fs.Path
+import org.apache.spark.broadcast.Broadcast
 import org.apache.spark.sql.SparkSession
 import org.apache.spark.sql.catalyst.InternalRow
 import org.apache.spark.sql.connector.distributions.{Distribution, Distributions}
@@ -8,7 +9,6 @@ import org.apache.spark.sql.connector.expressions.{Expressions, NamedReference, 
 import org.apache.spark.sql.connector.read.ScanBuilder
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.execution.datasources.OutputWriterFactory
-import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.types.StructType
 import org.apache.spark.sql.util.CaseInsensitiveStringMap
 import org.apache.spark.unsafe.types.UTF8String
@@ -120,30 +120,20 @@ class LakeDeltaBatchWrite(table: LakeTable, info: LogicalWriteInfo,
     val spark = SparkSession.active
     val insertFactory = LakeFanoutWrite.factory(spark, table.meta,
       info.schema(), stagingDir)
-    val job = org.apache.hadoop.mapreduce.Job.getInstance(
-      spark.sessionState.newHadoopConf())
-    val delOwf = new ParquetFileFormat().prepareWrite(
-      org.apache.spark.sql.classic.SparkSession.active, job, Map.empty,
+    val (delOwf, conf) = LakeFanoutWrite.parquetWriter(spark,
       PosDeletes.DeleteSchema)
     val idSchema = info.rowIdSchema().orElse(new StructType())
     new LakeDeltaWriterFactory(insertFactory, delOwf, deleteDir,
       idSchema.fieldNames.indexOf(LakeMetaColumns.File),
-      idSchema.fieldNames.indexOf(LakeMetaColumns.Pos),
-      new SerializableConfiguration(job.getConfiguration))
+      idSchema.fieldNames.indexOf(LakeMetaColumns.Pos), conf)
   }
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
     // insert files stage through the fanout writer, so their partition
     // tuples ride the commit messages (same job-skip as LakeBatchWrite)
-    val ms = messages.toSeq.filter(_ != null)
-    val fan = ms.collect { case m: LakeFanoutCommit => m }
-    val msgTuples: Option[Map[String, Map[String, String]]] =
-      if (fan.size == ms.size && fan.forall(m => m.files.size == m.tuples.size))
-        Some(fan.flatMap(m => m.files.map(PosDeletes.norm)
-          .zip(m.tuples)).toMap)
-      else None
     LakeWriteUtil.commitDelta(table, stagingDir, deleteDir, operation,
-      scannedFiles(), scanFilters(), stagedTuples = msgTuples)
+      scannedFiles(), scanFilters(),
+      stagedTuples = LakeFanoutCommit.tuples(messages))
   }
 
   override def abort(messages: Array[WriterCommitMessage]): Unit = {
@@ -155,12 +145,12 @@ class LakeDeltaBatchWrite(table: LakeTable, info: LogicalWriteInfo,
 
 class LakeDeltaWriterFactory(insertFactory: DataWriterFactory,
     delOwf: OutputWriterFactory, deleteDir: String,
-    fileIdx: Int, posIdx: Int, conf: SerializableConfiguration)
+    fileIdx: Int, posIdx: Int, conf: Broadcast[SerializableConfiguration])
   extends DeltaWriterFactory {
 
   override def createWriter(partitionId: Int, taskId: Long): DeltaWriter[InternalRow] =
     new LakeDeltaDataWriter(insertFactory.createWriter(partitionId, taskId),
-      delOwf, deleteDir, fileIdx, posIdx, conf.value, partitionId, taskId)
+      delOwf, deleteDir, fileIdx, posIdx, conf.value.value, partitionId, taskId)
 }
 
 /** Per-task delta writer: inserts stream through the partition-fanout

@@ -4,57 +4,55 @@ import org.apache.hadoop.conf.Configuration
 import org.apache.hadoop.fs.Path
 import org.apache.hadoop.mapreduce.task.TaskAttemptContextImpl
 import org.apache.hadoop.mapreduce.{Job, TaskAttemptID, TaskType}
-import org.apache.spark.sql.SparkSession
-import org.apache.spark.sql.catalyst.InternalRow
-import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, Expression, UnsafeProjection}
+import org.apache.spark.TaskContext
+import org.apache.spark.broadcast.Broadcast
+import org.apache.spark.sql.{DataFrame, SparkSession}
+import org.apache.spark.sql.catalyst.{InternalRow, ProjectingInternalRow}
+import org.apache.spark.sql.catalyst.expressions.{Alias, BindReferences, BoundReference, Cast, Expression, UnsafeProjection}
 import org.apache.spark.sql.catalyst.plans.logical.Project
 import org.apache.spark.sql.connector.write.{DataWriter, DataWriterFactory, WriterCommitMessage}
+import org.apache.spark.sql.execution.SQLExecution
 import org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat
 import org.apache.spark.sql.execution.datasources.{OutputWriter, OutputWriterFactory}
-import org.apache.spark.sql.graft.Shims
-import org.apache.spark.sql.types.StructType
+import org.apache.spark.sql.types.{StringType, StructField, StructType}
 import org.apache.spark.util.SerializableConfiguration
 
-/** Partition-aware staging writer for partitioned tables.
+/** The engine's one data-file writer: every data file of a table
+  * write (appends, overwrites, copy-on-write row-level plans, the
+  * inserts of a merge-on-read delta, streaming epochs) and of a file
+  * rewrite ([[LakeWriteUtil.rewriteFiles]]) is written by a
+  * [[LakeFanoutDataWriter]].
   *
-  * The generic v2 ParquetWrite writes one file per task regardless of
-  * content, so a task holding rows of several partition tuples staged
-  * a single multi-tuple file — breaking the one-file-one-partition
-  * invariant that dynamic overwrite, runtime group filtering and the
-  * partitions metadata table rely on. This writer instead evaluates
-  * the partition transforms per row and ROLLS to a new file whenever
-  * the tuple changes. Combined with the write's required clustering +
-  * ordering on the partition source columns, each task keeps exactly
-  * ONE open parquet writer (bounded memory at any partition count) and
-  * produces one file per tuple; if the input somehow arrives unsorted
-  * the writer still splits correctly, just into more files.
+  * The writer evaluates a key per row and ROLLS to a new file whenever
+  * the key changes. For a table write the key is the row's partition
+  * tuple, so every file covers exactly one tuple (the invariant that
+  * dynamic overwrite, runtime group filtering and the partitions
+  * metadata table rely on); an unpartitioned table's tuple is empty.
+  * For a rewrite the key is the rows' trailing (tag, slot) columns,
+  * which the files do not store. Combined with a within-task ordering
+  * on the key (the write's required ordering, the rewrite's sort), each
+  * task keeps exactly ONE open parquet writer (bounded memory at any
+  * partition count) and produces one file per key; unsorted input
+  * still splits correctly, just into more files. Each file's key comes
+  * back in the task's commit message.
+  *
+  * The table's parquet tuning ([[WriteTuning]]) goes into the writer's
+  * Hadoop conf, which resolves `file:` to [[LocalFs]] and is broadcast
+  * once per distinct conf ([[ConfBroadcasts]]): a write task
+  * deserializes no Configuration.
   *
   * Atomicity: rows are written under
   * `stagingDir/_temporary/attempt-<partition>-<task>/` and moved into
   * the staging root only at task commit, so a failed or speculative
-  * attempt never leaks rows into the snapshot commit (which lists the
-  * staging root).
+  * attempt never leaks rows into the snapshot commit.
   */
 object LakeFanoutWrite {
 
-  /** Driver side: resolve the partition transform expressions against
-    * the write schema once, bind them to ordinals, and capture a
-    * serializable parquet OutputWriterFactory. */
+  /** Driver side of a table write: resolve the partition transform
+    * expressions against the write schema once and bind them to
+    * ordinals for executor-side eval. */
   def factory(spark: SparkSession, meta: TableMeta, schema: StructType,
       stagingDir: String): DataWriterFactory = {
-    val job = Job.getInstance(spark.sessionState.newHadoopConf())
-    // property-driven parquet tuning (row-group/page size, bloom
-    // filters) keys directly into the job conf; the compression codec
-    // goes through prepareWrite's options, same as a write option
-    WriteTuning.hadoopOptions(meta).foreach { case (k, v) =>
-      job.getConfiguration.set(k, v)
-    }
-    val owf = new ParquetFileFormat().prepareWrite(
-      org.apache.spark.sql.classic.SparkSession.active, job,
-      WriteTuning.options(meta), schema)
-    // Resolve the transform Columns through a real (empty) Dataset so
-    // the analyzed plan carries plain catalyst expressions, then bind
-    // them to the write schema's ordinals for executor-side eval.
     // A DELETE-only delta write's schema carries no data columns at
     // all — its partition transforms cannot (and need not) resolve,
     // because no insert row can ever reach this factory; building the
@@ -63,32 +61,93 @@ object LakeFanoutWrite {
     // than silently mis-partitioning.
     val resolvable = meta.partitionSpec.filter(f =>
       Transforms.leafType(schema, f.sourceColumn).isDefined)
-    val cols = resolvable.zipWithIndex.map { case (f, i) =>
-      Transforms.eval(f, schema, Transforms.zoneOf(meta)).as(s"__p$i")
-    }
-    val analyzed = spark.createDataFrame(
-      new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
-      .select(cols: _*).queryExecution.analyzed
-    val bound = analyzed.collectFirst {
-      case p: Project =>
-        val input = p.child.output
-        p.projectList.map {
-          case a: Alias => BindReferences.bindReference(a.child, input)
-          case e => BindReferences.bindReference(e: Expression, input)
+    val bound =
+      if (resolvable.isEmpty) Nil
+      else {
+        // Resolve the transform Columns through a real (empty) Dataset
+        // so the analyzed plan carries plain catalyst expressions
+        val cols = resolvable.zipWithIndex.map { case (f, i) =>
+          Transforms.eval(f, schema, Transforms.zoneOf(meta)).as(s"__p$i")
         }
-    }.getOrElse(throw new IllegalStateException(
-      s"could not resolve partition transforms for ${meta.location}"))
-    new LakeFanoutWriterFactory(owf, bound, schema, stagingDir,
-      new SerializableConfiguration(job.getConfiguration),
+        val analyzed = spark.createDataFrame(
+          new java.util.ArrayList[org.apache.spark.sql.Row](), schema)
+          .select(cols: _*).queryExecution.analyzed
+        analyzed.collectFirst {
+          case p: Project =>
+            val input = p.child.output
+            p.projectList.map {
+              case a: Alias => BindReferences.bindReference(a.child, input)
+              case e => BindReferences.bindReference(e: Expression, input)
+            }
+        }.getOrElse(throw new IllegalStateException(
+          s"could not resolve partition transforms for ${meta.location}"))
+      }
+    val (owf, conf) = parquetWriter(spark, schema,
+      WriteTuning.hadoopOptions(meta), WriteTuning.options(meta))
+    new LakeFanoutWriterFactory(owf, bound, schema, stagingDir, conf,
       WriteTuning.targetFileSize(meta),
       specTruncated = resolvable.size != meta.partitionSpec.size,
       tupleNames = resolvable.map(_.name))
+  }
+
+  /** Driver side of a rewrite: each row holds the `dataSchema` columns
+    * followed by the `keys` columns; files roll on the keys' values,
+    * recorded in the commit message under the keys' names, and store
+    * the data columns only. */
+  def keyed(spark: SparkSession, meta: TableMeta, dataSchema: StructType,
+      keys: Seq[StructField], dir: String): LakeFanoutWriterFactory = {
+    val exprs = keys.zipWithIndex.map { case (k, i) =>
+      Cast(BoundReference(dataSchema.size + i, k.dataType, k.nullable), StringType)
+    }
+    val (owf, conf) = parquetWriter(spark, dataSchema,
+      WriteTuning.hadoopOptions(meta), WriteTuning.options(meta))
+    new LakeFanoutWriterFactory(owf, exprs, dataSchema, dir, conf,
+      WriteTuning.targetFileSize(meta), tupleNames = keys.map(_.name))
+  }
+
+  /** A parquet OutputWriterFactory for `schema` and the broadcast of
+    * its job conf: the session's Hadoop conf with `file:` resolved to
+    * [[LocalFs]], Hadoop-keyed parquet tunables set directly and the
+    * DataSource-level `options` (the codec) through prepareWrite. */
+  private[lake] def parquetWriter(spark: SparkSession, schema: StructType,
+      hadoopOptions: Map[String, String] = Map.empty,
+      options: Map[String, String] = Map.empty)
+      : (OutputWriterFactory, Broadcast[SerializableConfiguration]) = {
+    val job = Job.getInstance(LocalFs.install(spark.sessionState.newHadoopConf()))
+    hadoopOptions.foreach { case (k, v) => job.getConfiguration.set(k, v) }
+    val owf = new ParquetFileFormat().prepareWrite(
+      spark.asInstanceOf[org.apache.spark.sql.classic.SparkSession], job,
+      options, schema)
+    (owf, ConfBroadcasts(spark.sparkContext, job.getConfiguration))
+  }
+
+  /** Writes the rows of `df` through `factory` in ONE Spark job, under
+    * an SQL execution of its own, and returns every task's commit
+    * message. A failing task aborts its writer, which drops its
+    * attempt's files. */
+  def run(df: DataFrame, factory: DataWriterFactory): Seq[LakeFanoutCommit] = {
+    val qe = df.queryExecution
+    SQLExecution.withNewExecutionId(qe, Some("lake file write")) {
+      val rdd = qe.toRdd
+      rdd.sparkContext.runJob(rdd,
+        (ctx: TaskContext, rows: Iterator[InternalRow]) => {
+          val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())
+          try {
+            rows.foreach(w.write)
+            w.commit().asInstanceOf[LakeFanoutCommit]
+          } catch {
+            case t: Throwable =>
+              try w.abort() catch { case s: Throwable => t.addSuppressed(s) }
+              throw t
+          } finally w.close()
+        }).toSeq
+    }
   }
 }
 
 class LakeFanoutWriterFactory(owf: OutputWriterFactory,
     tupleExprs: Seq[Expression], schema: StructType, stagingDir: String,
-    conf: SerializableConfiguration, targetBytes: Long,
+    conf: Broadcast[SerializableConfiguration], targetBytes: Long,
     specTruncated: Boolean = false,
     tupleNames: Seq[String] = Nil) extends DataWriterFactory {
 
@@ -105,7 +164,7 @@ class LakeFanoutWriterFactory(owf: OutputWriterFactory,
         override def close(): Unit = ()
       }
     new LakeFanoutDataWriter(owf, tupleExprs, schema, stagingDir,
-      conf.value, partitionId, taskId, targetBytes, tupleNames)
+      conf.value.value, partitionId, taskId, targetBytes, tupleNames)
   }
 }
 
@@ -120,6 +179,19 @@ class LakeFanoutWriterFactory(owf: OutputWriterFactory,
 case class LakeFanoutCommit(files: Seq[String],
     tuples: Seq[Map[String, String]] = Nil) extends WriterCommitMessage
 
+object LakeFanoutCommit {
+  /** Every staged file's partition tuple, by normalized path, from the
+    * messages of a fanout write; None when a message is not one. */
+  def tuples(messages: Array[WriterCommitMessage])
+      : Option[Map[String, Map[String, String]]] = {
+    val ms = messages.toSeq.filter(_ != null)
+    val fan = ms.collect { case m: LakeFanoutCommit => m }
+    if (fan.size == ms.size && fan.forall(m => m.files.size == m.tuples.size))
+      Some(fan.flatMap(m => m.files.map(PosDeletes.norm).zip(m.tuples)).toMap)
+    else None
+  }
+}
+
 class LakeFanoutDataWriter(owf: OutputWriterFactory,
     tupleExprs: Seq[Expression], schema: StructType, stagingDir: String,
     conf: Configuration, partitionId: Int, taskId: Long,
@@ -131,6 +203,8 @@ class LakeFanoutDataWriter(owf: OutputWriterFactory,
   private val attemptDir = new Path(stagingDir,
     s"_temporary/attempt-$partitionId-$taskId")
   private val proj = UnsafeProjection.create(tupleExprs)
+  // rows wider than the file schema carry trailing key columns
+  private var data: ProjectingInternalRow = _
   private var current: OutputWriter = _
   private var currentKey: String = null
   private var currentPath: Path = _
@@ -175,7 +249,11 @@ class LakeFanoutDataWriter(owf: OutputWriterFactory,
       roll(); currentKey = key; currentTuple = tupleOf(row)
       tuples += currentTuple
     }
-    current.write(row)
+    if (row.numFields > schema.size) {
+      if (data == null) data = ProjectingInternalRow(schema, 0 until schema.size)
+      data.project(row)
+      current.write(data)
+    } else current.write(row)
     // Target-file-size roll-over (write.target-file-size-bytes): a
     // partition tuple receiving many gigabytes in one task must not
     // become one huge file — MoR-masked reads never split a data file,
@@ -218,7 +296,8 @@ class LakeFanoutDataWriter(owf: OutputWriterFactory,
         throw new java.io.IOException(s"failed to promote $f to $dest")
     }
     fs.delete(attemptDir, true)
-    LakeFanoutCommit(files.map(f => new Path(stagingDir, f.getName).toString),
+    LakeFanoutCommit(
+      files.map(f => fs.makeQualified(new Path(stagingDir, f.getName)).toString),
       tuples.result())
   }
 

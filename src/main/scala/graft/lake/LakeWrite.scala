@@ -6,16 +6,15 @@ import org.apache.spark.sql.connector.distributions.{Distribution, Distributions
 import org.apache.spark.sql.connector.expressions.{Expressions, SortDirection, SortOrder}
 import org.apache.spark.sql.connector.write._
 import org.apache.spark.sql.connector.write.streaming.{StreamingDataWriterFactory, StreamingWrite}
-import org.apache.spark.sql.execution.datasources.v2.parquet.ParquetWrite
 import org.apache.spark.sql.functions._
 import org.apache.spark.sql.sources
 import org.apache.spark.sql.sources.Filter
 import org.apache.spark.sql.types.{ArrayType, LongType, MapType, StructType}
 
 /** Write path (SURVEY.md §7.1 "write-path" + §4.3): every batch write
-  * stages parquet via Spark's own vectorized writer into a fresh
-  * `data/<uuid>/` directory, then commits a snapshot whose file list
-  * is derived from the mode:
+  * stages parquet through the engine's one data-file writer
+  * ([[LakeFanoutWrite]]) into a fresh `data/<uuid>/` directory, then
+  * commits a snapshot whose file list is derived from the mode:
   *
   *  - append                  -> parent files ++ staged
   *  - truncate / replace      -> staged only
@@ -140,77 +139,28 @@ class LakeBatchWrite(table: LakeTable, info: LogicalWriteInfo, mode: String,
   private val stagingDir =
     s"${table.meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
 
-  // Partitioned tables stage through the fanout/roll-over writer so
-  // every staged file covers exactly one partition tuple; others use
-  // the stock v2 ParquetWrite.
-  private val partitioned = table.meta.partitionSpec.nonEmpty
-
-  private lazy val delegate: BatchWrite =
-    new ParquetWrite(Seq(stagingDir), "parquet", _ => true,
-      TunedWriteInfo.of(info, WriteTuning.options(table.meta))).toBatch
-
   override def createBatchWriterFactory(pinfo: PhysicalWriteInfo): DataWriterFactory = {
-    val f =
-      if (partitioned) LakeFanoutWrite.factory(SparkSession.active,
-        table.meta, info.schema(), stagingDir)
-      else delegate.createBatchWriterFactory(pinfo)
+    val f = LakeFanoutWrite.factory(SparkSession.active, table.meta,
+      info.schema(), stagingDir)
     // Row-level ReplaceData queries carry a leading __row_operation
     // column that is not part of the table schema — strip it.
     if (mode == "rewrite") ProjectingWriterFactory(f, info.schema()) else f
   }
 
-  override def useCommitCoordinator(): Boolean =
-    if (partitioned) true else delegate.useCommitCoordinator()
+  override def useCommitCoordinator(): Boolean = true
 
   override def commit(messages: Array[WriterCommitMessage]): Unit = {
-    if (!partitioned) delegate.commit(messages)
-    // fanout writes already know every staged file's partition tuple
-    // (recorded per roll) — hand them to the commit so it skips the
-    // partitionTuples re-derivation job
-    val msgTuples: Option[Map[String, Map[String, String]]] =
-      if (!partitioned) None
-      else {
-        val ms = messages.toSeq.filter(_ != null)
-        val fan = ms.collect { case m: LakeFanoutCommit => m }
-        if (fan.size == ms.size && fan.forall(m => m.files.size == m.tuples.size))
-          Some(fan.flatMap(m => m.files.map(PosDeletes.norm)
-            .zip(m.tuples)).toMap)
-        else None
-      }
+    // the fanout writer records every staged file's partition tuple
+    // per roll; handing them to the commit skips the partitionTuples
+    // re-derivation job
     val committed = LakeWriteUtil.commitStaged(table, stagingDir, mode,
       overwriteFilters, info.schema(), operationOverride, replacedFiles(),
-      sortedWith, stagedTuples = msgTuples)
+      sortedWith, stagedTuples = LakeFanoutCommit.tuples(messages))
     onCommit.foreach(_(committed))
   }
 
-  override def abort(messages: Array[WriterCommitMessage]): Unit = {
-    try if (!partitioned) delegate.abort(messages)
-    finally MetadataLog.dropTableDir(stagingDir, table.catalog.hadoopConf)
-  }
-}
-
-/** [[LogicalWriteInfo]] with table-property-derived parquet tuning
-  * options merged in ([[WriteTuning]]): FileWrite copies every write
-  * option into the job's hadoop conf, which is how the codec,
-  * row-group size and bloom-filter keys reach the stock v2 parquet
-  * writer without touching session state. */
-private[lake] case class TunedWriteInfo(inner: LogicalWriteInfo,
-    extra: Map[String, String]) extends LogicalWriteInfo {
-  override def options(): org.apache.spark.sql.util.CaseInsensitiveStringMap = {
-    val m = new java.util.HashMap[String, String](
-      inner.options().asCaseSensitiveMap())
-    extra.foreach { case (k, v) => m.put(k, v) }
-    new org.apache.spark.sql.util.CaseInsensitiveStringMap(m)
-  }
-  override def queryId(): String = inner.queryId()
-  override def schema(): StructType = inner.schema()
-  override def rowIdSchema(): java.util.Optional[StructType] = inner.rowIdSchema()
-  override def metadataSchema(): java.util.Optional[StructType] = inner.metadataSchema()
-}
-
-private[lake] object TunedWriteInfo {
-  def of(inner: LogicalWriteInfo, extra: Map[String, String]): LogicalWriteInfo =
-    if (extra.isEmpty) inner else TunedWriteInfo(inner, extra)
+  override def abort(messages: Array[WriterCommitMessage]): Unit =
+    MetadataLog.dropTableDir(stagingDir, table.catalog.hadoopConf)
 }
 
 /** Streaming sink: each epoch commits one snapshot (append; or
@@ -359,10 +309,9 @@ object LakeWriteUtil {
 
     val stagedPaths = timed(listNs += _)(listParquet(stagingDir, conf))
     stagedCount = stagedPaths.size
-    // message-carried tuples (fanout writes) cover the whole staged set
-    // in the common case — the partitionTuples job is the fallback for
-    // writes that didn't carry them (non-fanout stages, older paths) or
-    // any listed file the messages somehow missed
+    // message-carried tuples cover the whole staged set in the common
+    // case — the partitionTuples job is the fallback for a listed file
+    // the messages missed or a spec that changed since the write
     val specTuples = timed(tuplesNs += _)(stagedTuples match {
       // trust write-time tuples only while the commit-time spec still
       // matches the field names they were evaluated under (a concurrent
@@ -745,10 +694,14 @@ object LakeWriteUtil {
     * number, past every delete, so deletes are applied, not carried).
     * Each row's group comes from its file key (a literal map: driver
     * metadata, no join), and `filter` drops the rows it rejects. The
-    * write fans out on a tag: a tupled group's tag is its index and its
-    * files record its tuple; a tuple-less group's rows are tagged by a
-    * hash of their own transform tuple, and only those files pay a
-    * partitionTuples job.
+    * write goes through the table's own writer ([[LakeFanoutWrite]],
+    * so the outputs keep the table's parquet tuning), which rolls files
+    * on a tag: a tupled group's tag is its index and its files record
+    * its tuple; a tuple-less group's rows are tagged by a hash of their
+    * own transform tuple, and only those files pay a partitionTuples
+    * job. Rows are sorted by (tag, slot) within each task, so a task
+    * writes one file per tag and slot it holds, and each file's tag
+    * comes back in the task's commit message.
     *
     * Without a `layout` the write is shuffle-free: each scan task
     * writes one file per tag it read (copy-on-write, whose file split
@@ -789,11 +742,15 @@ object LakeWriteUtil {
     val rows = filter(MaskedRead(table, groups.flatMap(_._2), deletes, eqs)
         .withColumn(grp, element_at(typedLit(groupOf), fp)))
       .withColumn(tk, tag)
-    // a split group's slots write apart even when two hash to one
-    // task, so each file holds one slot
-    val dirs = if (split) Seq(tk, slot) else Seq(tk)
+    // a split group's slots roll apart even when two hash to one task,
+    // so each file holds one slot
+    val keys = if (split) Seq(tk, slot) else Seq(tk)
+    // with one tag and no slots, rows need no sort to reach one file
+    // per task
+    val oneKey = groups.size == 1 && tupleLess.isEmpty && !split
     val laidOut = layout match {
-      case None => rows
+      case None =>
+        if (oneKey) rows else rows.sortWithinPartitions(col(tk))
       case Some(l) =>
         val n = element_at(typedLit(nOut), col(grp))
         val (slotOf, sortKey) = l.order match {
@@ -806,23 +763,24 @@ object LakeWriteUtil {
           if (split) rows.withColumn(slot, slotOf)
             .repartition(nOut.values.sum, col(grp), col(slot))
           else rows.repartition(nOut.size, col(grp))
-        // the directory columns lead the sort, so the writer, which
-        // needs rows grouped by them, keeps this order
-        if (sortKey.isEmpty) clustered
-        else clustered.sortWithinPartitions(dirs.map(col) ++ sortKey: _*)
+        // the key columns lead the sort, so the writer, which rolls on
+        // them, keeps one file open
+        if (sortKey.isEmpty && oneKey) clustered
+        else clustered.sortWithinPartitions(keys.map(col) ++ sortKey: _*)
     }
-    laidOut.drop(grp, MaskedRead.File, MaskedRead.Pos)
-      .write.mode("append").partitionBy(dirs: _*).parquet(outDir)
-    // ONE recursive listing of the output root, and one footer harvest
-    // over every file (it fans out itself)
-    val seg = s"/$tk="
-    val written = listParquet(outDir, conf).map { p =>
-      val i = p.indexOf(seg) + seg.length
-      p -> p.substring(i, p.indexOf('/', i)).toLong
-    }.sortBy { case (p, t) => (t & 1L, t, p) }
+    // the key columns trail the data columns: the writer rolls on
+    // them and stores the rest
+    val out = laidOut.drop(grp, MaskedRead.File, MaskedRead.Pos)
+    val width = out.schema.size - keys.size
+    require(out.columns.drop(width).toSeq == keys, out.columns.mkString(", "))
+    val written = LakeFanoutWrite.run(out, LakeFanoutWrite.keyed(spark, meta,
+        StructType(out.schema.take(width)), out.schema.drop(width), outDir))
+      .flatMap(m => m.files.zip(m.tuples.map(_(tk).toLong)))
+      .sortBy { case (p, t) => (t & 1L, t, p) }
     val tagOf = written.toMap
     val derived = partitionTuples(spark,
       written.collect { case (p, t) if (t & 1L) == 1L => p }, meta)
+    // one footer harvest over every file (it fans out itself)
     FileStats.fromFooters(written.map(_._1), conf, meta.schema,
       meta.currentSchemaEpoch, p => {
         val t = tagOf(p)
@@ -1163,7 +1121,7 @@ object LakeWriteUtil {
           .repartitionByRange(math.max(1, partial.size / 64),
             col("file_path"), col("pos"))
           .sortWithinPartitions(col("file_path"), col("pos"))
-          .write.mode("append").parquet(outDir)
+          .write.options(LocalFs.options).mode("append").parquet(outDir)
         listParquet(outDir, conf)
           .map(p => FileStats.fromFooter(p, conf, PosDeletes.DeleteSchema, 0, Map.empty))
           .filter(_.rowCount > 0)

@@ -217,7 +217,7 @@ object Manifests {
         Encoders.product[(Int, DataFileMeta)])
       .toDF("ord", "file")
       .coalesce(math.max(1, files.size / 100000))
-      .write.mode("overwrite").parquet(dir)
+      .write.options(LocalFs.options).mode("overwrite").parquet(dir)
   }
 
   /** `files` when it is a parquet spill not yet read into memory: the
@@ -330,11 +330,13 @@ object Manifests {
     val cached = cache.get(dir)
     if (cached != null) return cached.size.toLong
     val p = new Path(dir)
-    val f = p.getFileSystem(conf)
+    val f = MetadataLog.fs(dir, conf)
+    val options = org.apache.parquet.HadoopReadOptions.builder(conf).build()
     f.listStatus(p).filter(st => st.isFile &&
         st.getPath.getName.endsWith(".parquet")).map { st =>
       val r = org.apache.parquet.hadoop.ParquetFileReader.open(
-        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf))
+        org.apache.parquet.hadoop.util.HadoopInputFile.fromStatus(st, conf),
+        options)
       try r.getRecordCount finally r.close()
     }.sum
   }

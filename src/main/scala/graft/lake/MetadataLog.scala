@@ -35,7 +35,7 @@ object MetadataLog {
   private def versionFile(location: String, v: Int) = new Path(metaDir(location), f"v$v%05d.json")
 
   def fs(location: String, conf: Configuration): FileSystem =
-    new Path(location).getFileSystem(conf)
+    LocalFs.fs(new Path(location), conf)
 
   def exists(location: String, conf: Configuration): Boolean =
     // The hint is only a pointer: fall back to the version listing so

@@ -667,7 +667,7 @@ object Procedures {
                 math.max(1, dels.map(_.rowCount).sum.toInt / 1000000),
                 col("file_path"), col("pos"))
               .sortWithinPartitions(col("file_path"), col("pos"))
-              .write.parquet(outDir)
+              .write.options(LocalFs.options).parquet(outDir)
             val newDels = LakeWriteUtil.listParquet(outDir, conf)
               .map(p => FileStats.fromFooter(p, conf, PosDeletes.DeleteSchema,
                 0, Map.empty))
@@ -748,7 +748,7 @@ object Procedures {
               .repartitionByRange(math.max(1, affected.size / 64),
                 col("file_path"), col("pos"))
               .sortWithinPartitions(col("file_path"), col("pos"))
-              .write.parquet(outDir)
+              .write.options(LocalFs.options).parquet(outDir)
           val newDels = LakeWriteUtil.listParquet(outDir, conf)
             .map(p => FileStats.fromFooter(p, conf, PosDeletes.DeleteSchema,
               0, Map.empty))
@@ -817,7 +817,7 @@ object Procedures {
           Map("migrated-from" -> name))
         val committed = catalog.commitMeta(base)
         val staging = s"$loc/data/${java.util.UUID.randomUUID().toString.take(12)}"
-        df.write.mode("append").parquet(staging)
+        df.write.options(LocalFs.options).mode("append").parquet(staging)
         val paths = LakeWriteUtil.listParquet(staging, catalog.hadoopConf)
         val files = FileStats.fromFooters(paths, catalog.hadoopConf,
           committed.schema, 0)

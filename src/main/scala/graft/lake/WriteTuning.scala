@@ -8,7 +8,10 @@ package graft.lake
   * terabytes on disk, and a point-lookup join against a fact table is
   * a full scan without column bloom filters — these knobs are part of
   * the scale story, not cosmetics. All of them ride Spark's own
-  * parquet writer:
+  * parquet writer, through the engine's one data-file writer
+  * ([[LakeFanoutWrite]]), so every data file of the table carries them,
+  * whether an INSERT, a row-level DML or a rewrite (compaction, mask
+  * fold) writes it:
   *
   *  - `write.parquet.compression-codec` → the `compression` write
   *    option (zstd | snappy | gzip | lz4 | uncompressed | …);
@@ -27,11 +30,9 @@ package graft.lake
   *  - `write.target-file-size-bytes` → roll-over threshold of the
   *    fanout writer (see [[LakeFanoutDataWriter]]).
   *
-  * The stock (unpartitioned) v2 path gets them through the write
-  * options: `FileWrite` copies every option into the job's hadoop conf
-  * (`newHadoopConfWithOptions`), so hadoop-keyed parquet tunables ride
-  * along with the `compression` option the parquet writer reads
-  * directly. The fanout path sets the hadoop keys on its own job conf.
+  * The writer sets the hadoop keys ([[hadoopOptions]]) on its job conf
+  * and hands the `compression` option ([[options]]) to the parquet
+  * format's prepareWrite.
   */
 object WriteTuning {
 
@@ -68,7 +69,8 @@ object WriteTuning {
           s"parquet.enable.dictionary#${k.stripPrefix(DictPrefix)}" -> v
       }
 
-  /** DataSource-level write options for the stock parquet write path. */
+  /** DataSource-level parquet write options: the codec, plus the
+    * Hadoop-keyed tunables. */
   def options(meta: TableMeta): Map[String, String] =
     meta.properties.get(Compression).map("compression" -> _).toMap ++
       hadoopOptions(meta)

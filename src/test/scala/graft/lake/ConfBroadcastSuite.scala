@@ -172,6 +172,15 @@ class ConfBroadcastSuite extends AnyFunSuite with BeforeAndAfterAll {
       .sorted)
   }
 
+  test("50 appends to one table make at most one writer-conf broadcast") {
+    sql("CREATE TABLE lake.db.appends (id bigint, v string) USING lake")
+    val (_, _, confs) = broadcastsOf((0 until 50).foreach(i =>
+      sql(s"INSERT INTO lake.db.appends VALUES ($i, 'a$i')")))
+    assert(confs <= 1, s"50 appends made $confs conf broadcasts")
+    assert(sql("SELECT count(*), sum(id) FROM lake.db.appends").collect()
+      .head == Row(50L, (0 until 50).sum.toLong))
+  }
+
   test("after stop() a new context gets a broadcast of its own") {
     val conf = new Configuration(false)
     conf.set("graft.test.key", "v")

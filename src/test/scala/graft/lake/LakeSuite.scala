@@ -2055,7 +2055,7 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
   }
 
   test("write tuning: codec + bloom filter reach both write paths") {
-    // unpartitioned -> stock v2 ParquetWrite via TunedWriteInfo options
+    // unpartitioned: one empty tuple through the same fanout writer
     sql("""CREATE TABLE lake.db.tune_flat (id bigint, v string) USING lake
         |TBLPROPERTIES ('write.parquet.compression-codec'='gzip',
         |  'write.parquet.bloom-filter-enabled.column.v'='true')""".stripMargin)
@@ -2075,6 +2075,46 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     sql("INSERT INTO lake.db.tune_part " +
       "SELECT id, cast(id AS string), cast(id % 2 AS int) FROM range(1000)")
     assert(firstFooter("lake.db.tune_part").get(0).getCodec.toString == "GZIP")
+  }
+
+  test("rewrites keep the table's write tuning: binpack, sort and a " +
+      "copy-on-write DELETE") {
+    sql("""CREATE TABLE lake.db.tune_rw (id bigint, v string) USING lake
+        |PARTITIONED BY (bucket(2, id))
+        |TBLPROPERTIES ('write.parquet.compression-codec'='gzip',
+        |  'write.parquet.bloom-filter-enabled.column.v'='true')""".stripMargin)
+    def insert(from: Int): Unit = sql("INSERT INTO lake.db.tune_rw " +
+      s"SELECT id, concat('val', cast(id AS string)) FROM range($from, ${from + 1000})")
+    /** codec and bloom offset of column v in every head file */
+    def tuning(): Seq[(String, Boolean)] = headFiles("tune_rw").map { f =>
+      val in = org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+        new org.apache.hadoop.fs.Path(f.path), spark.sessionState.newHadoopConf())
+      val rd = org.apache.parquet.hadoop.ParquetFileReader.open(in)
+      try {
+        val cols = rd.getFooter.getBlocks.get(0).getColumns
+        val v = (0 until cols.size()).map(cols.get)
+          .find(_.getPath.toDotString == "v").get
+        (v.getCodec.toString, v.getBloomFilterOffset >= 0)
+      } finally rd.close()
+    }
+    def assertTuned(after: String): Unit = {
+      val t = tuning()
+      assert(t.nonEmpty && t.forall(_ == ("GZIP", true)), s"after $after: $t")
+    }
+    (0 until 3).foreach(i => insert(i * 1000))
+    assertTuned("3 INSERTs")
+    val written = headFiles("tune_rw").map(_.path).toSet
+    sql("CALL lake.system.rewrite_data_files(table => 'db.tune_rw')")
+    assert(headFiles("tune_rw").map(_.path).toSet.intersect(written).isEmpty)
+    assertTuned("binpack")
+    (3 until 5).foreach(i => insert(i * 1000))
+    sql("CALL lake.system.rewrite_data_files(table => 'db.tune_rw', " +
+      "strategy => 'sort', sort_order => 'id')")
+    assert(headFiles("tune_rw").forall(_.sortedBy.nonEmpty))
+    assertTuned("sort")
+    sql("DELETE FROM lake.db.tune_rw WHERE id = 17")
+    assertTuned("a copy-on-write DELETE")
+    assert(count("SELECT count(*) FROM lake.db.tune_rw") == 4999)
   }
 
   test("target file size rolls fanout output inside one partition tuple") {

@@ -5,6 +5,8 @@ import org.apache.spark.sql.functions._
 import org.scalatest.BeforeAndAfterAll
 import org.scalatest.funsuite.AnyFunSuite
 
+import scala.jdk.CollectionConverters._
+
 /** The stored dedup-group-label index
   * ([[TextOps.tDedupGroupsIndexed]]) — the oracle gate proves the
   * served ROWS equal the in-memory grouping; this suite pins the
@@ -441,6 +443,20 @@ class GroupIndexSuite extends AnyFunSuite with BeforeAndAfterAll {
     assert(sizeA < sizeB,
       s"size sort-rewrite must consolidate files ($sizeB -> $sizeA)")
     assert(dfA <= dfB, s"df fold must not grow files ($dfB -> $dfA)")
+    // the sort rewrite writes with the size table's own tuning: every
+    // file keeps the doc_id bloom the size fetch skips files by
+    val unbloomed = spark.sql(s"SELECT file_path FROM lakeq.db.${idx.size}.files")
+      .collect().map(_.getString(0)).filterNot { p =>
+        val rd = org.apache.parquet.hadoop.ParquetFileReader.open(
+          org.apache.parquet.hadoop.util.HadoopInputFile.fromPath(
+            new org.apache.hadoop.fs.Path(p), spark.sessionState.newHadoopConf()))
+        try rd.getFooter.getBlocks.asScala.forall(_.getColumns.asScala
+          .exists(c => c.getPath.toDotString == "doc_id" &&
+            c.getBloomFilterOffset >= 0))
+        finally rd.close()
+      }
+    assert(unbloomed.isEmpty,
+      s"size files without a doc_id bloom after maintenance: ${unbloomed.toSeq}")
     assert(probe() == probeBefore,
       "maintenance must not change probe candidates")
     assert(labelsOf(idx.labels) == labelsBefore,
