@@ -259,8 +259,7 @@ class ChangesScan(catalog: LakeCatalog, meta: TableMeta, tableName: String,
       perEpoch.map { case (e, (f, _, _)) => e -> f },
       perEpoch.map { case (e, (_, x, _)) => e -> x },
       perEpoch.map { case (e, (_, _, k)) => e -> k },
-      EqScanSupport.groupSpecs(meta, eqGroups, eqKeyFields, ctx.noVec,
-        ctx.hconf, tz))
+      EqScanSupport.groupSpecs(meta, eqGroups, eqKeyFields, ctx, tz))
   }
 
   private lazy val eqKeyFields = EqScanSupport.keyFields(meta, eqGroups)

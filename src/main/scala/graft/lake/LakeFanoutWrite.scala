@@ -124,11 +124,18 @@ object LakeFanoutWrite {
   /** Writes the rows of `df` through `factory` in ONE Spark job, under
     * an SQL execution of its own, and returns every task's commit
     * message. A failing task aborts its writer, which drops its
-    * attempt's files. */
-  def run(df: DataFrame, factory: DataWriterFactory): Seq[LakeFanoutCommit] = {
+    * attempt's files. `tasks`, when given, is the number of input
+    * partitions the caller planned the job's tasks to be: a plan that
+    * regroups them fails before any task runs. */
+  def run(df: DataFrame, factory: DataWriterFactory,
+      tasks: Option[Int] = None): Seq[LakeFanoutCommit] = {
     val qe = df.queryExecution
     SQLExecution.withNewExecutionId(qe, Some("lake file write")) {
       val rdd = qe.toRdd
+      tasks.filter(_ != rdd.getNumPartitions).foreach(n =>
+        throw new IllegalStateException(s"the write plans " +
+          s"${rdd.getNumPartitions} tasks for $n input partitions: each " +
+          "task must read exactly one of them"))
       rdd.sparkContext.runJob(rdd,
         (ctx: TaskContext, rows: Iterator[InternalRow]) => {
           val w = factory.createWriter(ctx.partitionId(), ctx.taskAttemptId())

@@ -1454,12 +1454,17 @@ object LakeScans {
     * ONE FRESH hadoop conf per epoch — each reader builder writes its
     * requested schema into the conf it is given (and local-mode
     * broadcasts hand back the live object), so a shared conf would
-    * make every epoch read with the LAST epoch's schema. */
+    * make every epoch read with the LAST epoch's schema.
+    *
+    * The row-based session is a clone, built on first use only: by an
+    * epoch whose schema cannot batch, or by an equality-delete
+    * reader. A clone's artifact cleanup forks a process when it is
+    * collected, so a scan whose epochs all batch makes none. */
   private[lake] class EpochReaders(spark: SparkSession) {
-    val noVec: org.apache.spark.sql.classic.SparkSession =
+    lazy val noVec: org.apache.spark.sql.classic.SparkSession =
       Shims.cloneSessionRowBasedParquet(spark)
     val hconf: org.apache.hadoop.conf.Configuration =
-      noVec.sessionState.newHadoopConf()
+      spark.sessionState.newHadoopConf()
     val tz: String = spark.sessionState.conf.sessionLocalTimeZone
 
     /** For each epoch: (readFunc over `pick`'s read schema, the read
@@ -2012,13 +2017,17 @@ class CompositeReaderFactory(factories: Map[String, PartitionReaderFactory],
   *
   * `rowIds` names the required fields that carry a row's file key and
   * ordinal; a data column of the same name wins. `eqDeletedOnly`
-  * keeps only the unmasked rows an equality delete matches.
+  * keeps only the unmasked rows an equality delete matches. `bins`, a
+  * partition of `files`, plans one input partition per bin, whose task
+  * reads the bin's files one after another (a binpack rewrite's
+  * shuffle-free write).
   */
 class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
     required: StructType, deleted: Map[String, Seq[String]],
     eqDeleted: Map[String, Seq[EqDeleteMeta]] = Map.empty,
     rowIds: (String, String) = (LakeMetaColumns.File, LakeMetaColumns.Pos),
-    eqDeletedOnly: Boolean = false)
+    eqDeletedOnly: Boolean = false,
+    bins: Option[Seq[Seq[DataFileMeta]]] = None)
   extends Scan with Batch with SupportsReportStatistics {
 
   override def readSchema(): StructType = required
@@ -2049,16 +2058,22 @@ class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
     val eqLens: Map[String, Long] = eqGroups.flatten.map(e =>
       e.path -> fs.getFileStatus(new org.apache.hadoop.fs.Path(e.path)).getLen)
       .toMap
-    files.map { f =>
+    val parts = files.map { f =>
       val len = fs.getFileStatus(new org.apache.hadoop.fs.Path(f.path)).getLen
       val np = PosDeletes.norm(f.path)
       // the partition carries the RELEVANT delete-file paths, not the
       // positions/keys: the task reads its own masks executor-side
-      PosDeletePartition(f.path, f.schemaEpoch, len,
+      f.path -> PosDeletePartition(f.path, f.schemaEpoch, len,
         deleted.getOrElse(np, Nil),
         eqDeleted.getOrElse(np, Nil).map(e =>
           EqSlice(e.path, eqLens(e.path), groupOf(e.path))))
-    }.toArray
+    }
+    bins match {
+      case None => parts.map(_._2).toArray
+      case Some(bs) =>
+        val byPath = parts.toMap
+        bs.map(b => PosDeleteBin(b.map(f => byPath(f.path)))).toArray
+    }
   }
 
   override def createReaderFactory(): PartitionReaderFactory = {
@@ -2117,8 +2132,7 @@ class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
       e -> (readFunc, exprs, keyExprs)
     }
     val eqSpecs: Map[Int, EqGroupSpec] =
-      EqScanSupport.groupSpecs(table.meta, eqGroups, eqKeyFields, ctx.noVec,
-        ctx.hconf, tz)
+      EqScanSupport.groupSpecs(table.meta, eqGroups, eqKeyFields, ctx, tz)
     new PosDeleteReaderFactory(
       perEpoch.map { case (e, (f, _, _)) => e -> f },
       perEpoch.map { case (e, (_, x, _)) => e -> x },
@@ -2133,6 +2147,9 @@ class PosDeleteScan(table: LakeTable, files: Seq[DataFileMeta],
 case class PosDeletePartition(path: String, epoch: Int, fileLen: Long,
     deleteFiles: Seq[String],
     eqSlices: Seq[EqSlice] = Nil) extends InputPartition
+
+/** Several files' partitions read by one task, in order. */
+case class PosDeleteBin(files: Seq[PosDeletePartition]) extends InputPartition
 
 /** One applicable equality-delete file for a scan task: path, length
   * (for the executor-side parquet read) and its key-shape group. */
@@ -2171,9 +2188,7 @@ private[lake] object EqScanSupport {
     * and read once into the executor-local key-set cache). */
   def groupSpecs(meta: TableMeta, groups: Seq[Seq[EqDeleteMeta]],
       fields: Seq[Seq[org.apache.spark.sql.types.StructField]],
-      noVec: org.apache.spark.sql.classic.SparkSession,
-      hconf: org.apache.hadoop.conf.Configuration,
-      tz: String): Map[Int, EqGroupSpec] =
+      ctx: LakeScans.EpochReaders, tz: String): Map[Int, EqGroupSpec] =
     groups.zipWithIndex.map { case (g, gi) =>
       val head = g.head
       val delEpochSchema = meta.schemaAt(head.schemaEpoch)
@@ -2181,8 +2196,8 @@ private[lake] object EqScanSupport {
         delEpochSchema.fields.find(_.name.equalsIgnoreCase(kc)).get
           .copy(nullable = true)))
       val fmt = new org.apache.spark.sql.execution.datasources.parquet.ParquetFileFormat()
-      val dconf = new org.apache.hadoop.conf.Configuration(hconf)
-      val delRead = fmt.buildReaderWithPartitionValues(noVec, delReadSchema,
+      val dconf = new org.apache.hadoop.conf.Configuration(ctx.hconf)
+      val delRead = fmt.buildReaderWithPartitionValues(ctx.noVec, delReadSchema,
         StructType(Nil), delReadSchema, Nil,
         Map(org.apache.spark.sql.execution.datasources.FileFormat
           .OPTION_RETURNING_BATCH -> "false"), dconf)
@@ -2272,8 +2287,26 @@ class PosDeleteReaderFactory(
   extends PartitionReaderFactory {
 
   override def createReader(p: InputPartition)
+      : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = p match {
+    case PosDeleteBin(parts) =>
+      new PartitionReader[org.apache.spark.sql.catalyst.InternalRow] {
+        private val rest = parts.iterator
+        private var cur = if (rest.hasNext) fileReader(rest.next()) else null
+        override def next(): Boolean = {
+          while (cur != null && !cur.next()) {
+            cur.close()
+            cur = if (rest.hasNext) fileReader(rest.next()) else null
+          }
+          cur != null
+        }
+        override def get(): org.apache.spark.sql.catalyst.InternalRow = cur.get()
+        override def close(): Unit = if (cur != null) cur.close()
+      }
+    case part: PosDeletePartition => fileReader(part)
+  }
+
+  private def fileReader(part: PosDeletePartition)
       : PartitionReader[org.apache.spark.sql.catalyst.InternalRow] = {
-    val part = p.asInstanceOf[PosDeletePartition]
     val raw = readFuncs(part.epoch)(
       org.apache.spark.sql.execution.datasources.PartitionedFile(
         org.apache.spark.sql.catalyst.InternalRow.empty,

@@ -610,28 +610,32 @@ object LakeWriteUtil {
     n.value
   }
 
-  /** Best-effort delete of many paths. Small batches stay on the
-    * driver (no job overhead); large batches ship to executors — at
-    * 100 TB file counts a maintenance pass deletes millions of files,
-    * and a serial driver loop against an object store is an hours-long
-    * stall. Failures are swallowed per path (maintenance is re-runnable
-    * and remove_orphan_files sweeps stragglers). */
+  /** Best-effort delete of many paths; returns the number of paths it
+    * deleted. Small batches stay on the driver (no job overhead); large
+    * batches ship to executors — at 100 TB file counts a maintenance
+    * pass deletes millions of files, and a serial driver loop against
+    * an object store is an hours-long stall. Failures are swallowed per
+    * path (maintenance is re-runnable and remove_orphan_files sweeps
+    * stragglers), and a path already gone is not counted. */
   def bulkDelete(spark: SparkSession, paths: Seq[String],
       conf: org.apache.hadoop.conf.Configuration,
-      recursive: Boolean = false): Unit =
+      recursive: Boolean = false): Long =
     if (paths.size <= 128)
-      paths.foreach(p => scala.util.Try(
-        MetadataLog.fs(p, conf).delete(new Path(p), recursive)))
+      paths.count(p => scala.util.Try(
+        MetadataLog.fs(p, conf).delete(new Path(p), recursive)).getOrElse(false))
     else {
       val sconf = new org.apache.spark.util.SerializableConfiguration(conf)
+      val n = spark.sparkContext.longAccumulator("bulkDelete")
       spark.sparkContext
         .parallelize(paths, math.min(64, 1 + paths.size / 1024))
         .foreachPartition { it =>
           it.foreach { p =>
             val path = new Path(p)
-            scala.util.Try(path.getFileSystem(sconf.value).delete(path, recursive))
+            if (scala.util.Try(path.getFileSystem(sconf.value).delete(path, recursive))
+                .getOrElse(false)) n.add(1L)
           }
         }
+      n.value
     }
 
   /** Copy-on-write for `overwrite(filters)` / DELETE WHERE over
@@ -674,12 +678,27 @@ object LakeWriteUtil {
     * group's files and the row's group-index column, returns the row's
     * 0-255 rank and the sort key of each file; a group's slots split
     * its rank range, so a sorted group's files keep disjoint key
-    * ranges. Without an order (binpack) a hash of the row's position
-    * picks its slot. Every output file carries the `sortedBy`
-    * write-order stamp. */
+    * ranges. Without an order (binpack) a group's whole files are
+    * packed into its slots ([[pack]]), and a slot holding k >= 2
+    * targets' bytes writes its rows as k runs of equal row count.
+    * Every output file carries the `sortedBy` write-order stamp. */
   case class Layout(target: Long,
       order: Option[(Seq[Seq[DataFileMeta]], Column) => (Column, Seq[Column])] = None,
       sortedBy: Seq[String] = Nil)
+
+  /** `files` packed by `sizeBytes` into at most `n` bins: largest file
+    * first, each into the least-loaded bin. */
+  private[lake] def pack(files: Seq[DataFileMeta], n: Int): Seq[Seq[DataFileMeta]] = {
+    val bins = Array.fill(math.min(n, files.size))(Vector.empty[DataFileMeta])
+    val least = scala.collection.mutable.PriorityQueue
+      .tabulate(bins.length)(i => (0L, i))(Ordering[(Long, Int)].reverse)
+    files.sortBy(f => (-f.sizeBytes, f.path)).foreach { f =>
+      val (load, i) = least.dequeue()
+      bins(i) :+= f
+      least.enqueue((load + f.sizeBytes, i))
+    }
+    bins.toSeq.filter(_.nonEmpty)
+  }
 
   /** The engine's one file rewrite (copy-on-write DML, dynamic
     * overwrite, compaction, mask fold): partition groups of data files
@@ -698,16 +717,20 @@ object LakeWriteUtil {
     * so the outputs keep the table's parquet tuning), which rolls files
     * on a tag: a tupled group's tag is its index and its files record
     * its tuple; a tuple-less group's rows are tagged by a hash of their
-    * own transform tuple, and only those files pay a partitionTuples
-    * job. Rows are sorted by (tag, slot) within each task, so a task
-    * writes one file per tag and slot it holds, and each file's tag
-    * comes back in the task's commit message.
+    * own transform tuple, sorted by it within each task, and only
+    * those files pay a partitionTuples job. Each file's tag comes back
+    * in the task's commit message.
     *
-    * Without a `layout` the write is shuffle-free: each scan task
-    * writes one file per tag it read (copy-on-write, whose file split
-    * is not contractual). With one, rows hash-cluster on (group, slot)
-    * into an explicit partition count, so a group under the target
-    * lands as ONE file: a bare repartition(col) is AQE-coalescible,
+    * Without a `layout`, and with a layout that has no order (binpack),
+    * the write is shuffle-free: each task reads whole files of one
+    * group and writes one file per tag it read. Copy-on-write reads one
+    * file per task, as its file split is not contractual; binpack
+    * reads one bin per task, the scan planning each group's files
+    * packed into its slots, and splits a bin past the target into
+    * runs by the row's ordinal in the task. An ordered layout (sort, zorder) takes the
+    * row's slot from its rank and hash-clusters rows on (group, slot)
+    * into an explicit partition count, then sorts within partitions
+    * by (tag, slot, key): a bare repartition(col) is AQE-coalescible,
     * and at maintenance scale AQE folded the whole shuffle into one
     * task that wrote every group's file serially. */
   def rewriteFiles(spark: SparkSession, table: LakeTable,
@@ -720,7 +743,7 @@ object LakeWriteUtil {
     val conf = table.catalog.hadoopConf
     val outDir = s"${meta.location}/data/${java.util.UUID.randomUUID().toString.take(12)}"
     val (grp, tk, slot) = ("__graft_group", "__graft_tag", "__graft_slot")
-    val (fp, pos) = (col(MaskedRead.File), col(MaskedRead.Pos))
+    val fp = col(MaskedRead.File)
     val groupOf: Map[String, Int] = groups.zipWithIndex.flatMap {
       case ((_, fs), i) => fs.map(f => PosDeletes.norm(f.path) -> i)
     }.toMap
@@ -738,35 +761,48 @@ object LakeWriteUtil {
       groups.indices.map(i => i ->
         math.max(1, (groups(i)._2.map(_.sizeBytes).sum / l.target).toInt)).toMap
     }
-    val split = nOut.values.exists(_ > 1)
-    val rows = filter(MaskedRead(table, groups.flatMap(_._2), deletes, eqs)
-        .withColumn(grp, element_at(typedLit(groupOf), fp)))
+    val order = layout.flatMap(_.order)
+    // binpack: one task per bin of a group's files
+    val bins = layout.filter(_.order.isEmpty).map(_ =>
+      groups.indices.flatMap(i => pack(groups(i)._2, nOut(i))))
+    // a bin of k >= 2 targets' bytes (a file past the target) writes k
+    // runs of its rows, by file key: the rows per run
+    val runOf: Map[String, Long] = (for {
+      l <- layout.toSeq; b <- bins.toSeq.flatten
+      k = b.map(_.sizeBytes).sum / l.target if k > 1
+      rowsPerRun = (b.map(_.rowCount).sum + k - 1) / k
+      f <- b
+    } yield PosDeletes.norm(f.path) -> math.max(1L, rowsPerRun)).toMap
+    val rows = filter(MaskedRead(table, groups.flatMap(_._2), deletes, eqs,
+        bins = bins).withColumn(grp, element_at(typedLit(groupOf), fp)))
       .withColumn(tk, tag)
-    // a split group's slots roll apart even when two hash to one task,
-    // so each file holds one slot
+    // the writer rolls on the slot too, so each file holds one sort
+    // slot (even when two hash to one task) or one binpack run
+    val split = if (order.isDefined) nOut.values.exists(_ > 1) else runOf.nonEmpty
     val keys = if (split) Seq(tk, slot) else Seq(tk)
-    // with one tag and no slots, rows need no sort to reach one file
-    // per task
-    val oneKey = groups.size == 1 && tupleLess.isEmpty && !split
-    val laidOut = layout match {
+    val laidOut = order match {
+      // a task's rows share their group, so only a tuple-less group's
+      // rows need a sort to reach one file per tag; a binpack run is
+      // the row's ordinal in its task (the low 33 bits of the id) over
+      // its bin's rows per run
       case None =>
-        if (oneKey) rows else rows.sortWithinPartitions(col(tk))
-      case Some(l) =>
+        val slotted =
+          if (!split) rows
+          else rows.withColumn(slot, coalesce(floor(
+            monotonically_increasing_id().bitwiseAND(lit((1L << 33) - 1)) /
+              element_at(typedLit(runOf), fp)), lit(0L)))
+        if (tupleLess.isEmpty) slotted
+        else slotted.sortWithinPartitions(keys.map(col): _*)
+      case Some(o) =>
         val n = element_at(typedLit(nOut), col(grp))
-        val (slotOf, sortKey) = l.order match {
-          case Some(order) =>
-            val (rank, key) = order(groups.map(_._2), col(grp))
-            (shiftright(rank * n, 8), key)
-          case None => (pmod(xxhash64(fp, pos), n), Nil)
-        }
+        val (rank, key) = o(groups.map(_._2), col(grp))
         val clustered =
-          if (split) rows.withColumn(slot, slotOf)
+          if (split) rows.withColumn(slot, shiftright(rank * n, 8))
             .repartition(nOut.values.sum, col(grp), col(slot))
           else rows.repartition(nOut.size, col(grp))
         // the key columns lead the sort, so the writer, which rolls on
         // them, keeps one file open
-        if (sortKey.isEmpty && oneKey) clustered
-        else clustered.sortWithinPartitions(keys.map(col) ++ sortKey: _*)
+        clustered.sortWithinPartitions(keys.map(col) ++ key: _*)
     }
     // the key columns trail the data columns: the writer rolls on
     // them and stores the rest
@@ -774,7 +810,9 @@ object LakeWriteUtil {
     val width = out.schema.size - keys.size
     require(out.columns.drop(width).toSeq == keys, out.columns.mkString(", "))
     val written = LakeFanoutWrite.run(out, LakeFanoutWrite.keyed(spark, meta,
-        StructType(out.schema.take(width)), out.schema.drop(width), outDir))
+        StructType(out.schema.take(width)), out.schema.drop(width), outDir),
+        tasks = if (order.isDefined) None
+          else Some(bins.fold(groups.map(_._2.size).sum)(_.size)))
       .flatMap(m => m.files.zip(m.tuples.map(_(tk).toLong)))
       .sortBy { case (p, t) => (t & 1L, t, p) }
     val tagOf = written.toMap

@@ -17,7 +17,9 @@ import org.apache.spark.sql.util.CaseInsensitiveStringMap
   * row carries its file key and ordinal in [[File]] and [[Pos]].
   *
   * `eqDeletedOnly` inverts the equality-delete check: the read keeps
-  * just the live rows that `eqs` delete. */
+  * just the live rows that `eqs` delete. `bins`, a partition of
+  * `files`, makes each bin one input partition, read file after file;
+  * by default each file is one. */
 private[lake] object MaskedRead {
 
   val File = "__graft_file"
@@ -25,7 +27,8 @@ private[lake] object MaskedRead {
 
   def apply(table: LakeTable, files: Seq[DataFileMeta],
       deletes: Seq[DataFileMeta], eqs: Seq[EqDeleteMeta],
-      eqDeletedOnly: Boolean = false): DataFrame = {
+      eqDeletedOnly: Boolean = false,
+      bins: Option[Seq[Seq[DataFileMeta]]] = None): DataFrame = {
     table.schema().fieldNames
       .find(n => n.equalsIgnoreCase(File) || n.equalsIgnoreCase(Pos))
       .foreach(n => throw new IllegalArgumentException(
@@ -33,14 +36,15 @@ private[lake] object MaskedRead {
           "file rewrites; rename it before rewriting the table's files"))
     val source = new Source(table, files,
       PosDeletes.masksFor(files, deletes),
-      EqDeletes.masksFor(table.meta, files, eqs), eqDeletedOnly)
+      EqDeletes.masksFor(table.meta, files, eqs), eqDeletedOnly, bins)
     Shims.ofRows(SparkSession.active, DataSourceV2Relation.create(source,
       None, None, CaseInsensitiveStringMap.empty()))
   }
 
   private class Source(table: LakeTable, files: Seq[DataFileMeta],
       deleted: Map[String, Seq[String]],
-      eqDeleted: Map[String, Seq[EqDeleteMeta]], eqDeletedOnly: Boolean)
+      eqDeleted: Map[String, Seq[EqDeleteMeta]], eqDeletedOnly: Boolean,
+      bins: Option[Seq[Seq[DataFileMeta]]])
     extends Table with SupportsRead {
 
     private val fullSchema = StructType(table.schema().fields ++ Seq(
@@ -57,7 +61,8 @@ private[lake] object MaskedRead {
         private var required = fullSchema
         override def pruneColumns(r: StructType): Unit = required = r
         override def build(): Scan = new PosDeleteScan(table, files, required,
-          deleted, eqDeleted, rowIds = (File, Pos), eqDeletedOnly = eqDeletedOnly)
+          deleted, eqDeleted, rowIds = (File, Pos), eqDeletedOnly = eqDeletedOnly,
+          bins = bins)
       }
   }
 }

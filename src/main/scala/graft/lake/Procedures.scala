@@ -367,24 +367,36 @@ object Procedures {
         // remove_orphan_files, matching the spill-dir invariant.
         catalog.commitMeta(m.copy(snapshots = patched, refs = liveRefs,
           properties = m.properties ++ guardProps))
-        // Dead data files = expired minus remaining, differenced as a
-        // distributed anti-join over the spilled manifests (read as a
-        // parquet scan, never hydrated to the driver) and deleted
-        // executor-side: an expire on a 100 TB table retires millions
-        // of files — neither the path sets nor the deletes may funnel
-        // through a driver loop. The expired spill dirs are still on
-        // disk here (dropped last, below), so the post-commit scan is
-        // safe.
-        val deadDf = Manifests.dataPathsDf(spark, expired).distinct()
-          .join(Manifests.dataPathsDf(spark, remaining).distinct(),
-            Seq("path"), "left_anti")
+        // Dead data files = expired minus remaining (by
+        // PosDeletes.norm). Lists the driver already holds (JSON
+        // manifests, materialized lists) are differenced and deleted on
+        // the driver, with no job for a short list. A parquet spill on
+        // either side keeps the difference a distributed anti-join over
+        // the spilled manifests (read as a parquet scan, never hydrated
+        // to the driver) with executor-side deletes: an expire on a
+        // 100 TB table retires millions of files — neither the path
+        // sets nor the deletes may funnel through a driver loop. The
+        // expired spill dirs are still on disk here (dropped last,
+        // below), so the post-commit scan is safe.
+        val conf = catalog.hadoopConf
         val deadDataCount =
-          LakeWriteUtil.bulkDeleteDf(spark, deadDf, catalog.hadoopConf)
-        LakeWriteUtil.bulkDelete(spark, deadDeletes, catalog.hadoopConf)
-        LakeWriteUtil.bulkDelete(spark, deadManifests, catalog.hadoopConf,
-          recursive = true)
-        Seq(Row(deadDataCount + deadDeletes.size,
-          deadManifests.size.toLong, expired.size.toLong))
+          if (m.snapshots.exists(s => Manifests.unforcedSpill(s.files).isDefined))
+            LakeWriteUtil.bulkDeleteDf(spark,
+              Manifests.dataPathsDf(spark, expired).distinct()
+                .join(Manifests.dataPathsDf(spark, remaining).distinct(),
+                  Seq("path"), "left_anti"), conf)
+          else {
+            val live = remaining.flatMap(_.files)
+              .map(f => PosDeletes.norm(f.path)).toSet
+            LakeWriteUtil.bulkDelete(spark, expired.flatMap(_.files)
+              .map(_.path).distinctBy(PosDeletes.norm)
+              .filterNot(p => live(PosDeletes.norm(p))), conf)
+          }
+        val deadDeleteCount = LakeWriteUtil.bulkDelete(spark, deadDeletes, conf)
+        val deadManifestCount = LakeWriteUtil.bulkDelete(spark, deadManifests,
+          conf, recursive = true)
+        Seq(Row(deadDataCount + deadDeleteCount, deadManifestCount,
+          expired.size.toLong))
       }
     }),
 

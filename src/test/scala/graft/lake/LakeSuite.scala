@@ -2341,14 +2341,27 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
 
   /** Spark jobs `body` starts, counted by a listener (the bus is FIFO:
     * once a later marker job is seen, every job of `body` has been). */
-  private def jobsDuring(body: => Unit): Int = {
+  private def jobsDuring(body: => Unit): Int = workDuring(body)._1
+
+  /** Spark jobs `body` starts and the shuffle bytes their stages write. */
+  private def workDuring(body: => Unit): (Int, Long) = {
     val groups = new java.util.concurrent.ConcurrentLinkedQueue[String]()
+    val stages = java.util.concurrent.ConcurrentHashMap.newKeySet[Int]()
+    val shuffled = new java.util.concurrent.atomic.AtomicLong()
     val listener = new org.apache.spark.scheduler.SparkListener {
       override def onJobStart(
-          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit =
-        groups.add(Option(e.properties)
+          e: org.apache.spark.scheduler.SparkListenerJobStart): Unit = {
+        val g = Option(e.properties)
           .flatMap(p => Option(p.getProperty("spark.jobGroup.id")))
-          .getOrElse(""))
+          .getOrElse("")
+        if (g == "counted") e.stageIds.foreach(stages.add(_))
+        groups.add(g)
+      }
+      override def onStageCompleted(
+          e: org.apache.spark.scheduler.SparkListenerStageCompleted): Unit =
+        if (stages.contains(e.stageInfo.stageId))
+          shuffled.addAndGet(
+            e.stageInfo.taskMetrics.shuffleWriteMetrics.bytesWritten)
     }
     spark.sparkContext.addSparkListener(listener)
     try {
@@ -2361,7 +2374,7 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
       while (!groups.contains("marker") && System.currentTimeMillis() < deadline)
         Thread.sleep(20)
       assert(groups.contains("marker"), "marker job never reached the listener")
-      groups.toArray.count(_ == "counted")
+      (groups.toArray.count(_ == "counted"), shuffled.get())
     } finally spark.sparkContext.removeSparkListener(listener)
   }
 
@@ -2436,6 +2449,134 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
       .map(_.getString(0)).toSeq == Seq("r123"))
     assert(LakeScanBuilder.lastPlannedFileCount.get() == 1)
     assert(count("SELECT count(*) FROM lake.db.untupled") == 400)
+  }
+
+  test("a binpack rewrite and a mask fold each run one job and shuffle " +
+      "nothing; a group past the target splits by whole files and runs") {
+    val sizes = LakeWriteUtil.pack(Seq(5L, 4L, 3L, 3L, 2L, 1L).zipWithIndex
+      .map { case (b, i) =>
+        DataFileMeta(s"/f$i", 1L, b, 0, Map.empty, Map.empty, Map.empty, Map.empty) }, 2)
+      .map(_.map(_.sizeBytes).sum)
+    assert(sizes.sorted == Seq(9L, 9L), sizes.toString)
+    sql("CREATE TABLE lake.db.bp (id bigint, v string) USING lake " +
+      "PARTITIONED BY (bucket(2, id))")
+    def insert(k: Int): Unit = sql(s"INSERT INTO lake.db.bp SELECT id, " +
+      s"sha2(CAST(id AS string), 256) FROM range(${k * 100}, ${k * 100 + 100})")
+    def compact(opts: String): (Int, Long) = workDuring {
+      sql(s"CALL lake.system.rewrite_data_files(table => 'db.bp'$opts)")
+    }
+    def byBucket(): Map[Map[String, String], Seq[DataFileMeta]] =
+      headFiles("bp").groupBy(_.partitionValues)
+    (0 until 4).foreach(insert)
+    assert(headFiles("bp").size == 8)
+    val rows = rowsOf("SELECT * FROM lake.db.bp")
+    assert(compact("") == (1, 0L))
+    assert(byBucket().values.map(_.size).toSeq == Seq(1, 1),
+      byBucket().toString)
+    assert(rowsOf("SELECT * FROM lake.db.bp") == rows)
+    def splitBy(target: Long): Map[Map[String, String], Seq[DataFileMeta]] = {
+      assert(compact(s", options => map('rewrite-all', 'true', " +
+        s"'target-file-size-bytes', '$target')") == (1, 0L))
+      val split = byBucket()
+      assert(split.size == 2 && split.keys.forall(_.nonEmpty) &&
+        split.values.forall(_.size >= 2), split.toString)
+      val idsOf = split.map { case (t, fs) => t -> fs.flatMap(f =>
+        spark.read.parquet(f.path).select("id").collect().map(_.getLong(0))) }
+      assert(idsOf.values.forall(ids => ids.distinct.size == ids.size))
+      assert(idsOf.values.map(_.toSet).reduce(_ intersect _).isEmpty)
+      split
+    }
+    // one file three times the target: its rows split into runs
+    splitBy(byBucket().values.map(_.head.sizeBytes).min / 3)
+    assert(rowsOf("SELECT * FROM lake.db.bp") == rows)
+
+    // past the target, a group's whole files pack into its slots
+    (4 until 8).foreach(insert)
+    val all = rowsOf("SELECT * FROM lake.db.bp")
+    assert(all.size == 800)
+    val split = splitBy(byBucket().values.map(_.map(_.sizeBytes).sum).min / 2)
+    assert(rowsOf("SELECT * FROM lake.db.bp") == all)
+
+    sql("ALTER TABLE lake.db.bp SET TBLPROPERTIES " +
+      "('write.delete.mode'='merge-on-read')")
+    sql("DELETE FROM lake.db.bp WHERE id IN (5, 150, 777)")
+    assert(headFiles("bp").size == split.values.map(_.size).sum)
+    val fold = workDuring {
+      sql("CALL lake.system.rewrite_position_delete_files(table => 'db.bp')")
+    }
+    assert(fold == (1, 0L), s"the mask fold ran (jobs, shuffle bytes) $fold")
+    val folded = LakeMeta.of(spark, Seq("lake", "db", "bp")).currentSnapshot().get
+    assert(folded.deleteFiles.isEmpty)
+    assert(rowsOf("SELECT * FROM lake.db.bp") ==
+      all.filterNot(r => Set("[5,", "[150,", "[777,").exists(r.startsWith)))
+  }
+
+  test("expire_snapshots differences driver-held lists with no job, " +
+      "spilled ones by a scan, and counts only the files it deleted") {
+    def history(t: String, props: String): (SnapshotMeta, SnapshotMeta) = {
+      sql(s"CREATE TABLE lake.db.$t (id bigint) USING lake TBLPROPERTIES " +
+        s"('write.delete.mode'='merge-on-read'$props)")
+      sql(s"INSERT INTO lake.db.$t SELECT id FROM range(0, 8, 1, 2)")
+      sql(s"DELETE FROM lake.db.$t WHERE id = 1")
+      val masked = LakeMeta.of(spark, Seq("lake", "db", t)).currentSnapshot().get
+      sql(s"CALL lake.system.rewrite_position_delete_files(table => 'db.$t')")
+      sql(s"INSERT INTO lake.db.$t VALUES (100)")
+      (masked, LakeMeta.of(spark, Seq("lake", "db", t)).currentSnapshot().get)
+    }
+    def exists(p: String): Boolean = new java.io.File(PosDeletes.norm(p)).exists()
+    def expire(t: String): org.apache.spark.sql.Row = sql(
+      s"""CALL lake.system.expire_snapshots(table => 'db.$t',
+         |older_than => TIMESTAMP '2099-01-01 00:00:00',
+         |retain_last => 2)""".stripMargin).collect()(0)
+    for ((t, props) <- Seq("exjson" -> "",
+        "exspill" -> ", 'write.metadata.manifest.spill-threshold'='1'")) {
+      val (masked, head) = history(t, props)
+      val live = head.files.map(_.path).toSet
+      val dead = masked.files.map(_.path).filterNot(live)
+      assert(dead.size == 1 && masked.deleteFiles.nonEmpty, masked.toString)
+      // a dead delete file already gone is not counted as deleted
+      masked.deleteFiles.foreach(d =>
+        assert(new java.io.File(PosDeletes.norm(d.path)).delete()))
+      var res: org.apache.spark.sql.Row = null
+      val jobs = jobsDuring { res = expire(t) }
+      // lists the driver holds need no job; a spilled history keeps
+      // its distributed anti-join
+      if (props.isEmpty) assert(jobs == 0, s"$t: the expire ran $jobs jobs")
+      else assert(jobs > 0, s"$t: the spilled history was differenced on the driver")
+      assert(res.getLong(0) == 1L && res.getLong(2) == 2L, s"$t: $res")
+      assert(dead.forall(!exists(_)) && live.forall(exists), t)
+      val parent = head.parentId.get
+      assert(count(s"SELECT count(*) FROM lake.db.$t VERSION AS OF $parent") == 7)
+      assert(count(s"SELECT count(*) FROM lake.db.$t") == 8)
+    }
+  }
+
+  test("a masked read of an epoch that cannot batch reads row-based") {
+    spark.range(4).selectExpr("id", "named_struct('a', id) AS s").coalesce(1)
+      .writeTo("lake.db.nested").using("lake")
+      .tableProperty("write.delete.mode", "merge-on-read").create()
+    def firstRead(): Any = {
+      val meta = LakeMeta.of(spark, Seq("lake", "db", "nested"))
+      val f = meta.currentSnapshot().get.files.head
+      val (read, _, _) = new LakeScans.EpochReaders(spark)
+        .build(meta, meta.schema, Seq(0), pick = (s, _) => s)(0)
+      read(org.apache.spark.sql.execution.datasources.PartitionedFile(
+        org.apache.spark.sql.catalyst.InternalRow.empty,
+        org.apache.spark.paths.SparkPath.fromPathString(f.path), 0,
+        f.sizeBytes)).next()
+    }
+    assert(firstRead().isInstanceOf[
+      org.apache.spark.sql.vectorized.ColumnarBatch])
+    val key = "spark.sql.parquet.enableNestedColumnVectorizedReader"
+    spark.conf.set(key, "false")
+    try {
+      // a struct column no longer batches: the epoch reads row-based
+      assert(firstRead().isInstanceOf[
+        org.apache.spark.sql.catalyst.expressions.UnsafeRow])
+      sql("DELETE FROM lake.db.nested WHERE id = 2")
+      assert(sql("SELECT s.a FROM lake.db.nested").collect().map(_.getLong(0))
+        .sorted.toSeq == Seq(0L, 1L, 3L))
+    } finally spark.conf.unset(key)
   }
 
   test("sort compaction over bucket groups runs a fixed job count, sorts " +
@@ -2526,12 +2667,11 @@ class LakeSuite extends AnyFunSuite with BeforeAndAfterAll {
     // 154 rows written; A's 5 and 7 and B's 120 and 121 replaced; the
     // masks take A's 50, B's 130 and C's 121
     assert(before.size == 147, before.size.toString)
-    // the fold rewrites all three files: one shuffle map stage (its
-    // slots) and the write
+    // the fold rewrites all three files in its one write job
     val foldJobs = jobsDuring {
       sql("CALL lake.system.rewrite_position_delete_files(table => 'db.jc1')")
     }
-    assert(foldJobs == 2, s"the mask fold ran $foldJobs Spark jobs")
+    assert(foldJobs == 1, s"the mask fold ran $foldJobs Spark jobs")
     assert(rowsOf("SELECT * FROM lake.db.jc1") == before)
     val folded = LakeMeta.of(spark, Seq("lake", "db", "jc1")).currentSnapshot().get
     assert(folded.deleteFiles.isEmpty && folded.eqDeleteFiles.isEmpty)
